@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Tables
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard, and
@@ -502,20 +504,16 @@ object Dedup {
     // graph, labeling every clustered document with its component's min
     // doc_id (the canonical survivor a dedup pass keeps). NOTE: unlike
     // every other queries entry, this builder EXECUTES jobs eagerly (the
-    // convergence loop + checkpoints cannot be expressed as one lazy
-    // plan) — the returned DataFrame is the final labels. Distributed
-    // min-label propagation with path shortcutting: each round takes the
-    // min over neighbor labels ∪ self, then composes the label map with
-    // itself (label(v) ← label(label(v))), which squares the propagation
-    // radius — R rounds cover components of diameter 2^R, so 5 rounds
-    // reach any plausible near-dup cluster. Every round is a node-keyed
-    // join + min agg: no driver-side union-find, no collect — the shape
-    // that runs on 1000 executors. Iterative lineage is CUT each round
-    // with localCheckpoint (every iterative Spark graph algorithm must:
-    // the label map is referenced 3× per round, so an uncut plan tree
-    // grows 3^R copies of the whole MinHash subtree — unoptimizable long
-    // before it's unexecutable); on a cluster this is executor-local
-    // storage, no driver collect.
+    // driver-side union-find, or the distributed convergence loop with
+    // its checkpoints, cannot be expressed as one lazy plan) — the
+    // returned DataFrame is the final labels. [[componentLabels]] picks
+    // the path from the pair graph's size: a graph that fits the driver
+    // is collected and labeled by union-find; a larger one runs
+    // min-label propagation with path shortcutting, where every round is
+    // a node-keyed join + min agg (the shape that runs on 1000
+    // executors) and the lineage is CUT each round with localCheckpoint
+    // (the label map is referenced 3× per round, so an uncut plan tree
+    // grows 3^R copies of the whole MinHash subtree).
     "dedup_clusters" -> ((s, d) =>
       clusterLabels(s, d).orderBy(col("doc_id"))),
 
@@ -568,15 +566,6 @@ object Dedup {
     })
   )
 
-  /** Connected-component labels (doc_id → min doc_id of its component)
-    * over [[minhashPairs]] — the body of `dedup_clusters` sans sort.
-    *
-    * Runs to CONVERGENCE (no label changed), not a fixed round count: with
-    * the shortcut step radius doubles per round, so rounds ≈ log2(largest
-    * component diameter) — 2-3 on real near-dup graphs. The change count
-    * rides the round's localCheckpoint materialization (labels are tiny
-    * relative to the corpus), and [[ClusterRounds]]·4 bounds the loop
-    * against a pathological chain. */
   /** Materialized-intermediate cache — see [[graft.Memo]]. Three queries
     * consume the MinHash candidate graph (`dedup_minhash_lsh`,
     * `dedup_clusters`, `dedup_keep`) and two consume the component labels —
@@ -587,6 +576,8 @@ object Dedup {
   private def memoized(key: String, s: SparkSession, d: String)(mk: => DataFrame): DataFrame =
     graft.Memo(s"dedup_$key", s, d)(mk)
 
+  /** Connected-component labels (doc_id → min doc_id of its component)
+    * over [[minhashPairs]] — the body of `dedup_clusters` sans sort. */
   def clusterLabels(s: SparkSession, d: String): DataFrame =
     memoized("labels", s, d)(computeClusterLabels(s, d))
 
@@ -596,15 +587,93 @@ object Dedup {
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
-  /** Generic distributed connected components over an (id1, id2) pair
-    * list (any orderable node type — long doc ids here, ioc strings in
-    * [[Threat]]): min-label propagation with path shortcutting, run to
-    * convergence. Returns (node, lbl) for every node incident to an
-    * edge; lbl = the component's minimum node. Rounds ≈ log₂(largest
-    * component diameter) thanks to the shortcut step; the per-round
+  /** Largest pair graph, in edges, that [[componentLabels]] labels on the
+    * driver. Sized against driver heap: a string graph at the cap (~35-byte
+    * IOCs, JDK 17) held 216 B per collected edge and peaked under 2.1 KB
+    * per edge while labeling, garbage included — ≤ ~0.5 GB per build, so
+    * [[Warm]]'s three concurrent chains fit a 3 GB driver. The largest
+    * build on the 10× corpus (campaign base, ~120k edges) is under half
+    * the cap. */
+  private[graft] final val DriverCcMaxEdges = 250000
+
+  /** Node types the driver path orders exactly as Spark's `min` does. */
+  private val driverCcNodeTypes: Set[DataType] = Set(LongType, StringType)
+
+  /** Connected components over an (id1, id2) pair list (any orderable
+    * node type — long doc ids here, ioc strings in [[Threat]]). Returns
+    * (node, lbl) for every node incident to an edge; lbl = the
+    * component's minimum node.
+    *
+    * One observed property picks the path: a graph of at most
+    * [[DriverCcMaxEdges]] edges is collected (one bounded `limit` job)
+    * and labeled by [[driverComponentLabels]]; a larger one runs
+    * [[distributedComponentLabels]]. Every label build and its
+    * incremental fold is small at the test and bench corpora, where the
+    * distributed loop's cost is fixed per-job scheduling (three shuffled
+    * jobs a round), not data; the 100 TB pair graphs keep the loop. */
+  private[graft] def componentLabels(pairs: DataFrame): DataFrame =
+    smallPairGraph(pairs).fold(distributedComponentLabels(pairs))(driverComponentLabels(pairs, _))
+
+  /** The pair graph's edges, if it fits the driver path: both endpoint
+    * columns of one supported type, at most [[DriverCcMaxEdges]] edges,
+    * and no null endpoint (nulls keep the distributed loop's semantics). */
+  private[graft] def smallPairGraph(pairs: DataFrame): Option[Array[Row]] = {
+    val types = pairs.schema.map(_.dataType).distinct
+    if (types.size != 1 || !driverCcNodeTypes(types.head)) None
+    else {
+      val edges = pairs.limit(DriverCcMaxEdges + 1).collect()
+      if (edges.length > DriverCcMaxEdges || edges.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+      else Some(edges)
+    }
+  }
+
+  /** Union-find over collected edges, returned as a checkpointed
+    * (node, lbl) frame. Nodes are indexed in the order Spark's `min`
+    * uses — numeric for long ids, UTF-8 byte order for strings
+    * (`UTF8String`; `java.lang.String.compareTo` compares UTF-16 units
+    * and disagrees on supplementary characters) — and every union keeps
+    * the smaller root, so a root is always its component's minimum. */
+  private[graft] def driverComponentLabels(pairs: DataFrame, edges: Array[Row]): DataFrame = {
+    val nodeType = pairs.schema.head.dataType
+    val strings = nodeType == StringType
+    def key(v: Any): Comparable[Any] =
+      (if (strings) UTF8String.fromString(v.asInstanceOf[String]) else v).asInstanceOf[Comparable[Any]]
+    val ends = edges.map(r => (key(r.get(0)), key(r.get(1))))
+    val nodes = ends.flatMap(e => Array(e._1, e._2)).distinct
+      .sorted(Ordering.fromLessThan[Comparable[Any]]((x, y) => x.compareTo(y) < 0))
+    val index = scala.collection.mutable.HashMap.from(nodes.iterator.zipWithIndex)
+    val parent = Array.range(0, nodes.length)
+    def root(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val next = parent(j); parent(j) = r; j = next }
+      r
+    }
+    ends.foreach { case (a, b) =>
+      val (ra, rb) = (root(index(a)), root(index(b)))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+    def value(k: Comparable[Any]): Any = if (strings) k.toString else k
+    val rows = nodes.indices.map(i => Row(value(nodes(i)), value(nodes(root(i)))))
+    val schema = StructType(Seq(StructField("node", nodeType, nullable = false),
+      StructField("lbl", nodeType, nullable = false)))
+    // a slice per 10k rows keeps a task near Spark's 1 MB task-size advice
+    val spark = pairs.sparkSession
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1 + rows.length / 10000), schema)
+      .localCheckpoint()
+  }
+
+  /** Distributed connected components: min-label propagation with path
+    * shortcutting, run to convergence. Rounds grow with component
+    * diameter and with how node ids are laid out along it — the shortcut
+    * step makes a sorted path converge in ~log₂(diameter) rounds (7 for
+    * 64 nodes), but it bounds nothing in general: the 665-node
+    * co-sighting graph of a 300-document corpus took 11. The per-round
     * label map is pair-graph-sized (KBs..MBs at any corpus), never
     * corpus-sized. */
-  private[graft] def componentLabels(pairs: DataFrame): DataFrame = {
+  private[graft] def distributedComponentLabels(
+      pairs: DataFrame, maxRounds: Int = CcMaxRounds): DataFrame = {
     val Seq(c1, c2) = pairs.columns.toSeq.map(col)
     val edges = pairs.select(c1.as("src"), c2.as("dst"))
       .unionByName(pairs.select(c2.as("src"), c1.as("dst")))
@@ -613,7 +682,7 @@ object Dedup {
       .localCheckpoint()
     var changed = 1L
     var rounds = 0
-    while (changed > 0 && rounds < ClusterRounds * 4) {
+    while (changed > 0 && rounds < maxRounds) {
       val prop = edges.join(lbl.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), col("lbl"))
       // checkpoint m BEFORE the self-join below: both branches reference
@@ -633,9 +702,9 @@ object Dedup {
     }
     // non-convergence must be OBSERVABLE, not a silent mislabel: this loop
     // also labels Threat campaigns, where a long-diameter component hitting
-    // the round cap would ship wrong campaign ids with no signal. The cap
-    // (2^20-hop diameter under shortcutting) is unreachable for real graphs,
-    // so reaching it is a bug or adversarial input — fail loudly.
+    // the round cap would ship wrong campaign ids with no signal. Reaching
+    // the cap (about twice the worst round count measured, 11) is a bug or
+    // adversarial input — fail loudly.
     if (changed > 0)
       throw new IllegalStateException(
         s"componentLabels: not converged after $rounds rounds ($changed labels still changing)")
@@ -679,9 +748,10 @@ object Dedup {
     * components from scratch over ALL edges each round).
     *
     * 100 TB shape: the nightly cost is |delta| joins against the
-    * persisted label map plus a propagation over the contracted graph
-    * (rounds ≈ log₂ of the MERGE-group diameter, typically 1-2) — not a
-    * full multi-round shuffle of the corpus-sized pair graph. */
+    * persisted label map plus a labeling of the contracted graph (touched
+    * components and new nodes only — small enough for the driver path
+    * whenever the delta is) — not a full multi-round shuffle of the
+    * corpus-sized pair graph. */
   private[graft] def componentLabelsIncremental(
       baseLbl: DataFrame, deltaPairs: DataFrame): DataFrame = {
     val Seq(c1, c2) = deltaPairs.columns.toSeq.map(col)
@@ -717,11 +787,6 @@ object Dedup {
   val SimhashBands = 4
   val SimhashBandBits = 15
   val MaxHamming = 3
-
-  /** Base round budget for `dedup_clusters` convergence: the loop stops
-    * when no label changes, hard-capped at 4× this (2^20-hop diameter —
-    * unreachable for any real near-dup graph). */
-  val ClusterRounds = 5
 
   /** MinHash+LSH candidate pairs (id1 < id2, distinct) — the body of
     * `dedup_minhash_lsh` sans final sort, shared with `dedup_clusters`.
@@ -1139,15 +1204,20 @@ object Dedup {
           |ORDER BY d.doc_id""".stripMargin)
   )
 
-  /** Rounds for [[ccRoundsCtes]]: labels travel 2^k hops in k rounds, so
-    * 6 covers any component diameter ≤ 64 — and a non-converged oracle
-    * can only FAIL the hash compare, never silently pass (the engine side
-    * runs to convergence, so a short oracle produces different labels).
+  /** Round cap of connected components by label propagation: the
+    * engine's [[distributedComponentLabels]] loop stops at it (and throws
+    * if labels still change), and the oracle's [[ccRoundsCtes]] unrolls
+    * exactly this many rounds, so any graph the loop labels, the oracle
+    * labels too. Both run the same rounds, and the count they need is not
+    * ~log₂(diameter): a 665-node co-sighting graph took 11. A chain still
+    * changing labels after the last round fails the query
+    * ([[ccRoundsCtes]]' guard), so a short oracle can never pass.
     * `final` + literal = a compile-time constant, inlined at use sites:
     * Dedup's own `oracle` val initializes BEFORE this declaration, and a
     * plain val would read 0 there (object-init order), silently emitting
-    * a rounds-free chain — which is exactly what happened on first wiring. */
-  private[graft] final val CcOracleRounds = 6
+    * a rounds-free chain — which is exactly what happened on first
+    * wiring. */
+  private[graft] final val CcMaxRounds = 20
 
   /** Unrolled min-label propagation + pointer-jump rounds over a
     * symmetric `(src, dst)` edge CTE — the LINEAR connected-components
@@ -1160,11 +1230,13 @@ object Dedup {
     * CTEs are `AS MATERIALIZED`: DuckDB inlines plain CTEs, and each
     * round references the previous twice, so inlining would expand round
     * k into 2^k copies of the base scans (observed as fd exhaustion).
-    * `prefix` keeps multi-family WITH chains collision-free; the chain
-    * ends in `<prefix>l<CcOracleRounds>(node, lbl)`. Composed by
-    * concatenation, never stripMargin-over-interpolation. */
+    * The chain ends in `<prefix>lfinal(node, lbl)`: the last round,
+    * guarded by DuckDB's `error()` if any edge still joins two different
+    * labels (one more round would change a label). `prefix` keeps
+    * multi-family WITH chains collision-free. Composed by concatenation,
+    * never stripMargin-over-interpolation. */
   private[graft] def ccRoundsCtes(edgesRel: String, prefix: String): String = {
-    val rounds = (1 to CcOracleRounds).map { k =>
+    val rounds = (1 to CcMaxRounds).map { k =>
       s"${prefix}p$k AS MATERIALIZED (\n" +
         s"  SELECT l.node, LEAST(l.lbl, COALESCE(MIN(m.lbl), l.lbl)) AS lbl\n" +
         s"  FROM ${prefix}l${k - 1} l\n" +
@@ -1175,9 +1247,17 @@ object Dedup {
         s"  SELECT p.node, LEAST(p.lbl, COALESCE(q.lbl, p.lbl)) AS lbl\n" +
         s"  FROM ${prefix}p$k p LEFT JOIN ${prefix}p$k q ON q.node = p.lbl)"
     }.mkString(",\n")
+    val last = s"${prefix}l$CcMaxRounds"
     s"${prefix}l0 AS MATERIALIZED (\n" +
       s"  SELECT DISTINCT src AS node, src AS lbl FROM $edgesRel),\n" +
-      rounds
+      rounds + ",\n" +
+      s"${prefix}lfinal AS MATERIALIZED (\n" +
+      s"  SELECT l.node, CASE WHEN g.unsettled > 0 THEN error(" +
+      s"'connected components not converged after $CcMaxRounds rounds') ELSE l.lbl END AS lbl\n" +
+      s"  FROM $last l CROSS JOIN (\n" +
+      s"    SELECT COUNT(*) AS unsettled FROM $edgesRel e\n" +
+      s"    JOIN $last a ON a.node = e.src JOIN $last b ON b.node = e.dst\n" +
+      s"    WHERE a.lbl <> b.lbl) g)"
   }
 
   /** Connected components over `mh_pairs` → `labels(doc_id, cluster_id)`,
@@ -1189,7 +1269,7 @@ object Dedup {
       "  UNION ALL\n" +
       "  SELECT id2, id1 FROM mh_pairs),\n" +
       ccRoundsCtes("edges", "c") + ",\n" +
-      s"labels AS (\n  SELECT node AS doc_id, lbl AS cluster_id FROM cl$CcOracleRounds)"
+      "labels AS (\n  SELECT node AS doc_id, lbl AS cluster_id FROM clfinal)"
 
   /** Shared DuckDB CTE chain ending in `mh_pairs(id1, id2)` — the MinHash
     * banded candidate pairs, mirrored by [[minhashPairs]]. */

@@ -89,12 +89,13 @@ object Graph {
 
     // Connected components over the co-purchase graph — per node, its
     // component id (= the component's minimum node id), via the SAME
-    // generic min-label propagation with path shortcutting every cluster
-    // family rides ([[Dedup.componentLabels]]: near-dup clusters, TI
-    // campaigns, media clusters) — here exposed on the generic edge
-    // relation, oracle-matched against DuckDB's recursive reachability.
-    // Rounds ≈ log₂(component diameter); each round shuffles the
-    // pair-graph-sized label map, never the corpus. The label map is
+    // generic labeling every cluster family rides
+    // ([[Dedup.componentLabels]]: near-dup clusters, TI campaigns, media
+    // clusters) — here exposed on the generic edge relation,
+    // oracle-matched against DuckDB's unrolled propagation rounds. A
+    // graph that fits the driver is labeled by union-find there; a larger
+    // one shuffles the pair-graph-sized label map per round, never the
+    // corpus. The label map is
     // MEMOIZED like every other cluster family's ([[ccLabels]]): the
     // propagation loop runs once per graph snapshot, the query reads
     // the persisted table.
@@ -265,7 +266,7 @@ object Graph {
           |  SELECT b, a FROM e),
           |""".stripMargin +
         Dedup.ccRoundsCtes("dir", "g") + "\n" +
-        s"SELECT node, lbl AS component_id\nFROM gl${Dedup.CcOracleRounds}\nORDER BY node"),
+        "SELECT node, lbl AS component_id\nFROM glfinal\nORDER BY node"),
     "graph_degree" ->
       s"""WITH $edgeCte,
          |deg AS (

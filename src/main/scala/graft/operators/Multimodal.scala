@@ -257,9 +257,8 @@ object Multimodal {
 
     // Media near-dup CLUSTERS — the component roll-up over the phash pair
     // graph, completing the media path with the same machinery the text
-    // near-dups get (dedup_clusters): generic min-label propagation with
-    // shortcutting ([[Dedup.componentLabels]]) over the memoized pair
-    // graph, then one tiny label-keyed agg. cluster_id is the component's
+    // near-dups get (dedup_clusters): the generic component labeling
+    // ([[Dedup.componentLabels]]) over the memoized pair graph, then one tiny label-keyed agg. cluster_id is the component's
     // min doc_id — the canonical keeper by the suite's convention. The
     // label table is pair-graph-sized (KBs), never corpus-sized.
     "binary_phash_clusters" -> ((s, d) =>
@@ -365,7 +364,7 @@ object Multimodal {
         "  UNION ALL\n" +
         "  SELECT id2, id1 FROM pp_pairs),\n" +
         graft.operators.Dedup.ccRoundsCtes("edges", "m") + ",\n" +
-        s"labels AS (\n  SELECT node, lbl AS cluster_id FROM ml${graft.operators.Dedup.CcOracleRounds})\n" +
+        "labels AS (\n  SELECT node, lbl AS cluster_id FROM mlfinal)\n" +
         "SELECT cluster_id, COUNT(*) AS n_items FROM labels\n" +
         "GROUP BY 1\n" +
         "ORDER BY cluster_id"),

@@ -46,9 +46,8 @@ object Threat {
     * graph (two indicators are linked when they appear in the SAME
     * message — shared infrastructure chains messages into campaigns).
     * Edges come from the bounded per-message fold (never a self-join);
-    * components via the generic min-label propagation
-    * ([[Dedup.componentLabels]] — the SAME loop the near-dup clusters
-    * run, here over string nodes). Memoized: in production the campaign
+    * components via the generic labeling ([[Dedup.componentLabels]] —
+    * the SAME code the near-dup clusters run, here over string nodes). Memoized: in production the campaign
     * label map is a persisted table rebuilt per ingest window, read by
     * both the assignment and the stats dashboards.
     *
@@ -229,8 +228,8 @@ object Threat {
     * Σ component² (node, ancestor) pairs, and at 10× the shared IP-hub
     * components grew enough that DuckDB spilled >60 GB of temp and died —
     * a quadratic ORACLE pricing a linear engine; full rationale on the
-    * helper's scaladoc). Empty prefix keeps the original l0/p1..l6 CTE
-    * names — no other family shares this WITH chain. */
+    * helper's scaladoc). Empty prefix: no other family shares this WITH
+    * chain. */
   private def campaignCtes: String =
     """lp AS (
       |  SELECT DISTINCT platform, id, ioc FROM u
@@ -248,7 +247,7 @@ object Threat {
       graft.operators.Dedup.ccRoundsCtes("cedges", "") + ",\n" +
       "clabels AS (\n" +
       "  SELECT node AS ioc, lbl AS campaign_id\n" +
-      s"  FROM l${graft.operators.Dedup.CcOracleRounds})"
+      "  FROM lfinal)"
 
   val oracle: Map[String, String] = Map(
     "ioc_asn_enrich" ->

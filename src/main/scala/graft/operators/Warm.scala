@@ -28,6 +28,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Warm {
 
+  /** Concurrent chains in flight. 2-3 is the guide's own guidance (§2.6):
+    * enough that a finished chain's executors are back-filled by the next,
+    * not so many that the stages fight for the cores. Declared before
+    * [[notes]], which interpolates it during object initialization. */
+  val PoolSize = 3
+
   /** Reader-facing annotations for ledger rows whose cost is NOT simply
     * additive — emitted by [[graft.Bench]] as the `"warm_notes"` map in the
     * bench_last.json mirror so the file is self-describing: summing the
@@ -55,11 +61,6 @@ object Warm {
         "wall) for the phase cost and the per-build rows for relative " +
         "attribution only"))
   }
-
-  /** Concurrent chains in flight. 2-3 is the guide's own guidance (§2.6):
-    * enough that a finished chain's executors are back-filled by the next,
-    * not so many that the stages fight for the cores. */
-  val PoolSize = 3
 
   def all(s: SparkSession, d: String): Seq[(String, Double)] = {
     // Builds grouped into DEPENDENCY CHAINS: within a chain each build

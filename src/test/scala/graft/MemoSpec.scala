@@ -97,4 +97,10 @@ class MemoSpec extends AnyFunSuite {
     assert(builds.get() == 1, s"mk ran ${builds.get()} times; memo must build once")
     assert(results.size() == 4 && results.toArray.forall(_ == 2L))
   }
+
+  test("the warm ledger note names the real pool size") {
+    val ledger = graft.operators.Warm.notes.toMap.apply("_ledger")
+    assert(graft.operators.Warm.PoolSize > 0)
+    assert(ledger.contains(s"on a ${graft.operators.Warm.PoolSize}-thread pool"), ledger)
+  }
 }

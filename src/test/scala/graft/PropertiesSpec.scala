@@ -186,16 +186,27 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("property: componentLabels converges on a 64-node path (shortcutting beats diameter)") {
-    // A path graph is the adversarial diameter case: naive min-label
-    // propagation needs 63 rounds; the shortcut step doubles the reach
-    // radius per round, so this must converge (no round-cap throw) well
-    // inside ClusterRounds*4 = 20 and label every node with the path's
-    // minimum. Exercises the non-convergence guard from the other side.
+    // A path graph is the long-diameter case for the distributed loop:
+    // naive min-label propagation needs 63 rounds; on a path whose ids
+    // increase along it the shortcut step doubles the reach radius per
+    // round, so this must converge (no round-cap throw) well inside
+    // CcMaxRounds = 20 and label every node with the path's minimum.
+    // Exercises the non-convergence guard from the other side. (The
+    // doubling is a property of this id layout, not a general bound.)
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val labels = graft.operators.Dedup.componentLabels(edges)
+    val labels = graft.operators.Dedup.distributedComponentLabels(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(labels.size == 64 && labels.values.forall(_ == 0L),
       s"path not fully labeled to min: ${labels.toSeq.sorted.take(5)}...")
+  }
+
+  test("property: the distributed componentLabels loop throws when its round cap is hit") {
+    // The guard itself: a loop stopped while labels still change must
+    // fail, never return a partial labeling.
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val e = intercept[IllegalStateException](
+      graft.operators.Dedup.distributedComponentLabels(edges, maxRounds = 2))
+    assert(e.getMessage.contains("not converged after 2 rounds"), e.getMessage)
   }
 
   test("property: incremental label maintenance ≡ full relabel on adversarial splits") {
