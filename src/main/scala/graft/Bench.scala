@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every declared query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line.
   *
@@ -14,41 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Partition count must follow DATA size, not core count: with the
-      // default (initialPartitionNum = shuffle.partitions = cpus) a
-      // 60M-row shuffle at the 100× stress corpus lands in 4 partitions
-      // of ~15M rows each and spills — the superlinear curve the sf10
-      // point exposed on basket_pairs/dedup_ngram_jaccard. But a constant
-      // 192 (the r10 posture) taxed every sf0.1 ioc-family query ~2.2-2.6×
-      // (round-11 solo A/B — see [[Tuning]]); the count is now derived
-      // from the corpus bytes: cores at small SFs, ~520 at the 100×
-      // corpus. Production posture for the 100 TB target unchanged —
-      // initialPartitionNum sized to data, AQE fits partitions to
-      // advisoryPartitionSizeInBytes.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tuning.initialShufflePartitions(sfDir, cpus.toInt).toString)
-      // parallelismFirst returned to Spark's default (true) in r11: the
-      // r10 "192-sliver" pathology it worked around was a symptom of the
-      // CONSTANT 192 initial (more slivers than data); with the data-sized
-      // initial above there is nothing to sliver at small SFs, and
-      // pf=false's 64 MB-advisory coalescing was measured OVER-merging the
-      // CPU-heavy shuffles at sf0.1 (basket_pairs 3.89 -> 2.55 s,
-      // dedup_ngram_jaccard 4.04 -> 2.69 s at pf=true, medians of 3 solo
-      // runs; rest of the family +/-10%). pf=true only ever ADDS
-      // partitions at scale, so the 100x spill fix is unaffected
-      // (re-validated on target/sf10 — see BASELINE_HISTORY.md r11).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Some(sfDir))
 
     // warmup: session + whole-stage-codegen + parquet reader init
     spark.range(1000000L).selectExpr("sum(id)").collect()

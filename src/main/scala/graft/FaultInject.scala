@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Executor-loss fault injection (DEPLOYMENT.md resilience evidence).
@@ -52,21 +52,9 @@ object FaultInject {
     val sfDir = args.headOption.getOrElse("target/sf1")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else Seq("q18_bigorders", "q21_waiting")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,8192]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tuning.initialShufflePartitions(sfDir, 16).toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
+    val spark = Session.start(Some(sfDir), defaultMaster = "local-cluster[2,8,8192]")
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
+    val master = sc.master
     require(master.startsWith("local-cluster"),
       "fault injection needs separate executor JVMs (local-cluster master)")
 

@@ -92,16 +92,9 @@ object FaultInjectStream {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(300000)
     val maxPerBatch = args.lift(1).map(_.toInt).getOrElse(30000)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,8192]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
+    val spark = Session.start(defaultMaster = "local-cluster[2,8,8192]")
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
+    val master = sc.master
     require(master.startsWith("local-cluster"),
       "stream fault injection needs separate executor JVMs (local-cluster master)")
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query cost decomposition for the optimization rounds: for each named
   * query, REPS repetitions of (build → resolve the executed plan → noop
   * write), timing the plan/codegen-prep phase and the execution phase
@@ -18,24 +16,8 @@ import org.apache.spark.sql.SparkSession
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tuning.initialShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // A/B knobs for the scan-split posture (guide §6.1)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (4L << 20).toString))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_NUM", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Some(sfDir))
     spark.range(1000000L).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     graft.operators.Warm.all(spark, sfDir)

@@ -334,7 +334,7 @@ object SparkEntry {
     // S6/P6/X5: pastebin enrichment — pick each tweet's first pastebin link,
     // left-join the pages lookup, classify fetched lines, union with the
     // tweet-text extraction (test mode of the per-partition HTTP fetch).
-    // The r14 fan-out here was A/B'd interleaved (graft.ABPaste, r15) and
+    // The r14 fan-out here was A/B'd interleaved (OPTIMIZATION_r15.md §7) and
     // REVERTED per the r14 verdict: with two consumers of the fanned-out
     // exchange (the extract branch and the pastebin-join branch), the
     // extra round-robin exchange cost more than the parallelism it bought

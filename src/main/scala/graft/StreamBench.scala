@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.sinks.{RestBatchSink, Transport}
 import graft.streaming.TweetStream
@@ -93,14 +92,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val maxPerBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "50000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     val file = Paths.get("target", s"stream_tweets_$n.jsonl")
     Files.createDirectories(file.getParent)

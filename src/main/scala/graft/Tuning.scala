@@ -1,6 +1,6 @@
 package graft
 
-/** Data-sized shuffle posture, shared by [[Bench]] and [[Verify]].
+/** Data-sized initial shuffle partition count, applied by [[Session]].
   *
   * Round 10 pinned `adaptive.coalescePartitions.initialPartitionNum` to a
   * constant 192 — the right call at the 100× stress corpus (a cores-pinned
@@ -17,23 +17,17 @@ package graft
   * ~4-8× raw, so 4 MiB of input per initial partition ≈ 16-32 MiB of
   * pre-coalesce shuffle — comfortably under the 64 MiB advisory AQE then
   * coalesces toward (at `parallelismFirst=true`, Spark's default, AQE
-  * never coalesces below the parallelism floor — see Bench.scala). Yields
+  * never coalesces below the parallelism floor — see Session.scala). Yields
   * cores at sf0.01/sf0.1 (1.9/17.5 MB → the floor — small SFs pay zero
   * tax), 45 at the 10× corpus, ~520 at the 100× corpus (≥ the 192 that
   * fixed the spill). The clamp top is a runaway guard for a mispointed
   * directory, not a tuning value; on a real cluster `cores` is the
   * executor total and the same formula holds until inputs pass ~16 TB,
   * where per-partition input is capped by maxPartitionBytes anyway.
-  *
-  * `SPARK_GRAFT_INIT_PARTITIONS` still overrides (the A/B harness and any
-  * operator who knows better), and `SPARK_GRAFT_PARALLELISM_FIRST` exposes
-  * the companion AQE knob for adjudication runs.
   */
 object Tuning {
   def initialShufflePartitions(sfDir: String, cores: Int): Int =
-    sys.env.get("SPARK_GRAFT_INIT_PARTITIONS").map(_.toInt).getOrElse {
-      math.min(4096L, math.max(cores.toLong, corpusBytes(sfDir) / (4L << 20))).toInt
-    }
+    math.min(4096L, math.max(cores.toLong, corpusBytes(sfDir) / (4L << 20))).toInt
 
   /** Total bytes under the corpus dir; 0 if unreadable (→ cores floor). */
   private[graft] def corpusBytes(sfDir: String): Long =

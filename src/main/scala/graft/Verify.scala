@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,7 @@ object Verify {
     // optional extra args: verify only these queries (dev loop; the
     // driver always runs the full inventory)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,8192] runs the SAME dump on
-    // separate executor JVMs (multi-process smoke: serialization of the
-    // custom exec/Aggregator/Expressions, remote localCheckpoint blocks,
-    // broadcast thresholds). local-cluster executors don't inherit the
-    // sbt classpath, so pass the app jar via SPARK_GRAFT_JARS.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-sized shuffles via AQE coalesce (see [[Tuning]]: partition
-      // count follows corpus bytes, not cores — the 100× stress corpus
-      // spills a cpus-partition shuffle, a constant 192 taxes small SFs)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tuning.initialShufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -312,7 +312,7 @@ object TextStats {
         // 4-element array allocation + scan per window. The fully-codegen
         // alternative (explode the window starts + codegen least + a
         // distinct aggregation for the per-doc dedup — VERDICT item 4's
-        // sketch) was A/B'd interleaved in graft.ABWinnow and REJECTED:
+        // sketch) was A/B'd interleaved (OPTIMIZATION_r15.md §8) and REJECTED:
         // its extra distinct exchange costs more than the interpreted
         // lambda it saves (med 887 ms vs 752 here vs 853 for the r14
         // slice+array_min shape; the md5 transform dominates all three).

@@ -62,7 +62,9 @@ object Warm {
         "attribution only"))
   }
 
-  def all(s: SparkSession, d: String): Seq[(String, Double)] = {
+  def all(s: SparkSession, d: String): Seq[(String, Double)] = run(s, chains(s, d))
+
+  private[graft] def chains(s: SparkSession, d: String): Seq[Seq[(String, () => Any)]] = {
     // Builds grouped into DEPENDENCY CHAINS: within a chain each build
     // READS the previous memoized stage (the snapshot-pipeline shape the
     // ledger prices), so a chain is strictly sequential; ACROSS chains
@@ -73,7 +75,7 @@ object Warm {
     // packs well. Guide §2.6: actions are only sequential because driver
     // code calls them sequentially — independent index builds back-fill
     // each other's stage tails.
-    val chains: Seq[Seq[(String, () => Any)]] = Seq(
+    Seq(
       // perceptual-hash label family (documents)
       Seq(
         "phash_pairs" -> (() => Multimodal.phashPairs(s, d)),
@@ -129,23 +131,50 @@ object Warm {
       Seq(
         "partsupp" -> (() => graft.sources.Tables.partsupp(s, d)),
         "rfm_per_user" -> (() => Events.rfmPerUser(s, d))))
+  }
+
+  /** Runs the chains on a [[PoolSize]]-thread pool and returns the ledger.
+    * Every job a chain starts carries one per-call job tag, so the FIRST
+    * build failure stops the whole warm: the pool is interrupted, the
+    * siblings' in-flight jobs are cancelled (only this warm's, never the
+    * session's other work), and the failure is rethrown unwrapped — a
+    * silently-failed warm would push the index build into the first timed
+    * query, and a sibling left running would hold the cores for minutes. */
+  private[graft] def run(s: SparkSession,
+                         chains: Seq[Seq[(String, () => Any)]]): Seq[(String, Double)] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      ExecutorCompletionService, TimeUnit}
+    val sc = s.sparkContext
+    val tag = s"graft-warm-${java.util.UUID.randomUUID()}"
     val ledger = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(PoolSize)
+    val pool = Executors.newFixedThreadPool(PoolSize)
+    val done = new ExecutorCompletionService[Unit](pool)
     try {
-      val futures = chains.map { chain =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = chain.foreach { case (name, build) =>
-            val t0 = System.nanoTime()
-            build()
-            ledger.put(name, (System.nanoTime() - t0) / 1e9)
+      chains.foreach { chain =>
+        done.submit(new Callable[Unit] {
+          def call(): Unit = {
+            sc.addJobTag(tag) // thread-local: tags every job this chain starts
+            chain.foreach { case (name, build) =>
+              val t0 = System.nanoTime()
+              build()
+              ledger.put(name, (System.nanoTime() - t0) / 1e9)
+            }
           }
         })
       }
-      // propagate the FIRST build failure (unwrapped) — a silently-failed
-      // warm would push the index build into the first timed query
-      futures.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      // completion order, not submission order: a late chain's failure
+      // must not wait behind an early chain's long build
+      chains.indices.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          pool.shutdownNow()
+          sc.cancelJobsWithTag(tag)
+          // a chain interrupted between two jobs may have submitted one
+          // more; once every chain thread has exited, cancel again
+          pool.awaitTermination(30, TimeUnit.SECONDS)
+          sc.cancelJobsWithTag(tag)
+          throw e.getCause
+        }
       }
     } finally pool.shutdown()
     chains.flatten.map { case (name, _) => name -> ledger.get(name).doubleValue() }

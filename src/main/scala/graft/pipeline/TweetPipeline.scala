@@ -65,24 +65,15 @@ object TweetPipeline {
     base.select(cols ++ warnCols: _*)
   }
 
-  /** Escape hatch for A/B adjudication of the fused scanner: set
-    * SPARK_GRAFT_FUSED_EXTRACT=0 to run the original three-regex plan.
-    * Default is the fused path — output equality is fuzz-asserted
-    * (IocScanSpec) and oracle-gated every round (the DuckDB oracle runs
-    * the ORIGINAL patterns). */
-  private val FusedExtract: Boolean =
-    sys.env.get("SPARK_GRAFT_FUSED_EXTRACT").forall(_ != "0")
-
   /** Flat tweet columns → canonical 8-column IOC frame (extraction R3/R4/R6
     * + per-type unpivot X2, firehose.py:56-62,105-122).
     *
-    * Two equivalent formulations (same rows, same per-type match order):
-    * the FUSED path scans the text once with [[graft.functions.IocScan]]
-    * and pays ONE Generate; the regex path runs three
-    * `regexp_extract_all` passes and two Generates. The fused scanner is
-    * the r12 knee-sweep answer (extraction was the measured ~74k rec/s
-    * per-node streaming ceiling); the regex path remains as the
-    * adjudication baseline and the semantics reference.
+    * Scans the text once with [[graft.functions.IocScan]] and pays ONE
+    * Generate — the r12 knee-sweep answer (extraction was the measured
+    * ~74k rec/s per-node streaming ceiling). The scanner reproduces the
+    * three-regex formulation [[extractRegex]] row for row, in the same
+    * per-type match order: IocScanSpec fuzz-asserts the equality and the
+    * DuckDB oracle runs the ORIGINAL patterns every round.
     */
   def extract(tweets: DataFrame): DataFrame = {
     // P2 — already applied by flatten() on the streaming path; the batch
@@ -91,26 +82,24 @@ object TweetPipeline {
       if (tweets.columns.contains("retweeted"))
         tweets.filter(!col("retweeted") && !col("text").startsWith("RT @"))
       else tweets
-    if (FusedExtract) {
-      // One scan, one Generate: the explode drops text immediately and
-      // fans out the (type, ioc) pairs the scanner already classified.
-      live
-        .select(col("id"), col("created_date"), col("user"), col("hashtags"),
-          explode(graft.functions.ExtractIocs.extract_iocs(col("text"))).as("t"))
-        .select(
-          col("id"),
-          col("created_date").as("date_added"), // firehose.py:41,112
-          col("created_date").as("date_received"),
-          col("t.ioc").as("ioc"),
-          lit("Twitter").as("platform"),
-          col("user").as("source"),
-          col("hashtags").as("tag"),
-          col("t.type").as("type"))
-    } else extractRegex(live)
+    // One scan, one Generate: the explode drops text immediately and
+    // fans out the (type, ioc) pairs the scanner already classified.
+    live
+      .select(col("id"), col("created_date"), col("user"), col("hashtags"),
+        explode(graft.functions.ExtractIocs.extract_iocs(col("text"))).as("t"))
+      .select(
+        col("id"),
+        col("created_date").as("date_added"), // firehose.py:41,112
+        col("created_date").as("date_received"),
+        col("t.ioc").as("ioc"),
+        lit("Twitter").as("platform"),
+        col("user").as("source"),
+        col("hashtags").as("tag"),
+        col("t.type").as("type"))
   }
 
-  /** The original three-regex formulation — the fused path's semantics
-    * oracle (kept runnable for A/B and fuzz-equality, never dead code).
+  /** The original three-regex formulation — the semantics reference
+    * IocScanSpec compares [[extract]] against.
     * Each Generate carries ONLY the surviving columns: the first explode
     * drops the raw text and the by_type array immediately (keeping them
     * would duplicate the text and ALL extracted arrays across the 3

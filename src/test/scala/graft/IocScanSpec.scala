@@ -110,7 +110,7 @@ class IocScanSpec extends AnyFunSuite {
       ("i2", "aa " + "deadbeef" * 4 + " //trailing. end", "u", "t", "2021-01-01"))
       .toDF("id", "text", "user", "hashtags", "created_date")
     val in = docs.unionByName(injected)
-    val fused = TweetPipeline.extract(in) // default path is fused
+    val fused = TweetPipeline.extract(in)
     val regex = TweetPipeline.extractRegex(in)
     assert(fused.exceptAll(regex).isEmpty && regex.exceptAll(fused).isEmpty,
       "fused extract diverges from the regex formulation")

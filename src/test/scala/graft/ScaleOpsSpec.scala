@@ -134,7 +134,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // at DEFAULT thresholds (256 MB skewedPartitionThresholdInBytes) a
     // hot partition of mere megabytes is never split, so an untuned
     // cluster still gets the straggler. The round-9 sf1 probe
-    // (graft.SkewProbe, DEPLOYMENT.md "skew") measured the consequences:
+    // (DEPLOYMENT.md salting row) measured the consequences:
     // broadcast 1.1 s < AQE-tuned 3.6 s < salted-16 4.7 s < plain
     // straggler — tune AQE (or broadcast) first; salt is the fallback for
     // shapes AQE cannot reach (skewed AGG keys, non-SMJ paths).

@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the one session posture: every main builds its session through
+  * [[Session]], and the core count that sizes its shuffles is parsed from
+  * the master string or refused. */
+class SessionSpec extends AnyFunSuite {
+
+  test("src/main has exactly one SparkSession builder, in Session.scala") {
+    val files = {
+      val s = Files.walk(Paths.get("src", "main"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, "source scan found no Scala files under src/main")
+    val hits: Seq[(Path, Int)] = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("SparkSession.builder") => f -> (i + 1)
+      }
+    }
+    assert(hits.map(_._1.getFileName.toString) == Seq("Session.scala"),
+      s"builder call sites: ${hits.map { case (f, l) => s"$f:$l" }.mkString(", ")}")
+  }
+
+  test("core counts parse from local[N], local[*] and local-cluster[w,c,m]") {
+    assert(Session.cores("local[4]") == 4)
+    assert(Session.cores("local[*]") == Runtime.getRuntime.availableProcessors())
+    assert(Session.cores("local-cluster[2,8,8192]") == 16)
+  }
+
+  test("a malformed master fails loudly") {
+    Seq("local[x]", "local[0]", "local", "local-cluster[2,8]", "yarn", "")
+      .foreach { m =>
+        val e = intercept[IllegalArgumentException](Session.cores(m))
+        assert(e.getMessage.contains(s"'$m'"))
+      }
+  }
+}

@@ -10,7 +10,7 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/9 unit specs (full suite)"
+echo "== 1/10 unit specs (full suite)"
 sbt -batch test 2>&1 | tee /tmp/roundclose_test.log
 # Machine-paste the spec count into BASELINE.md's gate row (r13 verdict
 # item 6: the hand-typed count drifted off by one). Parses ScalaTest's
@@ -27,17 +27,17 @@ else
   echo "WARN: no ScalaTest summary line found; BASELINE.md spec-count not updated"
 fi
 
-echo "== 2/9 synth corpus (10x) for the scale legs"
+echo "== 2/10 synth corpus (10x) for the scale legs"
 [ -d target/sf1/lineitem.parquet ] || sbt -batch "runMain graft.Synth /root/testdata/sf0.1 target/sf1 10"
 
-echo "== 3/9 env-gated scale legs (1M-event streaming state bounds + twin-beats-baseline timings)"
+echo "== 3/10 env-gated scale legs (1M-event streaming state bounds + twin-beats-baseline timings)"
 SPARK_GRAFT_SCALE_SPEC=1 sbt -batch "testOnly graft.ScaleOpsSpec graft.PlanShapeSpec"
 
-echo "== 4/9 correctness gate at sf0.01"
+echo "== 4/10 correctness gate at sf0.01"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
 python3 tools/check.py /root/testdata/sf0.01 /tmp/verify_out
 
-echo "== 5/9 fault injection: batch (executor SIGKILL mid-shuffle, 10x corpus) + streaming (SIGKILL mid micro-batch)"
+echo "== 5/10 fault injection: batch (executor SIGKILL mid-shuffle, 10x corpus) + streaming (SIGKILL mid micro-batch)"
 sbt -batch package
 # exclude the -tests jar: `ls | head -1` sorts it FIRST ('-' < '.'), and
 # shipping it as spark.jars gives executors a jar with no app classes —
@@ -51,14 +51,14 @@ SPARK_GRAFT_JARS="$APP_JAR" SPARK_SCALA_VERSION=2.13 \
   sbt -batch "runMain graft.FaultInjectStream" 2>/dev/null \
   | grep -E '"metric"|\[fault-stream\]' | tail -3
 
-echo "== 6/9 streaming throughput (1M-record replay -> extraction -> keyed sink)"
+echo "== 6/10 streaming throughput (1M-record replay -> extraction -> keyed sink)"
 sbt -batch "runMain graft.StreamBench" 2>/dev/null | grep '"metric"' | tail -1 | tee /tmp/stream_throughput.json
 
-echo "== 7/9 leak + copy gates (regenerate LEAKCHECK.json / COPYCHECK.json)"
+echo "== 7/10 leak + copy gates (regenerate LEAKCHECK.json / COPYCHECK.json)"
 python3 tools/leakcheck.py "${ROUND_NUMBER:-0}"
 python3 tools/copycheck.py
 
-echo "== 8/9 bench triple (sf0.1) + stability band"
+echo "== 8/10 bench triple (sf0.1) + stability band"
 for i in 1 2 3; do
   # SPARK_GRAFT_CPUS is EXPLICIT: graft.Bench defaults to local[4] when the
   # env is unset, and BASELINE.md's floors are calibrated at local[32] — a
@@ -71,8 +71,14 @@ for i in 1 2 3; do
 done
 python3 tools/stability.py /tmp/roundclose_full1.json /tmp/roundclose_full2.json /tmp/roundclose_full3.json
 
+echo "== 9/10 PLANS.md: plan-shape table regenerated under the product session posture"
+sbt -batch "runMain graft.PlanTool table" 2>/dev/null \
+  | sed -n '/^# PLANS/,/^<!-- END PLANS -->/p' > /tmp/roundclose_plans.md
+mv /tmp/roundclose_plans.md PLANS.md
+git diff --stat PLANS.md
+
 if [ "${ROUNDCLOSE_SF1_GATE:-0}" = 1 ]; then
-  echo "== 9/9 (opt-in) full oracle gate at the 10x corpus"
+  echo "== 10/10 (opt-in) full oracle gate at the 10x corpus"
   sbt -batch "runMain graft.Verify target/sf1 /tmp/verify_sf1_full"
   CHECK_DUCKDB_MEMORY=60GB CHECK_DUCKDB_TEMPDIR="$PWD/target/duck_tmp" \
     CHECK_DUCKDB_TEMPCAP=50GB \
