@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.Iocs
 import graft.pipeline.{EmailPipeline, TweetPipeline}
 import graft.sources.Tables
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -37,32 +38,39 @@ object SparkEntry {
     * localCheckpoint like the other persisted intermediates
     * ([[graft.Memo]]): the regex ETLs run once per corpus snapshot, and
     * ioc_unified / ioc_first_seen query the materialized table. The
-    * per-feed costs stay measured by ioc_email_etl / ioc_tweet_etl. */
+    * per-feed costs stay measured by ioc_email_etl / ioc_tweet_etl.
+    *
+    * Layout: clustered on (type, ioc) into `spark.sql.shuffle.partitions`
+    * partitions and DECLARED so ([[storeLayout]]) — the bucketed store.
+    * The one exchange is paid once at build time, like a snapshot writer
+    * bucketing its output; it also keeps the regex union from leaving the
+    * checkpoint input-split-bound (a single-file input gave 1-2
+    * partitions, serializing the first stage of every feed consumer).
+    * [[iocSightings]] and ioc_daily_new then plan no (type, ioc) exchange
+    * over the feed. */
   private[graft] def unifiedFeed(s: SparkSession, d: String): DataFrame =
-    Memo("ioc_unified_feed", s, d)(
-      // repartition at BUILD time (one exchange, paid once at warm like a
-      // snapshot writer partitioning its output): the regex union is
-      // otherwise input-split-bound — a single-file test input leaves the
-      // checkpoint with 1-2 partitions, serializing the first stage of
-      // EVERY downstream feed consumer; a persisted canonical table is
-      // written partitioned for reader parallelism
+    Memo("ioc_unified_feed", s, d)(storeLayout(
       EmailPipeline(Tables.emails(s, d), DateAdded)
-        .unionByName(TweetPipeline.extract(Tables.tweets(s, d)))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-        .localCheckpoint())
+        .unionByName(TweetPipeline.extract(Tables.tweets(s, d)))))
 
   /** Per-(type, ioc, source, platform) sighting rollup over the canonical
     * store: count + min/max date_received. This is the TI store's natural
     * secondary index — "when did each witness first/last report each
     * indicator" — and every history/corroboration dashboard reads it, so
-    * it is maintained as its OWN persisted table (one exchange off the
-    * feed, indicator-cardinality output), not rebuilt inside each query:
-    * ioc_first_seen, ioc_confirmation_lag, ioc_source_reliability, and
-    * ioc_feed_overlap all derive from this relation by further grouping
-    * of its (already tiny) key space. Per-day queries (ioc_velocity,
-    * ioc_daily_new) need individual sighting dates and stay on the feed. */
+    * it is maintained as its OWN persisted table (indicator-cardinality
+    * output), not rebuilt inside each query: ioc_first_seen,
+    * ioc_confirmation_lag, ioc_source_reliability, ioc_feed_overlap and
+    * ioc_ttl_status all derive from this relation by further grouping of
+    * its (already tiny) key space. Per-day queries (ioc_velocity,
+    * ioc_daily_new) need individual sighting dates and stay on the feed.
+    *
+    * Layout: the feed's declared (type, ioc) clustering already satisfies
+    * this groupBy, so the build plans NO exchange off the feed (the
+    * store layout's repartition is dropped as redundant), and the rollup
+    * is declared with the same [[storeLayout]] — so every consumer keyed
+    * on (type, ioc) or a superset of it plans no exchange either. */
   private[graft] def iocSightings(s: SparkSession, d: String): DataFrame =
-    Memo("ioc_sightings", s, d)(
+    Memo("ioc_sightings", s, d)(storeLayout(
       // mn/mx are DATE-typed (r15): a min/max over the yyyy-MM-dd STRINGS
       // has a string aggregation buffer, which HashAggregate cannot hold —
       // the build and every downstream min/max were planned as
@@ -74,8 +82,13 @@ object SparkEntry {
         .groupBy(col("type"), col("ioc"), col("source"), col("platform"))
         .agg(count(lit(1)).as("n"),
           min(to_date(col("date_received"))).as("mn"),
-          max(to_date(col("date_received"))).as("mx"))
-        .localCheckpoint())
+          max(to_date(col("date_received"))).as("mx"))))
+
+  /** The IOC store's one physical layout: hash-clustered on (type, ioc)
+    * into the session's shuffle partition count, checkpointed, and
+    * declared to the planner ([[ColumnBridge.hashClusteredCheckpoint]]). */
+  private def storeLayout(df: DataFrame): DataFrame = ColumnBridge.hashClusteredCheckpoint(df,
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, "type", "ioc")
 
   /** Parity queries over the reference's own surface (SURVEY.md §2.1-§2.4). */
   private val parity: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -145,22 +158,21 @@ object SparkEntry {
     "ioc_confirmation_lag" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("type"), col("ioc")).orderBy(col("fd"), col("source"))
-      // ONE explicit (type, ioc) exchange feeds the whole chain (r15):
-      // hash(type, ioc) clusters the (type, ioc, source) groupBy, the
-      // rank window, AND the top-2 pivot below (guide §2.4 — operations
-      // keyed the same way share an exchange); the per-witness first-seen
-      // fold is a date min (HashAggregate — see [[iocSightings]]), where
+      // NO (type, ioc) exchange: the sighting index is stored clustered
+      // on (type, ioc) ([[iocSightings]]), which clusters the (type, ioc,
+      // source) groupBy, the rank window, AND the top-2 pivot below
+      // (guide §2.4 — operations keyed the same way share a layout); the
+      // per-witness first-seen fold is a date min (HashAggregate), where
       // the string min was a SortAggregate pair around its own exchange.
       val ranked = iocSightings(s, d)
-        .repartition(col("type"), col("ioc"))
         .groupBy(col("type"), col("ioc"), col("source"))
         .agg(min(col("mn")).as("fd"))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 2)
       // pivot the top-2 witnesses with a conditional agg on the SAME
-      // (type, ioc) partitioning the window just established — no
-      // exchange, and no first/second self-join duplicating the ranked
-      // subtree (the pre-rewrite shape paid both)
+      // (type, ioc) partitioning the window ran on — no exchange, and no
+      // first/second self-join duplicating the ranked subtree (the
+      // pre-rewrite shape paid both)
       ranked.groupBy(col("type"), col("ioc"))
         .agg(max(when(col("rk") === 1, col("fd"))).as("d1"),
           max(when(col("rk") === 2, col("fd"))).as("d2"))
@@ -192,12 +204,11 @@ object SparkEntry {
       // subtree twice and paid a broadcast
       val nw = org.apache.spark.sql.expressions.Window
         .partitionBy(col("type"), col("ioc"))
-      // ONE explicit (type, ioc) exchange shared by the witness collapse
-      // AND the count window (r15, guide §2.4): hash(type, ioc) clusters
-      // the (type, ioc, source) groupBy, so the window no longer plans
-      // its own second corpus-keyed exchange on top of the groupBy's.
+      // NO (type, ioc) exchange: the sighting index's stored (type, ioc)
+      // clustering ([[iocSightings]]) serves both the witness collapse
+      // AND the count window (guide §2.4), so neither plans its own
+      // corpus-keyed exchange.
       iocSightings(s, d)
-        .repartition(col("type"), col("ioc"))
         .groupBy(col("type"), col("ioc"), col("source"))
         .agg(sum(col("n")).as("n"))
         .withColumn("n_sources", count(lit(1)).over(nw))
@@ -218,8 +229,10 @@ object SparkEntry {
     // join formulation read the feed twice and, once the first-seen map
     // outgrows the broadcast threshold (it is indicator-cardinality, so
     // it does at 100 TB), degrades to a 3-exchange/2-sort sort-merge
-    // plan; the window form is ONE feed scan, one (type, ioc) exchange,
-    // and the dashboard-sized (type, day) agg at every scale.
+    // plan; the window form is ONE feed scan and the dashboard-sized
+    // (type, day) agg at every scale — the window's (type, ioc)
+    // clustering is the feed's stored layout ([[unifiedFeed]]), so it
+    // plans no exchange of its own.
     "ioc_daily_new" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("type"), col("ioc"))

@@ -730,29 +730,54 @@ object Dedup {
     * over the base edge set and TODAY'S delta edges, produce the label
     * map of base ∪ delta without relabeling the whole graph.
     *
-    * Method: contract each delta edge to its endpoints' base labels (a
-    * node with no base label — a brand-new node — is its own label);
-    * drop edges contracted to a self-loop (both endpoints already in one
-    * component: nothing to do); run the SAME min-label propagation, but
-    * over the CONTRACTED graph, whose nodes are touched component labels
-    * and new nodes — bounded by 2·|delta|, never the corpus. Compose:
-    * base nodes whose label was merged take the merged label, untouched
-    * nodes keep theirs, new nodes take their contracted-graph label.
+    * One observed property picks the path, as in [[componentLabels]]:
+    * when the base label rows plus the delta edges total at most
+    * [[DriverCcMaxEdges]], both are collected (one bounded `limit`
+    * collect) and labeled by ONE union-find ([[driverComponentLabels]])
+    * over the (node, lbl) rows and the delta edges. The base map is a
+    * star on each component's minimum, so this is the union-find of the
+    * base components joined by the delta edges — the same labels as the
+    * contracted-graph fold below, with no join jobs around a small delta.
+    * Counting the base rows against the cap keeps the driver's per-build
+    * heap bound true. Anything larger runs
+    * [[distributedComponentLabelsIncremental]].
     *
     * Equivalence to the full relabel is structural — a base label IS the
     * min node of its component, so the min over a merged group of
     * {component labels ∪ new node ids} is the min over the merged node
     * set — and is pinned two ways: PropertiesSpec (random graphs +
-    * adversarial splits vs [[componentLabels]] on the union) and the
-    * driver oracle (the consuming queries' DuckDB twins recompute
-    * components from scratch over ALL edges each round).
+    * adversarial splits vs [[componentLabels]] on the union, on both
+    * paths) and the driver oracle (the consuming queries' DuckDB twins
+    * recompute components from scratch over ALL edges each round).
+    *
+    * Both paths return a checkpointed frame, like [[componentLabels]]. */
+  private[graft] def componentLabelsIncremental(
+      baseLbl: DataFrame, deltaPairs: DataFrame): DataFrame = {
+    val Seq(c1, c2) = deltaPairs.columns.toSeq.map(col)
+    val edges = baseLbl.select(col("node").as("id1"), col("lbl").as("id2"))
+      .unionByName(deltaPairs.select(c1.as("id1"), c2.as("id2")))
+    // one partition, so the bounded collect is ONE job (over the union's
+    // partitions `limit` scans in rounds, a job each); the one task stops
+    // after cap + 1 rows, label map first, then delta
+    smallPairGraph(edges.coalesce(1))
+      .fold(distributedComponentLabelsIncremental(baseLbl, deltaPairs))(driverComponentLabels(edges, _))
+  }
+
+  /** The distributed incremental fold. Contract each delta edge to its
+    * endpoints' base labels (a node with no base label — a brand-new node
+    * — is its own label); drop edges contracted to a self-loop (both
+    * endpoints already in one component: nothing to do); label the
+    * CONTRACTED graph, whose nodes are touched component labels and new
+    * nodes — bounded by 2·|delta|, never the corpus. Compose: base nodes
+    * whose label was merged take the merged label, untouched nodes keep
+    * theirs, new nodes take their contracted-graph label.
     *
     * 100 TB shape: the nightly cost is |delta| joins against the
     * persisted label map plus a labeling of the contracted graph (touched
     * components and new nodes only — small enough for the driver path
     * whenever the delta is) — not a full multi-round shuffle of the
     * corpus-sized pair graph. */
-  private[graft] def componentLabelsIncremental(
+  private[graft] def distributedComponentLabelsIncremental(
       baseLbl: DataFrame, deltaPairs: DataFrame): DataFrame = {
     val Seq(c1, c2) = deltaPairs.columns.toSeq.map(col)
     val de = deltaPairs.select(c1.as("a"), c2.as("b"))
@@ -778,7 +803,7 @@ object Dedup {
     // emit) — the coalesce is generic-input safety, not a reachable path
     val newLabeled = newNodes.join(merged, Seq("node"), "left")
       .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
-    relabeled.unionByName(newLabeled)
+    relabeled.unionByName(newLabeled).localCheckpoint()
   }
 
   /** SimHash banding: 4 bands × 15 bits over the 60-bit fingerprint; the

@@ -62,8 +62,9 @@ object Graph {
   /** Component labels of the co-purchase graph, memoized per (session,
     * dataset) — built INCREMENTALLY: the full label-propagation loop runs
     * only on the base snapshot ([[ccLabelsBase]]); today's delta edges
-    * fold in via [[Dedup.componentLabelsIncremental]]'s contracted-graph
-    * propagation (touched components only). The `graph_cc` oracle is a
+    * fold in via [[Dedup.componentLabelsIncremental]] (one driver
+    * union-find under the driver cap, the contracted-graph propagation
+    * above it — touched components only). The `graph_cc` oracle is a
     * full recompute over ALL edges, so every green round re-proves
     * incremental ≡ full relabel; the warm ledger's base-vs-incr lines
     * price the nightly marginal cost the split exists to demonstrate. */
@@ -71,8 +72,7 @@ object Graph {
     graft.Memo("graph_cc_labels", s, d)(
       Dedup.componentLabelsIncremental(
         ccLabelsBase(s, d),
-        edgePairs(s, d).filter(Dedup.isDeltaPair(col("id1"), col("id2"))))
-        .localCheckpoint())
+        edgePairs(s, d).filter(Dedup.isDeltaPair(col("id1"), col("id2")))))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

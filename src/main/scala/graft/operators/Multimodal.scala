@@ -279,16 +279,15 @@ object Multimodal {
     * [[Dedup.clusterLabels]], a production pipeline persists the label
     * table once per snapshot; the CC loop's per-round job overhead
     * belongs to the index build, not every reader. Built INCREMENTALLY
-    * like [[Graph.ccLabels]]: delta pairs fold into the base snapshot via
-    * the contracted-graph propagation; `binary_phash_clusters`' full-
+    * like [[Graph.ccLabels]]: delta pairs fold into the base snapshot
+    * ([[Dedup.componentLabelsIncremental]]); `binary_phash_clusters`' full-
     * recompute oracle re-proves incremental ≡ full relabel every round. */
   private[operators] def phashClusterLabels(s: SparkSession, d: String): DataFrame =
     graft.Memo("phash_labels", s, d)(
       Dedup.componentLabelsIncremental(
         phashClusterLabelsBase(s, d),
         phashPairs(s, d).select(col("id1"), col("id2"))
-          .filter(Dedup.isDeltaPair(col("id1"), col("id2"))))
-        .localCheckpoint())
+          .filter(Dedup.isDeltaPair(col("id1"), col("id2")))))
 
   /** Banded phash candidate pairs (id1 < id2, hamming ≤ MaxHamming) —
     * the body of `binary_phash` sans sort, shared with

@@ -66,7 +66,7 @@ object Threat {
     graft.Memo("ioc_campaign_pairs", s, d) {
       feed(s, d)
         .filter(substring(md5(concat(col("platform"), lit("|"), col("id"))), 1, 1) === "0")
-        .select(col("platform"), col("id"), col("ioc")).distinct()
+        // no distinct first: collect_set already dedups each message's iocs
         .groupBy(col("platform"), col("id"))
         .agg(sort_array(collect_set(col("ioc"))).as("xs"))
         .select(explode(expr(
@@ -84,17 +84,17 @@ object Threat {
         .filter(!Dedup.isDeltaPair(col("a"), col("b")))))
 
   /** Final labels, built INCREMENTALLY like [[Graph.ccLabels]]: delta
-    * co-sightings fold into the base snapshot via the contracted-graph
-    * propagation; the campaign queries' full-recompute oracles re-prove
-    * incremental ≡ full relabel every round (string nodes here — the
-    * generic machinery is node-type-agnostic). */
+    * co-sightings fold into the base snapshot
+    * ([[Dedup.componentLabelsIncremental]]); the campaign queries'
+    * full-recompute oracles re-prove incremental ≡ full relabel every
+    * round (string nodes here — the generic machinery is
+    * node-type-agnostic). */
   private[graft] def campaignLabels(s: SparkSession, d: String): DataFrame =
     graft.Memo("ioc_campaign_labels", s, d)(
       Dedup.componentLabelsIncremental(
         campaignLabelsBase(s, d),
         campaignPairs(s, d).filter(Dedup.isDeltaPair(col("a"), col("b"))))
-        .select(col("node").as("ioc"), col("lbl").as("campaign_id"))
-        .localCheckpoint())
+        .select(col("node").as("ioc"), col("lbl").as("campaign_id")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

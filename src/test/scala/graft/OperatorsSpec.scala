@@ -1069,4 +1069,58 @@ class OperatorsSpec extends AnyFunSuite {
     val full = rollup(feed)
     assert(merged.except(full).count() == 0 && full.except(merged).count() == 0)
   }
+
+  test("the IOC store's declared (type, ioc) layout is where every row sits") {
+    // unifiedFeed and iocSightings declare HashPartitioning((type, ioc), n)
+    // to the planner, which then drops the (type, ioc) exchange of every
+    // consumer — so each row must be in partition pmod(hash(type, ioc), n),
+    // exactly where a shuffle on that key would have put it, and that must
+    // be what the relation declares
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val d = "/root/testdata/sf0.001"
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for ((name, df) <- Seq("unified feed" -> SparkEntry.unifiedFeed(spark, d),
+                           "sighting index" -> SparkEntry.iocSightings(spark, d))) {
+      val declared = df.queryExecution.analyzed.asInstanceOf[LogicalRDD].outputPartitioning
+      val hp = declared match {
+        case h: HashPartitioning => h
+        case p => fail(s"$name declares $p, not a hash partitioning")
+      }
+      assert(hp.numPartitions == n && df.rdd.getNumPartitions == n, s"$name: $hp")
+      assert(hp.expressions.collect { case a: Attribute => a.name } == Seq("type", "ioc"),
+        s"$name: $hp")
+      val r = df.select(spark_partition_id().as("pid"),
+          pmod(hash(col("type"), col("ioc")), lit(n)).as("want"),
+          ColumnBridge.column(hp.partitionIdExpression).as("decl"))
+        .agg(count(lit(1)),
+          count(when(col("pid") =!= col("want") || col("pid") =!= col("decl"), true)),
+          countDistinct(col("pid")))
+        .head()
+      assert(r.getLong(0) > 0 && r.getLong(2) > 1, s"$name: vacuous layout check $r")
+      assert(r.getLong(1) == 0, s"$name: ${r.getLong(1)} rows outside their declared partition")
+    }
+  }
+
+  test("the store layout helper keeps stats and rejects a partition count other than n") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val df = spark.range(1000).select((col("id") % 7).cast("string").as("type"),
+      col("id").cast("string").as("ioc"))
+    val e = intercept[IllegalArgumentException](
+      ColumnBridge.hashClusteredCheckpoint(df, n + 1, "type", "ioc"))
+    assert(e.getMessage.contains(s"is not spark.sql.shuffle.partitions = $n"), e.getMessage)
+    // the declaration changes only the partitioning: size statistics (and
+    // with them every broadcast decision) match an undeclared checkpoint
+    val declared = ColumnBridge.hashClusteredCheckpoint(df, n, "type", "ioc")
+    val plain = df.repartition(n, col("type"), col("ioc")).localCheckpoint()
+    assert(declared.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      plain.queryExecution.optimizedPlan.stats.sizeInBytes)
+    val grouped = declared.groupBy(col("ioc"), col("type")).count()
+    assert(!grouped.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
+      grouped.queryExecution.executedPlan.toString)
+    assert(grouped.count() == 1000)
+  }
 }

@@ -346,6 +346,23 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Expand"), s"ioc_first_seen re-grew a distinct Expand:\n$p")
   }
 
+  test("IOC store consumers take their (type, ioc) clustering from the store") {
+    // unifiedFeed and iocSightings are stored hash-clustered on (type, ioc)
+    // and declare it, so no consumer keyed on (type, ioc) — or a superset
+    // — may plan its own exchange on that key. What is left is each
+    // query's final roll-up on a coarser key.
+    val keyedOnStoreKey = """Exchange hashpartitioning\((type|ioc)#\d+, (type|ioc)#\d+, \d+\)""".r
+    val want = Seq("ioc_first_seen" -> 0, "ioc_feed_overlap" -> 1, "ioc_confirmation_lag" -> 1,
+      "ioc_source_reliability" -> 1, "ioc_ttl_status" -> 1, "ioc_daily_new" -> 1)
+    for ((q, max) <- want) {
+      val p = plan(q)
+      val n = "Exchange hashpartitioning".r.findAllIn(p).size
+      assert(n <= max, s"$q has $n hash exchanges (max $max):\n$p")
+      assert(keyedOnStoreKey.findFirstIn(p).isEmpty,
+        s"$q re-shuffles the store on (type, ioc):\n$p")
+    }
+  }
+
   test("lsh search path: bucket join only, skew filter broadcasts, no cartesian") {
     val topk = plan("sim_lsh_topk")
     assert(!topk.contains("CartesianProduct"), s"sim_lsh_topk has a cartesian:\n$topk")
@@ -710,11 +727,11 @@ class PlanShapeSpec extends AnyFunSuite {
       "ioc_email_etl" -> 0, "ioc_tweet_etl" -> 0, "ioc_json_encode" -> 0,
       "ioc_classify" -> 0,
       // unified-feed analytics: all read the persisted (type, ioc,
-      // source, platform) sighting rollup, so every exchange is over
-      // indicator-cardinality input and none duplicates a subtree
-      "ioc_first_seen" -> 1, "ioc_source_reliability" -> 3,
-      "ioc_confirmation_lag" -> 3, "ioc_feed_overlap" -> 2,
-      "ioc_ttl_status" -> 2, "ioc_sightings" -> 0,
+      // source, platform) sighting rollup, stored clustered on (type,
+      // ioc), so the only exchanges left are coarser roll-ups
+      "ioc_first_seen" -> 0, "ioc_source_reliability" -> 1,
+      "ioc_confirmation_lag" -> 1, "ioc_feed_overlap" -> 1,
+      "ioc_ttl_status" -> 1, "ioc_sightings" -> 0,
       // memoized shingle/signature index consumers: index scan + own aggs
       "dedup_lsh_precision" -> 1, "dedup_minhash_est" -> 1,
       "dedup_shingle_df_hist" -> 2, "text_trigrams" -> 2,

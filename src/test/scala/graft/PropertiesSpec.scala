@@ -221,15 +221,22 @@ class PropertiesSpec extends AnyFunSuite {
     //  - a chain of bridges merging THREE components transitively in one
     //    delta batch (needs propagation on the contracted graph, not one
     //    join)
-    // plus ScalaCheck random graphs with a random edge split.
+    // plus ScalaCheck random graphs with a random edge split. Both fold
+    // paths run on every split: the driver union-find these sizes pick,
+    // and the distributed contracted-graph fold, called directly.
     val D = graft.operators.Dedup
     def full(pairs: Seq[(Long, Long)]) =
       D.componentLabels(pairs.toDF("id1", "id2"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    def incr(base: Seq[(Long, Long)], delta: Seq[(Long, Long)]) =
-      D.componentLabelsIncremental(
-          D.componentLabels(base.toDF("id1", "id2")), delta.toDF("id1", "id2"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def incr(base: Seq[(Long, Long)], delta: Seq[(Long, Long)]) = {
+      val (b, d) = (D.componentLabels(base.toDF("id1", "id2")), delta.toDF("id1", "id2"))
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val drv = labels(D.componentLabelsIncremental(b, d))
+      assert(drv == labels(D.distributedComponentLabelsIncremental(b, d)),
+        s"driver and distributed folds disagree on base=$base delta=$delta")
+      drv
+    }
 
     // hand-built: components {10,11,12}, {20,21}, {30,31}, {40,41}
     val base = Seq((10L, 11L), (11L, 12L), (20L, 21L), (30L, 31L), (40L, 41L))
@@ -258,6 +265,56 @@ class PropertiesSpec extends AnyFunSuite {
       val (d2, b2) = edges.partition { case (a, b) => (a * 31 + b) % 4 == 0 }
       assert(incr(b2, d2) == full(edges), s"random seed=$seed divergence")
     }
+  }
+
+  test("property: incremental ≡ full relabel on String nodes, on both fold paths") {
+    // String labels are the UTF-8-byte-order minimum (Spark's `min`): the
+    // driver fold must not fall back to java.lang.String's UTF-16 order,
+    // under which U+1F600 sorts BELOW U+FF61
+    val D = graft.operators.Dedup
+    val (lo, hi) = ("｡", "😀")
+    assert(hi.compareTo(lo) < 0, "the pair must disagree under UTF-16 order")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val char = Gen.oneOf("a", "z", "é", lo, hi, "𐀀")
+    val node = Gen.choose(1, 3).flatMap(Gen.listOfN(_, char)).map(_.mkString)
+    val gen = Gen.listOfN(40, Gen.zip(node, node))
+    val splits = Seq((Seq((hi, hi + hi), ("x", "y")), Seq((hi + hi, lo), ("y", "z")))) ++
+      (1 to 3).map { seed =>
+        val es = gen.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed.toLong)).distinct
+        es.partition { case (a, b) => (a + b).hashCode % 4 != 0 }
+      }
+    splits.zipWithIndex.foreach { case ((base, delta), i) =>
+      val b = D.componentLabels(base.toDF("a", "b"))
+      val d = delta.toDF("a", "b")
+      val want = labels(D.componentLabels((base ++ delta).toDF("a", "b")))
+      if (i == 0) assert(want(hi) == lo && want("z") == "x", s"UTF-8 minimum lost: $want")
+      assert(labels(D.componentLabelsIncremental(b, d)) == want, s"driver fold, split $i")
+      assert(labels(D.distributedComponentLabelsIncremental(b, d)) == want,
+        s"distributed fold, split $i")
+    }
+  }
+
+  test("property: an incremental fold just over the driver cap runs distributed, ≡ full relabel") {
+    // the cap counts base label rows PLUS delta edges: a total of cap + 1
+    // must leave the driver path even though the delta alone is tiny
+    val D = graft.operators.Dedup
+    val cap = D.DriverCcMaxEdges.toLong
+    // yesterday's labels over cap - 2 nodes: pairs {2k, 2k+1} labeled 2k
+    val base = spark.range(cap - 2)
+      .select(col("id").as("node"), (col("id") - col("id") % 2).as("lbl"))
+    // bridges chaining {0,1}, {2,3}, {4,5}, and a pair of new nodes
+    val delta = Seq((1L, 2L), (3L, 4L), (cap, cap + 2)).toDF("id1", "id2")
+    val edges = base.select(col("node").as("id1"), col("lbl").as("id2")).unionByName(delta)
+    assert(D.smallPairGraph(edges).isEmpty, "cap + 1 rows must not fit the driver path")
+    val got = D.componentLabelsIncremental(base, delta).localCheckpoint()
+    val want = D.componentLabels(base.filter(col("node") =!= col("lbl"))
+      .select(col("node").as("id1"), col("lbl").as("id2")).unionByName(delta))
+    assert(got.count() == cap && got.except(want).count() == 0 && want.except(got).count() == 0)
+    val m = got.filter(col("node").isin(0L, 1L, 3L, 4L, 5L, 6L, cap - 3, cap, cap + 2))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(m == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 4L -> 0L, 5L -> 0L, 6L -> 6L,
+      cap - 3 -> (cap - 4), cap -> cap, (cap + 2) -> cap), s"$m")
   }
 
   test("property: ITERATED incremental folds ≡ full relabel (multi-day deltas)") {
