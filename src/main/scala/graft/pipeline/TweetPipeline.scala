@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import graft.extract.Iocs
+import graft.functions.ExtractIocs
 import graft.model.Schemas
 
 /** Tweet ETL — the Spark re-expression of /root/reference/firehose.py's
@@ -75,18 +77,22 @@ object TweetPipeline {
     * per-type match order: IocScanSpec fuzz-asserts the equality and the
     * DuckDB oracle runs the ORIGINAL patterns every round.
     */
-  def extract(tweets: DataFrame): DataFrame = {
-    // P2 — already applied by flatten() on the streaming path; the batch
-    // path over a pre-flattened table carries the raw retweeted flag.
-    val live =
-      if (tweets.columns.contains("retweeted"))
-        tweets.filter(!col("retweeted") && !col("text").startsWith("RT @"))
-      else tweets
-    // One scan, one Generate: the explode drops text immediately and
-    // fans out the (type, ioc) pairs the scanner already classified.
+  def extract(tweets: DataFrame): DataFrame =
+    canonical(live(tweets), ExtractIocs.extract_iocs(col("text")))
+
+  /** P2 on a pre-flattened table, which carries the raw retweeted flag;
+    * flatten() already applied it on the raw-JSON path. */
+  private def live(tweets: DataFrame): DataFrame =
+    if (tweets.columns.contains("retweeted"))
+      tweets.filter(!col("retweeted") && !col("text").startsWith("RT @"))
+    else tweets
+
+  /** One Generate into the canonical 8 columns: the explode drops text
+    * immediately and fans out the (type, ioc) pairs already classified. */
+  private def canonical(live: DataFrame, iocs: Column): DataFrame =
     live
       .select(col("id"), col("created_date"), col("user"), col("hashtags"),
-        explode(graft.functions.ExtractIocs.extract_iocs(col("text"))).as("t"))
+        explode(iocs).as("t"))
       .select(
         col("id"),
         col("created_date").as("date_added"), // firehose.py:41,112
@@ -96,7 +102,6 @@ object TweetPipeline {
         col("user").as("source"),
         col("hashtags").as("tag"),
         col("t.type").as("type"))
-  }
 
   /** The original three-regex formulation — the semantics reference
     * IocScanSpec compares [[extract]] against.
@@ -124,34 +129,66 @@ object TweetPipeline {
         col("t.type").as("type"))
   }
 
-  /** Pastebin enrichment (S6/X5, firehose.py:50-71): pick each tweet's first
-    * pastebin link (P6), left-join the pages lookup (url → array<line>), run
-    * sort_iocs classification (R9) over the fetched lines, and return the
-    * classified lines in the canonical frame, unioned with the tweet-text
-    * extractions. In production the lookup table is produced by a
-    * per-partition HTTP fetch (nondeterministic, kept out of Catalyst); in
-    * tests it is a fixture table (FIXTURES.md §A3).
+  /** Pastebin enrichment (S6/X5, firehose.py:50-71) in one pass: apply P2
+    * once to the whole row, pick each tweet's first pastebin link (P6),
+    * attach its page's classified lines (R9, `unmatched` dropped as in
+    * dict_to_kv), and merge them into the text IOCs with X5's `concat`
+    * (firehose.py's `.extend()`), so ONE Generate emits the canonical frame
+    * from ONE scan of `tweets`. Duplicate page urls concatenate their
+    * lines; null urls never match; null lines and null elements emit
+    * nothing.
+    *
+    * Where the lines come from:
+    *  - a streaming `tweets` with a static `pages` no larger than
+    *    `spark.sql.autoBroadcastJoinThreshold` (the size at which the
+    *    planner would broadcast it again in every micro-batch): `pages` is
+    *    collected ONCE, here, into a broadcast url → page IOCs map read by
+    *    one lookup expression, so the micro-batch plan has no join. The
+    *    static table is a snapshot taken when the query is defined: new
+    *    pages need a query restart, or README's per-batch
+    *    `LivePastebin.fetchPages` inside `foreachBatch`, a batch call;
+    *  - otherwise (batch callers, larger or streaming `pages`): a left join
+    *    against `pages` grouped by url, in one partition when it is small.
+    * In production the lookup table is produced by a per-partition HTTP
+    * fetch (nondeterministic, kept out of Catalyst); in tests it is a
+    * fixture table (FIXTURES.md §A3).
     */
   def withPastebin(tweets: DataFrame, pages: DataFrame): DataFrame = {
-    val linked = tweets
-      .withColumn("pastebin_link", // P6; try_: ANSI mode throws on empty arrays
-        try_element_at(filter(split(col("urls"), ";"), u => u.contains("pastebin")), lit(1)))
-      .join(pages.withColumnRenamed("url", "pastebin_link"),
-        Seq("pastebin_link"), "left")
-    val fetched = linked
-      .filter(col("lines").isNotNull)
-      .select(col("id"), col("created_date"), col("user"), col("hashtags"),
-        explode(col("lines")).as("line"))
-      .select(
-        col("id"),
-        col("created_date").as("date_added"),
-        col("created_date").as("date_received"),
-        col("line").as("ioc"),
-        lit("Twitter").as("platform"),
-        col("user").as("source"),
-        col("hashtags").as("tag"),
-        Iocs.classify(col("line")).as("type"))
-      .filter(col("type") =!= "unmatched") // unmatched kept out of the sink, as in dict_to_kv
-    extract(tweets).unionByName(fetched)
+    val linked = live(tweets).withColumn("pastebin_link", // P6; try_: ANSI mode throws on empty arrays
+      try_element_at(filter(split(col("urls"), ";"), u => u.contains("pastebin")), lit(1)))
+    val byPage = pages.filter(col("url").isNotNull && col("lines").isNotNull)
+      .select(col("url"), pageIocs(col("lines")).as("iocs"))
+    val textIocs = ExtractIocs.extract_iocs(col("text"))
+    val small = !pages.isStreaming && fitsBroadcast(pages)
+    if (small && tweets.isStreaming) {
+      val byUrl = byPage.collect()
+        .groupMapReduce(_.getString(0))(_.getSeq[Row](1))(_ ++ _)
+      val bc = pages.sparkSession.sparkContext.broadcast(byUrl)
+      val lookup = udf(new UDF1[String, Seq[Row]] {
+        def call(link: String): Seq[Row] = bc.value.getOrElse(link, Nil)
+      }, ExtractIocs.OutType)
+      canonical(linked, concat(textIocs, lookup(col("pastebin_link"))))
+    } else {
+      // a table small enough to broadcast is gathered whole anyway: group
+      // it in one partition rather than pay an exchange for it
+      val byUrl = (if (small) byPage.coalesce(1) else byPage)
+        .groupBy(col("url").as("pastebin_link"))
+        .agg(functions.flatten(collect_list(col("iocs"))).as("page_iocs")) // not this object's flatten
+      canonical(linked.join(byUrl, Seq("pastebin_link"), "left"),
+        concat(textIocs, coalesce(col("page_iocs"), array().cast(ExtractIocs.OutType))))
+    }
+  }
+
+  /** A page's lines as (type, ioc) pairs, the scanner's output shape. */
+  private def pageIocs(lines: Column): Column =
+    filter(
+      transform(filter(lines, _.isNotNull), l => struct(Iocs.classify(l).as("type"), l.as("ioc"))),
+      _("type") =!= "unmatched")
+
+  /** JoinSelection's size rule: whether the planner would broadcast `pages`
+    * as a join side (for a static side under a stream, in every micro-batch). */
+  private def fitsBroadcast(pages: DataFrame): Boolean = {
+    val size = pages.queryExecution.optimizedPlan.stats.sizeInBytes
+    size >= 0 && size <= pages.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
   }
 }

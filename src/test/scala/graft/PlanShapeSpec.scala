@@ -135,6 +135,11 @@ class PlanShapeSpec extends AnyFunSuite {
       val p = plan(q)
       assert(p.contains("BroadcastHashJoin"), s"$q lost its broadcast join:\n$p")
     }
+    // the pastebin enrichment is one pass: one scan of the tweets, text and
+    // page IOCs merged by concat, not unioned from a second scan
+    val pe = plan("ioc_pastebin_enrich")
+    assert("Scan parquet".r.findAllIn(pe).size == 1, s"pastebin enrichment scans twice:\n$pe")
+    assert(!pe.contains("Union"), s"pastebin enrichment still unions:\n$pe")
   }
 
   test("new TPC-H shapes keep their intended join strategies") {

@@ -316,4 +316,105 @@ class TweetStreamSpec extends AnyFunSuite {
       batch.except(streamed).count() == 0,
       "streaming-maintained sighting index diverged from the batch rebuild")
   }
+
+  test("withPastebin: a retweet in a pre-flattened table emits no rows, pastebin leg included (P2)") {
+    val tweets = Seq(
+      ("1", "c2 1.2.3.4", "u", "t", "2024-01-01", "https://pastebin.com/p1", true),
+      ("2", "RT @x: 5.6.7.8", "u", "t", "2024-01-01", "https://pastebin.com/p1", false),
+      ("3", "c2 9.9.9.9", "u", "t", "2024-01-01", "https://pastebin.com/p1", false))
+      .toDF("id", "text", "user", "hashtags", "created_date", "urls", "retweeted")
+    val pages = Seq(("https://pastebin.com/p1", Seq("10.0.0.1", "xx"))).toDF("url", "lines")
+    val out = TweetPipeline.withPastebin(tweets, pages).select("id", "ioc").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(out == Seq(("3", "10.0.0.1"), ("3", "9.9.9.9")), s"retweets leaked: $out")
+  }
+
+  test("withPastebin: streaming enrichment ≡ batch enrichment ≡ the text∪pages union; one scan, no join per micro-batch") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.functions.{col, explode, lit, split, try_element_at, filter => afilter}
+    val p1 = "https://pastebin.com/p1"
+    val p2 = "https://pastebin.com/p2"
+    val p3 = "https://pastebin.com/p3"
+    val p4 = "https://pastebin.com/p4"
+    val dir = Files.createTempDirectory("pastebin_stream")
+    Files.writeString(dir.resolve("tweets.jsonl"), Seq(
+      tweet(100, "c2 1.1.1.1", urls = Seq(p1)),                  // duplicate-url page
+      tweet(101, "no link 2.2.2.2"),                             // no link
+      tweet(102, "two links 3.3.3.3", urls = Seq(p2, p1)),       // first link only (P6)
+      tweet(103, "retweet 7.7.7.7", retweeted = true, urls = Seq(p1)),
+      tweet(104, "null page 4.4.4.4", urls = Seq(p3)),           // null-lines page
+      tweet(105, "nothing in the text", urls = Seq("https://x.example/a", p4)),
+      tweet(106, "RT @x: 8.8.8.8", urls = Seq(p2))).mkString("\n"))
+    val pages = Seq[(String, Seq[String])](
+      (p1, Seq("10.0.0.1", "host.evil.com")),
+      (p1, Seq("d41d8cd98f00b204e9800998ecf8427e", "xx")),
+      (p2, Seq("10.0.0.2")),
+      (p3, null),
+      (p4, Seq(null, "10.0.0.4", "xx")),
+      (null, Seq("10.9.9.9"))).toDF("url", "lines")
+
+    // the pre-one-pass formulation, kept here as the reference
+    def unionReference(flat: DataFrame): DataFrame = {
+      val fetched = flat
+        .withColumn("pastebin_link", try_element_at(
+          afilter(split(col("urls"), ";"), u => u.contains("pastebin")), lit(1)))
+        .join(pages.withColumnRenamed("url", "pastebin_link"), Seq("pastebin_link"), "left")
+        .filter(col("lines").isNotNull)
+        .select(col("id"), col("created_date"), col("user"), col("hashtags"),
+          explode(col("lines")).as("line"))
+        .select(col("id"), col("created_date").as("date_added"),
+          col("created_date").as("date_received"), col("line").as("ioc"),
+          lit("Twitter").as("platform"), col("user").as("source"),
+          col("hashtags").as("tag"), graft.extract.Iocs.classify(col("line")).as("type"))
+        .filter(col("type") =!= "unmatched")
+      TweetPipeline.extract(flat).unionByName(fetched)
+    }
+    // streaming micro-batches run adaptively: look inside the AQE wrapper
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    def streamed(name: String): (Seq[String], SparkPlan) = {
+      val q = TweetPipeline.withPastebin(TweetPipeline.flatten(spark.readStream.text(dir.toString)), pages)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      (rows(spark.table(name)),
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+    }
+
+    val flat = TweetPipeline.flatten(spark.read.text(dir.toString))
+    val batch = rows(TweetPipeline.withPastebin(flat, pages))
+    assert(batch == rows(unionReference(flat)), "one pass diverged from the union formulation")
+    val ids = batch.map(r => (r.split('|')(0), r.split('|')(3)))
+    for (hit <- Seq(("100", "1.1.1.1"), ("100", "10.0.0.1"), ("100", "host.evil.com"),
+                    ("100", "d41d8cd98f00b204e9800998ecf8427e"), ("101", "2.2.2.2"),
+                    ("102", "3.3.3.3"), ("102", "10.0.0.2"), ("104", "4.4.4.4"),
+                    ("105", "10.0.0.4")))
+      assert(ids.count(_ == hit) == 1, s"$hit not emitted exactly once: $ids")
+    assert(ids.size == 9, s"unexpected rows: $ids")
+
+    val (snap, snapPlan) = streamed("pastebin_snapshot")
+    assert(snap == batch, s"streaming enrichment diverged:\n stream=$snap\n batch=$batch")
+    assert(aqe.collect(snapPlan) { case b: BroadcastExchangeExec => b }.isEmpty &&
+      aqe.collect(snapPlan) { case j: BaseJoinExec => j }.isEmpty &&
+      aqe.collect(snapPlan) { case u: UnionExec => u }.isEmpty,
+      s"micro-batch plan still joins or unions:\n$snapPlan")
+    assert(aqe.collect(snapPlan) { case s: FileSourceScanExec => s }.size == 1,
+      s"micro-batch plan does not scan its source once:\n$snapPlan")
+
+    // a static side above the broadcast threshold keeps the join
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val (joined, joinedPlan) =
+      try streamed("pastebin_joined")
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(aqe.collect(joinedPlan) { case j: BaseJoinExec => j }.nonEmpty,
+      s"over-threshold static side lost its join:\n$joinedPlan")
+    assert(joined == batch, s"joined streaming enrichment diverged:\n stream=$joined\n batch=$batch")
+  }
 }
