@@ -162,7 +162,7 @@ object Bench {
     // the driver's tail budget, and per-query regressions on the fast
     // half must stay visible somewhere.
     // the mirror additionally carries "warm_notes" (Warm.notes): the
-    // _base/_incr pairs and the ivf rows are not cost-additive, and
+    // ivf rows and the pooled ledger are not cost-additive, and
     // bench_last.json must say so without the reader needing the source
     def jsonStr(s: String): String =
       "\"" + s.flatMap {

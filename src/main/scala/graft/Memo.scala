@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object Memo {
   // Must exceed the number of entries a full Warm.all materialization
-  // creates (incl. the _base/_incr label pairs and the PQ/residual-PQ
+  // creates (incl. the three label families and the PQ/residual-PQ
   // stores): a cap below that evicts the first-warmed entries before the
   // bench even starts timing, silently re-introducing their build cost
   // into the first query that touches them. The headroom is MACHINE-

@@ -41,16 +41,16 @@ object PlanTool {
   private def table(spark: SparkSession, sfDir: String): Unit = {
     println("# PLANS - physical-plan shape of every query")
     println()
-    println(s"Generated by `graft.PlanTool table` (tools/roundclose.sh) on `$sfDir`. Columns: hash/round-robin")
+    println(s"Generated by `graft.PlanTool table` (tools/roundclose.sh) on `$sfDir`. Columns: hash/round-robin/range")
     println("exchanges, parquet scans, join strategies present, cartesian check")
     println("(must always be `-`). Pre-AQE counts - runtime plans only shrink.")
     println()
-    println("| query | hash ex | rr ex | scans | BHJ | SMJ/SHJ | BNLJ | cartesian | gwin |")
-    println("|---|---|---|---|---|---|---|---|---|")
+    println("| query | hash ex | rr ex | range ex | scans | BHJ | SMJ/SHJ | BNLJ | cartesian | gwin |")
+    println("|---|---|---|---|---|---|---|---|---|---|")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val exec = fn(spark, sfDir).queryExecution.executedPlan
       val p = exec.toString
-      def n(pat: String) = pat.r.findAllIn(p).size
+      val (hash, rr, range) = exchanges(p)
       val bhj = if (p.contains("BroadcastHashJoin")) "Y" else "-"
       val smj = if (p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")) "Y" else "-"
       val bnlj = if (p.contains("BroadcastNestedLoopJoin")) "Y" else "-"
@@ -60,14 +60,22 @@ object PlanTool {
       val gwin = if (exec.collectFirst {
         case w: org.apache.spark.sql.execution.window.WindowExec
           if w.partitionSpec.isEmpty => w }.nonEmpty) "GLOBAL!" else "-"
-      println(s"| $name | ${n("Exchange hashpartitioning")} | " +
-        s"${n("Exchange roundrobin")} | ${n("Scan parquet")} | $bhj | $smj | $bnlj | $cart | $gwin |")
+      println(s"| $name | $hash | $rr | $range | ${"Scan parquet".r.findAllIn(p).size} | " +
+        s"$bhj | $smj | $bnlj | $cart | $gwin |")
     }
     // explicit terminator so the regen recipe's sed can cut here without
     // depending on the alphabetically-last query NAME (which changes as
     // the inventory grows):  sed -n '/^# PLANS/,/^<!-- END PLANS -->/p'
     println()
     println("<!-- END PLANS -->")
+  }
+
+  /** Exchanges in a physical plan's text, by partitioning: (hash,
+    * round-robin, range). Spark prints them as `Exchange hashpartitioning(…)`,
+    * `Exchange RoundRobinPartitioning(n)` and `Exchange rangepartitioning(…)`. */
+  private[graft] def exchanges(plan: String): (Int, Int, Int) = {
+    def n(pat: String) = pat.r.findAllIn(plan).size
+    (n("Exchange hashpartitioning"), n("Exchange RoundRobinPartitioning"), n("Exchange rangepartitioning"))
   }
 
   private def dump(spark: SparkSession, sfDir: String, outDir: String, tag: String,

@@ -592,8 +592,8 @@ object Dedup {
     * IOCs, JDK 17) held 216 B per collected edge and peaked under 2.1 KB
     * per edge while labeling, garbage included — ≤ ~0.5 GB per build, so
     * [[Warm]]'s three concurrent chains fit a 3 GB driver. The largest
-    * build on the 10× corpus (campaign base, ~120k edges) is under half
-    * the cap. */
+    * build on the 10× corpus (campaign, ~121k edges) is under half the
+    * cap. */
   private[graft] final val DriverCcMaxEdges = 250000
 
   /** Node types the driver path orders exactly as Spark's `min` does. */
@@ -607,21 +607,27 @@ object Dedup {
     * One observed property picks the path: a graph of at most
     * [[DriverCcMaxEdges]] edges is collected (one bounded `limit` job)
     * and labeled by [[driverComponentLabels]]; a larger one runs
-    * [[distributedComponentLabels]]. Every label build and its
-    * incremental fold is small at the test and bench corpora, where the
-    * distributed loop's cost is fixed per-job scheduling (three shuffled
-    * jobs a round), not data; the 100 TB pair graphs keep the loop. */
+    * [[distributedComponentLabels]]. Every label build is small at the
+    * test and bench corpora, where the distributed loop's cost is fixed
+    * per-job scheduling (three shuffled jobs a round), not data; the
+    * 100 TB pair graphs keep the loop. */
   private[graft] def componentLabels(pairs: DataFrame): DataFrame =
     smallPairGraph(pairs).fold(distributedComponentLabels(pairs))(driverComponentLabels(pairs, _))
 
   /** The pair graph's edges, if it fits the driver path: both endpoint
     * columns of one supported type, at most [[DriverCcMaxEdges]] edges,
-    * and no null endpoint (nulls keep the distributed loop's semantics). */
+    * and no null endpoint (nulls keep the distributed loop's semantics).
+    *
+    * The collect reads one partition, so it is ONE job: over n partitions
+    * `limit` scans in rounds, a job each. The one task stops after
+    * cap + 1 rows. The near-dup, graph and campaign pair graphs are
+    * checkpointed, so that task is a scan; the phash pairs' last stage
+    * is their distinct, which the one task then merges alone. */
   private[graft] def smallPairGraph(pairs: DataFrame): Option[Array[Row]] = {
     val types = pairs.schema.map(_.dataType).distinct
     if (types.size != 1 || !driverCcNodeTypes(types.head)) None
     else {
-      val edges = pairs.limit(DriverCcMaxEdges + 1).collect()
+      val edges = pairs.coalesce(1).limit(DriverCcMaxEdges + 1).collect()
       if (edges.length > DriverCcMaxEdges || edges.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
       else Some(edges)
     }
@@ -712,98 +718,6 @@ object Dedup {
     // acceptable: they are per-round copies of the PAIR-GRAPH labels
     // (KBs..MBs at any corpus size), not corpus-sized data
     lbl
-  }
-
-  /** Deterministic base/delta split for incremental label maintenance —
-    * the suite's md5-bucket convention ([[Sampling.hashBucket]]): ~1/10
-    * of the pair graph is "today's arrivals", the rest is yesterday's
-    * persisted snapshot. Edge-keyed (not node-keyed) so a delta edge can
-    * land anywhere: inside one component, bridging two, or introducing
-    * brand-new nodes — every shape the incremental path must handle. */
-  private[graft] def isDeltaPair(c1: Column, c2: Column): Column =
-    Sampling.hashBucket(concat_ws("|", c1.cast("string"), c2.cast("string")), 10) === 0
-
-  /** Incremental maintenance of a component label map — the
-    * `agg_incremental` discipline applied to the three label-propagation
-    * index builds (near-dup/graph/campaign/media cluster labels), which
-    * dominate the warm-build ledger: given YESTERDAY'S labels (node, lbl)
-    * over the base edge set and TODAY'S delta edges, produce the label
-    * map of base ∪ delta without relabeling the whole graph.
-    *
-    * One observed property picks the path, as in [[componentLabels]]:
-    * when the base label rows plus the delta edges total at most
-    * [[DriverCcMaxEdges]], both are collected (one bounded `limit`
-    * collect) and labeled by ONE union-find ([[driverComponentLabels]])
-    * over the (node, lbl) rows and the delta edges. The base map is a
-    * star on each component's minimum, so this is the union-find of the
-    * base components joined by the delta edges — the same labels as the
-    * contracted-graph fold below, with no join jobs around a small delta.
-    * Counting the base rows against the cap keeps the driver's per-build
-    * heap bound true. Anything larger runs
-    * [[distributedComponentLabelsIncremental]].
-    *
-    * Equivalence to the full relabel is structural — a base label IS the
-    * min node of its component, so the min over a merged group of
-    * {component labels ∪ new node ids} is the min over the merged node
-    * set — and is pinned two ways: PropertiesSpec (random graphs +
-    * adversarial splits vs [[componentLabels]] on the union, on both
-    * paths) and the driver oracle (the consuming queries' DuckDB twins
-    * recompute components from scratch over ALL edges each round).
-    *
-    * Both paths return a checkpointed frame, like [[componentLabels]]. */
-  private[graft] def componentLabelsIncremental(
-      baseLbl: DataFrame, deltaPairs: DataFrame): DataFrame = {
-    val Seq(c1, c2) = deltaPairs.columns.toSeq.map(col)
-    val edges = baseLbl.select(col("node").as("id1"), col("lbl").as("id2"))
-      .unionByName(deltaPairs.select(c1.as("id1"), c2.as("id2")))
-    // one partition, so the bounded collect is ONE job (over the union's
-    // partitions `limit` scans in rounds, a job each); the one task stops
-    // after cap + 1 rows, label map first, then delta
-    smallPairGraph(edges.coalesce(1))
-      .fold(distributedComponentLabelsIncremental(baseLbl, deltaPairs))(driverComponentLabels(edges, _))
-  }
-
-  /** The distributed incremental fold. Contract each delta edge to its
-    * endpoints' base labels (a node with no base label — a brand-new node
-    * — is its own label); drop edges contracted to a self-loop (both
-    * endpoints already in one component: nothing to do); label the
-    * CONTRACTED graph, whose nodes are touched component labels and new
-    * nodes — bounded by 2·|delta|, never the corpus. Compose: base nodes
-    * whose label was merged take the merged label, untouched nodes keep
-    * theirs, new nodes take their contracted-graph label.
-    *
-    * 100 TB shape: the nightly cost is |delta| joins against the
-    * persisted label map plus a labeling of the contracted graph (touched
-    * components and new nodes only — small enough for the driver path
-    * whenever the delta is) — not a full multi-round shuffle of the
-    * corpus-sized pair graph. */
-  private[graft] def distributedComponentLabelsIncremental(
-      baseLbl: DataFrame, deltaPairs: DataFrame): DataFrame = {
-    val Seq(c1, c2) = deltaPairs.columns.toSeq.map(col)
-    val de = deltaPairs.select(c1.as("a"), c2.as("b"))
-    // contract endpoints to their base labels; new nodes label themselves
-    val contracted = de
-      .join(baseLbl.select(col("node").as("a"), col("lbl").as("la")), Seq("a"), "left")
-      .join(baseLbl.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"), "left")
-      .select(coalesce(col("la"), col("a")).as("id1"),
-        coalesce(col("lb"), col("b")).as("id2"))
-      .filter(col("id1") =!= col("id2"))
-    // min-label propagation over the contracted graph only — the touched
-    // components and new nodes, never the full node set
-    val merged = componentLabels(contracted)
-    val relabeled = baseLbl
-      .join(merged.select(col("node").as("lbl"), col("lbl").as("mergedLbl")), Seq("lbl"), "left")
-      .select(col("node"), coalesce(col("mergedLbl"), col("lbl")).as("lbl"))
-    // nodes incident only to delta edges — absent from the base map
-    val newNodes = de.select(col("a").as("node"))
-      .unionByName(de.select(col("b").as("node"))).distinct()
-      .join(baseLbl.select(col("node")), Seq("node"), "left_anti")
-    // a new node is always in the contracted graph (its delta edge can
-    // only self-loop if the pair was a self-pair, which generators never
-    // emit) — the coalesce is generic-input safety, not a reachable path
-    val newLabeled = newNodes.join(merged, Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
-    relabeled.unionByName(newLabeled).localCheckpoint()
   }
 
   /** SimHash banding: 4 bands × 15 bits over the 60-bit fingerprint; the

@@ -52,27 +52,12 @@ object Graph {
   private def edgePairs(s: SparkSession, d: String): DataFrame =
     edges(s, d).select(col("a").as("id1"), col("b").as("id2"))
 
-  /** Yesterday's snapshot: component labels over the ~9/10 base split of
-    * the edge set — the full propagation loop, paid once per snapshot. */
-  private[operators] def ccLabelsBase(s: SparkSession, d: String): DataFrame =
-    graft.Memo("graph_cc_labels_base", s, d)(
-      Dedup.componentLabels(edgePairs(s, d)
-        .filter(!Dedup.isDeltaPair(col("id1"), col("id2")))))
-
   /** Component labels of the co-purchase graph, memoized per (session,
-    * dataset) — built INCREMENTALLY: the full label-propagation loop runs
-    * only on the base snapshot ([[ccLabelsBase]]); today's delta edges
-    * fold in via [[Dedup.componentLabelsIncremental]] (one driver
-    * union-find under the driver cap, the contracted-graph propagation
-    * above it — touched components only). The `graph_cc` oracle is a
-    * full recompute over ALL edges, so every green round re-proves
-    * incremental ≡ full relabel; the warm ledger's base-vs-incr lines
-    * price the nightly marginal cost the split exists to demonstrate. */
+    * dataset): one [[Dedup.componentLabels]] build over every edge (one
+    * driver union-find under the driver cap, the distributed loop above
+    * it). `graph_cc` and its oracle both label from scratch. */
   def ccLabels(s: SparkSession, d: String): DataFrame =
-    graft.Memo("graph_cc_labels", s, d)(
-      Dedup.componentLabelsIncremental(
-        ccLabelsBase(s, d),
-        edgePairs(s, d).filter(Dedup.isDeltaPair(col("id1"), col("id2")))))
+    graft.Memo("graph_cc_labels", s, d)(Dedup.componentLabels(edgePairs(s, d)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

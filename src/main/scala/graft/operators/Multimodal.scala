@@ -268,26 +268,15 @@ object Multimodal {
         .select(col("lbl").as("cluster_id"), col("n_items"))
         .orderBy(col("cluster_id"))))
 
-  /** Yesterday's snapshot: full propagation over the ~9/10 base split of
-    * the phash candidate pairs. */
-  private[operators] def phashClusterLabelsBase(s: SparkSession, d: String): DataFrame =
-    graft.Memo("phash_labels_base", s, d)(
-      Dedup.componentLabels(phashPairs(s, d).select(col("id1"), col("id2"))
-        .filter(!Dedup.isDeltaPair(col("id1"), col("id2")))))
-
   /** Memoized media component labels over [[phashPairs]] — like
     * [[Dedup.clusterLabels]], a production pipeline persists the label
-    * table once per snapshot; the CC loop's per-round job overhead
-    * belongs to the index build, not every reader. Built INCREMENTALLY
-    * like [[Graph.ccLabels]]: delta pairs fold into the base snapshot
-    * ([[Dedup.componentLabelsIncremental]]); `binary_phash_clusters`' full-
-    * recompute oracle re-proves incremental ≡ full relabel every round. */
-  private[operators] def phashClusterLabels(s: SparkSession, d: String): DataFrame =
+    * table once per snapshot; the labeling's job overhead belongs to the
+    * index build, not every reader. One [[Dedup.componentLabels]] build
+    * over every pair; `binary_phash_clusters`' oracle labels from
+    * scratch too. */
+  private[graft] def phashClusterLabels(s: SparkSession, d: String): DataFrame =
     graft.Memo("phash_labels", s, d)(
-      Dedup.componentLabelsIncremental(
-        phashClusterLabelsBase(s, d),
-        phashPairs(s, d).select(col("id1"), col("id2"))
-          .filter(Dedup.isDeltaPair(col("id1"), col("id2")))))
+      Dedup.componentLabels(phashPairs(s, d).select(col("id1"), col("id2"))))
 
   /** Banded phash candidate pairs (id1 < id2, hamming ≤ MaxHamming) —
     * the body of `binary_phash` sans sort, shared with

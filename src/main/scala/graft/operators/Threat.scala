@@ -42,14 +42,31 @@ object Threat {
   private def feed(s: SparkSession, d: String): DataFrame =
     graft.SparkEntry.unifiedFeed(s, d)
 
+  /** The sampled co-sighting pair graph: two indicators are linked when
+    * they appear in the SAME message. Edges come from the bounded
+    * per-message fold (never a self-join). Checkpointed: the distributed
+    * label loop re-reads it every round. */
+  private[graft] def campaignPairs(s: SparkSession, d: String): DataFrame =
+    feed(s, d)
+      .filter(substring(md5(concat(col("platform"), lit("|"), col("id"))), 1, 1) === "0")
+      // no distinct first: collect_set already dedups each message's iocs
+      .groupBy(col("platform"), col("id"))
+      .agg(sort_array(collect_set(col("ioc"))).as("xs"))
+      .select(explode(expr(
+        "flatten(transform(xs, (x, i) -> " +
+          "transform(slice(xs, i + 2, size(xs)), y -> struct(x AS a, y AS b))))"
+      )).as("p"))
+      .select(col("p.a"), col("p.b")).distinct()
+      .localCheckpoint()
+
   /** Campaign labels: connected components over the IOC co-sighting
-    * graph (two indicators are linked when they appear in the SAME
-    * message — shared infrastructure chains messages into campaigns).
-    * Edges come from the bounded per-message fold (never a self-join);
-    * components via the generic labeling ([[Dedup.componentLabels]] —
-    * the SAME code the near-dup clusters run, here over string nodes). Memoized: in production the campaign
-    * label map is a persisted table rebuilt per ingest window, read by
-    * both the assignment and the stats dashboards.
+    * graph ([[campaignPairs]]) — shared infrastructure chains messages
+    * into campaigns. Components via the generic labeling
+    * ([[Dedup.componentLabels]] — the SAME code the near-dup clusters
+    * run, here over string nodes), one build over every pair. Memoized:
+    * in production the campaign label map is a persisted table rebuilt
+    * per ingest window, read by both the assignment and the stats
+    * dashboards; the campaign queries' oracles label from scratch.
     *
     * Clustering runs over a deterministic 1/16 message sample (md5
     * bucket of the message key — retry-safe, both engines agree), the
@@ -60,40 +77,9 @@ object Threat {
     * recursive-CTE closure materializes O(|component|²) reach pairs —
     * the distributed label loop itself is linear per round and needs no
     * such bound). */
-  /** The sampled co-sighting pair graph — memoized on its own: both the
-    * base snapshot build and the incremental delta fold read it. */
-  private def campaignPairs(s: SparkSession, d: String): DataFrame =
-    graft.Memo("ioc_campaign_pairs", s, d) {
-      feed(s, d)
-        .filter(substring(md5(concat(col("platform"), lit("|"), col("id"))), 1, 1) === "0")
-        // no distinct first: collect_set already dedups each message's iocs
-        .groupBy(col("platform"), col("id"))
-        .agg(sort_array(collect_set(col("ioc"))).as("xs"))
-        .select(explode(expr(
-          "flatten(transform(xs, (x, i) -> " +
-            "transform(slice(xs, i + 2, size(xs)), y -> struct(x AS a, y AS b))))"
-        )).as("p"))
-        .select(col("p.a"), col("p.b")).distinct()
-        .localCheckpoint()
-    }
-
-  /** Yesterday's snapshot: full propagation over the ~9/10 base split. */
-  private[operators] def campaignLabelsBase(s: SparkSession, d: String): DataFrame =
-    graft.Memo("ioc_campaign_labels_base", s, d)(
-      Dedup.componentLabels(campaignPairs(s, d)
-        .filter(!Dedup.isDeltaPair(col("a"), col("b")))))
-
-  /** Final labels, built INCREMENTALLY like [[Graph.ccLabels]]: delta
-    * co-sightings fold into the base snapshot
-    * ([[Dedup.componentLabelsIncremental]]); the campaign queries'
-    * full-recompute oracles re-prove incremental ≡ full relabel every
-    * round (string nodes here — the generic machinery is
-    * node-type-agnostic). */
   private[graft] def campaignLabels(s: SparkSession, d: String): DataFrame =
     graft.Memo("ioc_campaign_labels", s, d)(
-      Dedup.componentLabelsIncremental(
-        campaignLabelsBase(s, d),
-        campaignPairs(s, d).filter(Dedup.isDeltaPair(col("a"), col("b"))))
+      Dedup.componentLabels(campaignPairs(s, d))
         .select(col("node").as("ioc"), col("lbl").as("campaign_id")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -36,31 +36,21 @@ object Warm {
 
   /** Reader-facing annotations for ledger rows whose cost is NOT simply
     * additive — emitted by [[graft.Bench]] as the `"warm_notes"` map in the
-    * bench_last.json mirror so the file is self-describing: summing the
-    * `"warm"` map double-counts the `_base`/`_incr` pairs (a steady-state
-    * nightly run pays only `_incr`; `_base` is the once-per-snapshot full
-    * rebuild it amortizes), and the IVF rows carry the √n index sizing
-    * whose build cost grew O(n^1.5) → the r10 √n fix pinned it. */
-  val notes: Seq[(String, String)] = {
-    val baseIncr = "base+incr pair: _base is the once-per-snapshot full " +
-      "rebuild, _incr the nightly marginal fold on top of it; a " +
-      "steady-state run pays only _incr — summing both double-counts"
-    Seq(
-      "graph_cc_labels_base" -> baseIncr, "graph_cc_labels_incr" -> baseIncr,
-      "campaign_labels_base" -> baseIncr, "campaign_labels_incr" -> baseIncr,
-      "phash_labels_base" -> baseIncr, "phash_labels_incr" -> baseIncr,
-      "ivf_assign" -> ("index build at nlist≈√n (post-r10 sizing fix): " +
-        "cost scales O(n^1.5); amortized across every sim_ivf_* query"),
-      "ivf_probes" -> ("probe-set materialization over the √n-sized index; " +
-        "incremental on ivf_assign — its timing is the marginal cost only"),
-      "_ledger" -> ("since r15 the independent build CHAINS run on a " +
-        s"$PoolSize-thread pool (guide §2.6 — the next chain's tasks " +
-        "back-fill the tail of the current one); per-build seconds are " +
-        "wall time UNDER THAT CONTENTION, so their sum exceeds the warm " +
-        "phase's true wall clock — read warm_total (now the measured " +
-        "wall) for the phase cost and the per-build rows for relative " +
-        "attribution only"))
-  }
+    * bench_last.json mirror so the file is self-describing: the IVF rows
+    * carry the √n index sizing whose build cost grew O(n^1.5) → the r10
+    * √n fix pinned it. */
+  val notes: Seq[(String, String)] = Seq(
+    "ivf_assign" -> ("index build at nlist≈√n (post-r10 sizing fix): " +
+      "cost scales O(n^1.5); amortized across every sim_ivf_* query"),
+    "ivf_probes" -> ("probe-set materialization over the √n-sized index; " +
+      "incremental on ivf_assign — its timing is the marginal cost only"),
+    "_ledger" -> ("since r15 the independent build CHAINS run on a " +
+      s"$PoolSize-thread pool (guide §2.6 — the next chain's tasks " +
+      "back-fill the tail of the current one); per-build seconds are " +
+      "wall time UNDER THAT CONTENTION, so their sum exceeds the warm " +
+      "phase's true wall clock — read warm_total (now the measured " +
+      "wall) for the phase cost and the per-build rows for relative " +
+      "attribution only"))
 
   def all(s: SparkSession, d: String): Seq[(String, Double)] = run(s, chains(s, d))
 
@@ -79,22 +69,16 @@ object Warm {
       // perceptual-hash label family (documents)
       Seq(
         "phash_pairs" -> (() => Multimodal.phashPairs(s, d)),
-        "phash_labels_base" -> (() => Multimodal.phashClusterLabelsBase(s, d)),
-        "phash_labels_incr" -> (() => Multimodal.phashClusterLabels(s, d))),
-      // co-purchase graph labels (lineitem); the three propagation loops
-      // are built INCREMENTALLY since round 10: `_base` is the once-per-
-      // snapshot full propagation over the ~9/10 base split, `_incr` the
-      // marginal delta fold — the pair IS the full-vs-nightly comparison
+        "phash_labels" -> (() => Multimodal.phashClusterLabels(s, d))),
+      // co-purchase graph labels (lineitem)
       Seq(
         "graph_edges" -> (() => Graph.edges(s, d)),
-        "graph_cc_labels_base" -> (() => Graph.ccLabelsBase(s, d)),
-        "graph_cc_labels_incr" -> (() => Graph.ccLabels(s, d))),
+        "graph_cc_labels" -> (() => Graph.ccLabels(s, d))),
       // canonical indicator store → sighting rollup → campaign labels
       Seq(
         "unified_feed" -> (() => graft.SparkEntry.unifiedFeed(s, d)),
         "ioc_sightings" -> (() => graft.SparkEntry.iocSightings(s, d)),
-        "campaign_labels_base" -> (() => Threat.campaignLabelsBase(s, d)),
-        "campaign_labels_incr" -> (() => Threat.campaignLabels(s, d))),
+        "campaign_labels" -> (() => Threat.campaignLabels(s, d))),
       // shingle index family, in dependency order: 3-gram occurrences →
       // distinct set → K-minima signatures → banded pair graph → labels
       Seq(

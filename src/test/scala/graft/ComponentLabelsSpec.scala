@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -85,5 +88,37 @@ class ComponentLabelsSpec extends AnyFunSuite {
       labels(Dedup.distributedComponentLabels(stars(cap))))
     // a node type without an exact driver-side order keeps the loop
     assert(Dedup.smallPairGraph(Seq((1.5, 2.5)).toDF("id1", "id2")).isEmpty)
+  }
+
+  test("the driver path's bounded collect is one Spark job over a many-partition graph") {
+    // without a single partition, `limit(cap + 1).collect()` scans 1, then
+    // 4, then the rest of the 8 partitions: three jobs
+    val sc = spark.sparkContext
+    val group = s"component-labels-${java.util.UUID.randomUUID()}"
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
+    }
+    sc.addSparkListener(listener)
+    try {
+      // checkpointed, like the label builds' pair graphs: over a plain
+      // range the optimizer drops a limit above its known row count
+      val pairs = spark.range(0, 1000, 1, 8).select(col("id").as("id1"), (col("id") % 7).as("id2"))
+        .localCheckpoint()
+      sc.setJobGroup(group, "smallPairGraph")
+      assert(Dedup.smallPairGraph(pairs).map(_.length).contains(1000))
+      // the listener queue is FIFO: once a later job's start is seen, so
+      // are all of the collect's
+      sc.setJobGroup(group + "-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.containsKey(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.containsKey(group + "-marker"), "listener never saw the marker job")
+      val n = Option(jobs.get(group)).map(_.get)
+      assert(n.contains(1), s"bounded collect ran ${n.getOrElse(0)} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }

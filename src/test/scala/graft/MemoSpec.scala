@@ -103,4 +103,11 @@ class MemoSpec extends AnyFunSuite {
     assert(graft.operators.Warm.PoolSize > 0)
     assert(ledger.contains(s"on a ${graft.operators.Warm.PoolSize}-thread pool"), ledger)
   }
+
+  test("every warm note names a build in the warm chains") {
+    // chains only lists builds: nothing is materialized, no path is read
+    val builds = graft.operators.Warm.chains(spark, "memo-spec-notes").flatten.map(_._1).toSet
+    val stale = graft.operators.Warm.notes.map(_._1).filterNot(k => k == "_ledger" || builds(k))
+    assert(stale.isEmpty, s"notes name no warm build: $stale")
+  }
 }

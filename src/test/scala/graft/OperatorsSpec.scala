@@ -240,17 +240,40 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("graph_cc labels: both endpoints of every edge share a component") {
+    // every label family is one componentLabels build over its pair
+    // graph: co-purchase (graph_cc), IOC co-sighting (campaigns) and
+    // media near-dups (phash clusters), long and string nodes
     val d = "/root/testdata/sf0.001"
-    val lbl = graft.operators.Graph.queries("graph_cc")(spark, d)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val edges = graft.operators.Graph.edges(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(edges.nonEmpty)
-    edges.foreach { case (a, b) =>
-      assert(lbl(a) == lbl(b), s"edge ($a,$b) spans components ${lbl(a)}/${lbl(b)}")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.get(0), r.get(1)))
+    // Spark's `min` order: numeric for longs, UTF-8 bytes for strings
+    val order = Ordering.fromLessThan[Any] {
+      case (x: String, y: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(x)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
+      case (x: Long, y: Long) => x < y
+      case (x, y) => fail(s"mixed node types $x / $y")
     }
-    // the label IS the component's minimum member
-    lbl.groupBy(_._2).foreach { case (c, m) => assert(m.keys.min == c) }
+    val families = Seq(
+      "graph_cc" -> (graft.operators.Graph.queries("graph_cc")(spark, d),
+        graft.operators.Graph.edges(spark, d)),
+      "campaign" -> (graft.operators.Threat.campaignLabels(spark, d),
+        graft.operators.Threat.campaignPairs(spark, d)),
+      "phash" -> (Multimodal.phashClusterLabels(spark, d),
+        Multimodal.queries("binary_phash")(spark, d)))
+    families.foreach { case (name, (labels, edges)) =>
+      val lbl = pairs(labels).toMap
+      val es = pairs(edges)
+      assert(es.nonEmpty, s"$name: no edges")
+      assert(lbl.keySet == es.flatMap(e => Seq(e._1, e._2)).toSet,
+        s"$name: labeled nodes are not the edge endpoints")
+      es.foreach { case (a, b) =>
+        assert(lbl(a) == lbl(b), s"$name: edge ($a,$b) spans components ${lbl(a)}/${lbl(b)}")
+      }
+      // the label IS the component's minimum member
+      lbl.groupBy(_._2).foreach { case (c, m) =>
+        assert(m.keys.min(order) == c, s"$name: component $c has a smaller member")
+      }
+    }
   }
 
   test("simhash fast path (explode+agg query) equals the aggregate() fold") {

@@ -142,6 +142,13 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!pe.contains("Union"), s"pastebin enrichment still unions:\n$pe")
   }
 
+  test("PlanTool counts round-robin and range exchanges (ioc_pastebin_enrich has both)") {
+    val pe = plan("ioc_pastebin_enrich")
+    val (_, rr, range) = PlanTool.exchanges(pe)
+    assert(rr >= 1, s"no round-robin exchange counted:\n$pe")
+    assert(range >= 1, s"no range exchange counted:\n$pe")
+  }
+
   test("new TPC-H shapes keep their intended join strategies") {
     assert(plan("q4_exists").contains("LeftSemi"), "q4 lost its semi join")
     assert(plan("q16_suppcnt").contains("LeftAnti"), "q16 lost its anti join")

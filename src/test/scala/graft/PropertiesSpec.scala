@@ -209,175 +209,6 @@ class PropertiesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not converged after 2 rounds"), e.getMessage)
   }
 
-  test("property: incremental label maintenance ≡ full relabel on adversarial splits") {
-    // Every delta shape the contracted-graph propagation must handle:
-    //  - a delta edge INSIDE one base component (self-loop after
-    //    contraction: no-op)
-    //  - a BRIDGE merging two base components (labels must unify to the
-    //    smaller component's min)
-    //  - a delta-only chain of BRAND-NEW nodes (no base label at all)
-    //  - a new node with an id SMALLER than the component min it joins
-    //    (the merged label must become the new node)
-    //  - a chain of bridges merging THREE components transitively in one
-    //    delta batch (needs propagation on the contracted graph, not one
-    //    join)
-    // plus ScalaCheck random graphs with a random edge split. Both fold
-    // paths run on every split: the driver union-find these sizes pick,
-    // and the distributed contracted-graph fold, called directly.
-    val D = graft.operators.Dedup
-    def full(pairs: Seq[(Long, Long)]) =
-      D.componentLabels(pairs.toDF("id1", "id2"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    def incr(base: Seq[(Long, Long)], delta: Seq[(Long, Long)]) = {
-      val (b, d) = (D.componentLabels(base.toDF("id1", "id2")), delta.toDF("id1", "id2"))
-      def labels(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val drv = labels(D.componentLabelsIncremental(b, d))
-      assert(drv == labels(D.distributedComponentLabelsIncremental(b, d)),
-        s"driver and distributed folds disagree on base=$base delta=$delta")
-      drv
-    }
-
-    // hand-built: components {10,11,12}, {20,21}, {30,31}, {40,41}
-    val base = Seq((10L, 11L), (11L, 12L), (20L, 21L), (30L, 31L), (40L, 41L))
-    val delta = Seq(
-      (10L, 12L),  // internal: contraction self-loop
-      (12L, 20L),  // bridge 10s↔20s
-      (21L, 30L),  // chain: merges 30s into the same group transitively
-      (100L, 101L), (101L, 102L), // brand-new chain
-      (5L, 40L))   // new node BELOW the component min it joins
-    val got = incr(base, delta)
-    assert(got == full(base ++ delta),
-      s"hand-built divergence: $got vs ${full(base ++ delta)}")
-    assert(got(30L) == 10L && got(21L) == 10L, s"transitive merge broken: $got")
-    assert(got(41L) == 5L && got(5L) == 5L, s"below-min new node broken: $got")
-    assert(got(102L) == 100L, s"new-only chain broken: $got")
-
-    // randomized: 40-node random graphs, random ~1/4 delta split
-    val gen = Gen.listOfN(50,
-      for { a <- Gen.choose(0L, 39L); k <- Gen.choose(0L, 38L) } yield {
-        val b = (a + 1 + k) % 40
-        (math.min(a, b), math.max(a, b))
-      })
-    (1 to 3).foreach { seed =>
-      val edges = gen.pureApply(org.scalacheck.Gen.Parameters.default,
-        org.scalacheck.rng.Seed(seed.toLong)).distinct
-      val (d2, b2) = edges.partition { case (a, b) => (a * 31 + b) % 4 == 0 }
-      assert(incr(b2, d2) == full(edges), s"random seed=$seed divergence")
-    }
-  }
-
-  test("property: incremental ≡ full relabel on String nodes, on both fold paths") {
-    // String labels are the UTF-8-byte-order minimum (Spark's `min`): the
-    // driver fold must not fall back to java.lang.String's UTF-16 order,
-    // under which U+1F600 sorts BELOW U+FF61
-    val D = graft.operators.Dedup
-    val (lo, hi) = ("｡", "😀")
-    assert(hi.compareTo(lo) < 0, "the pair must disagree under UTF-16 order")
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toMap
-    val char = Gen.oneOf("a", "z", "é", lo, hi, "𐀀")
-    val node = Gen.choose(1, 3).flatMap(Gen.listOfN(_, char)).map(_.mkString)
-    val gen = Gen.listOfN(40, Gen.zip(node, node))
-    val splits = Seq((Seq((hi, hi + hi), ("x", "y")), Seq((hi + hi, lo), ("y", "z")))) ++
-      (1 to 3).map { seed =>
-        val es = gen.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed.toLong)).distinct
-        es.partition { case (a, b) => (a + b).hashCode % 4 != 0 }
-      }
-    splits.zipWithIndex.foreach { case ((base, delta), i) =>
-      val b = D.componentLabels(base.toDF("a", "b"))
-      val d = delta.toDF("a", "b")
-      val want = labels(D.componentLabels((base ++ delta).toDF("a", "b")))
-      if (i == 0) assert(want(hi) == lo && want("z") == "x", s"UTF-8 minimum lost: $want")
-      assert(labels(D.componentLabelsIncremental(b, d)) == want, s"driver fold, split $i")
-      assert(labels(D.distributedComponentLabelsIncremental(b, d)) == want,
-        s"distributed fold, split $i")
-    }
-  }
-
-  test("property: an incremental fold just over the driver cap runs distributed, ≡ full relabel") {
-    // the cap counts base label rows PLUS delta edges: a total of cap + 1
-    // must leave the driver path even though the delta alone is tiny
-    val D = graft.operators.Dedup
-    val cap = D.DriverCcMaxEdges.toLong
-    // yesterday's labels over cap - 2 nodes: pairs {2k, 2k+1} labeled 2k
-    val base = spark.range(cap - 2)
-      .select(col("id").as("node"), (col("id") - col("id") % 2).as("lbl"))
-    // bridges chaining {0,1}, {2,3}, {4,5}, and a pair of new nodes
-    val delta = Seq((1L, 2L), (3L, 4L), (cap, cap + 2)).toDF("id1", "id2")
-    val edges = base.select(col("node").as("id1"), col("lbl").as("id2")).unionByName(delta)
-    assert(D.smallPairGraph(edges).isEmpty, "cap + 1 rows must not fit the driver path")
-    val got = D.componentLabelsIncremental(base, delta).localCheckpoint()
-    val want = D.componentLabels(base.filter(col("node") =!= col("lbl"))
-      .select(col("node").as("id1"), col("lbl").as("id2")).unionByName(delta))
-    assert(got.count() == cap && got.except(want).count() == 0 && want.except(got).count() == 0)
-    val m = got.filter(col("node").isin(0L, 1L, 3L, 4L, 5L, 6L, cap - 3, cap, cap + 2))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(m == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 4L -> 0L, 5L -> 0L, 6L -> 6L,
-      cap - 3 -> (cap - 4), cap -> cap, (cap + 2) -> cap), s"$m")
-  }
-
-  test("property: ITERATED incremental folds ≡ full relabel (multi-day deltas)") {
-    // The nightly pipeline folds day k's delta into day k-1's
-    // INCREMENTALLY-built label map, not into a fresh full snapshot.
-    // That is sound only if the fold preserves the invariant its own
-    // equivalence proof leans on — a label IS the min node of its
-    // component (the min over merged {labels ∪ new ids} is then the min
-    // over the merged node set). This pins the iterated case: three
-    // waves chained onto each other's OUTPUT, each wave re-checked
-    // against a from-scratch relabel of everything seen so far, with the
-    // adversarial shapes spread ACROSS waves (a bridge in wave 2 merging
-    // wave-1 components; a below-min new node arriving LAST).
-    val D = graft.operators.Dedup
-    def full(pairs: Seq[(Long, Long)]) =
-      D.componentLabels(pairs.toDF("id1", "id2"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val base = Seq((10L, 11L), (20L, 21L), (30L, 31L))
-    val waves = Seq(
-      Seq((11L, 12L), (100L, 101L)),          // grow a component + new chain
-      Seq((12L, 20L), (101L, 30L)),           // bridges merging wave-1 results
-      Seq((5L, 21L), (21L, 31L), (100L, 102L))) // below-min node + a bridge
-                                              // chaining BOTH wave-2 merges
-                                              // through the contracted graph
-    var lbl = D.componentLabels(base.toDF("id1", "id2"))
-    var seen = base
-    waves.zipWithIndex.foreach { case (w, i) =>
-      lbl = D.componentLabelsIncremental(lbl, w.toDF("id1", "id2"))
-        .localCheckpoint() // sever lineage as the persisted nightly table would
-      seen = seen ++ w
-      val got = lbl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == full(seen), s"wave ${i + 1} diverged: $got vs ${full(seen)}")
-    }
-    // after wave 3 the 5-node arrival owns the whole merged component
-    val end = lbl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(end(31L) == 5L && end(12L) == 5L && end(100L) == 5L,
-      s"below-min arrival must relabel the merged component: $end")
-
-    // randomized: 3-way random wave split, chained, vs full each step
-    val gen = Gen.listOfN(60,
-      for { a <- Gen.choose(0L, 34L); k <- Gen.choose(0L, 33L) } yield {
-        val b = (a + 1 + k) % 35
-        (math.min(a, b), math.max(a, b))
-      })
-    (1 to 2).foreach { seed =>
-      val edges = gen.pureApply(org.scalacheck.Gen.Parameters.default,
-        org.scalacheck.rng.Seed(seed.toLong + 7)).distinct
-      val parts = edges.groupBy { case (a, b) => ((a * 31 + b) % 3).toInt }
-      val b0 = parts.getOrElse(0, Nil)
-      var l = D.componentLabels(b0.toDF("id1", "id2"))
-      var s2 = b0
-      Seq(1, 2).foreach { k =>
-        val w = parts.getOrElse(k, Nil)
-        if (w.nonEmpty) {
-          l = D.componentLabelsIncremental(l, w.toDF("id1", "id2")).localCheckpoint()
-          s2 = s2 ++ w
-          assert(l.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == full(s2),
-            s"random seed=$seed wave=$k divergence")
-        }
-      }
-    }
-  }
-
   test("property: degree-oriented triangle count ≡ brute force on hub + cliques") {
     // Adversarial shape for orientation bugs: a hub joined to everything
     // (a naive wedge join would blow up exactly here, and a wrong
