@@ -280,8 +280,10 @@ object Multimodal {
 
   /** Banded phash candidate pairs (id1 < id2, hamming ≤ MaxHamming) —
     * the body of `binary_phash` sans sort, shared with
-    * `binary_phash_clusters`. Memoized ([[graft.Memo]]): a production
-    * media pipeline persists the pair graph once per snapshot. */
+    * `binary_phash_clusters`. Memoized ([[graft.Memo]]) and
+    * checkpointed like every other pair memo: a production media pipeline
+    * persists the pair graph once per snapshot, so its readers scan it
+    * instead of re-running the band window and bucket aggregation. */
   private[operators] def phashPairs(s: SparkSession, d: String): DataFrame =
     graft.Memo("phash_pairs", s, d) {
       val bands = Dedup.SimhashBands
@@ -311,6 +313,7 @@ object Multimodal {
           bit_count(col("p.ph1").bitwiseXOR(col("p.ph2"))).cast("long").as("hamming"))
         .filter(col("hamming") <= Dedup.MaxHamming)
         .distinct()
+        .localCheckpoint()
     }
 
   /** Shared DuckDB CTE chain ending in `pp_pairs(id1, id2, hamming)` —

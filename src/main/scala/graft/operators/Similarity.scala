@@ -1,12 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
-  * brute-force cosine top-k as the exact baseline, plus an SRP-LSH bucketed
-  * variant as the scale path (BASELINE.json north star).
+  * cosine top-k through the IVF inverted file (each query probes its
+  * nearest cells), plus an SRP-LSH bucketed variant as the alternative
+  * index (BASELINE.json north star).
   *
   * Numeric determinism: all arithmetic is IEEE double with a FIXED operand
   * order — elements are widened float→double (exact), multiplied pairwise,
@@ -15,12 +17,17 @@ import graft.sources.Tables
   * order-sensitive probes), so results are bit-identical across engines with
   * no decimal machinery and full codegen speed.
   *
-  * Scale design: brute force is O(n²·d) — correct at any n but quadratic;
-  * at 100 TB you bucket first. `sim_lsh_buckets` computes
+  * Scale design: brute force is O(n²·d) — correct at any n but quadratic,
+  * so only the fixed-sample ground truth runs it; every search buckets
+  * first. `sim_lsh_buckets` computes
   * sign-random-projection buckets (md5-derived hyperplane signs, so the
   * oracle reproduces them); candidate generation then joins within buckets
   * only — the same shuffle-on-bucket shape as Dedup's MinHash LSH. Top-k
   * ranking is a single window over the candidate pairs, shuffled by query id.
+  * Each pipeline is written once as a private kernel — IVF probe search
+  * ([[ivfSearch]]), capped LSH search ([[lshCapped]], [[lshTopK]]),
+  * recall scoring ([[recallAt]]), ADC ranking ([[adcTopK]]) — and every
+  * query instantiates it; the DuckDB oracle has one SQL builder per kernel.
   * The quantization stack (scalar int8, IVF-PQ with ADC scoring) trades
   * exactness for the 4-32× storage/IO cut that makes the vector store
   * scannable at all; `embed_label_centroids` is the distributed
@@ -111,23 +118,10 @@ object Similarity {
     // the fixed-sample recall gates. The pairing is machine-checked in
     // PlanShapeSpec ("deliberate exact baselines"): the sublinear twin
     // must stay shipped and faster at the measured 10× point.
-    "sim_cosine_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val cands = q.join(ivfProbes(s, d), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")),
-          Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      cands.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= TopK)
+    "sim_cosine_topk" -> ((s, d) =>
+      topPerQuery(ivfSearch(s, d, qcap = None), TopK, byCosine: _*)
         .select(col("qid"), col("vec_id").as("nid"), col("cosine"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        .orderBy(col("qid"), col("rank"))),
 
     // FILTERED vector search — ANN under a metadata predicate (here:
     // neighbors must share the query's label, the "similar items in my
@@ -140,27 +134,12 @@ object Similarity {
     // the same effective k — probe count must scale with 1/selectivity).
     // First 50 queries (the sim_recall sample discipline) keep the
     // oracle's candidate CTE cheap.
-    "sim_filtered_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          normSq(col("embedding")).as("nsq"), col("label"))
-      val q = e.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          col("nsq").as("qn"), col("label").as("q_label"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      q.join(ivfProbes(s, d), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"),
-          col("nsq").as("nn"), col("label").as("n_label")), Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid") && col("n_label") === col("q_label"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ).cast("long"))
-        .filter(col("rank") <= TopK)
+    "sim_filtered_topk" -> ((s, d) =>
+      topPerQuery(ivfSearch(s, d, Some(50), carry = Seq("label"))
+          .filter(col("n_label") === col("q_label")), TopK, byCosine: _*)
         .select(col("qid"), col("vec_id").as("nid"),
           col("n_label").as("label"), col("cosine"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        .orderBy(col("qid"), col("rank"))),
 
     // RANGE search — every neighbor with cosine ≥ τ, not the best k:
     // the dedup/compliance question ("find ALL near-matches") where
@@ -172,27 +151,16 @@ object Similarity {
     // selectivity discipline applies (a loose τ on a dense space can
     // return O(cellsize) rows per query by design). First-50 query
     // sample, the sim_recall oracle discipline.
-    "sim_range_search" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val q = e.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      q.join(ivfProbes(s, d), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")),
-          Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
+    "sim_range_search" -> ((s, d) =>
+      ivfSearch(s, d, Some(50))
         // integer-ppm discipline (same as the rest of the suite): emit
         // floor(cosine·1e6) and threshold on the INTEGER, so a cosine
         // within a few ulps of τ can't flip inclusion between engines
         // if evaluation order ever differs (codegen vs row-at-a-time)
-        .withColumn("cosine_ppm",
-          floor(dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")) * 1e6)
-            .cast("long"))
+        .withColumn("cosine_ppm", floor(col("cosine") * 1e6).cast("long"))
         .filter(col("cosine_ppm") >= (RangeTau * 1e6).toLong)
         .select(col("qid"), col("vec_id").as("nid"), col("cosine_ppm"))
-        .orderBy(col("qid"), col("nid"))
-    }),
+        .orderBy(col("qid"), col("nid"))),
 
     // scale path: SRP-LSH bucket population — the index-health inventory
     // (reads the ONE memoized assignment table the search serves from;
@@ -211,29 +179,10 @@ object Similarity {
     // which is the trade: recall comes only from probe multiplicity
     // (sim_lsh_recall measures it), not from data-adaptive cells. The pair
     // join shuffles on the H-bit bucket string; the rank window on qid.
-    "sim_lsh_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val ok = lshAssign(s, d).groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_b")).filter(col("n_b") <= LshMaxBucket)
-        .select(col("bucket"))
-      val bk = lshAssign(s, d).join(broadcast(ok), Seq("bucket"), "left_semi")
-      val q = bk.join(e, Seq("vec_id"))
-        .select(col("bucket"), col("vec_id").as("qid"),
-          col("embedding").as("qe"), col("nsq").as("qn"))
-      val x = bk.join(e, Seq("vec_id"))
-        .select(col("bucket"), col("vec_id"),
-          col("embedding").as("ne"), col("nsq").as("nn"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      q.join(x, Seq("bucket"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ).cast("long"))
-        .filter(col("rank") <= TopK)
+    "sim_lsh_topk" -> ((s, d) =>
+      lshTopK(s, d, qcap = None)
         .select(col("qid"), col("vec_id").as("nid"), col("cosine"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        .orderBy(col("qid"), col("rank"))),
 
     // The SRP-LSH recall gate, with the MULTIPROBE tuning curve folded in:
     // per query (first-RecallQueries sample, the sim_recall discipline),
@@ -245,24 +194,19 @@ object Similarity {
     // join sim_recall uses; the probe side joins the tiny probe list to
     // the memoized assignment on bucket, so nothing here is quadratic.
     "sim_lsh_recall" -> ((s, d) => {
-      val exact = recallGtCos(s, d) // memoized GT artifact (r15)
       // a neighbor lives in exactly ONE bucket, but min(lvl) keeps the
       // per-(qid, nid) row unique by construction even if probe lists
       // ever overlap (e.g. a future multi-table variant).
-      // The candidate side drops over-cap buckets with the SAME semi-join
-      // discipline as sim_lsh_topk's search path: the gate must measure
-      // the recall the CAPPED index can actually reach, not uncapped
-      // probe reachability the serving path never sees.
-      val okR = lshAssign(s, d).groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_b")).filter(col("n_b") <= LshMaxBucket)
-        .select(col("bucket"))
-      val cand = lshProbes(s, d).join(
-          lshAssign(s, d).join(broadcast(okR), Seq("bucket"), "left_semi")
-            .select(col("vec_id").as("nid"), col("bucket").as("pbucket")),
+      // The candidate side reads the CAPPED postings sim_lsh_topk serves
+      // from: the gate must measure the recall the capped index can
+      // actually reach, not uncapped probe reachability the serving path
+      // never sees.
+      val cand = lshProbes(s, d)
+        .join(lshCapped(s, d).select(col("vec_id").as("nid"), col("bucket").as("pbucket")),
           Seq("pbucket"))
         .filter(col("nid") =!= col("qid"))
         .groupBy(col("qid"), col("nid")).agg(min(col("lvl")).as("lvl"))
-      exact.join(cand, Seq("qid", "nid"), "left")
+      recallGtCos(s, d).join(cand, Seq("qid", "nid"), "left")
         .groupBy(col("qid"))
         .agg(count(when(col("lvl") === 0, lit(1))).as("n_hits_own"),
           count(col("lvl")).as("n_hits_mp"))
@@ -283,35 +227,11 @@ object Similarity {
     // candidate list is bucket-capped exactly like the MinHash admission
     // index (a hot bucket degrades recall, never cost). Admission joins
     // back to ALL arrivals so admitted vectors surface with dup_of NULL.
-    "sim_incremental" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val isNew = col("vec_id") % 10 === 0
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("pbucket")).orderBy(col("old_id"))
-      val oldIdx = lshAssign(s, d).filter(!isNew)
-        .select(col("bucket").as("pbucket"), col("vec_id").as("old_id"))
-        .withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= LshMaxBucket).drop("rn")
-      // an old vector lives in ONE bucket and the probe list is distinct,
-      // so (qid, old_id) pairs are unique without a dedup pass
-      val dups = lshProbesOf(lshAssign(s, d).filter(isNew))
-        .join(oldIdx, Seq("pbucket"))
-        .select(col("qid").as("vec_id"), col("old_id"))
-        .join(e.select(col("vec_id"), col("embedding").as("qe"), col("nsq").as("qn")),
-          Seq("vec_id"))
-        .join(e.select(col("vec_id").as("old_id"), col("embedding").as("oe"),
-          col("nsq").as("onsq")), Seq("old_id"))
-        // integer-ppm threshold (sim_range_search discipline): compare on
-        // floor(cosine·1e6) so an ulp can't flip admission between engines
-        .filter(floor(dot(col("qe"), col("oe")) / sqrt(col("qn") * col("onsq")) * 1e6)
-          .cast("long") >= (IncrementalSimTau * 1e6).toLong)
-        .groupBy(col("vec_id")).agg(min(col("old_id")).as("dup_of"))
-      e.filter(isNew).select(col("vec_id"))
-        .join(dups, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("dup_of"), col("dup_of").isNull.as("admitted"))
-        .orderBy(col("vec_id"))
-    }),
+    // The batch gate IS the streaming gate ([[lshAdmitted]] over
+    // [[lshOldIndex]]) run over the whole day's arrivals at once.
+    "sim_incremental" -> ((s, d) =>
+      lshAdmitted(Tables.embeddings(s, d).filter(isArrival), lshOldIndex(s, d))
+        .orderBy(col("vec_id"))),
 
     // Index-migration A/B gate: per query (the recall-sample discipline),
     // how much of the IVF 2-probe top-k the SRP-LSH own-bucket top-k
@@ -322,36 +242,9 @@ object Similarity {
     // memoized index tables; the comparison is a full outer join of two
     // ≤k-row-per-query lists — nothing corpus-sized moves.
     "sim_index_agreement" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      val q = e.filter(col("vec_id") < RecallQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val ivf = q.join(ivfProbes(s, d).filter(col("qid") < RecallQueries), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")),
-          Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ))
-        .filter(col("rank") <= TopK)
+      val ivf = topPerQuery(ivfSearch(s, d, Some(RecallQueries)), TopK, byCosine: _*)
         .select(col("qid"), col("vec_id").as("nid"), lit(1).as("in_ivf"))
-      val ok = lshAssign(s, d).groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_b")).filter(col("n_b") <= LshMaxBucket)
-        .select(col("bucket"))
-      val bk = lshAssign(s, d).join(broadcast(ok), Seq("bucket"), "left_semi")
-      val lsh = bk.filter(col("vec_id") < RecallQueries)
-        .join(e, Seq("vec_id"))
-        .select(col("bucket"), col("vec_id").as("qid"),
-          col("embedding").as("qe"), col("nsq").as("qn"))
-        .join(bk.join(e, Seq("vec_id"))
-          .select(col("bucket"), col("vec_id"),
-            col("embedding").as("ne"), col("nsq").as("nn")), Seq("bucket"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ))
-        .filter(col("rank") <= TopK)
+      val lsh = lshTopK(s, d, Some(RecallQueries))
         .select(col("qid"), col("vec_id").as("nid"), lit(1).as("in_lsh"))
       ivf.join(lsh, Seq("qid", "nid"), "full")
         .groupBy(col("qid"))
@@ -397,11 +290,9 @@ object Similarity {
     // passes (assign, update partials) + a K×dim shuffle of partials;
     // more rounds = the same query iterated, K scales like MaxCentroids.
     "embed_kmeans" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
+      val e = embeddingsNsq(s, d)
       def nearest(cents: DataFrame): DataFrame = {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
+        val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
         e.crossJoin(broadcast(cents))
           .withColumn("dist",
             col("nsq") - lit(2.0) * dot(col("embedding"), col("se")) + col("snsq"))
@@ -504,31 +395,16 @@ object Similarity {
     // is a small-integer ratio — bit-stable. Run next to sim_recall after
     // every re-embedding: recall isolates the INDEX, this isolates the
     // GEOMETRY.
-    "sim_knn_acc" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val lbl = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-      val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      val top1 = q.join(ivfProbes(s, d), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")), Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ))
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("vec_id").as("nid"))
-      top1
-        .join(lbl.select(col("vec_id").as("qid"), col("label").as("q_label")), Seq("qid"))
-        .join(lbl.select(col("vec_id").as("nid"), col("label").as("n_label")), Seq("nid"))
+    // The labels ride the search as carried columns, so the roll-up needs
+    // no join back to the embeddings.
+    "sim_knn_acc" -> ((s, d) =>
+      topPerQuery(ivfSearch(s, d, qcap = None, carry = Seq("label")), 1, byCosine: _*)
         .groupBy(col("q_label"))
         .agg(count(lit(1)).as("n_queries"),
           count(when(col("q_label") === col("n_label"), true)).as("n_agree"))
         .select(col("q_label"), col("n_queries"), col("n_agree"),
           (col("n_agree").cast("double") / col("n_queries")).as("knn_acc"))
-        .orderBy(col("q_label"))
-    }),
+        .orderBy(col("q_label"))),
 
     // Inverted-file balance report — the count-of-cell-sizes histogram.
     // IVF probe cost and recall both assume roughly even cells; a drifting
@@ -617,7 +493,7 @@ object Similarity {
     // recall costs a 100 TB vector store tunes independently: cell-probe
     // misses (nlist/nprobe) vs code coarseness (M/K).
     "sim_recall_pq" -> ((s, d) =>
-      recallVsExactL2(s, d, pqAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
+      recallAt(recallGt(s, d), pqAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
 
     // The production IVF-PQ-refine stack: ADC shortlist of [[refineR]]
     // (= √n, one cell's worth) candidates per query (cheap, code-domain),
@@ -635,24 +511,17 @@ object Similarity {
     // the two rows read together: quantization loss (ADC-only) vs served
     // quality (refined).
     "sim_recall_refined" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
+      val e = embeddingsNsq(s, d)
       val q = e.filter(col("vec_id") < RecallQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val shortlist = pqAdcTopK(s, d, qcap = RecallQueries, k = refineR(e))
+      val reranked = pqAdcTopK(s, d, qcap = RecallQueries, k = refineR(e))
         .select(col("qid"), col("nid"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-      val reranked = shortlist
         .join(broadcast(q), Seq("qid"))
         .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne"),
           col("nsq").as("nn")), Seq("nid"))
         .withColumn("dist",
           col("nn") - lit(2.0) * dot(col("qe"), col("ne")) + col("qn"))
-        .withColumn("rank", row_number().over(byQ))
-        .filter(col("rank") <= TopK)
-        .select(col("qid"), col("nid"))
-      recallVsExactL2(s, d, reranked)
+      recallAt(recallGt(s, d), topPerQuery(reranked, TopK, col("dist"), col("nid")))
     }),
 
     // Residual-PQ quantization gauge (IVF-PQ on x − centroid): same
@@ -663,12 +532,12 @@ object Similarity {
     // trick) → refined (served quality). New query so the existing PQ
     // oracle rows stay bit-stable (r12 verdict task 4).
     "sim_recall_pqr" -> ((s, d) =>
-      recallVsExactL2(s, d, pqrAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
+      recallAt(recallGt(s, d), pqrAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
 
     // Twin-aware (equivalence-class) twins of the two ADC gauges (r13
     // verdict task 1): same searchers, same exact ground truth, but a
     // returned replica twin of a true neighbor counts as a hit — recall
-    // over distinct true-neighbor classes ([[recallVsExactL2Classes]]).
+    // over distinct true-neighbor classes ([[recallClassesAt]]).
     // Read against their positional twins, the pair separates the two
     // things the positional floor conflates at the 100× corpus: tie luck
     // among embedding-identical replicas (gone here) vs genuine codebook
@@ -676,32 +545,19 @@ object Similarity {
     // existing gauge rows stay bit-stable (same discipline as
     // `sim_recall_pqr` in r13).
     "sim_recall_pq_eq" -> ((s, d) =>
-      recallVsExactL2Classes(s, d, pqAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
+      recallClassesAt(s, d, pqAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
     "sim_recall_pqr_eq" -> ((s, d) =>
-      recallVsExactL2Classes(s, d, pqrAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
+      recallClassesAt(s, d, pqrAdcTopK(s, d, qcap = RecallQueries, k = TopK))),
 
     // IVF probe search, narrowed to a demo query set (vec_id < 20): the
     // same machinery as sim_cosine_topk but top-3 — kept as the
     // cell-inspection query. The qid filter sits above the probe window on
     // its partition key, so Catalyst pushes it below the window and the
     // seed-distance pass only runs for the 20 queries.
-    "sim_ivf_probe" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val cands = q.join(ivfProbes(s, d).filter(col("qid") < 20), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")), Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      cands.withColumn("rank", row_number().over(byQ).cast("long"))
-        .filter(col("rank") <= 3)
+    "sim_ivf_probe" -> ((s, d) =>
+      topPerQuery(ivfSearch(s, d, Some(20)), 3, byCosine: _*)
         .select(col("qid"), col("vec_id").as("nid"), col("cosine"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        .orderBy(col("qid"), col("rank"))),
 
     // ANN quality measurement — recall@k of the IVF 2-probe search against
     // exact brute-force ground truth, per query. This is how a real ANN
@@ -715,32 +571,10 @@ object Similarity {
     // so this query measures exactly the index the engine serves. Output:
     // per-query hit count and recall — the operator a 100 TB vector store
     // runs after every index rebuild.
-    "sim_recall" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val q = e.filter(col("vec_id") < RecallQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      // exact ground truth: the memoized GT artifact (r15)
-      val exact = recallGtCos(s, d)
-      // approximate side: the served IVF 2-probe index, identical to
-      // sim_cosine_topk restricted to the query sample
-      val approx = q.join(ivfProbes(s, d).filter(col("qid") < RecallQueries), Seq("qid"))
-        .join(ivfAssign(s, d), Seq("cell"))
-        .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")), Seq("vec_id"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(byQ))
-        .filter(col("rank") <= TopK)
-        .select(col("qid"), col("vec_id").as("nid"), lit(1).as("hit"))
-      exact.join(approx, Seq("qid", "nid"), "left")
-        .groupBy(col("qid"))
-        .agg(count(col("hit")).as("n_hits"))
-        .select(col("qid"), col("n_hits"),
-          (col("n_hits").cast("double") / lit(TopK)).as("recall"))
-        .orderBy(col("qid"))
-    }),
+    "sim_recall" -> ((s, d) =>
+      recallAt(recallGtCos(s, d),
+        topPerQuery(ivfSearch(s, d, Some(RecallQueries)), TopK, byCosine: _*)
+          .withColumnRenamed("vec_id", "nid"))),
 
     // The nprobe TUNING CURVE: mean recall@k of the served index at
     // 1, 2 and 4 probes in one report — how the probes knob gets set
@@ -751,25 +585,11 @@ object Similarity {
     // table, and hit counting rides one inner join + per-level agg.
     "sim_probe_sweep" -> ((s, d) => {
       import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-      val q = e.filter(col("vec_id") < RecallQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-      val byQ = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-      val exact = recallGtCos(s, d) // memoized GT artifact (r15)
       val approxAll = ProbeSweepLevels.map { p =>
-        q.join(ivfProbes(s, d, p).filter(col("qid") < RecallQueries), Seq("qid"))
-          .join(ivfAssign(s, d), Seq("cell"))
-          .join(e.select(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")),
-            Seq("vec_id"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("cosine", dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn")))
-          .withColumn("rank", row_number().over(byQ))
-          .filter(col("rank") <= TopK)
+        topPerQuery(ivfSearch(s, d, Some(RecallQueries), probes = p), TopK, byCosine: _*)
           .select(col("qid"), col("vec_id").as("nid"), lit(p).as("n_probes"))
       }.reduce(_ unionByName _)
-      val hits = exact.join(approxAll, Seq("qid", "nid"))
+      val hits = recallGtCos(s, d).join(approxAll, Seq("qid", "nid"))
         .groupBy(col("n_probes")).agg(count(lit(1)).as("n_hits"))
       ProbeSweepLevels.toDF("n_probes")
         .join(broadcast(hits), Seq("n_probes"), "left")
@@ -804,17 +624,6 @@ object Similarity {
   private[operators] def refineR(e: DataFrame): Int =
     ivfStride(e).toInt
 
-  /** The ONE recall discipline shared by every L2-quantization gauge
-    * (`sim_recall_pq` / `sim_recall_refined` / `sim_recall_pqr`): exact
-    * squared-L2 ground truth over the fixed [[RecallQueries]] sample
-    * (window tie-break (dist, vec_id)) left-joined against the gauge's
-    * approximate (qid, nid) list → per-query recall@[[TopK]]. Factored
-    * (r13 review) so a change to the ground-truth metric or tie-break can
-    * never apply to one gauge and silently not the others. `qcap` is
-    * threaded from the caller (r13 ADVICE): the ground truth covers
-    * exactly the query sample the approx side was built with, so a gauge
-    * built at a smaller qcap can never silently score its uncovered qids
-    * as zero recall. */
   /** Exact-L2 top-[[TopK]] ground truth (qid, nid) for the fixed
     * [[RecallQueries]] query sample — MEMOIZED (r15, warmed as
     * `recall_gt`): the GT relation is the benchmark artifact every recall
@@ -834,12 +643,10 @@ object Similarity {
     * pinning its shape (corpus scan × BROADCAST sample, never an n²
     * shuffle) now that query plans only see the checkpoint scan. */
   private[graft] def computeRecallGt(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
+    val e = embeddingsNsq(s, d)
     val qq = e.filter(col("vec_id") < RecallQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
+    val byQ = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
     e.crossJoin(broadcast(qq))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("dist",
@@ -859,12 +666,10 @@ object Similarity {
 
   /** Pre-checkpoint build plan — see [[computeRecallGt]]. */
   private[graft] def computeRecallGtCos(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
+    val e = embeddingsNsq(s, d)
     val q = e.filter(col("vec_id") < RecallQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn"))
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
+    val byQ = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cosine", dot(col("qe"), col("embedding")) / sqrt(col("qn") * col("nsq")))
@@ -879,7 +684,7 @@ object Similarity {
     * previously re-ran the full-corpus embedding-keyed window. */
   private[operators] def recallCls(s: SparkSession, d: String): DataFrame =
     graft.Memo("recall_cls", s, d) {
-      val byEmb = org.apache.spark.sql.expressions.Window.partitionBy(col("embedding"))
+      val byEmb = Window.partitionBy(col("embedding"))
       Tables.embeddings(s, d)
         .select(col("vec_id").as("nid"), col("embedding"))
         .withColumn("cls", min(col("nid")).over(byEmb))
@@ -887,12 +692,20 @@ object Similarity {
         .localCheckpoint()
     }
 
-  private def recallVsExactL2(s: SparkSession, d: String, approxIn: DataFrame,
+  /** The ONE recall discipline shared by every recall gauge: a memoized
+    * exact ground truth (`gt`: [[recallGt]] for the L2 quantization
+    * gauges, [[recallGtCos]] for the IVF gauge) left-joined against the
+    * gauge's approximate (qid, nid) list → per-query recall@[[TopK]].
+    * Factored (r13 review) so a change to the scoring can never apply to
+    * one gauge and silently not the others. `qcap` bounds the ground
+    * truth to the query sample the approx side was built with (r13
+    * ADVICE), so a gauge built at a smaller qcap can never silently score
+    * its uncovered qids as zero recall. */
+  private def recallAt(gt: DataFrame, approx: DataFrame,
       qcap: Int = RecallQueries): DataFrame = {
     require(qcap <= RecallQueries, s"qcap $qcap exceeds the GT cap $RecallQueries")
-    val exact = recallGt(s, d).filter(col("qid") < qcap)
-    val approx = approxIn.select(col("qid"), col("nid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "nid"), "left")
+    gt.filter(col("qid") < qcap)
+      .join(approx.select(col("qid"), col("nid"), lit(1).as("hit")), Seq("qid", "nid"), "left")
       .groupBy(col("qid"))
       .agg(count(col("hit")).as("n_hits"))
       .select(col("qid"), col("n_hits"),
@@ -900,7 +713,7 @@ object Similarity {
       .orderBy(col("qid"))
   }
 
-  /** Twin-aware (equivalence-class) variant of [[recallVsExactL2]] — the
+  /** Twin-aware (equivalence-class) variant of [[recallAt]] — the
     * r13 verdict's answer to the replica-tie floor: the synthesized corpus
     * carries ~n/2000 embedding-IDENTICAL replica twins per query, so exact
     * ground truth picks one twin arbitrarily (vec_id tie-break) and a
@@ -911,9 +724,9 @@ object Similarity {
     * over identical embeddings, one linear shuffle), and recall@k is
     * measured over distinct true-neighbor CLASSES: any returned member of
     * a true class is a hit. Exact top-k construction and tie-breaks are
-    * unchanged from [[recallVsExactL2]], so the `_eq` gauges differ from
-    * their positional twins in the scoring join only. */
-  private def recallVsExactL2Classes(s: SparkSession, d: String, approxIn: DataFrame,
+    * unchanged from [[recallAt]] over [[recallGt]], so the `_eq` gauges
+    * differ from their positional twins in the scoring join only. */
+  private def recallClassesAt(s: SparkSession, d: String, approxIn: DataFrame,
       qcap: Int = RecallQueries): DataFrame = {
     require(qcap <= RecallQueries, s"qcap $qcap exceeds the GT cap $RecallQueries")
     // same memoized GT + twin map as the positional gauges (r15) — the
@@ -1037,23 +850,28 @@ object Similarity {
     * the served index. */
   private def pqAdcTopK(s: SparkSession, d: String, qcap: Int, k: Int): DataFrame = {
     require(qcap <= RecallQueries, s"qcap $qcap exceeds the memoized LUT cap $RecallQueries")
-    val codes = pqCodes(s, d)
-    val lut = pqLut(s, d).filter(col("qid") < qcap)
-    val cand = ivfProbes(s, d).filter(col("qid") < qcap)
-      .join(ivfAssign(s, d), Seq("cell"))
+    adcTopK(s, d, ivfProbes(s, d, Some(qcap)), pqCodes(s, d),
+      pqLut(s, d).filter(col("qid") < qcap), Seq("qid", "m", "sid"), k)
+  }
+
+  /** The ADC fold-and-rank tail shared by raw and residual PQ: every
+    * vector in a query's probed cells (`probes`: (qid, cell)) has its
+    * code joined to the broadcast lookup table on `lutKeys`, its [[PqM]]
+    * subspace distances folded in SUBSPACE order (cross-engine
+    * determinism), and the top `k` per query kept by (adc_dist, vec_id):
+    * (qid, nid, adc_dist, rank). */
+  private def adcTopK(s: SparkSession, d: String, probes: DataFrame, codes: DataFrame,
+      lut: DataFrame, lutKeys: Seq[String], k: Int): DataFrame = {
+    val adc = probes.join(ivfAssign(s, d), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"))
-    val adc = cand.join(codes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("qid", "m", "sid"))
+      .join(codes, Seq("vec_id"))
+      .join(broadcast(lut), lutKeys)
       .groupBy(col("qid"), col("vec_id"))
       .agg(array_sort(collect_list(struct(col("m"), col("dist")))).as("ds"))
       .select(col("qid"), col("vec_id"),
         aggregate(transform(col("ds"), x => x("dist")), lit(0.0), (a, v) => a + v)
           .as("adc_dist"))
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("adc_dist"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(byQ).cast("long"))
-      .filter(col("rank") <= k)
+    topPerQuery(adc, k, col("adc_dist"), col("vec_id"))
       .select(col("qid"), col("vec_id").as("nid"), col("adc_dist"), col("rank"))
   }
 
@@ -1119,25 +937,30 @@ object Similarity {
     * all K centroids for the within-cell structure ADC actually ranks
     * (the r12 recall-at-scale leg measured raw-vector ADC at 0.14 @ 100×
     * even with K=256 — `sim_recall_pqr` is the measured answer). */
-  private[graft] def pqResiduals(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-    val cents = seedsOf(e).select(col("sid").as("cell"), col("se").as("ce"))
-    e.select(col("vec_id"), col("embedding"))
+  private def pqResiduals(s: SparkSession, d: String, cents: DataFrame): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .join(ivfAssign(s, d), Seq("vec_id"))
       .join(broadcast(cents), Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("embedding"), col("ce"),
-          (x, y) => x.cast("double") - y.cast("double")).as("r"))
-  }
+      .select(col("vec_id"), col("cell"), residual(col("embedding")).as("r"))
+
+  /** x − ce, element-wise in exact double: the residual of a vector
+    * against the `ce` centroid column of an [[ivfCentroids]] row. */
+  private def residual(x: Column): Column =
+    zip_with(x, col("ce"), (a, b) => a.cast("double") - b.cast("double"))
+
+  /** The IVF centroid frame (cell, ce): the seed vectors keyed by the cell
+    * each one defines. Building it counts the corpus once ([[ivfStride]]),
+    * so each residual pipeline builds it once and threads it through. */
+  private def ivfCentroids(s: SparkSession, d: String): DataFrame =
+    seedsOf(embeddingsNsq(s, d)).select(col("sid").as("cell"), col("se").as("ce"))
 
   /** Residual codebook: the SAME deterministic seed convention as
     * [[pqSeeds]], taken over residual vectors — so raw-PQ vs residual-PQ
     * differ in exactly one thing (what the codes describe), and the
     * recall delta between `sim_recall_pq` and `sim_recall_pqr` is
     * attributable to the residual trick alone. */
-  private def pqrSeeds(s: SparkSession, d: String): DataFrame =
-    pqResiduals(s, d).filter(isSeed(PqK.toLong, 64L))
+  private def pqrSeeds(residuals: DataFrame): DataFrame =
+    residuals.filter(isSeed(PqK.toLong, 64L))
       .select(col("vec_id").as("sid"), col("r").as("se"))
 
   /** Residual code store — memoized + warmed like [[pqCodes]] (same
@@ -1145,10 +968,10 @@ object Similarity {
   private[operators] def pqrCodes(s: SparkSession, d: String): DataFrame =
     graft.Memo("pqr_codes", s, d)(computePqrCodes(s, d).localCheckpoint())
 
-  private[graft] def computePqrCodes(s: SparkSession, d: String): DataFrame =
-    encodeArrayLand(
-      pqResiduals(s, d).select(col("vec_id"), col("r").as("v")),
-      pqrSeeds(s, d))
+  private[graft] def computePqrCodes(s: SparkSession, d: String): DataFrame = {
+    val res = pqResiduals(s, d, ivfCentroids(s, d))
+    encodeArrayLand(res.select(col("vec_id"), col("r").as("v")), pqrSeeds(res))
+  }
 
   /** Residual-ADC top-k through the IVF probes. Differs from
     * [[pqAdcTopK]] in the LUT key only: a query's residual depends on
@@ -1158,37 +981,18 @@ object Similarity {
     * its OWN cell's centroid, which is exactly the probed cell that
     * surfaced it, so LUT row and code row always agree on `cell`. */
   private def pqrAdcTopK(s: SparkSession, d: String, qcap: Int, k: Int): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
-    val cents = seedsOf(e).select(col("sid").as("cell"), col("se").as("ce"))
-    val qprobes = ivfProbes(s, d).filter(col("qid") < qcap)
-    val qres = qprobes
-      .join(e.select(col("vec_id").as("qid"), col("embedding").as("qe")), Seq("qid"))
+    val cents = ivfCentroids(s, d)
+    val qprobes = ivfProbes(s, d, Some(qcap))
+    val lut = qprobes
+      .join(Tables.embeddings(s, d).select(col("vec_id").as("qid"), col("embedding")),
+        Seq("qid"))
       .join(broadcast(cents), Seq("cell"))
-      .select(col("qid"), col("cell"),
-        zip_with(col("qe"), col("ce"),
-          (x, y) => x.cast("double") - y.cast("double")).as("qr"))
-    val lut = qres
+      .select(col("qid"), col("cell"), residual(col("embedding")).as("qr"))
       .withColumn("m", explode(sequence(lit(0), lit(PqM - 1))))
-      .crossJoin(broadcast(pqrSeeds(s, d)))
+      .crossJoin(broadcast(pqrSeeds(pqResiduals(s, d, cents))))
       .select(col("qid"), col("cell"), col("m"), col("sid"),
         pqL2(pqSlice(col("qr"), col("m")), pqSlice(col("se"), col("m"))).as("dist"))
-    val cand = qprobes
-      .join(ivfAssign(s, d), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("cell"), col("vec_id"))
-    val adc = cand.join(pqrCodes(s, d), Seq("vec_id"))
-      .join(broadcast(lut), Seq("qid", "cell", "m", "sid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("m"), col("dist")))).as("ds"))
-      .select(col("qid"), col("vec_id"),
-        aggregate(transform(col("ds"), x => x("dist")), lit(0.0), (a, v) => a + v)
-          .as("adc_dist"))
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("adc_dist"), col("vec_id"))
-    adc.withColumn("rank", row_number().over(byQ).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("adc_dist"), col("rank"))
+    adcTopK(s, d, qprobes, pqrCodes(s, d), lut, Seq("qid", "cell", "m", "sid"), k)
   }
 
   /** The seed-selection convention (every-`stride`th vector, capped)
@@ -1222,25 +1026,24 @@ object Similarity {
     * n × centroids pass; the only wide op downstream is the per-vector
     * window. */
   private def seedDists(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq"))
+    val e = embeddingsNsq(s, d)
     e.crossJoin(broadcast(seedsOf(e)))
       .withColumn("dist", col("nsq") - lit(2.0) * dot(col("embedding"), col("se")) + col("snsq"))
   }
 
   /** Nearest-centroid assignment: (vec_id, cell) — the inverted file.
     * MEMOIZED (localCheckpoint per session × dataset, [[graft.Memo]]):
-    * seven queries consume the assignment (both ANN searches, the cell
-    * inventory, the balance report, both recall gates, SemDeDup, and the
-    * embedding near-dup pass) — in production the inverted file is a
-    * PERSISTED table written once per index build and read by every
-    * search and report, exactly like the MinHash pair graph. */
+    * every IVF search ([[ivfSearch]]), both ADC pipelines, the residual
+    * encode, the cell inventory and balance reports, SemDeDup, and the
+    * embedding near-dup pass consume the assignment — in production the
+    * inverted file is a PERSISTED table written once per index build and
+    * read by every search and report, exactly like the MinHash pair
+    * graph. */
   private[operators] def ivfAssign(s: SparkSession, d: String): DataFrame =
     graft.Memo("sim_ivf_assign", s, d)(computeIvfAssign(s, d).localCheckpoint())
 
   private def computeIvfAssign(s: SparkSession, d: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
     seedDists(s, d)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("vec_id"), col("sid").as("cell"))
@@ -1265,7 +1068,9 @@ object Similarity {
     * query was CLOSEST to crossing are the likeliest to hide true
     * neighbors; flipping each buys recall without rebuilding the index). */
   private[graft] def lshProbes(s: SparkSession, d: String): DataFrame =
-    lshProbesOf(lshAssign(s, d).filter(col("vec_id") < RecallQueries))
+    lshAssign(s, d).filter(col("vec_id") < RecallQueries)
+      .select(col("vec_id").as("qid"), explode(array(probeStructs: _*)).as("pr"))
+      .select(col("qid"), col("pr.lvl").as("lvl"), col("pr.pbucket").as("pbucket"))
 
   /** (lvl, pbucket) probe structs over a `bucket` column: lvl 0 = the
     * bucket itself, lvl 1 = its [[Hyperplanes]] one-bit flips. */
@@ -1281,23 +1086,13 @@ object Similarity {
     own +: flips
   }
 
-  /** The probe expansion over any (vec_id, bucket) subset — the recall
-    * gate probes the query sample, the incremental admission probes the
-    * day's new arrivals. */
-  private def lshProbesOf(assign: DataFrame): DataFrame =
-    assign
-      .select(col("vec_id").as("qid"), explode(array(probeStructs: _*)).as("pr"))
-      .select(col("qid"), col("pr.lvl").as("lvl"), col("pr.pbucket").as("pbucket"))
-
   /** The `sim_incremental` admission index in join-ready form:
     * (pbucket, old_id, oe, onsq) — bucket-capped old-vector postings
     * carrying the embedding and its squared norm, so an admission pass
     * (batch or stream-static) scores candidates without a second join. */
   private[graft] def lshOldIndex(s: SparkSession, d: String): DataFrame = {
-    val isNew = col("vec_id") % 10 === 0
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pbucket")).orderBy(col("old_id"))
-    lshAssign(s, d).filter(!isNew)
+    val wb = Window.partitionBy(col("pbucket")).orderBy(col("old_id"))
+    lshAssign(s, d).filter(!isArrival)
       .select(col("bucket").as("pbucket"), col("vec_id").as("old_id"))
       .withColumn("rn", row_number().over(wb))
       .filter(col("rn") <= LshMaxBucket).drop("rn")
@@ -1306,14 +1101,19 @@ object Similarity {
           normSq(col("embedding")).as("onsq")), Seq("old_id"))
   }
 
+  /** Today's arrivals in the incremental-admission split (vec_id % 10 = 0,
+    * the suite's convention); everything else is the existing index. */
+  private def isArrival: Column = col("vec_id") % 10 === 0
+
   /** Streaming-compatible LSH admission: arriving (vec_id, embedding)
     * rows are bucketed, probe-expanded WITH their embedding carried (no
     * stream-stream join back), left-joined against the static admission
     * index and admitted unless a probed old vector clears the cosine
-    * threshold — the same integer-ppm comparison as `sim_incremental`,
-    * whose verdicts the parity spec asserts this reproduces across
-    * arbitrary micro-batch splits. Complete-mode groupBy, like the
-    * MinHash streaming gate. */
+    * threshold, compared as integer ppm so an ulp can't flip admission
+    * between engines. `sim_incremental` runs this same gate over the whole
+    * day's arrivals in one batch, and the parity spec asserts a stream
+    * gets its verdicts across arbitrary micro-batch splits. Complete-mode
+    * groupBy, like the MinHash streaming gate. */
   def lshAdmitted(vecs: DataFrame, oldIdx: DataFrame): DataFrame = {
     val probes = vecs
       .select(col("vec_id"), col("embedding").as("qe"),
@@ -1340,8 +1140,7 @@ object Similarity {
     * serves every shallower level by an rn filter. */
   private[operators] def ivfProbesAll(s: SparkSession, d: String): DataFrame =
     graft.Memo("sim_ivf_probes", s, d)({
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
+      val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("sid"))
       seedDists(s, d)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= ProbeSweepLevels.max)
@@ -1349,10 +1148,86 @@ object Similarity {
         .localCheckpoint()
     })
 
-  /** n-probe list: each vector's `probes` nearest cells, (qid, cell). */
-  private def ivfProbes(s: SparkSession, d: String, probes: Int = 2): DataFrame =
-    ivfProbesAll(s, d).filter(col("rn") <= probes)
-      .select(col("qid"), col("cell"))
+  /** n-probe list: each query's `probes` nearest cells, (qid, cell), for
+    * the first `qcap` vectors (or all of them). */
+  private def ivfProbes(s: SparkSession, d: String, qcap: Option[Int],
+      probes: Int = 2): DataFrame = {
+    val p = ivfProbesAll(s, d).filter(col("rn") <= probes).select(col("qid"), col("cell"))
+    qcap.fold(p)(n => p.filter(col("qid") < n))
+  }
+
+  /** (vec_id, embedding, nsq, extra…): the embeddings with their squared
+    * norm — the relation every cosine and L2 pipeline starts from. */
+  private def embeddingsNsq(s: SparkSession, d: String, extra: String*): DataFrame =
+    Tables.embeddings(s, d).select(
+      Seq(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq")) ++
+        extra.map(col): _*)
+
+  /** Exact cosine of a query (qe, qn) against a neighbor (ne, nn): the
+    * column names both search kernels project their two sides to. */
+  private def cosine: Column = dot(col("qe"), col("ne")) / sqrt(col("qn") * col("nn"))
+
+  /** The search ranking order: cosine descending, vec_id tie-break. */
+  private def byCosine: Seq[Column] = Seq(col("cosine").desc, col("vec_id"))
+
+  /** Per-query top-k: a row_number window over qid in `order`, kept where
+    * rank ≤ k, rank as a long — the one ranking step of every search and
+    * ADC pipeline. */
+  private def topPerQuery(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy(col("qid")).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+      .withColumn("rank", col("rank").cast("long"))
+
+  /** IVF probe search — the kernel of every IVF cosine query. Each query of
+    * the sample (the first `qcap` vectors, or all of them) meets its
+    * `probes` nearest cells ([[ivfProbes]]), the vectors assigned to those
+    * cells ([[ivfAssign]]) and their embeddings; the query itself is
+    * dropped and each candidate scored by exact cosine: (qid, vec_id,
+    * cosine, q_c and n_c for every `carry` column c). Candidate volume is
+    * |sample|·probes·cellsize, never n²: the pair join shuffles on `cell`,
+    * and a ranking window over the result on `qid`. */
+  private def ivfSearch(s: SparkSession, d: String, qcap: Option[Int],
+      probes: Int = 2, carry: Seq[String] = Nil): DataFrame = {
+    val e = embeddingsNsq(s, d, carry: _*)
+    val q = qcap.fold(e)(n => e.filter(col("vec_id") < n)).select(
+      Seq(col("vec_id").as("qid"), col("embedding").as("qe"), col("nsq").as("qn")) ++
+        carry.map(c => col(c).as(s"q_$c")): _*)
+    val nb = e.select(
+      Seq(col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn")) ++
+        carry.map(c => col(c).as(s"n_$c")): _*)
+    q.join(ivfProbes(s, d, qcap, probes), Seq("qid"))
+      .join(ivfAssign(s, d), Seq("cell"))
+      .join(nb, Seq("vec_id"))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cosine", cosine)
+  }
+
+  /** The capped LSH postings: (vec_id, bucket) for every vector whose
+    * bucket holds at most [[LshMaxBucket]] vectors — the skew cap, built
+    * in this one place for the search, the recall gate and the agreement
+    * gate. The ok-bucket list is bucket-count sized, so it broadcasts. */
+  private def lshCapped(s: SparkSession, d: String): DataFrame = {
+    val ok = lshAssign(s, d).groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_b")).filter(col("n_b") <= LshMaxBucket)
+      .select(col("bucket"))
+    lshAssign(s, d).join(broadcast(ok), Seq("bucket"), "left_semi")
+  }
+
+  /** Own-bucket LSH search: each query of the sample (the first `qcap`
+    * vectors, or all) against its capped-bucket cohabitants, exact cosine,
+    * top [[TopK]] per query: (qid, vec_id, cosine, rank, …). The pair join
+    * shuffles on the H-bit bucket string; the rank window on qid. */
+  private def lshTopK(s: SparkSession, d: String, qcap: Option[Int]): DataFrame = {
+    val e = embeddingsNsq(s, d)
+    val bk = lshCapped(s, d)
+    val q = qcap.fold(bk)(n => bk.filter(col("vec_id") < n)).join(e, Seq("vec_id"))
+      .select(col("bucket"), col("vec_id").as("qid"),
+        col("embedding").as("qe"), col("nsq").as("qn"))
+    val x = bk.join(e, Seq("vec_id"))
+      .select(col("bucket"), col("vec_id"), col("embedding").as("ne"), col("nsq").as("nn"))
+    topPerQuery(q.join(x, Seq("bucket")).filter(col("vec_id") =!= col("qid"))
+      .withColumn("cosine", cosine), TopK, byCosine: _*)
+  }
 
   private def dotSql(x: String, y: String) =
     s"list_sum([CAST($x.embedding[i] AS DOUBLE) * CAST($y.embedding[i] AS DOUBLE) for i in range(1, len($x.embedding)+1)])"
@@ -1360,11 +1235,22 @@ object Similarity {
   private val nsqSql =
     "list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE) for i in range(1, len(embedding)+1)])"
 
-  /** Shared IVF CTE chain (e → seeds → dists → assign), DuckDB dialect. */
-  /** Shared SRP-LSH CTE chain (e → signed → bk), DuckDB dialect: the
-    * md5-parity sign derivation is the reference formulation
-    * [[srpBucketExpr]] mirrors — the Spark fast path uses the identical
-    * constant matrix as ±1 literals (equality asserted in OperatorsSpec). */
+  /** Exact cosine of the `e` rows q (query) and x (neighbor): [[cosine]]. */
+  private val cosineSql = s"${dotSql("q", "x")} / sqrt(q.nsq * x.nsq)"
+
+  /** Exact squared L2 of the `e` rows q and x, in the Spark operand order. */
+  private val l2Sql = s"x.nsq - CAST(2.0 AS DOUBLE) * ${dotSql("q", "x")} + q.nsq"
+
+  /** `name(…, rank)`: the rows of `from` ranked per `part` in `order`, kept
+    * where rank ≤ k — the SQL twin of [[topPerQuery]]. */
+  private def topSql(name: String, from: String, order: String,
+      k: String = TopK.toString, part: String = "qid"): String =
+    s"""$name AS (
+       |  SELECT * FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY $part ORDER BY $order) AS rank
+       |    FROM $from)
+       |  WHERE rank <= $k)""".stripMargin
+
   /** The bucket-derivation tail of [[lshCtes]] (signed → bk), factored so
     * queries that already carry the `e` CTE (e.g. composed with
     * [[ivfCtes]]) can append just the LSH chain without redefining it. */
@@ -1381,23 +1267,28 @@ object Similarity {
        |  FROM embeddings),
        |bk AS (SELECT vec_id, array_to_string(bits, '') AS bucket FROM signed)""".stripMargin
 
-  // e is MATERIALIZED for the same re-expansion reason as ivfCtes below:
-  // DuckDB inlines plain CTEs per consumer, and several LSH oracles read e
-  // both inside `signed` and again in the outer query — at the 100× corpus
-  // each inline expansion re-derives nsq over 59M embeddings.
+  /** Shared SRP-LSH CTE chain (e → signed → bk), DuckDB dialect: the
+    * md5-parity sign derivation is the reference formulation
+    * [[srpBucketExpr]] mirrors — the Spark fast path uses the identical
+    * constant matrix as ±1 literals (equality asserted in OperatorsSpec).
+    * e is MATERIALIZED for the same re-expansion reason as [[ivfCtes]]:
+    * DuckDB inlines plain CTEs per consumer, and several LSH oracles read
+    * e both inside `signed` and again in the outer query — at the 100×
+    * corpus each inline expansion re-derives nsq over 59M embeddings. */
   private val lshCtes: String =
     s"""e AS MATERIALIZED (
        |  SELECT vec_id, embedding, $nsqSql AS nsq
        |  FROM embeddings),
        |""".stripMargin + lshTailCtes
 
-  // e and dists are MATERIALIZED (same lesson as Graph.edgeCte and the
-  // pagerank rounds): DuckDB inlines plain CTEs, and the consumers read
-  // dists twice (assign + probes) and e up to three times — at the 100×
-  // corpus each dists expansion is an n×√n cross join with a per-row
-  // 64-dim dot product, and the coexisting expansions pushed the
-  // sim_filtered_topk oracle past a 40 GB temp cap. Materialized, dists
-  // is ~90M scalar rows computed once.
+  /** Shared IVF CTE chain (e → seeds → dists → assign), DuckDB dialect.
+    * e and dists are MATERIALIZED (same lesson as Graph.edgeCte and the
+    * pagerank rounds): DuckDB inlines plain CTEs, and the consumers read
+    * dists twice (assign + probes) and e up to three times — at the 100×
+    * corpus each dists expansion is an n×√n cross join with a per-row
+    * 64-dim dot product, and the coexisting expansions pushed the
+    * sim_filtered_topk oracle past a 40 GB temp cap. Materialized, dists
+    * is ~90M scalar rows computed once. */
   private[operators] val ivfCtes: String =
     s"""e AS MATERIALIZED (
        |  SELECT vec_id, embedding, $nsqSql AS nsq
@@ -1418,10 +1309,36 @@ object Similarity {
        |    FROM dists)
        |  WHERE rn = 1)""".stripMargin
 
+  /** `probes(qid, cell, rn)` — each query's `probes` nearest cells, for
+    * the first `qcap` vectors or all — and `cand(qid, cell, rn, nid)`, the
+    * other vectors assigned to those cells: the SQL twin of [[ivfProbes]]
+    * ⋈ [[ivfAssign]], shared by the cosine searches and both ADC chains.
+    * Assumes [[ivfCtes]] precedes it. */
+  private def ivfCandSql(qcap: Option[Int], probes: Int = 2): String = {
+    val sample = qcap.fold("")(n => s" WHERE vec_id < $n")
+    s"""probes AS (
+       |  SELECT vec_id AS qid, sid AS cell, rn FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
+       |    FROM dists$sample)
+       |  WHERE rn <= $probes),
+       |cand AS (
+       |  SELECT p.qid, p.cell, p.rn, a.vec_id AS nid
+       |  FROM probes p JOIN assign a ON a.cell = p.cell
+       |  WHERE a.vec_id <> p.qid)""".stripMargin
+  }
+
+  /** [[ivfCandSql]] plus `cands(qid, cell, rn, nid, cosine)`, every
+    * candidate scored by exact cosine — the SQL twin of [[ivfSearch]]. */
+  private def ivfSearchSql(qcap: Option[Int], probes: Int = 2): String =
+    ivfCandSql(qcap, probes) + ",\n" +
+      s"""cands AS (
+         |  SELECT c.*, $cosineSql AS cosine
+         |  FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e x ON x.vec_id = c.nid)""".stripMargin
+
   /** PQ encode + ADC scoring CTE chain (DuckDB dialect) for the first
-    * `qcap` query vectors — through the `adc` relation; composed by
-    * concatenation (never stripMargin over embedded SQL). Assumes the
-    * [[ivfCtes]] chain precedes it. */
+    * `qcap` query vectors — through the `adc(qid, nid, adc_dist)`
+    * relation; composed by concatenation (never stripMargin over embedded
+    * SQL). Assumes the [[ivfCtes]] chain precedes it. */
   private def pqAdcCtes(qcap: Int): String =
     s"""seeds_pq AS (
        |  SELECT vec_id AS sid, embedding AS se FROM embeddings
@@ -1442,22 +1359,14 @@ object Similarity {
        |  WHERE rn = 1),
        |lut AS (
        |  SELECT vec_id AS qid, m, sid, dist FROM dists_pq WHERE vec_id < $qcap),
-       |probes_pq AS (
-       |  SELECT vec_id AS qid, sid AS cell FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-       |    FROM dists WHERE vec_id < $qcap)
-       |  WHERE rn <= 2),
-       |cand AS (
-       |  SELECT p.qid, a.vec_id
-       |  FROM probes_pq p JOIN assign a ON a.cell = p.cell
-       |  WHERE a.vec_id <> p.qid),
-       |adc AS (
-       |  SELECT c.qid, c.vec_id,
-       |    list_sum(list(l.dist ORDER BY l.m)) AS adc_dist
-       |  FROM cand c
-       |  JOIN codes k ON k.vec_id = c.vec_id
-       |  JOIN lut l ON l.qid = c.qid AND l.m = k.m AND l.sid = k.sid
-       |  GROUP BY c.qid, c.vec_id)""".stripMargin
+       |""".stripMargin + ivfCandSql(Some(qcap)) + ",\n" +
+      """adc AS (
+        |  SELECT c.qid, c.nid,
+        |    list_sum(list(l.dist ORDER BY l.m)) AS adc_dist
+        |  FROM cand c
+        |  JOIN codes k ON k.vec_id = c.nid
+        |  JOIN lut l ON l.qid = c.qid AND l.m = k.m AND l.sid = k.sid
+        |  GROUP BY c.qid, c.nid)""".stripMargin
 
   /** Residual-PQ encode + ADC CTE chain (DuckDB dialect) through `adc_r`;
     * assumes [[ivfCtes]] precedes it (reads e/seeds/dists/assign). Mirrors
@@ -1486,88 +1395,120 @@ object Similarity {
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, sid) AS rn
        |    FROM rdists)
        |  WHERE rn = 1),
-       |qprobes_r AS (
-       |  SELECT vec_id AS qid, sid AS cell FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-       |    FROM dists WHERE vec_id < $qcap)
-       |  WHERE rn <= 2),
-       |rlut AS (
-       |  SELECT q.qid, q.cell, CAST(rm.m AS INTEGER) AS m, s.sid,
-       |    list_sum([(q.qr[rm.m*$PqSub+i] - s.se[rm.m*$PqSub+i])
-       |              * (q.qr[rm.m*$PqSub+i] - s.se[rm.m*$PqSub+i])
-       |              for i in range(1, $PqSub + 1)]) AS dist
-       |  FROM (
-       |    SELECT p.qid, p.cell,
-       |      [CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)
-       |       for i in range(1, len(v.embedding)+1)] AS qr
-       |    FROM qprobes_r p JOIN e v ON v.vec_id = p.qid
-       |    JOIN seeds c ON c.sid = p.cell) q,
-       |    range(0, $PqM) rm(m) CROSS JOIN rseeds s),
-       |cand_r AS (
-       |  SELECT p.qid, p.cell, a.vec_id
-       |  FROM qprobes_r p JOIN assign a ON a.cell = p.cell
-       |  WHERE a.vec_id <> p.qid),
-       |adc_r AS (
-       |  SELECT c.qid, c.vec_id,
-       |    list_sum(list(l.dist ORDER BY l.m)) AS adc_dist
-       |  FROM cand_r c
-       |  JOIN rcodes k ON k.vec_id = c.vec_id
-       |  JOIN rlut l ON l.qid = c.qid AND l.cell = c.cell AND l.m = k.m AND l.sid = k.sid
-       |  GROUP BY c.qid, c.vec_id)""".stripMargin
+       |""".stripMargin + ivfCandSql(Some(qcap)) + ",\n" +
+      s"""rlut AS (
+         |  SELECT q.qid, q.cell, CAST(rm.m AS INTEGER) AS m, s.sid,
+         |    list_sum([(q.qr[rm.m*$PqSub+i] - s.se[rm.m*$PqSub+i])
+         |              * (q.qr[rm.m*$PqSub+i] - s.se[rm.m*$PqSub+i])
+         |              for i in range(1, $PqSub + 1)]) AS dist
+         |  FROM (
+         |    SELECT p.qid, p.cell,
+         |      [CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)
+         |       for i in range(1, len(v.embedding)+1)] AS qr
+         |    FROM probes p JOIN e v ON v.vec_id = p.qid
+         |    JOIN seeds c ON c.sid = p.cell) q,
+         |    range(0, $PqM) rm(m) CROSS JOIN rseeds s),
+         |adc_r AS (
+         |  SELECT c.qid, c.nid,
+         |    list_sum(list(l.dist ORDER BY l.m)) AS adc_dist
+         |  FROM cand c
+         |  JOIN rcodes k ON k.vec_id = c.nid
+         |  JOIN rlut l ON l.qid = c.qid AND l.cell = c.cell AND l.m = k.m AND l.sid = k.sid
+         |  GROUP BY c.qid, c.nid)""".stripMargin
 
-  /** The shared recall-tail SQL (exact squared-L2 ground truth + the
-    * per-query recall aggregation), composed by concatenation after each
-    * gauge's own `approx` CTE — the DuckDB twin of [[recallVsExactL2]],
-    * factored for the same single-discipline reason. Callers must have
-    * the `e` CTE in scope and end their CTE list with a trailing comma. */
-  private def recallTailSql: String =
+  /** `exact(qid, nid, …)` — the exact top-[[TopK]] ground truth of the
+    * first [[RecallQueries]] queries over the whole corpus, by cosine
+    * (descending) or squared L2 (ascending), nid tie-break: the SQL twin of
+    * [[computeRecallGtCos]] / [[computeRecallGt]]. Needs `e` in scope. */
+  private def exactSql(cosineGt: Boolean): String = {
+    val (score, order) = if (cosineGt) (cosineSql, "score DESC, nid") else (l2Sql, "score, nid")
     s"""ex_cands AS (
-       |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-       |    x.nsq - CAST(2.0 AS DOUBLE) * ${dotSql("q", "x")} + q.nsq AS dist
+       |  SELECT q.vec_id AS qid, x.vec_id AS nid, $score AS score
        |  FROM e q CROSS JOIN e x
        |  WHERE q.vec_id < $RecallQueries AND x.vec_id <> q.vec_id),
-       |exact AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, nid) AS rank
-       |    FROM ex_cands)
-       |  WHERE rank <= $TopK)
-       |SELECT g.qid, COUNT(a.nid) AS n_hits,
-       |  CAST(COUNT(a.nid) AS DOUBLE) / $TopK AS recall
-       |FROM exact g
-       |LEFT JOIN approx a ON a.qid = g.qid AND a.nid = g.nid
-       |GROUP BY g.qid
-       |ORDER BY g.qid""".stripMargin
+       |""".stripMargin + topSql("exact", "ex_cands", order)
+  }
+
+  /** The shared recall tail — the ground truth of [[exactSql]] + the
+    * per-query recall of the caller's `approx(qid, nid)` CTE: the DuckDB
+    * twin of [[recallAt]]. Callers have the `e` CTE in scope and end
+    * their CTE list with a trailing comma. */
+  private def recallTailSql(cosineGt: Boolean): String =
+    exactSql(cosineGt) + "\n" +
+      s"""SELECT g.qid, COUNT(a.nid) AS n_hits,
+         |  CAST(COUNT(a.nid) AS DOUBLE) / $TopK AS recall
+         |FROM exact g
+         |LEFT JOIN approx a ON a.qid = g.qid AND a.nid = g.nid
+         |GROUP BY g.qid
+         |ORDER BY g.qid""".stripMargin
 
   /** Twin-aware recall tail (DuckDB) — the SQL twin of
-    * [[recallVsExactL2Classes]]: identical exact ground truth, then both
-    * sides map nid → equivalence class (min vec_id over identical
-    * embeddings) and recall counts distinct matched classes. Same
-    * composition contract as [[recallTailSql]]: the caller has `e` in
-    * scope and ends its CTE list with a trailing comma. */
+    * [[recallClassesAt]]: the exact L2 ground truth, then both sides map
+    * nid → equivalence class (min vec_id over identical embeddings) and
+    * recall counts distinct matched classes. Same composition contract as
+    * [[recallTailSql]]. */
   private def recallClassTailSql: String =
-    s"""cls AS MATERIALIZED (
-       |  SELECT vec_id AS nid, MIN(vec_id) OVER (PARTITION BY embedding) AS cls
-       |  FROM embeddings),
-       |ex_cands AS (
-       |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-       |    x.nsq - CAST(2.0 AS DOUBLE) * ${dotSql("q", "x")} + q.nsq AS dist
-       |  FROM e q CROSS JOIN e x
-       |  WHERE q.vec_id < $RecallQueries AND x.vec_id <> q.vec_id),
-       |exact AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, nid) AS rank
-       |    FROM ex_cands)
-       |  WHERE rank <= $TopK),
-       |gex AS (
-       |  SELECT DISTINCT g.qid, c.cls FROM exact g JOIN cls c ON c.nid = g.nid),
-       |gap AS (
-       |  SELECT DISTINCT a.qid, c.cls FROM approx a JOIN cls c ON c.nid = a.nid)
-       |SELECT g.qid, COUNT(*) AS n_classes, COUNT(p.cls) AS n_hits,
-       |  CAST(COUNT(p.cls) AS DOUBLE) / COUNT(*) AS recall
-       |FROM gex g
-       |LEFT JOIN gap p ON p.qid = g.qid AND p.cls = g.cls
-       |GROUP BY g.qid
-       |ORDER BY g.qid""".stripMargin
+    """cls AS MATERIALIZED (
+      |  SELECT vec_id AS nid, MIN(vec_id) OVER (PARTITION BY embedding) AS cls
+      |  FROM embeddings),
+      |""".stripMargin + exactSql(cosineGt = false) + ",\n" +
+      """gex AS (
+        |  SELECT DISTINCT g.qid, c.cls FROM exact g JOIN cls c ON c.nid = g.nid),
+        |gap AS (
+        |  SELECT DISTINCT a.qid, c.cls FROM approx a JOIN cls c ON c.nid = a.nid)
+        |SELECT g.qid, COUNT(*) AS n_classes, COUNT(p.cls) AS n_hits,
+        |  CAST(COUNT(p.cls) AS DOUBLE) / COUNT(*) AS recall
+        |FROM gex g
+        |LEFT JOIN gap p ON p.qid = g.qid AND p.cls = g.cls
+        |GROUP BY g.qid
+        |ORDER BY g.qid""".stripMargin
+
+  /** An ADC recall gauge: the [[ivfCtes]] chain, an ADC `chain` ending in
+    * relation `adc`, its top-[[TopK]] as `approx`, then the scoring `tail`. */
+  private def adcGaugeSql(chain: String, adc: String, tail: String): String =
+    s"WITH $ivfCtes,\n" + chain + ",\n" + topSql("approx", adc, "adc_dist, nid") + ",\n" + tail
+
+  /** IVF cosine top-k over the first `qcap` queries (or all), as
+    * (qid, nid, cosine, rank). */
+  private def ivfTopSql(qcap: Option[Int], k: Int): String =
+    s"WITH $ivfCtes,\n" + ivfSearchSql(qcap) + ",\n" +
+      topSql("top", "cands", "cosine DESC, nid", k.toString) + "\n" +
+      "SELECT qid, nid, cosine, rank FROM top\nORDER BY qid, rank"
+
+  /** `ok`/`bko`: the capped LSH postings — the SQL twin of [[lshCapped]]. */
+  private val lshCappedSql: String =
+    s"""ok AS (SELECT bucket FROM bk GROUP BY 1 HAVING COUNT(*) <= $LshMaxBucket),
+       |bko AS (SELECT bk.* FROM bk JOIN ok USING (bucket))""".stripMargin
+
+  /** [[lshCappedSql]] plus `lsh(qid, nid, cosine, rank)`: the own-bucket
+    * cosine top-[[TopK]] of the first `qcap` vectors (or all) — the SQL
+    * twin of [[lshTopK]]. */
+  private def lshTopSql(qcap: Option[Int]): String =
+    lshCappedSql + ",\n" +
+      s"""lsh_c AS (
+         |  SELECT bq.vec_id AS qid, bx.vec_id AS nid, $cosineSql AS cosine
+         |  FROM bko bq
+         |  JOIN e q ON q.vec_id = bq.vec_id
+         |  JOIN bko bx ON bx.bucket = bq.bucket AND bx.vec_id <> bq.vec_id
+         |  JOIN e x ON x.vec_id = bx.vec_id""".stripMargin +
+      qcap.fold("")(n => s"\n  WHERE bq.vec_id < $n") + "),\n" +
+      topSql("lsh", "lsh_c", "cosine DESC, nid")
+
+  /** `probes(qid, pbucket, lvl)` for the vectors matching `where`: lvl 0
+    * the own bucket, lvl 1 the [[Hyperplanes]] one-bit flips — the SQL
+    * twin of [[lshProbes]] and of [[lshAdmitted]]'s probe expansion. */
+  private def lshProbesSql(where: String): String =
+    s"""probes AS (
+       |  SELECT vec_id AS qid, bucket AS pbucket, 0 AS lvl
+       |  FROM bk WHERE $where
+       |  UNION ALL
+       |  SELECT vec_id AS qid,
+       |    substr(bucket, 1, CAST(p AS INTEGER)) ||
+       |      (CASE WHEN substr(bucket, CAST(p AS INTEGER) + 1, 1) = '1' THEN '0' ELSE '1' END) ||
+       |      substr(bucket, CAST(p AS INTEGER) + 2) AS pbucket,
+       |    1 AS lvl
+       |  FROM bk CROSS JOIN (SELECT unnest(range(0, $Hyperplanes)) AS p) t
+       |  WHERE $where)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "embed_kmeans" ->
@@ -1668,32 +1609,16 @@ object Similarity {
          |GROUP BY label
          |ORDER BY label""".stripMargin,
     "sim_knn_acc" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists)
-           |  WHERE rn <= 2),
-           |cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id),
-           |top1 AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM cands)
-           |  WHERE rank = 1)
-           |SELECT ql.label AS q_label, COUNT(*) AS n_queries,
-           |  COUNT(CASE WHEN ql.label = nl.label THEN 1 END) AS n_agree,
-           |  CAST(COUNT(CASE WHEN ql.label = nl.label THEN 1 END) AS DOUBLE) / COUNT(*) AS knn_acc
-           |FROM top1 t
-           |JOIN embeddings ql ON ql.vec_id = t.qid
-           |JOIN embeddings nl ON nl.vec_id = t.nid
-           |GROUP BY ql.label
-           |ORDER BY q_label""".stripMargin),
+      (s"WITH $ivfCtes,\n" + ivfSearchSql(None) + ",\n" +
+        topSql("top1", "cands", "cosine DESC, nid", "1") + "\n" +
+        """SELECT ql.label AS q_label, COUNT(*) AS n_queries,
+          |  COUNT(CASE WHEN ql.label = nl.label THEN 1 END) AS n_agree,
+          |  CAST(COUNT(CASE WHEN ql.label = nl.label THEN 1 END) AS DOUBLE) / COUNT(*) AS knn_acc
+          |FROM top1 t
+          |JOIN embeddings ql ON ql.vec_id = t.qid
+          |JOIN embeddings nl ON nl.vec_id = t.nid
+          |GROUP BY ql.label
+          |ORDER BY q_label""".stripMargin),
     "sim_ivf_balance" ->
       (s"WITH $ivfCtes,\n" +
         """sizes AS (
@@ -1705,82 +1630,24 @@ object Similarity {
       (s"WITH $ivfCtes\n" +
         """SELECT cell, COUNT(*) AS n_vectors, MIN(vec_id) AS min_vec_id
           |FROM assign GROUP BY cell ORDER BY cell""".stripMargin),
-    "sim_ivf_probe" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists WHERE vec_id < 20)
-           |  WHERE rn <= 2),
-           |cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id)
-           |SELECT qid, nid, cosine, rank FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |  FROM cands)
-           |WHERE rank <= 3
-           |ORDER BY qid, rank""".stripMargin),
-    "sim_cosine_topk" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists)
-           |  WHERE rn <= 2),
-           |cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id)
-           |SELECT qid, nid, cosine, rank FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |  FROM cands)
-           |WHERE rank <= $TopK
-           |ORDER BY qid, rank""".stripMargin),
+    "sim_ivf_probe" -> ivfTopSql(Some(20), 3),
+    "sim_cosine_topk" -> ivfTopSql(None, TopK),
     "sim_filtered_topk" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists)
-           |  WHERE rn <= 2),
-           |lab AS (SELECT vec_id, label FROM embeddings),
-           |cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid, lx.label AS label,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN lab lq ON lq.vec_id = q.vec_id
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id
-           |  JOIN lab lx ON lx.vec_id = x.vec_id AND lx.label = lq.label
-           |  WHERE q.vec_id < 50)
-           |SELECT qid, nid, label, cosine, CAST(rank AS BIGINT) AS rank FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |  FROM cands)
-           |WHERE rank <= $TopK
-           |ORDER BY qid, rank""".stripMargin),
+      (s"WITH $ivfCtes,\n" + ivfSearchSql(Some(50)) + ",\n" +
+        """lab AS (SELECT vec_id, label FROM embeddings),
+          |fcands AS (
+          |  SELECT c.qid, c.nid, lx.label, c.cosine
+          |  FROM cands c
+          |  JOIN lab lq ON lq.vec_id = c.qid
+          |  JOIN lab lx ON lx.vec_id = c.nid AND lx.label = lq.label),
+          |""".stripMargin + topSql("top", "fcands", "cosine DESC, nid") + "\n" +
+        "SELECT qid, nid, label, cosine, rank FROM top\nORDER BY qid, rank"),
     "sim_range_search" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists)
-           |  WHERE rn <= 2)
-           |SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |  CAST(FLOOR(${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) * 1e6) AS BIGINT) AS cosine_ppm
-           |FROM e q
-           |JOIN probes p ON p.qid = q.vec_id
-           |JOIN assign a ON a.cell = p.cell
-           |JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id
-           |WHERE q.vec_id < 50
-           |  AND CAST(FLOOR(${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) * 1e6) AS BIGINT) >= ${(RangeTau * 1e6).toLong}
+      (s"WITH $ivfCtes,\n" + ivfSearchSql(Some(50)) + ",\n" +
+        s"""ppm AS (
+           |  SELECT qid, nid, CAST(FLOOR(cosine * 1e6) AS BIGINT) AS cosine_ppm FROM cands)
+           |SELECT qid, nid, cosine_ppm FROM ppm
+           |WHERE cosine_ppm >= ${(RangeTau * 1e6).toLong}
            |ORDER BY qid, nid""".stripMargin),
     "sim_sq_int8" ->
       """WITH dims AS (
@@ -1805,130 +1672,41 @@ object Similarity {
         |GROUP BY vec_id
         |ORDER BY vec_id""".stripMargin,
     "sim_pq_adc" ->
-      (s"WITH $ivfCtes,\n" + pqAdcCtes(20) + "\n" +
-        """SELECT qid, vec_id AS nid, adc_dist, rank FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |  FROM adc)
-           |WHERE rank <= 3
-           |ORDER BY qid, rank""".stripMargin),
+      (s"WITH $ivfCtes,\n" + pqAdcCtes(20) + ",\n" +
+        topSql("top", "adc", "adc_dist, nid", "3") + "\n" +
+        "SELECT qid, nid, adc_dist, rank FROM top\nORDER BY qid, rank"),
     "sim_recall_pq" ->
-      (s"WITH $ivfCtes,\n" + pqAdcCtes(RecallQueries) + ",\n" +
-        s"""approx AS (
-           |  SELECT qid, vec_id AS nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |    FROM adc)
-           |  WHERE rank <= $TopK),
-           |""".stripMargin + recallTailSql),
+      adcGaugeSql(pqAdcCtes(RecallQueries), "adc", recallTailSql(cosineGt = false)),
     "sim_recall_pqr" ->
-      (s"WITH $ivfCtes,\n" + pqrCtes(RecallQueries) + ",\n" +
-        s"""approx AS (
-           |  SELECT qid, vec_id AS nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |    FROM adc_r)
-           |  WHERE rank <= $TopK),
-           |""".stripMargin + recallTailSql),
+      adcGaugeSql(pqrCtes(RecallQueries), "adc_r", recallTailSql(cosineGt = false)),
     "sim_recall_pq_eq" ->
-      (s"WITH $ivfCtes,\n" + pqAdcCtes(RecallQueries) + ",\n" +
-        s"""approx AS (
-           |  SELECT qid, vec_id AS nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |    FROM adc)
-           |  WHERE rank <= $TopK),
-           |""".stripMargin + recallClassTailSql),
+      adcGaugeSql(pqAdcCtes(RecallQueries), "adc", recallClassTailSql),
     "sim_recall_pqr_eq" ->
-      (s"WITH $ivfCtes,\n" + pqrCtes(RecallQueries) + ",\n" +
-        s"""approx AS (
-           |  SELECT qid, vec_id AS nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |    FROM adc_r)
-           |  WHERE rank <= $TopK),
-           |""".stripMargin + recallClassTailSql),
+      adcGaugeSql(pqrCtes(RecallQueries), "adc_r", recallClassTailSql),
     "sim_recall_refined" ->
       (s"WITH $ivfCtes,\n" + pqAdcCtes(RecallQueries) + ",\n" +
-        s"""short AS (
-           |  SELECT qid, vec_id AS nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rank
-           |    FROM adc)
-           |  WHERE rank <= (SELECT stride FROM ivfp)),
-           |rr AS (
-           |  SELECT s.qid, s.nid,
-           |    x.nsq - CAST(2.0 AS DOUBLE) * ${dotSql("q", "x")} + q.nsq AS dist
+        topSql("short", "adc", "adc_dist, nid", "(SELECT stride FROM ivfp)") + ",\n" +
+        s"""rr AS (
+           |  SELECT s.qid, s.nid, $l2Sql AS dist
            |  FROM short s
            |  JOIN e q ON q.vec_id = s.qid
            |  JOIN e x ON x.vec_id = s.nid),
-           |approx AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, nid) AS rank
-           |    FROM rr)
-           |  WHERE rank <= $TopK),
-           |""".stripMargin + recallTailSql),
+           |""".stripMargin + topSql("approx", "rr", "dist, nid") + ",\n" +
+        recallTailSql(cosineGt = false)),
     "sim_recall" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists WHERE vec_id < $RecallQueries)
-           |  WHERE rn <= 2),
-           |apx_cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id),
-           |approx AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM apx_cands)
-           |  WHERE rank <= $TopK),
-           |ex_cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q CROSS JOIN e x
-           |  WHERE q.vec_id < $RecallQueries AND x.vec_id <> q.vec_id),
-           |exact AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM ex_cands)
-           |  WHERE rank <= $TopK)
-           |SELECT g.qid, COUNT(a.nid) AS n_hits,
-           |  CAST(COUNT(a.nid) AS DOUBLE) / $TopK AS recall
-           |FROM exact g
-           |LEFT JOIN approx a ON a.qid = g.qid AND a.nid = g.nid
-           |GROUP BY g.qid
-           |ORDER BY g.qid""".stripMargin),
+      (s"WITH $ivfCtes,\n" + ivfSearchSql(Some(RecallQueries)) + ",\n" +
+        topSql("approx", "cands", "cosine DESC, nid") + ",\n" +
+        recallTailSql(cosineGt = true)),
     "sim_probe_sweep" ->
-      (s"WITH $ivfCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell, rn FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists WHERE vec_id < $RecallQueries)
-           |  WHERE rn <= ${ProbeSweepLevels.max}),
-           |levels AS (SELECT unnest([${ProbeSweepLevels.mkString(",")}]) AS n_probes),
+      (s"WITH $ivfCtes,\n" + ivfSearchSql(Some(RecallQueries), ProbeSweepLevels.max) + ",\n" +
+        s"""levels AS (SELECT unnest([${ProbeSweepLevels.mkString(",")}]) AS n_probes),
            |apx_cands AS (
-           |  SELECT l.n_probes, q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN levels l ON p.rn <= l.n_probes
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id),
-           |approx AS (
-           |  SELECT n_probes, qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY n_probes, qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM apx_cands)
-           |  WHERE rank <= $TopK),
-           |ex_cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q CROSS JOIN e x
-           |  WHERE q.vec_id < $RecallQueries AND x.vec_id <> q.vec_id),
-           |exact AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM ex_cands)
-           |  WHERE rank <= $TopK),
-           |hits AS (
+           |  SELECT l.n_probes, c.qid, c.nid, c.cosine
+           |  FROM cands c JOIN levels l ON c.rn <= l.n_probes),
+           |""".stripMargin +
+        topSql("approx", "apx_cands", "cosine DESC, nid", part = "n_probes, qid") + ",\n" +
+        exactSql(cosineGt = true) + ",\n" +
+        s"""hits AS (
            |  SELECT a.n_probes, COUNT(*) AS n_hits
            |  FROM exact g JOIN approx a ON a.qid = g.qid AND a.nid = g.nid
            |  GROUP BY a.n_probes)
@@ -1943,52 +1721,18 @@ object Similarity {
            |GROUP BY 1
            |ORDER BY bucket""".stripMargin),
     "sim_lsh_topk" ->
-      (s"WITH $lshCtes,\n" +
-        s"""ok AS (SELECT bucket FROM bk GROUP BY 1 HAVING COUNT(*) <= $LshMaxBucket),
-           |bko AS (SELECT bk.* FROM bk JOIN ok USING (bucket)),
-           |cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM bko bq
-           |  JOIN e q ON q.vec_id = bq.vec_id
-           |  JOIN bko bx ON bx.bucket = bq.bucket AND bx.vec_id <> bq.vec_id
-           |  JOIN e x ON x.vec_id = bx.vec_id)
-           |SELECT qid, nid, cosine, CAST(rank AS BIGINT) AS rank FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |  FROM cands)
-           |WHERE rank <= $TopK
-           |ORDER BY qid, rank""".stripMargin),
+      (s"WITH $lshCtes,\n" + lshTopSql(None) + "\n" +
+        "SELECT qid, nid, cosine, rank FROM lsh\nORDER BY qid, rank"),
     "sim_lsh_recall" ->
-      (s"WITH $lshCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, bucket AS pbucket, 0 AS lvl
-           |  FROM bk WHERE vec_id < $RecallQueries
-           |  UNION ALL
-           |  SELECT vec_id AS qid,
-           |    substr(bucket, 1, CAST(p AS INTEGER)) ||
-           |      (CASE WHEN substr(bucket, CAST(p AS INTEGER) + 1, 1) = '1' THEN '0' ELSE '1' END) ||
-           |      substr(bucket, CAST(p AS INTEGER) + 2) AS pbucket,
-           |    1 AS lvl
-           |  FROM bk CROSS JOIN (SELECT unnest(range(0, $Hyperplanes)) AS p) t
-           |  WHERE vec_id < $RecallQueries),
-           |ok AS (SELECT bucket FROM bk GROUP BY 1 HAVING COUNT(*) <= $LshMaxBucket),
-           |bko AS (SELECT bk.* FROM bk JOIN ok USING (bucket)),
-           |cand AS (
-           |  SELECT p.qid, n.vec_id AS nid, MIN(p.lvl) AS lvl
-           |  FROM probes p
-           |  JOIN bko n ON n.bucket = p.pbucket AND n.vec_id <> p.qid
-           |  GROUP BY 1, 2),
-           |ex_cands AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q CROSS JOIN e x
-           |  WHERE q.vec_id < $RecallQueries AND x.vec_id <> q.vec_id),
-           |exact AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM ex_cands)
-           |  WHERE rank <= $TopK)
-           |SELECT g.qid,
+      (s"WITH $lshCtes,\n" + lshProbesSql(s"vec_id < $RecallQueries") + ",\n" +
+        lshCappedSql + ",\n" +
+        """cand AS (
+          |  SELECT p.qid, n.vec_id AS nid, MIN(p.lvl) AS lvl
+          |  FROM probes p
+          |  JOIN bko n ON n.bucket = p.pbucket AND n.vec_id <> p.qid
+          |  GROUP BY 1, 2),
+          |""".stripMargin + exactSql(cosineGt = true) + "\n" +
+        s"""SELECT g.qid,
            |  COUNT(CASE WHEN c.lvl = 0 THEN 1 END) AS n_hits_own,
            |  CAST(COUNT(CASE WHEN c.lvl = 0 THEN 1 END) AS DOUBLE) / $TopK AS recall_own,
            |  COUNT(c.lvl) AS n_hits_mp,
@@ -2005,23 +1749,14 @@ object Similarity {
            |      row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rn
            |    FROM bk WHERE vec_id % 10 <> 0)
            |  WHERE rn <= $LshMaxBucket),
-           |probes AS (
-           |  SELECT vec_id AS qid, bucket AS pbucket
-           |  FROM bk WHERE vec_id % 10 = 0
-           |  UNION ALL
-           |  SELECT vec_id AS qid,
-           |    substr(bucket, 1, CAST(p AS INTEGER)) ||
-           |      (CASE WHEN substr(bucket, CAST(p AS INTEGER) + 1, 1) = '1' THEN '0' ELSE '1' END) ||
-           |      substr(bucket, CAST(p AS INTEGER) + 2) AS pbucket
-           |  FROM bk CROSS JOIN (SELECT unnest(range(0, $Hyperplanes)) AS p) t
-           |  WHERE vec_id % 10 = 0),
-           |dups AS (
+           |""".stripMargin + lshProbesSql("vec_id % 10 = 0") + ",\n" +
+        s"""dups AS (
            |  SELECT p.qid AS vec_id, MIN(o.old_id) AS dup_of
            |  FROM probes p
            |  JOIN old_idx o ON o.pbucket = p.pbucket
            |  JOIN e q ON q.vec_id = p.qid
            |  JOIN e x ON x.vec_id = o.old_id
-           |  WHERE CAST(floor(${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) * 1e6) AS BIGINT)
+           |  WHERE CAST(floor($cosineSql * 1e6) AS BIGINT)
            |    >= ${(IncrementalSimTau * 1e6).toLong}
            |  GROUP BY 1)
            |SELECT n.vec_id, d.dup_of, d.dup_of IS NULL AS admitted
@@ -2029,40 +1764,10 @@ object Similarity {
            |LEFT JOIN dups d ON d.vec_id = n.vec_id
            |ORDER BY n.vec_id""".stripMargin),
     "sim_index_agreement" ->
-      (s"WITH $ivfCtes,\n$lshTailCtes,\n" +
-        s"""probes AS (
-           |  SELECT vec_id AS qid, sid AS cell FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, sid) AS rn
-           |    FROM dists WHERE vec_id < $RecallQueries)
-           |  WHERE rn <= 2),
-           |ivf_c AS (
-           |  SELECT q.vec_id AS qid, x.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM e q
-           |  JOIN probes p ON p.qid = q.vec_id
-           |  JOIN assign a ON a.cell = p.cell
-           |  JOIN e x ON x.vec_id = a.vec_id AND x.vec_id <> q.vec_id),
-           |ivf AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM ivf_c)
-           |  WHERE rank <= $TopK),
-           |ok AS (SELECT bucket FROM bk GROUP BY 1 HAVING COUNT(*) <= $LshMaxBucket),
-           |bko AS (SELECT bk.* FROM bk JOIN ok USING (bucket)),
-           |lsh_c AS (
-           |  SELECT bq.vec_id AS qid, bx.vec_id AS nid,
-           |    ${dotSql("q", "x")} / sqrt(q.nsq * x.nsq) AS cosine
-           |  FROM bko bq
-           |  JOIN e q ON q.vec_id = bq.vec_id
-           |  JOIN bko bx ON bx.bucket = bq.bucket AND bx.vec_id <> bq.vec_id
-           |  JOIN e x ON x.vec_id = bx.vec_id
-           |  WHERE bq.vec_id < $RecallQueries),
-           |lsh AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-           |    FROM lsh_c)
-           |  WHERE rank <= $TopK)
-           |SELECT COALESCE(i.qid, l.qid) AS qid,
+      (s"WITH $ivfCtes,\n$lshTailCtes,\n" + ivfSearchSql(Some(RecallQueries)) + ",\n" +
+        topSql("ivf", "cands", "cosine DESC, nid") + ",\n" +
+        lshTopSql(Some(RecallQueries)) + "\n" +
+        s"""SELECT COALESCE(i.qid, l.qid) AS qid,
            |  COUNT(i.nid) AS n_ivf,
            |  COUNT(l.nid) AS n_lsh,
            |  COUNT(CASE WHEN i.nid IS NOT NULL AND l.nid IS NOT NULL THEN 1 END) AS n_common,

@@ -324,6 +324,16 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(nw <= 1, s"windowed funnel has $nw hash exchanges (max 1):\n$p")
   }
 
+  test("binary_phash reads the checkpointed pair memo: no scan, no hash exchange") {
+    // the phash pair graph is memoized for binary_phash, the label build
+    // and the warm ledger; without its localCheckpoint every reader
+    // re-ran the band window and the bucket aggregation from the scan
+    val p = plan("binary_phash")
+    assert(!p.contains("Scan parquet"), s"binary_phash re-scans documents:\n$p")
+    val n = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(n == 0, s"binary_phash has $n hash exchanges (the pair build re-runs):\n$p")
+  }
+
   test("simhash dedup: no cartesian, bounded exchanges, integer banding") {
     val p = plan("dedup_simhash")
     assert(!p.contains("CartesianProduct"), s"dedup_simhash has a cartesian product")
@@ -754,21 +764,34 @@ class PlanShapeSpec extends AnyFunSuite {
       // text fingerprints
       "text_fingerprint" -> 1, "text_winnowing" -> 1,
       "text_simhash_bit_balance" -> 2,
-      // round-8 vector/graph/text additions at their audited counts
-      // sim_lsh_recall: +1 exchange in round 9 for the ok-bucket cap agg
-      // (the gate now candidates only from buckets the capped search path
-      // serves, same semi-join discipline as sim_lsh_topk)
-      "sim_lsh_topk" -> 5, "sim_lsh_recall" -> 5, "sim_incremental" -> 3,
-      "sim_index_agreement" -> 11, "graph_cc" -> 0, "text_rake" -> 1,
-      // similarity / quantization sweeps (multi-branch by design — the
-      // budget guards against further growth, not a target)
-      "sim_pq_adc" -> 6, "sim_probe_sweep" -> 13, "sim_recall_pq" -> 10,
-      "embed_kmeans" -> 2, "join_bloom_semi" -> 2, "graph_pagerank" -> 7)
+      "graph_cc" -> 0, "text_rake" -> 1,
+      "join_bloom_semi" -> 2, "graph_pagerank" -> 7,
+      // every sim_* / embed_* query, pinned at the count this session
+      // plans (the similarity kernels are shared, so a shuffle added to
+      // one kernel shows up in every query that instantiates it)
+      // IVF probe search
+      "sim_cosine_topk" -> 3, "sim_filtered_topk" -> 3, "sim_range_search" -> 2,
+      "sim_ivf_probe" -> 3, "sim_knn_acc" -> 4, "sim_recall" -> 6,
+      "sim_probe_sweep" -> 12,
+      // capped LSH search, incremental admission, IVF-vs-LSH agreement;
+      // sim_lsh_recall carries the ok-bucket cap agg (round 9)
+      "sim_lsh_topk" -> 5, "sim_lsh_recall" -> 4, "sim_incremental" -> 3,
+      "sim_index_agreement" -> 11, "sim_lsh_buckets" -> 1,
+      // ADC ranking and recall gauges
+      "sim_pq_adc" -> 4, "sim_recall_pq" -> 7, "sim_recall_pq_eq" -> 7,
+      "sim_recall_pqr" -> 8, "sim_recall_pqr_eq" -> 8, "sim_recall_refined" -> 7,
+      // index inventories and per-dimension / per-label statistics
+      "sim_ivf_cells" -> 1, "sim_ivf_balance" -> 2, "sim_sq_int8" -> 2,
+      "sim_dim_variance" -> 1, "sim_centroid_shift" -> 2,
+      "embed_kmeans" -> 2, "embed_label_centroids" -> 1, "embed_norm_stats" -> 1)
     val over = budgets.flatMap { case (q, max) =>
       val n = "Exchange hashpartitioning".r.findAllIn(plan(q)).size
       if (n > max) Some(s"$q: $n exchanges (budget $max)") else None
     }
     assert(over.isEmpty, s"exchange budgets exceeded:\n  ${over.mkString("\n  ")}")
+    val unpinned = SparkEntry.queries.keys.toSeq.sorted
+      .filter(q => (q.startsWith("sim_") || q.startsWith("embed_")) && !budgets.exists(_._1 == q))
+    assert(unpinned.isEmpty, s"similarity queries without an exchange budget: $unpinned")
   }
 
   test("whole-inventory sweep: no cartesian, no partitionless Window in any plan") {
