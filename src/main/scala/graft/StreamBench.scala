@@ -45,9 +45,8 @@ object CountingTransport {
   * count), and `rps_wall` divides by last-batch-end minus first-batch-start
   * (includes trigger scheduling gaps — what an operator actually observes).
   *
-  * Exactly-once and state bounds are proven elsewhere (TweetStreamSpec,
-  * ScaleOpsSpec); this main measures only throughput, on the same 1M-record
-  * corpus scale as the state-bound leg.
+  * Exactly-once is proven elsewhere (TweetStreamSpec, ReplaySourceSpec);
+  * this main measures only throughput.
   *
   * Usage: sbt "runMain graft.StreamBench [nRecords]"  (default 1,000,000)
   */

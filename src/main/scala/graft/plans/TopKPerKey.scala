@@ -26,10 +26,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * kept set — and therefore the oracle hash — is deterministic at any
   * partitioning and arrival order.
   *
-  * Planned via `spark.experimental.extraStrategies` (attached idempotently
-  * by [[TopKPerKey.topK]] so the driver-contract sessions need no config)
-  * and via `GraftExtensions.injectPlannerStrategy` for `spark.sql.
-  * extensions` users.
+  * Planned via `spark.experimental.extraStrategies`, attached idempotently
+  * by [[TopKPerKey.topK]], so sessions need no config.
   */
 case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
                       child: LogicalPlan) extends UnaryNode {

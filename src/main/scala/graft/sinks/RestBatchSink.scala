@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.DataFrame
 
 /** Batched REST sink — the Spark re-expression of the reference's Splunk KV
@@ -12,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * streaming path posts one record per IOC (firehose.py:131-133) — we batch
   * there too, deliberately (SURVEY.md §2.1 S9).
   *
-  * Transport is pluggable: tests use [[FileTransport]]; production supplies
+  * Transport is pluggable: tests use a file transport; production supplies
   * an HTTP client. The sink runs per PARTITION on executors — no data moves
   * to the driver, each task opens one transport, and throughput scales with
   * executor count. Delivery is at-least-once (task retries re-post) —
@@ -21,18 +19,6 @@ import org.apache.spark.sql.DataFrame
   */
 trait Transport extends Serializable {
   def post(endpoint: String, payload: String): Unit
-}
-
-/** Test/dev transport: appends each payload as one line to a per-partition
-  * file under `dir` (concurrent tasks never share a file). */
-final class FileTransport(dir: String) extends Transport {
-  def post(endpoint: String, payload: String): Unit = {
-    val pid = org.apache.spark.TaskContext.getPartitionId()
-    val p = Paths.get(dir, s"part-$pid.jsonl")
-    Files.createDirectories(p.getParent)
-    Files.write(p, (payload + "\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
 }
 
 object RestBatchSink {

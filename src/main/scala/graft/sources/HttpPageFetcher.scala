@@ -8,14 +8,12 @@ import java.time.Duration
 /** The reference's pastebin scrape, `get_iocs`
   * (/root/reference/firehose.py:74-80): GET the page, select
   * `#code_frame2 ol > li > div`, take each item's text. No HTML library
-  * ships on the cluster classpath, so the selection is a scoped regex
-  * parse (see [[PastebinHtml.lines]]) rather than a DOM walk — equivalent
+  * ships on the cluster classpath, so the selection is a scoped text
+  * scan (see [[PastebinHtml.lines]]) rather than a DOM walk — equivalent
   * on the pastebin markup the selector targets.
   */
 object PastebinHtml {
 
-  private val Item = """(?s)<li[^>]*>\s*<div[^>]*>(.*?)</div>""".r
-  private val Tag = "<[^>]+>".r
   private val IdAttr = """id\s*=\s*["']code_frame2["']""".r
   private val OlTag = """(?i)<(/?)ol[\s>]""".r
 
@@ -26,7 +24,9 @@ object PastebinHtml {
     * (nesting-aware, so a sub-list inside an item doesn't truncate the
     * scan). Each `<li><div>…</div>` item's text is emitted with inner tags
     * stripped and basic entities unescaped (BeautifulSoup's `.text`
-    * behavior on this markup). */
+    * behavior on this markup). Linear in the page: the pages are
+    * attacker-controlled, so no step may rescan the rest of the page per
+    * tag. */
   def lines(html: String): Seq[String] = {
     IdAttr.findFirstMatchIn(html) match {
       case None => Seq.empty
@@ -47,11 +47,60 @@ object PastebinHtml {
           }
         }
         if (start < 0) Seq.empty
-        else Item.findAllMatchIn(tail.substring(start, if (stop >= 0) stop else tail.length))
-          .map(m => unescape(Tag.replaceAllIn(m.group(1), "")).trim)
-          .toList
+        else items(tail.substring(start, if (stop >= 0) stop else tail.length))
+          .map(item => unescape(stripTags(item)).trim)
     }
   }
+
+  /** The group of every match of `(?s)<li[^>]*>\s*<div[^>]*>(.*?)</div>`,
+    * leftmost-first and non-overlapping, in one forward scan. A candidate
+    * `<li` whose `>` or `<div` is missing fails like every `<li` before that
+    * `>`, so the scan resumes after it; a missing `>` or `</div>` after the
+    * `<div` means no later `<li` can match either, so the scan stops. */
+  private def items(s: String): List[String] = {
+    val out = List.newBuilder[String]
+    var from = 0
+    while (from >= 0) {
+      val li = s.indexOf("<li", from)
+      val liEnd = if (li < 0) -1 else s.indexOf('>', li + 3)
+      if (liEnd < 0) from = -1
+      else {
+        var div = liEnd + 1
+        while (div < s.length && isSpace(s.charAt(div))) div += 1
+        if (!s.startsWith("<div", div)) from = liEnd + 1
+        else {
+          val divEnd = s.indexOf('>', div + 4)
+          val close = if (divEnd < 0) -1 else s.indexOf("</div>", divEnd + 1)
+          if (close >= 0) out += s.substring(divEnd + 1, close)
+          from = if (close < 0) -1 else close + 6
+        }
+      }
+    }
+    out.result()
+  }
+
+  /** `s` with every match of `<[^>]+>` removed, in one forward scan. A `<`
+    * with no later `>` ends the tags, since no later `<` has one either. */
+  private def stripTags(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var kept = 0
+    var lt = s.indexOf('<')
+    while (lt >= 0) {
+      val gt = s.indexOf('>', lt + 1)
+      if (gt < 0) lt = -1
+      else if (gt == lt + 1) lt = s.indexOf('<', gt) // `<>` is not a tag
+      else {
+        sb.append(s, kept, lt)
+        kept = gt + 1
+        lt = s.indexOf('<', kept)
+      }
+    }
+    sb.append(s, kept, s.length).toString
+  }
+
+  /** `\s` of java.util.regex without UNICODE_CHARACTER_CLASS. */
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   private def unescape(s: String): String = s
     .replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")

@@ -92,40 +92,4 @@ object TweetStream {
         RestBatchSink.write(batch, endpoint, transport, keyed = true)
       }
       .start()
-
-  /** Streaming exact-dedup of IOCs within an event-time watermark — the
-    * streaming twin of Dedup's exact pass (`dropDuplicatesWithinWatermark`
-    * bounds state; unbounded streams cannot keep all keys forever). */
-  def dedupedStream(iocs: DataFrame, watermarkDelay: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    iocs
-      .withColumn("event_time", to_timestamp(col("date_received"), "yyyy-MM-dd"))
-      .withWatermark("event_time", watermarkDelay)
-      .dropDuplicatesWithinWatermark("ioc", "type")
-  }
-
-  /** Streaming NEAR-duplicate suppression: drop tweets whose text SimHash
-    * collides within the watermark horizon — the streaming twin of the
-    * batch `dedup_simhash` pass, for the spam pattern the reference's feed
-    * actually sees (the same IOC text re-tweeted with trivial edits hashes
-    * to the same 60-bit SimHash; `text` equality would miss it).
-    *
-    * The signature is [[graft.functions.TextStats.simhash]] — the per-row
-    * aggregate()-fold formulation, NOT the explode+groupBy fast path: a
-    * stateless Column expression is what a streaming micro-batch can
-    * evaluate without an extra stateful aggregation; the two formulations
-    * are equality-asserted in OperatorsSpec. State is bounded by the
-    * watermark exactly as [[dedupedStream]]; at production rates the key
-    * space is the 60-bit hash, so state size is (near-)unique texts per
-    * horizon, not tweets per horizon. */
-  def nearDedupedStream(tweets: DataFrame, watermarkDelay: String = "1 hour",
-                        timeCol: String = "created_at"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    tweets
-      .withColumn("simhash60",
-        graft.functions.TextStats.simhash(
-          graft.functions.TextStats.tokens(col("text"))))
-      .withWatermark(timeCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("simhash60")
-  }
 }

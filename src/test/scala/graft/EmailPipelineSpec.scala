@@ -64,4 +64,13 @@ class EmailPipelineSpec extends AnyFunSuite {
     val filtered = EmailPipeline(fixture, "2026-08-12", Some("2025-01-01 00:00:00"))
     assert(filtered.count() == 0)
   }
+
+  test("typed Dataset[IocRecord] boundary") {
+    val emails = Seq(("c1", "A", "indicator", "ip 1[.]2[.]3[.]4", ts))
+      .toDF("conversation_id", "sender", "subject", "body", "received_time")
+    val ds: org.apache.spark.sql.Dataset[graft.model.IocRecord] =
+      EmailPipeline.typed(emails, "2026-08-12")
+    val rec = ds.collect().head
+    assert(rec.ioc == "1.2.3.4" && rec.`type` == "ip" && rec.platform == "H-ISAC")
+  }
 }

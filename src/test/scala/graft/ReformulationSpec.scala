@@ -334,4 +334,23 @@ class ReformulationSpec extends AnyFunSuite {
       .filter(col("lo") =!= 1 || col("hi") =!= col("n") || col("nd") =!= col("n"))
     assert(perShard.isEmpty, s"non-contiguous shard positions: ${perShard.collect().mkString}")
   }
+
+  test("full SQL text over registered views equals the DataFrame API (TPC-H q3)") {
+    for (t <- Seq("customer", "orders", "lineitem"))
+      Tables.table(spark, d, t).createOrReplaceTempView(t)
+    val viaSql = spark.sql(
+      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '2000-06-01 00:00:00'
+        |  AND l_shipdate > TIMESTAMP '2000-06-01 00:00:00'
+        |GROUP BY 1, 2, 3
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""".stripMargin).collect().toSeq
+    val viaApi = SparkEntry.queries("q3_topk")(spark, d).collect().toSeq
+    assert(viaSql == viaApi, "SQL text and DataFrame API diverged on q3")
+  }
 }

@@ -184,31 +184,117 @@ class SinksAndSourcesSpec extends AnyFunSuite {
     }
   }
 
+  private val framePage =
+    """<html><body>
+      |<a href="#code_frame2">jump</a><!-- code_frame2 decoy text -->
+      |<div id="other"><ol><li><div>decoy</div></li></ol></div>
+      |<div class="frame" id="code_frame2"><ol class="code">
+      |  <li class="li1"><div class="de1">10.9.9.1</div></li>
+      |  <li><div>bad<span>.host</span>.com</div></li>
+      |  <li><div> a &amp; b &lt;tag&gt; </div></li>
+      |</ol></div>
+      |<ol><li><div>after</div></li></ol>
+      |</body></html>""".stripMargin
+  private val nestedPage =
+    """<div id="code_frame2"><ol>
+      |  <li><div>first</div></li>
+      |  <li><ol><li><div>inner</div></li></ol></li>
+      |  <li><div>last</div></li>
+      |</ol></div>""".stripMargin
+
   test("PastebinHtml: #code_frame2 ol > li > div selection (firehose.py:74-80)") {
-    val html =
-      """<html><body>
-        |<a href="#code_frame2">jump</a><!-- code_frame2 decoy text -->
-        |<div id="other"><ol><li><div>decoy</div></li></ol></div>
-        |<div class="frame" id="code_frame2"><ol class="code">
-        |  <li class="li1"><div class="de1">10.9.9.1</div></li>
-        |  <li><div>bad<span>.host</span>.com</div></li>
-        |  <li><div> a &amp; b &lt;tag&gt; </div></li>
-        |</ol></div>
-        |<ol><li><div>after</div></li></ol>
-        |</body></html>""".stripMargin
     // the href/comment decoys BEFORE the real element must not hijack the
     // scope: selection keys on the id ATTRIBUTE, not any textual occurrence
-    assert(graft.sources.PastebinHtml.lines(html) ==
+    assert(graft.sources.PastebinHtml.lines(framePage) ==
       Seq("10.9.9.1", "bad.host.com", "a & b <tag>"))
     assert(graft.sources.PastebinHtml.lines("<html>no frame</html>") == Seq.empty)
     // a nested sub-list inside the frame must not truncate the outer scan
-    val nested =
-      """<div id="code_frame2"><ol>
-        |  <li><div>first</div></li>
-        |  <li><ol><li><div>inner</div></li></ol></li>
-        |  <li><div>last</div></li>
-        |</ol></div>""".stripMargin
-    assert(graft.sources.PastebinHtml.lines(nested).contains("last"))
+    assert(graft.sources.PastebinHtml.lines(nestedPage).contains("last"))
+  }
+
+  /** `PastebinHtml.lines` as the regex parse it replaced: the reference its
+    * linear scan must equal on every input. `Item` and `Tag` rescan to the
+    * end of the page from every `<li` / `<` that has no close. */
+  private object RegexPastebin {
+    private val IdAttr = """id\s*=\s*["']code_frame2["']""".r
+    private val OlTag = """(?i)<(/?)ol[\s>]""".r
+    private val Item = """(?s)<li[^>]*>\s*<div[^>]*>(.*?)</div>""".r
+    private val Tag = "<[^>]+>".r
+
+    def lines(html: String): Seq[String] = IdAttr.findFirstMatchIn(html) match {
+      case None => Seq.empty
+      case Some(id) =>
+        val tail = html.substring(id.end)
+        var (depth, start, stop) = (0, -1, -1)
+        OlTag.findAllMatchIn(tail).takeWhile(_ => stop < 0).foreach { m =>
+          if (m.group(1).isEmpty) { if (depth == 0) start = m.end; depth += 1 }
+          else if (depth > 0) { depth -= 1; if (depth == 0) stop = m.start }
+        }
+        if (start < 0) Seq.empty
+        else Item.findAllMatchIn(tail.substring(start, if (stop >= 0) stop else tail.length))
+          .map(m => Tag.replaceAllIn(m.group(1), "")
+            .replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
+            .replace("&#39;", "'").replace("&amp;", "&").trim)
+          .toList
+    }
+  }
+
+  test("PastebinHtml: the linear scan equals the regex reference on fixed and random markup") {
+    import graft.sources.PastebinHtml
+    for (html <- Seq(framePage, "<html>no frame</html>", nestedPage))
+      assert(PastebinHtml.lines(html) == RegexPastebin.lines(html), html)
+    val tokens = Array("<li><div>", "<li>\n <div class=\"c\">", "x</div>", "</div></li>",
+      "<li>", "<li class=\"a\">", "<li", "<LI>", "<link>", "<div>",
+      "<div class=\"b\">", "<div", "</div>", "</div", "</li>", "<ol>", "</ol>",
+      "<OL >", "</ol\n", "<", ">", "<>", " ", "\n", "\t", "\u000B", "x", "1.2.3.4",
+      "<span>", "</span>", "&amp;", "&lt;b&gt;", "iv>", "<d", "id=\"code_frame2\"")
+    val rnd = new scala.util.Random(11)
+    val withItems = (1 to 3000).count { _ =>
+      val body = Seq.fill(rnd.nextInt(40))(tokens(rnd.nextInt(tokens.length))).mkString
+      val html = (if (rnd.nextInt(4) == 0) "" else """<div id="code_frame2"><ol>""") + body
+      val expected = RegexPastebin.lines(html)
+      assert(PastebinHtml.lines(html) == expected, html)
+      expected.nonEmpty
+    }
+    // the markup must reach the item path, not only the empty-scope exits
+    assert(withItems >= 300, s"only $withItems of 3000 random pages had items")
+  }
+
+  test("PastebinHtml: linear time on hostile pages (16 to 256 KB, at most 2.5x per doubling)") {
+    import graft.sources.PastebinHtml
+    def page(body: String) = """<div id="code_frame2"><ol>""" + body
+    val shapes = Seq[(String, Int => String)](
+      "unclosed items" -> (n => page("<li><div>x" * (n / 10))),
+      "a run of <" -> (n => page("<li><div>" + "<" * n + "</div>")),
+      "<li with no >" -> (n => page("<li" * (n / 3))))
+    // per page, the best of 5 rounds of at least 10 ms of calls; the pages
+    // take turns within a round, so a slow round (GC, JIT, a descheduled
+    // core) slows every size alike instead of reading as growth
+    def nanosPerCall(pages: Seq[String]): Seq[Double] = {
+      val best = Array.fill(pages.size)(Double.MaxValue)
+      for (_ <- 1 to 5; (html, i) <- pages.zipWithIndex) {
+        val t0 = System.nanoTime()
+        var (calls, elapsed) = (0, 0L)
+        while (elapsed < 10000000L) {
+          PastebinHtml.lines(html); calls += 1; elapsed = System.nanoTime() - t0
+        }
+        best(i) = math.min(best(i), elapsed.toDouble / calls)
+      }
+      best.toSeq
+    }
+    for ((name, shape) <- shapes) {
+      // a rescanning parse already reads about 4x on the first doubling;
+      // failing there spares timing 256 KB pages, minutes each at that rate
+      val Seq(t16, t32) = nanosPerCall(Seq(16, 32).map(kb => shape(kb << 10)))
+      assert(t32 / t16 <= 3.0, f"$name: ${t32 / t16}%.1fx from 16 to 32 KB")
+      // growth per doubling = 2^slope of the least-squares fit of
+      // log2(time) on log2(size) over 16..256 KB
+      val ys = nanosPerCall(Seq(16, 32, 64, 128, 256).map(kb => shape(kb << 10)))
+        .map(t => math.log(t) / math.log(2))
+      val slope = ys.zipWithIndex.map { case (y, x) => (x - 2) * (y - ys.sum / 5) }.sum / 10
+      assert(math.pow(2, slope) <= 2.5,
+        f"$name: ${math.pow(2, slope)}%.2fx per doubling over 16..256 KB")
+    }
   }
 
   test("SplunkConfig: load, key set-difference validation, endpoint build (h-isac.py:11-28)") {
@@ -259,7 +345,7 @@ class SinksAndSourcesSpec extends AnyFunSuite {
     val df = Seq(("1", "10.0.0.1", "ip"), ("2", "deadbeef", "hash"))
       .toDF("id", "ioc", "type")
     def keysOf(dir: String): Seq[String] = {
-      graft.sinks.RestBatchSink.write(df, "kv", new graft.sinks.FileTransport(dir), keyed = true)
+      graft.sinks.RestBatchSink.write(df, "kv", new FileTransport(dir), keyed = true)
       val payloads = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray.toSeq
         .flatMap(p => scala.io.Source.fromFile(p.toString).getLines())
       payloads.flatMap("\"_key\":\"([0-9a-f]{32})\"".r.findAllMatchIn(_).map(_.group(1))).sorted
@@ -295,83 +381,5 @@ class SinksAndSourcesSpec extends AnyFunSuite {
         iocs.schema.map(f => (f.name, f.dataType)), s"$fmt changed the schema")
       assert(back.collect().toSeq == expected, s"$fmt round-trip lost rows")
     }
-  }
-
-  test("batch DSv2 source: filters prune at the READER, columns prune at the schema") {
-    import org.apache.spark.sql.functions._
-    import graft.sources.RangeTableProvider
-    val spark = TestSpark.spark
-    def table = spark.read.format("graft.sources.RangeTableProvider")
-      .option("start", "0").option("end", "100000").option("numPartitions", "4").load()
-
-    // range predicates reach the reader: only the qualifying 10k rows are
-    // ever MATERIALIZED (not generated-then-filtered). collect(), not
-    // count() — a bare count is now itself completely pushed down (see
-    // the aggregate pushdown test) and would generate zero rows here.
-    RangeTableProvider.rowsGenerated.set(0)
-    val n = table.filter(col("id") >= 90000L).select(col("id")).collect().length
-    assert(n == 10000, s"wrong filtered count: $n")
-    assert(RangeTableProvider.rowsGenerated.get() == 10000,
-      s"pushdown failed: reader generated ${RangeTableProvider.rowsGenerated.get()} rows for a 10k slice")
-
-    // equality collapses the range to one row
-    RangeTableProvider.rowsGenerated.set(0)
-    val one = table.filter(col("id") === 42L).collect()
-    assert(one.length == 1 && one(0).getLong(0) == 42L &&
-      one(0).getDouble(1) == RangeTableProvider.valOf(42L))
-    assert(RangeTableProvider.rowsGenerated.get() == 1)
-
-    // non-id residuals stay Spark-side but still compose with the prune
-    RangeTableProvider.rowsGenerated.set(0)
-    val m = table.filter(col("id") < 1000L && col("bucket") === 3L)
-      .select(col("id")).collect().length
-    assert(m == 63, s"wrong residual-filtered count: $m") // 1000/16 rounded per phase
-    assert(RangeTableProvider.rowsGenerated.get() == 1000,
-      "id prune should bound generation at 1000 rows; bucket is a residual")
-
-    // column pruning reaches readSchema
-    val pruned = table.select(col("bucket")).schema.fieldNames.toSeq
-    assert(pruned == Seq("bucket"))
-  }
-
-  test("batch DSv2 source: count/min/max are answered with ZERO rows generated") {
-    import org.apache.spark.sql.functions._
-    import graft.sources.RangeTableProvider
-    val spark = TestSpark.spark
-    def table = spark.read.format("graft.sources.RangeTableProvider")
-      .option("start", "0").option("end", "100000").option("numPartitions", "4").load()
-
-    // complete aggregate pushdown: the answer is range arithmetic over
-    // the filter-tightened [lo, hi) — the metadata-only aggregate
-    // (parquet-footer COUNT analogue). The generation counter proves no
-    // base row was ever materialized.
-    RangeTableProvider.rowsGenerated.set(0)
-    val r = table.filter(col("id") >= 10L && col("id") < 90000L)
-      .agg(count(col("id")), min(col("id")), max(col("id"))).collect()(0)
-    assert(r.getLong(0) == 89990L && r.getLong(1) == 10L && r.getLong(2) == 89999L,
-      s"wrong pushed aggregate row: $r")
-    assert(RangeTableProvider.rowsGenerated.get() == 0,
-      s"aggregate pushdown failed: ${RangeTableProvider.rowsGenerated.get()} base rows generated")
-
-    // empty range: count 0, min/max NULL — SQL semantics survive pushdown
-    val e = table.filter(col("id") < 0L)
-      .agg(count(col("id")), min(col("id")), max(col("id"))).collect()(0)
-    assert(e.getLong(0) == 0L && e.isNullAt(1) && e.isNullAt(2))
-
-    // a residual (non-pushable) filter must DISABLE complete pushdown:
-    // the count then runs Spark-side over materialized rows and still
-    // agrees
-    RangeTableProvider.rowsGenerated.set(0)
-    val b = table.filter(col("id") < 1000L && col("bucket") === 3L)
-      .agg(count(lit(1))).collect()(0).getLong(0)
-    assert(b == 63L, s"wrong residual count: $b")
-    assert(RangeTableProvider.rowsGenerated.get() == 1000,
-      "residual filter should force base-row generation")
-
-    // GROUP BY is not claimed: grouped aggregates fall back to the
-    // normal scan+agg path and stay correct
-    val g = table.filter(col("id") < 160L).groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n")).collect()
-    assert(g.length == 16 && g.forall(_.getLong(1) == 10L))
   }
 }

@@ -128,8 +128,7 @@ class StreamingWindowsSpec extends AnyFunSuite {
   }
 
   test("windowed funnel: mapGroupsWithState streaming twin ≡ batch query") {
-    // stream≡batch parity for events_funnel_windowed, the same discipline
-    // DocsIngestStream asserts for corpus admission: the REAL sf0.001
+    // stream≡batch parity for events_funnel_windowed: the REAL sf0.001
     // events table is replayed through a MemoryStream in several batches
     // (so state genuinely folds across triggers, with cross-batch
     // ordering preserved only per arrival), a per-user
@@ -363,43 +362,6 @@ class StreamingWindowsSpec extends AnyFunSuite {
     val batch = SparkEntry.queries("sim_incremental")(spark, d).collect().map(key).toSet
     assert(streamed.nonEmpty && streamed == batch,
       s"stream/batch LSH vector admission divergence: " +
-        s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
-  }
-
-  test("banded MinHash admission: stream verdicts equal the batch dedup_incremental gate") {
-    // The LSH half of the flagship dedup story: incoming docs (≡0 mod 10,
-    // the synthetic increment) stream against the persisted corpus banded
-    // index and must get EXACTLY the batch gate's verdicts — same dup_of,
-    // same admissions. The index side is built like dedup_incremental's
-    // (capped per bucket, ordered by old_id).
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.expressions.Window
-    val d = "/root/testdata/sf0.001"
-    val isNew = col("doc_id") % 10 === 0
-    val wb = Window.partitionBy(col("band"), col("band_hash")).orderBy(col("old_id"))
-    val oldIdx = graft.operators.Dedup.minhashBanded(spark, d).filter(!isNew)
-      .select(col("band"), col("band_hash"), col("doc_id").as("old_id"))
-      .withColumn("rn", row_number().over(wb))
-      .filter(col("rn") <= graft.operators.Dedup.MaxBucketSize).drop("rn")
-    val newDocs = graft.sources.Tables.documents(spark, d).filter(isNew)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val res = graft.streaming.DocsIngestStream.minhashAdmitted(
-      mem.toDF().toDF("doc_id", "text"), oldIdx)
-    val q = res.writeStream.format("memory").queryName("mh_admit_out")
-      .outputMode("complete").start()
-    // two micro-batches: admission must not depend on arrival batching
-    newDocs.grouped(math.max(1, newDocs.length / 2)).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
-    }
-    q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1), r.getBoolean(2))
-    val streamed = spark.table("mh_admit_out").collect().map(key).toSet
-    val batch = SparkEntry.queries("dedup_incremental")(spark, d).collect().map(key).toSet
-    assert(streamed.nonEmpty && streamed == batch,
-      s"stream/batch MinHash admission divergence: " +
         s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
   }
 

@@ -4,8 +4,20 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.TweetPipeline
-import graft.sinks.{FileTransport, RestBatchSink}
-import graft.streaming.{DocsIngestStream, TweetStream}
+import graft.sinks.RestBatchSink
+import graft.streaming.TweetStream
+
+/** Test transport: appends each payload as one line to a per-partition
+  * file under `dir` (concurrent tasks never share a file). */
+final class FileTransport(dir: String) extends graft.sinks.Transport {
+  def post(endpoint: String, payload: String): Unit = {
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    val p = java.nio.file.Paths.get(dir, s"part-$pid.jsonl")
+    Files.createDirectories(p.getParent)
+    Files.write(p, (payload + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+  }
+}
 
 /** In-JVM model of the Splunk KV store for exactly-once assertions: a
   * payload is a JSON array of records; a record WITH `_key` upserts (the
@@ -172,84 +184,6 @@ class TweetStreamSpec extends AnyFunSuite {
     // 7 rows at batch 3 → 3 posts (3+3+1)
     assert(lines.size == 3)
     assert(lines.map(_.count(_ == '{')).sorted == Seq(1, 3, 3))
-  }
-
-  test("streaming dedup within watermark bounds duplicate IOCs") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[String]
-    mem.addData(
-      tweet(20, "hit 5.5.5.5"), tweet(21, "hit again 5.5.5.5"), tweet(22, "other 6.6.6.6"))
-    val deduped = TweetStream.dedupedStream(TweetStream.iocStream(mem.toDF()))
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val iocs = spark.table("dedup_out").select("ioc").collect().map(_.getString(0)).sorted
-    assert(iocs.toSeq == Seq("5.5.5.5", "6.6.6.6"))
-  }
-
-  test("streaming near-dup: SimHash-colliding texts collapse within the watermark") {
-    import org.apache.spark.sql.functions.{col, to_timestamp}
-    implicit val sq = spark.sqlContext
-    // 11 distinct tokens × 5 repeats: every SimHash bit's vote margin is
-    // ≥ 5 (odd distinct count → no zero margins), so ONE extra token
-    // (±1 per bit) cannot flip any bit — the near-dup collision is
-    // guaranteed by construction, not found by luck
-    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa", "lam")
-    val base = Seq.fill(5)(words).flatten.mkString(" ")
-    val nearDup = base + " extra"
-    val other = "completely different spam about nothing interesting here today"
-    val sh = Seq(base, nearDup, other).toDF("text")
-      .select(graft.functions.TextStats.simhash(
-        graft.functions.TextStats.tokens(col("text"))).as("s"))
-      .collect().map(_.getString(0))
-    assert(sh(0) == sh(1), "near-identical texts must share a SimHash")
-    assert(sh(0) != sh(2), "distinct texts must differ")
-
-    val mem = MemoryStream[String]
-    mem.addData(tweet(50, base), tweet(51, nearDup), tweet(52, other))
-    val flat = TweetPipeline.flatten(mem.toDF())
-      .withColumn("created_at", to_timestamp(col("created_date")))
-    val q = TweetStream.nearDedupedStream(flat).writeStream.format("memory")
-      .queryName("neardup_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val ids = spark.table("neardup_out").select("id").collect()
-      .map(_.getString(0)).toSet
-    assert(ids.size == 2 && ids.contains("52"),
-      s"expected one survivor of the near-dup pair plus the distinct tweet, got $ids")
-  }
-
-
-  test("DocsIngestStream: quality gate + near-dedup admit the same docs streaming and batch") {
-    implicit val sq = spark.sqlContext
-    // 11 DISTINCT tokens (odd): every SimHash bit-sum is a nonzero
-    // multiple of the repeat count, so appending one extra token can
-    // never flip a bit — the same guarantee the near-dup spec above uses
-    val words = Seq("the", "a", "and", "of", "to", "in", "data", "spark",
-      "join", "sort", "merge")
-    // high-quality body (stopword-rich, long); a near-dup; junk that fails the gate
-    val good = Seq.fill(10)(words).flatten.mkString(" ")
-    val nearDup = good + " extra"
-    val junk = "@@@@ ##### !!!!"
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    val rows = Seq((1L, good, t0), (2L, nearDup, t0), (3L, junk, t0))
-
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    mem.addData(rows: _*)
-    val stream = DocsIngestStream.admitted(
-      mem.toDF().toDF("doc_id", "text", "ingest_ts"))
-    val q = stream.writeStream.format("memory").queryName("ingest_out")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("ingest_out").select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-
-    val batch = DocsIngestStream.admitted(
-      rows.toDF("doc_id", "text", "ingest_ts"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    assert(streamed == Set(1L), s"stream admitted $streamed")
-    assert(batch == streamed, s"batch twin admitted $batch, stream admitted $streamed")
   }
 
   test("ingest warnings surface as observed metrics (firehose.py:33-34,52-53)") {

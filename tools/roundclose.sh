@@ -30,8 +30,8 @@ fi
 echo "== 2/10 synth corpus (10x) for the scale legs"
 [ -d target/sf1/lineitem.parquet ] || sbt -batch "runMain graft.Synth /root/testdata/sf0.1 target/sf1 10"
 
-echo "== 3/10 env-gated scale legs (1M-event streaming state bounds + twin-beats-baseline timings)"
-SPARK_GRAFT_SCALE_SPEC=1 sbt -batch "testOnly graft.ScaleOpsSpec graft.PlanShapeSpec"
+echo "== 3/10 env-gated scale leg (twin-beats-baseline timings on the 10x corpus)"
+SPARK_GRAFT_SCALE_SPEC=1 sbt -batch "testOnly graft.PlanShapeSpec"
 
 echo "== 4/10 correctness gate at sf0.01"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
@@ -54,9 +54,10 @@ SPARK_GRAFT_JARS="$APP_JAR" SPARK_SCALA_VERSION=2.13 \
 echo "== 6/10 streaming throughput (1M-record replay -> extraction -> keyed sink)"
 sbt -batch "runMain graft.StreamBench" 2>/dev/null | grep '"metric"' | tail -1 | tee /tmp/stream_throughput.json
 
-echo "== 7/10 leak + copy gates (regenerate LEAKCHECK.json / COPYCHECK.json)"
+echo "== 7/10 leak + copy gates (regenerate LEAKCHECK.json / COPYCHECK.json) + spec-only code guard"
 python3 tools/leakcheck.py "${ROUND_NUMBER:-0}"
 python3 tools/copycheck.py
+python3 tools/spec_only.py
 
 echo "== 8/10 bench triple (sf0.1) + stability band"
 for i in 1 2 3; do
