@@ -88,31 +88,6 @@ object TextStats {
     s"$sqlQualityScore >= 0.5" +
       s" AND len($sqlToks) >= 10"
 
-  /** 60-bit token hash as a zero-padded binary string (md5-derived so both
-    * engines agree bit-for-bit). */
-  private def tokenBits(t: Column): Column =
-    lpad(bin(conv(substring(md5(t), 1, 15), 16, 10).cast("long")), 60, "0")
-
-  /** SimHash: per bit position, sum +1/-1 over tokens by that token-hash bit,
-    * emit '1' where the sum is positive — returned as a 60-char bit string.
-    *
-    * Two passes for performance: (1) `transform` hashes each token ONCE into
-    * its 60-char bit string — embedding tokenBits inside the fold lambda
-    * would re-run md5 per (token × bit) = a 60× blowup (measured: 53 s → 2 s
-    * at sf0.1); (2) an aggregate() fold carries 60 counters across the
-    * precomputed bit strings.
-    */
-  def simhash(toks: Column): Column = {
-    val bitsPerToken = transform(toks, tokenBits _)
-    val folded = aggregate(
-      bitsPerToken,
-      array_repeat(lit(0L), 60),
-      (acc, bits) =>
-        zip_with(acc, sequence(lit(1), lit(60)),
-          (a, p) => a + when(bits.substr(p, lit(1)) === "1", 1L).otherwise(-1L)))
-    concat_ws("", transform(folded, v => when(v > 0, "1").otherwise("0")))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "text_stats" -> ((s, d) => {
@@ -328,8 +303,8 @@ object TextStats {
     // (hash >> (60-p)) & 1, so each per-bit "+1/-1 sum" is
     // 2·popcount_p − n_tokens — pure integer shift/mask/sum, no per-token
     // string materialization (the substring formulation paid 60 string ops
-    // per token; the aggregate()-fold twin [[simhash]] is the interpreted
-    // reference, equality asserted in OperatorsSpec). Shuffle key is
+    // per token; OperatorsSpec keeps the interpreted aggregate()-fold
+    // twin as the reference and asserts equality). Shuffle key is
     // doc_id: high cardinality, balanced.
     "text_fingerprint" -> ((s, d) =>
       Tables.documents(s, d)

@@ -61,6 +61,21 @@ object Corpus {
         concat_ws(" ", (0 until n).map(k =>
           element_at(col("t"), col("p") + k)): _*).as("shingle"))
 
+  /** The oracle's word split: lower-cased text on single spaces, the
+    * DuckDB twin of [[graft.functions.TextStats.tokens]]. */
+  private[operators] final val SqlToks = "string_split(lower(text), ' ')"
+
+  /** `(doc_id, s)`: each document's distinct word n-grams as a list, over
+    * `documents` narrowed by `where` — the oracle twin of
+    * [[shingleOccurrencesN]] (as a per-document set), shared by the 3-gram
+    * dedup index, the 5-gram contamination pair and the 10-gram
+    * substring pass. `greatest(…, 0)` keeps the range empty for documents
+    * shorter than n. */
+  private[operators] def gramListsSql(n: Int, where: String = ""): String =
+    s"(SELECT doc_id, list_distinct([array_to_string(t[i:i+${n - 1}], ' ') " +
+      s"for i in range(1, greatest(len(t)-${n - 1}, 0)+1)]) AS s " +
+      s"FROM (SELECT doc_id, $SqlToks AS t FROM documents$where))"
+
   /** MEMOIZED full-corpus 5-gram occurrence relation — the
     * contamination/boilerplate/leakage index, persisted once per corpus
     * snapshot at 100 TB exactly like the 3-gram dedup index
@@ -636,9 +651,10 @@ object Corpus {
     })
   )
 
-  private val sqlToks = "string_split(lower(text), ' ')"
-  private val sql5grams =
-    "list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, greatest(len(t)-4, 0)+1)])"
+  /** The contamination oracles' two sides: the benchmark documents'
+    * 5-grams and the candidate documents'. */
+  private val bench = gramListsSql(5, " WHERE doc_id < 10")
+  private val cand = gramListsSql(5, " WHERE doc_id >= 10")
 
   val oracle: Map[String, String] = Map(
     "docs_pack" ->
@@ -717,12 +733,10 @@ object Corpus {
     "text_contamination" ->
       s"""WITH bench AS (
          |  SELECT DISTINCT unnest(s) AS shingle
-         |  FROM (SELECT $sql5grams AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents WHERE doc_id < 10))),
+         |  FROM $bench),
          |cand AS (
          |  SELECT doc_id, unnest(s) AS shingle
-         |  FROM (SELECT doc_id, $sql5grams AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents WHERE doc_id >= 10)))
+         |  FROM $cand)
          |SELECT doc_id, COUNT(*) AS n_overlap
          |FROM cand JOIN bench USING (shingle)
          |GROUP BY doc_id
@@ -732,8 +746,7 @@ object Corpus {
       val h2 = "CAST(('0x' || substr(md5(shingle), 9, 8)) AS BIGINT)"
       s"""WITH bench AS (
          |  SELECT DISTINCT unnest(s) AS shingle
-         |  FROM (SELECT $sql5grams AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents WHERE doc_id < 10))),
+         |  FROM $bench),
          |bpos AS (
          |  SELECT ($h1 + j * $h2) % $BloomBits AS pos
          |  FROM bench CROSS JOIN unnest([${(0 until BloomK).mkString(", ")}]) AS u(j)),
@@ -742,9 +755,8 @@ object Corpus {
          |         bit_or(CAST(1 AS UBIGINT) << CAST(pos % 64 AS INT)) AS bits
          |  FROM bpos GROUP BY 1),
          |cand AS (
-         |  SELECT DISTINCT doc_id, unnest(s) AS shingle
-         |  FROM (SELECT doc_id, $sql5grams AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents WHERE doc_id >= 10))),
+         |  SELECT doc_id, unnest(s) AS shingle
+         |  FROM $cand),
          |probes AS (
          |  SELECT doc_id, shingle, ($h1 + j * $h2) % $BloomBits AS pos
          |  FROM cand CROSS JOIN unnest([${(0 until BloomK).mkString(", ")}]) AS u(j)),

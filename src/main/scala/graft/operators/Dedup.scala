@@ -25,18 +25,6 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Word 3-gram shingles, distinct, from a token array column. Inclusive
-    * slice: tokens i..i+2 for i in 1..n-2 (Spark slice is 1-based like
-    * DuckDB's). */
-  def shingles(toks: Column): Column =
-    // guard: Spark sequence(1, n) DESCENDS when n < 1 (unlike DuckDB range,
-    // which is empty) — short docs must yield an empty shingle set.
-    when(size(toks) >= 3,
-      array_distinct(
-        transform(sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i, lit(3))))))
-      .otherwise(array().cast("array<string>"))
-
   /** Word-3-gram occurrence rows (doc_id, shingle), duplicates preserved —
     * the scan-fused codegen formulation ([[Corpus.shingleOccurrencesN]]:
     * explode of gram start positions + element_at assembly, zero shuffle).
@@ -45,19 +33,13 @@ object Dedup {
     * dedup joins (each self-join branch re-evaluates its subtree); the
     * posexplode + window-leads version stayed in codegen but paid a
     * doc_id exchange AND a per-partition token sort per index build
-    * (removed r14 — guide §2.4). Consumers that need SET semantics call
-    * [[shingleRows]]; duplicate-insensitive aggregations (min-hash
+    * (removed r14 — guide §2.4). Consumers that need SET semantics read
+    * [[shingleRowsIdx]]; duplicate-insensitive aggregations (min-hash
     * minima) consume this directly and skip the distinct's
     * (doc_id, shingle) exchange entirely.
     */
   def shingleOccurrences(docs: DataFrame): DataFrame =
     Corpus.shingleOccurrencesN(docs, 3)
-
-  /** Distinct (doc_id, shingle) rows — equivalent to
-    * `explode(shingles(tokens(text)))` (asserted in OperatorsSpec). Adds one
-    * shuffle on (doc_id, shingle) over [[shingleOccurrences]]. */
-  def shingleRows(docs: DataFrame): DataFrame =
-    shingleOccurrences(docs).distinct()
 
   /** MEMOIZED 3-gram occurrence relation over the corpus — the inverted
     * index's raw postings, built once per (session, dataset) like the pair
@@ -123,13 +105,6 @@ object Dedup {
   def mhash(j: Int, h1: Column, h2: Column): Column =
     (lit(MhashCD(j)._1) * h1).bitwiseAND(lit(M31)) +
       (lit(MhashCD(j)._2) * h2).bitwiseAND(lit(M31))
-
-  /** MinHash signature: K minima of the family over a shingle array
-    * (HOF reference formulation; the production path in [[minhashPairs]]
-    * is the codegen explode+agg twin — equality asserted in OperatorsSpec). */
-  def minhashSig(sh: Column, k: Int): Column =
-    array((0 until k).map(j =>
-      array_min(transform(sh, x => mhash(j, mhashH1(x), mhashH2(x))))): _*)
 
   val K = 12        // signature length
   val Rows = 3      // rows per band
@@ -201,29 +176,14 @@ object Dedup {
         .withColumn("df", count(lit(1)).over(dfw))
         .filter(col("df") <= MaxShingleDf)
         .drop("df")
-      val postings = sh.groupBy(col("shingle"))     // shingle partitioning reused
-        .agg(array_sort(collect_list(struct(col("doc_id"), col("sz")))).as("ms"))
-        .filter(size(col("ms")) > 1)
-      // pair generation as TWO codegen explodes of index ranges +
-      // element_at picks (r15): the previous nested transform-over-slice
-      // built the full m²/2 pair-struct array per shingle in INTERPRETED
-      // array land (HOFs are CodegenFallback — SQLMetrics attributed
-      // 1.56 s task-summed to that stage) before exploding it; the
-      // index-explode shape emits the same pairs without ever
-      // materializing the pair array and stays inside WholeStageCodegen.
-      // The agg keys narrow from 4 columns to the 2 real keys — sz1/sz2
-      // are functionally dependent on the ids and ride along as max()
-      // aggregates, so the near-unique-key hash aggregation compares and
-      // shuffles half the key bytes.
-      postings
-        .select(col("ms"), explode(sequence(lit(1), size(col("ms")) - 1)).as("i"))
-        .select(col("ms"), col("i"),
-          explode(sequence(col("i") + 1, size(col("ms")))).as("j"))
-        .select(
-          element_at(col("ms"), col("i")).getField("doc_id").as("id1"),
-          element_at(col("ms"), col("i")).getField("sz").as("sz1"),
-          element_at(col("ms"), col("j")).getField("doc_id").as("id2"),
-          element_at(col("ms"), col("j")).getField("sz").as("sz2"))
+      // the posting-list gather reuses the DF window's shingle
+      // partitioning. The agg keys narrow from 4 columns to the 2 real
+      // keys — sz1/sz2 are functionally dependent on the ids and ride
+      // along as max() aggregates, so the near-unique-key hash
+      // aggregation compares and shuffles half the key bytes.
+      bucketPairs(sh, struct(col("doc_id"), col("sz")), "shingle")
+        .select(col("x.doc_id").as("id1"), col("x.sz").as("sz1"),
+          col("y.doc_id").as("id2"), col("y.sz").as("sz2"))
         .groupBy(col("id1"), col("id2"))
         .agg(count(lit(1)).as("inter"), max(col("sz1")).as("sz1"),
           max(col("sz2")).as("sz2"))
@@ -241,12 +201,9 @@ object Dedup {
       val doc = Tables.documents(s, d)
         .select(col("doc_id"), md5(substring(col("text"), 1, 20)).as("blk"),
           substring(col("text"), 1, 60).as("head"))
-      val a = doc.select(col("blk"), col("doc_id").as("id1"), col("head").as("h1"))
-      val b = doc.select(col("blk"), col("doc_id").as("id2"), col("head").as("h2"))
       Relational.sortedOnce(
-        a.join(b, Seq("blk")).filter(col("id1") < col("id2"))
-          .select(col("id1"), col("id2"),
-            levenshtein(col("h1"), col("h2")).cast("long").as("edit_dist")),
+        blockPairs(doc, "blk", "doc_id").select(col("id1"), col("id2"),
+          levenshtein(col("head1"), col("head2")).cast("long").as("edit_dist")),
         col("id1"), col("id2"))
     }),
 
@@ -261,22 +218,10 @@ object Dedup {
     // near-dup pair split across cells is missed) — the documented ANN
     // trade; the oracle mirrors the same cell restriction, so both engines
     // agree exactly.
-    "dedup_embedding_cosine" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          Similarity.normSq(col("embedding")).as("nsq"))
-      val ea = e.join(Similarity.ivfAssign(s, d), Seq("vec_id"))
-      val a = ea.select(col("cell"), col("vec_id").as("id1"),
-        col("embedding").as("e1"), col("nsq").as("n1"))
-      val b = ea.select(col("cell"), col("vec_id").as("id2"),
-        col("embedding").as("e2"), col("nsq").as("n2"))
-      a.join(b, Seq("cell")).filter(col("id1") < col("id2"))
-        .withColumn("cosine",
-          Similarity.dot(col("e1"), col("e2")) / sqrt(col("n1") * col("n2")))
+    "dedup_embedding_cosine" -> ((s, d) =>
+      cellCosinePairs(embeddingCells(s, d))
         .filter(col("cosine") >= 0.3)
-        .select(col("id1"), col("id2"), col("cosine"))
-        .orderBy(col("id1"), col("id2"))
-    }),
+        .orderBy(col("id1"), col("id2"))),
 
     // SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     // deduplication as a KEEP/DROP decision per vector — cluster the
@@ -288,21 +233,13 @@ object Dedup {
     // `cell`, volume n·cellsize, never n²), but aggregated to the
     // per-vector verdict a pipeline actually consumes, with the blame
     // count carried for observability. The left join keeps singletons —
-    // every vector gets a row.
+    // every vector gets a row. A pair's higher id is the vector that has
+    // a lower-id duplicate, so the blame count groups on id2.
     "dedup_semdedup" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          Similarity.normSq(col("embedding")).as("nsq"))
-      val ea = e.join(Similarity.ivfAssign(s, d), Seq("vec_id"))
-      val a = ea.select(col("cell"), col("vec_id"),
-        col("embedding").as("e1"), col("nsq").as("n1"))
-      val b = ea.select(col("cell"), col("vec_id").as("id2"),
-        col("embedding").as("e2"), col("nsq").as("n2"))
-      val dups = a.join(b, Seq("cell")).filter(col("id2") < col("vec_id"))
-        .withColumn("cosine",
-          Similarity.dot(col("e1"), col("e2")) / sqrt(col("n1") * col("n2")))
+      val ea = embeddingCells(s, d)
+      val dups = cellCosinePairs(ea)
         .filter(col("cosine") >= SemDeDupTau)
-        .groupBy(col("vec_id"))
+        .groupBy(col("id2").as("vec_id"))
         .agg(count(lit(1)).as("n_dups_lower"))
       ea.select(col("vec_id"), col("cell"))
         .join(dups, Seq("vec_id"), "left")
@@ -343,12 +280,8 @@ object Dedup {
     "dedup_incremental" -> ((s, d) => {
       val banded = minhashBanded(s, d)
       val isNew = col("doc_id") % 10 === 0
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("band_hash")).orderBy(col("old_id"))
-      val oldIdx = banded.filter(!isNew)
+      val oldIdx = capBuckets(banded.filter(!isNew), MaxBucketSize, "band", "band_hash")
         .select(col("band"), col("band_hash"), col("doc_id").as("old_id"))
-        .withColumn("rn", row_number().over(wb))
-        .filter(col("rn") <= MaxBucketSize).drop("rn")
       banded.filter(isNew)
         .join(oldIdx, Seq("band", "band_hash"), "left")
         .groupBy(col("doc_id"))
@@ -416,8 +349,7 @@ object Dedup {
     // signature pipelines per run.
     "dedup_lsh_precision" -> ((s, d) =>
       pairScored(s, d)
-        .withColumn("m", col("n_matches"))
-        .withColumn("est_hi", col("m") * 2 >= K)
+        .withColumn("est_hi", col("n_matches") * 2 >= K)
         .withColumn("ex_hi", col("ni0") * 2 >= col("n1") + col("n2") - col("ni0"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(when(col("est_hi") && col("ex_hi"), 1L).otherwise(0L)).as("tp"),
@@ -734,18 +666,13 @@ object Dedup {
     * pairs are generated inside each bucket array — not via a banded⋈banded
     * self-join, which would re-run the whole shingle+signature subtree for
     * the second branch (Spark plans each self-join branch independently;
-    * this was half the query's round-1 cost). Buckets are near-dup
-    * clusters, so the arrays are tiny and the interpreted pair-HOF is
-    * negligible; a pathological giant bucket (byte-identical spam) is
-    * bounded by [[MaxBucketSize]] before the gather.
+    * this was half the query's round-1 cost). A pathological giant
+    * bucket (byte-identical spam) is bounded by [[MaxBucketSize]] before
+    * the gather.
     */
   def minhashPairs(s: SparkSession, d: String): DataFrame =
     memoized("mh_pairs", s, d)(computeMinhashPairs(s, d, MaxBucketSize).localCheckpoint())
 
-  /** Pre-cap banded rows (doc_id, band, band_hash) — the signature pipeline
-    * shared by pair generation ([[computeMinhashPairs]]) and the
-    * bucket-overflow diagnostic (`dedup_bucket_overflow`). Mirrored by the
-    * oracle's `mh_banded0` CTE. */
   /** Per-document MinHash signature as K `m0..m{K-1}` columns — the one
     * signature computation shared by banding ([[minhashBanded]]) and the
     * estimator gate (`dedup_minhash_est`). md5 evaluated ONCE per
@@ -801,6 +728,10 @@ object Dedup {
         .localCheckpoint()
     }
 
+  /** Pre-cap banded rows (doc_id, band, band_hash) — the signature pipeline
+    * shared by pair generation ([[computeMinhashPairs]]), the incremental
+    * admission gate and the bucket-overflow diagnostic
+    * (`dedup_bucket_overflow`). Mirrored by the oracle's `mh_banded0` CTE. */
   private[graft] def minhashBanded(s: SparkSession, d: String): DataFrame = {
     val sig = minhashSigCols(s, d)
     sig.select(col("doc_id"),
@@ -812,21 +743,71 @@ object Dedup {
 
   /** `cap` = bucket-size ceiling (see [[MaxBucketSize]]); package-visible
     * so BucketCapSpec can compare capped vs effectively-uncapped output. */
-  private[graft] def computeMinhashPairs(s: SparkSession, d: String, cap: Int): DataFrame = {
-    // bucket-size ceiling BEFORE the gather: the rank rides the same
-    // (band, hash) exchange the aggregation needs anyway, so the cap costs
-    // one in-partition sort, and no collect_list row can exceed `cap`
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("band_hash")).orderBy(col("doc_id"))
-    val buckets = minhashBanded(s, d)
-      .withColumn("rn", row_number().over(wb)).filter(col("rn") <= cap)
-      .groupBy(col("band"), col("band_hash"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-    buckets.select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.as("id1"), y.as("id2")))))).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2")).distinct()
+  private[graft] def computeMinhashPairs(s: SparkSession, d: String, cap: Int): DataFrame =
+    bucketPairs(capBuckets(minhashBanded(s, d), cap, "band", "band_hash"),
+      col("doc_id"), "band", "band_hash")
+      .select(col("x").as("id1"), col("y").as("id2")).distinct()
+
+  /** The rows of `rows` whose doc_id is among the `cap` smallest of their
+    * `key` bucket — the bucket-size ceiling ([[MaxBucketSize]]) of both
+    * LSH pair builds and of the incremental gate's corpus side. Applied
+    * BEFORE the gather: the rank rides the same key exchange the
+    * aggregation needs anyway, so the cap costs one in-partition sort,
+    * and no collect_list row can exceed `cap`. */
+  private def capBuckets(rows: DataFrame, cap: Int, key: String*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key.map(col): _*).orderBy(col("doc_id"))
+    rows.withColumn("rn", row_number().over(w)).filter(col("rn") <= cap).drop("rn")
+  }
+
+  /** Every (i < j) pair of `member` values within each `key` bucket, as
+    * columns `x` and `y`: the members are gathered with ONE aggregation on
+    * the key into a sorted array, and paired inside it by [[memberPairs]]
+    * — the MinHash band buckets, the SimHash chunk buckets and the
+    * n-gram posting lists all pair this way. */
+  private def bucketPairs(rows: DataFrame, member: Column, key: String*): DataFrame =
+    memberPairs(rows.groupBy(key.map(col): _*)
+      .agg(array_sort(collect_list(member)).as("ms")))
+
+  /** The (i < j) pairs `x` = ms[i], `y` = ms[j] of each array `ms`, as TWO
+    * codegen explodes of index ranges + element_at picks (r15). The
+    * nested transform-over-slice it replaces built the full m²/2
+    * pair-struct array per bucket in INTERPRETED array land (HOFs are
+    * CodegenFallback — SQLMetrics attributed 1.56 s task-summed to that
+    * stage on the posting lists) before exploding it; the index-explode
+    * shape never materializes the pair array and stays inside
+    * WholeStageCodegen. Arrays of fewer than two members are dropped
+    * first: Spark's `sequence(1, 0)` descends. Package-visible so
+    * ReformulationSpec can compare it with the nested-transform form. */
+  private[graft] def memberPairs(buckets: DataFrame): DataFrame =
+    buckets.filter(size(col("ms")) > 1)
+      .select(col("ms"), explode(sequence(lit(1), size(col("ms")) - 1)).as("i"))
+      .select(col("ms"), col("i"), explode(sequence(col("i") + 1, size(col("ms")))).as("j"))
+      .select(element_at(col("ms"), col("i")).as("x"), element_at(col("ms"), col("j")).as("y"))
+
+  /** Every embedding with its squared norm and IVF cell
+    * (vec_id, embedding, nsq, cell) — the within-cell candidate space of
+    * both embedding dedup passes. */
+  private def embeddingCells(s: SparkSession, d: String): DataFrame =
+    Similarity.embeddingsNsq(s, d).join(Similarity.ivfAssign(s, d), Seq("vec_id"))
+
+  /** (id1 < id2, cosine) for every two vectors of [[embeddingCells]] that
+    * share a cell. The dot product is symmetric bit for bit, so the cosine
+    * does not depend on which of the two ids comes first. */
+  private def cellCosinePairs(ea: DataFrame): DataFrame =
+    blockPairs(ea, "cell", "vec_id").select(col("id1"), col("id2"),
+      (Similarity.dot(col("embedding1"), col("embedding2")) /
+        sqrt(col("nsq1") * col("nsq2"))).as("cosine"))
+
+  /** Every unordered pair of `rel` rows that share a `key` value, once:
+    * the rows' `id` values as id1 < id2, and every other column c as c1
+    * and c2 — the within-block self-join of the Levenshtein prefix blocks
+    * and the IVF cells. The join shuffles on the key, so candidate
+    * volume is n·blocksize, never n². */
+  private def blockPairs(rel: DataFrame, key: String, id: String): DataFrame = {
+    def side(n: Int) = rel.select(rel.columns.toSeq.map(c =>
+      if (c == key) col(c) else if (c == id) col(c).as(s"id$n") else col(c).as(s"$c$n")): _*)
+    side(1).join(side(2), Seq(key)).filter(col("id1") < col("id2"))
   }
 
   /** MEMOIZED per-document 60-bit SimHash fingerprint (doc_id, sh) — the
@@ -866,59 +847,35 @@ object Dedup {
       posexplode(array((0 until SimhashBands).map(b =>
         shiftright(col("sh"), b * SimhashBandBits).bitwiseAND(lit(0x7FFFL))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("chunk")).orderBy(col("doc_id"))
-    val buckets = banded
-      .withColumn("rn", row_number().over(wb)).filter(col("rn") <= cap)
-      .groupBy(col("band"), col("chunk"))
-      .agg(array_sort(collect_list(struct(col("doc_id"), col("sh")))).as("ms"))
-      .filter(size(col("ms")) > 1)
-    buckets.select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x("doc_id").as("id1"), x("sh").as("sh1"),
-            y("doc_id").as("id2"), y("sh").as("sh2")))))).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"),
-        bit_count(col("p.sh1").bitwiseXOR(col("p.sh2"))).cast("long").as("hamming"))
+    bucketPairs(capBuckets(banded, cap, "band", "chunk"),
+      struct(col("doc_id"), col("sh")), "band", "chunk")
+      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"),
+        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).cast("long").as("hamming"))
       .filter(col("hamming") <= MaxHamming)
       .distinct()
   }
 
-  private val sqlToks = "string_split(lower(text), ' ')"
-  private val sqlShingles =
-    s"list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, greatest(len(t)-2, 0)+1)])"
-
-  private val nsqSql =
-    "list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE) for i in range(1, len(embedding)+1)])"
-
   val oracle: Map[String, String] = Map(
     "dedup_levenshtein" ->
-      """WITH doc AS (
+      ("""WITH doc AS (
         |  SELECT doc_id, md5(substr(text, 1, 20)) AS blk, substr(text, 1, 60) AS head
         |  FROM documents)
         |SELECT a.doc_id AS id1, b.doc_id AS id2,
         |  CAST(levenshtein(a.head, b.head) AS BIGINT) AS edit_dist
-        |FROM doc a JOIN doc b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |ORDER BY id1, id2""".stripMargin,
+        |""".stripMargin + pairsSql("doc", "doc_id", "blk") + "\nORDER BY id1, id2"),
     "dedup_embedding_cosine" ->
-      (s"WITH ${Similarity.ivfCtes},\n" +
-        """ec AS (
-          |  SELECT e.vec_id, e.embedding, e.nsq, a.cell
-          |  FROM e JOIN assign a ON a.vec_id = e.vec_id)
-          |SELECT a.vec_id AS id1, b.vec_id AS id2,
-          |  list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE) for i in range(1, len(a.embedding)+1)]) / sqrt(a.nsq * b.nsq) AS cosine
-          |FROM ec a JOIN ec b ON a.cell = b.cell AND a.vec_id < b.vec_id
-          |WHERE list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE) for i in range(1, len(a.embedding)+1)]) / sqrt(a.nsq * b.nsq) >= 0.3
+      (cellPairsCtes +
+        """
+          |SELECT id1, id2, cosine FROM cpairs
+          |WHERE cosine >= 0.3
           |ORDER BY id1, id2""".stripMargin),
     "dedup_semdedup" ->
-      (s"WITH ${Similarity.ivfCtes},\n" +
-        s"""ec AS (
-           |  SELECT e.vec_id, e.embedding, e.nsq, a.cell
-           |  FROM e JOIN assign a ON a.vec_id = e.vec_id),
+      (cellPairsCtes +
+        s""",
            |dups AS (
-           |  SELECT a.vec_id, COUNT(*) AS n_dups_lower
-           |  FROM ec a JOIN ec b ON a.cell = b.cell AND b.vec_id < a.vec_id
-           |  WHERE list_sum([CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE) for i in range(1, len(a.embedding)+1)]) / sqrt(a.nsq * b.nsq) >= $SemDeDupTau
-           |  GROUP BY a.vec_id)
+           |  SELECT id2 AS vec_id, COUNT(*) AS n_dups_lower
+           |  FROM cpairs WHERE cosine >= $SemDeDupTau
+           |  GROUP BY id2)
            |SELECT ec.vec_id, ec.cell,
            |  COALESCE(d.n_dups_lower, 0) AS n_dups_lower,
            |  d.n_dups_lower IS NULL AS keep
@@ -931,11 +888,8 @@ object Dedup {
         |GROUP BY 1 HAVING COUNT(*) > 1
         |ORDER BY content_key""".stripMargin,
     "dedup_ngram_jaccard" ->
-      s"""WITH sh0 AS (
-         |  SELECT doc_id, unnest(s) AS shingle
-         |  FROM (SELECT doc_id, $sqlShingles AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents))),
-         |sh AS (
+      (s"WITH ${shinglesSql("sh0")},\n" +
+        s"""sh AS (
          |  SELECT doc_id, shingle FROM (
          |    SELECT doc_id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS df
          |    FROM sh0)
@@ -943,27 +897,22 @@ object Dedup {
          |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh0 GROUP BY doc_id),
          |pairs AS (
          |  SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
+         |""".stripMargin + s"  ${pairsSql("sh", "doc_id", "shingle")}\n" +
+        s"""  GROUP BY 1, 2)
          |SELECT id1, id2,
          |  CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) AS jaccard
          |FROM pairs JOIN sizes s1 ON s1.doc_id = id1 JOIN sizes s2 ON s2.doc_id = id2
          |WHERE CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) >= $JaccardThreshold
-         |ORDER BY id1, id2""".stripMargin,
+         |ORDER BY id1, id2""".stripMargin),
     "dedup_minhash_lsh" ->
-      s"""WITH $minhashPairCtes
-         |SELECT id1, id2 FROM mh_pairs
-         |ORDER BY id1, id2""".stripMargin,
+      s"WITH $minhashPairCtes\nSELECT id1, id2 FROM mh_pairs\nORDER BY id1, id2",
     "dedup_incremental" ->
       (s"WITH $minhashPairCtes,\n" +
-        s"""old_idx AS (
-           |  SELECT band, band_hash, old_id FROM (
-           |    SELECT band, band_hash, doc_id AS old_id,
-           |      row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id) AS rn
-           |    FROM mh_banded0 WHERE doc_id % 10 <> 0)
-           |  WHERE rn <= $MaxBucketSize),
+        cappedSql("old_idx", "doc_id, band, band_hash", "band, band_hash",
+          "mh_banded0 WHERE doc_id % 10 <> 0") +
+        s""",
            |verdict AS (
-           |  SELECT n.doc_id, MIN(o.old_id) AS dup_of
+           |  SELECT n.doc_id, MIN(o.doc_id) AS dup_of
            |  FROM mh_banded0 n
            |  LEFT JOIN old_idx o
            |    ON o.band = n.band AND o.band_hash = n.band_hash
@@ -973,29 +922,8 @@ object Dedup {
            |FROM verdict
            |ORDER BY doc_id""".stripMargin),
     "dedup_minhash_est" ->
-      (s"WITH $minhashPairCtes,\n" +
-        s"""sh AS (
-           |  SELECT DISTINCT doc_id, unnest(s) AS shingle
-           |  FROM (SELECT doc_id, $sqlShingles AS s
-           |        FROM (SELECT doc_id, $sqlToks AS t FROM documents))),
-           |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-           |inter AS (
-           |  SELECT p.id1, p.id2, COUNT(*) AS ni
-           |  FROM mh_pairs p
-           |  JOIN sh a ON a.doc_id = p.id1
-           |  JOIN sh b ON b.doc_id = p.id2 AND b.shingle = a.shingle
-           |  GROUP BY 1, 2),
-           |scored AS (
-           |  SELECT p.id1, p.id2,
-           |    CAST(list_sum([CASE WHEN sa.sig[j] = sb.sig[j] THEN 1 ELSE 0 END
-           |                   for j in range(1, $K + 1)]) AS BIGINT) AS n_matches,
-           |    COALESCE(i.ni, 0) AS ni0, za.n AS n1, zb.n AS n2
-           |  FROM mh_pairs p
-           |  JOIN sig sa ON sa.doc_id = p.id1
-           |  JOIN sig sb ON sb.doc_id = p.id2
-           |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-           |  JOIN sz za ON za.doc_id = p.id1
-           |  JOIN sz zb ON zb.doc_id = p.id2)
+      (scoredCtes +
+        s"""
            |SELECT id1, id2, n_matches,
            |  CAST(n_matches AS DOUBLE) / $K AS est_jaccard,
            |  CAST(ni0 AS DOUBLE) / (n1 + n2 - ni0) AS jaccard,
@@ -1004,41 +932,17 @@ object Dedup {
            |FROM scored
            |ORDER BY id1, id2""".stripMargin),
     "dedup_shingle_df_hist" ->
-      s"""WITH sh AS (
-         |  SELECT DISTINCT doc_id, unnest(s) AS shingle
-         |  FROM (SELECT doc_id, $sqlShingles AS s
-         |        FROM (SELECT doc_id, $sqlToks AS t FROM documents))),
-         |df AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1)
-         |SELECT CAST(length(bin(df)) AS BIGINT) AS bucket,
-         |  COUNT(*) AS n_shingles, MIN(df) AS min_df, MAX(df) AS max_df
-         |FROM df GROUP BY 1
-         |ORDER BY bucket""".stripMargin,
+      (s"WITH ${shinglesSql("sh")},\n" +
+        """df AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1)
+          |SELECT CAST(length(bin(df)) AS BIGINT) AS bucket,
+          |  COUNT(*) AS n_shingles, MIN(df) AS min_df, MAX(df) AS max_df
+          |FROM df GROUP BY 1
+          |ORDER BY bucket""".stripMargin),
     "dedup_lsh_precision" ->
-      (s"WITH $minhashPairCtes,\n" +
-        s"""sh AS (
-           |  SELECT DISTINCT doc_id, unnest(s) AS shingle
-           |  FROM (SELECT doc_id, $sqlShingles AS s
-           |        FROM (SELECT doc_id, $sqlToks AS t FROM documents))),
-           |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-           |inter AS (
-           |  SELECT p.id1, p.id2, COUNT(*) AS ni
-           |  FROM mh_pairs p
-           |  JOIN sh a ON a.doc_id = p.id1
-           |  JOIN sh b ON b.doc_id = p.id2 AND b.shingle = a.shingle
-           |  GROUP BY 1, 2),
-           |scored AS (
-           |  SELECT p.id1, p.id2,
-           |    CAST(list_sum([CASE WHEN sa.sig[j] = sb.sig[j] THEN 1 ELSE 0 END
-           |                   for j in range(1, $K + 1)]) AS BIGINT) AS m,
-           |    COALESCE(i.ni, 0) AS ni0, za.n AS n1, zb.n AS n2
-           |  FROM mh_pairs p
-           |  JOIN sig sa ON sa.doc_id = p.id1
-           |  JOIN sig sb ON sb.doc_id = p.id2
-           |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-           |  JOIN sz za ON za.doc_id = p.id1
-           |  JOIN sz zb ON zb.doc_id = p.id2),
+      (scoredCtes +
+        s""",
            |flags AS (
-           |  SELECT m * 2 >= $K AS est_hi,
+           |  SELECT n_matches * 2 >= $K AS est_hi,
            |    ni0 * 2 >= n1 + n2 - ni0 AS ex_hi
            |  FROM scored),
            |agg AS (
@@ -1066,24 +970,22 @@ object Dedup {
            |    AS members_dropped
            |FROM m GROUP BY band ORDER BY band""".stripMargin),
     "dedup_substring" ->
-      """WITH pairs AS (
+      ("""WITH pairs AS (
         |  SELECT DISTINCT doc_id,
         |    CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS h
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest([array_to_string(t[i:i+9], ' ') for i in range(1, len(t)-8)]) AS gram
-        |    FROM (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents))),
-        |df AS (SELECT h, COUNT(*) AS n_docs FROM pairs GROUP BY h)
+        |  FROM (SELECT doc_id, unnest(s) AS gram
+        |""".stripMargin + s"    FROM ${Corpus.gramListsSql(10)})),\n" +
+        """df AS (SELECT h, COUNT(*) AS n_docs FROM pairs GROUP BY h)
         |SELECT p.doc_id,
         |  COUNT(*) AS n_grams,
         |  CAST(SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams,
         |  CAST(SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS dup_frac
         |FROM pairs p JOIN df f USING (h)
         |GROUP BY p.doc_id
-        |ORDER BY p.doc_id""".stripMargin,
+        |ORDER BY p.doc_id""".stripMargin),
     "dedup_simhash" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest($sqlToks) AS tok FROM documents),
+      (s"""WITH toks AS (
+         |  SELECT doc_id, unnest(${Corpus.SqlToks}) AS tok FROM documents),
          |hashed AS (
          |  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
          |  FROM toks),
@@ -1098,18 +1000,12 @@ object Dedup {
          |banded0 AS (
          |  SELECT doc_id, sh, b, (sh >> CAST(b * $SimhashBandBits AS INTEGER)) & ${(1 << SimhashBandBits) - 1} AS chunk
          |  FROM shs, range(0, $SimhashBands) r(b)),
-         |banded AS (
-         |  SELECT doc_id, sh, b, chunk FROM (
-         |    SELECT doc_id, sh, b, chunk,
-         |      row_number() OVER (PARTITION BY b, chunk ORDER BY doc_id) AS rn
-         |    FROM banded0)
-         |  WHERE rn <= $MaxBucketSize)
-         |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-         |  CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-         |FROM banded a JOIN banded b
-         |  ON a.b = b.b AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.sh, b.sh)) <= $MaxHamming
-         |ORDER BY id1, id2""".stripMargin,
+         |""".stripMargin + cappedSql("banded", "doc_id, sh, b, chunk", "b, chunk", "banded0") +
+        """
+          |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
+          |  CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
+          |""".stripMargin + pairsSql("banded", "doc_id", "b", "chunk") +
+        s"\nWHERE bit_count(xor(a.sh, b.sh)) <= $MaxHamming\nORDER BY id1, id2"),
     "dedup_clusters" ->
       (s"WITH $minhashPairCtes,\n$clusterCtes\n" +
         """SELECT doc_id, cluster_id FROM labels
@@ -1218,21 +1114,67 @@ object Dedup {
        |    [${MhashCD.map { case (c, dd) =>
              s"list_min([(($c * CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)) & 2147483647) + (($dd * CAST(('0x' || substr(md5(x), 9, 8)) AS BIGINT)) & 2147483647) for x in s])"
            }.mkString(",\n     ")}] AS sig
-       |  FROM (SELECT doc_id, $sqlShingles AS s
-       |        FROM (SELECT doc_id, $sqlToks AS t FROM documents))),
-       |mh_banded0 AS (
-       |  SELECT doc_id, b AS band,
-       |    md5(array_to_string(sig[b*$Rows+1:b*$Rows+$Rows], '|')) AS band_hash
-       |  FROM sig, range(0, $Bands) r(b)),
-       |mh_banded AS (
-       |  SELECT doc_id, band, band_hash FROM (
-       |    SELECT doc_id, band, band_hash,
-       |      row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id) AS rn
-       |    FROM mh_banded0)
-       |  WHERE rn <= $MaxBucketSize),
-       |mh_pairs AS (
-       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |  FROM mh_banded a
-       |  JOIN mh_banded b ON a.band = b.band AND a.band_hash = b.band_hash
-       |    AND a.doc_id < b.doc_id)""".stripMargin
+       |""".stripMargin + s"  FROM ${Corpus.gramListsSql(3)}),\n" +
+      s"""mh_banded0 AS (
+         |  SELECT doc_id, b AS band,
+         |    md5(array_to_string(sig[b*$Rows+1:b*$Rows+$Rows], '|')) AS band_hash
+         |  FROM sig, range(0, $Bands) r(b)),
+         |""".stripMargin +
+      cappedSql("mh_banded", "doc_id, band, band_hash", "band, band_hash", "mh_banded0") +
+      ",\nmh_pairs AS (\n  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2\n  " +
+      pairsSql("mh_banded", "doc_id", "band", "band_hash") + ")"
+
+  /** `name`: the `cols` rows of `from` whose doc_id is among the
+    * [[MaxBucketSize]] smallest of their `key` bucket — the SQL twin of
+    * [[capBuckets]]. */
+  private def cappedSql(name: String, cols: String, key: String, from: String): String =
+    s"$name AS (\n  SELECT $cols FROM (\n    SELECT $cols,\n" +
+      s"      row_number() OVER (PARTITION BY $key ORDER BY doc_id) AS rn\n" +
+      s"    FROM $from)\n  WHERE rn <= $MaxBucketSize)"
+
+  /** `FROM rel a JOIN rel b` on every `key` column, a.id < b.id: each
+    * unordered pair of rows sharing a bucket once — the SQL twin of
+    * [[bucketPairs]] and of [[blockPairs]]. */
+  private def pairsSql(rel: String, id: String, key: String*): String =
+    s"FROM $rel a JOIN $rel b ON ${key.map(k => s"a.$k = b.$k").mkString(" AND ")} AND a.$id < b.$id"
+
+  /** `name(doc_id, shingle)`: each document's distinct word 3-grams — the
+    * SQL twin of [[shingleRowsIdx]]. */
+  private def shinglesSql(name: String): String =
+    s"$name AS (\n  SELECT doc_id, unnest(s) AS shingle\n  FROM ${Corpus.gramListsSql(3)})"
+
+  /** `WITH …` ending in `scored(id1, id2, n_matches, ni0, n1, n2)` over
+    * [[minhashPairCtes]] — the SQL twin of [[pairScored]], read by both
+    * LSH quality gates. */
+  private def scoredCtes: String =
+    s"WITH $minhashPairCtes,\n${shinglesSql("sh")},\n" +
+      s"""sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+         |inter AS (
+         |  SELECT p.id1, p.id2, COUNT(*) AS ni
+         |  FROM mh_pairs p
+         |  JOIN sh a ON a.doc_id = p.id1
+         |  JOIN sh b ON b.doc_id = p.id2 AND b.shingle = a.shingle
+         |  GROUP BY 1, 2),
+         |scored AS (
+         |  SELECT p.id1, p.id2,
+         |    CAST(list_sum([CASE WHEN sa.sig[j] = sb.sig[j] THEN 1 ELSE 0 END
+         |                   for j in range(1, $K + 1)]) AS BIGINT) AS n_matches,
+         |    COALESCE(i.ni, 0) AS ni0, za.n AS n1, zb.n AS n2
+         |  FROM mh_pairs p
+         |  JOIN sig sa ON sa.doc_id = p.id1
+         |  JOIN sig sb ON sb.doc_id = p.id2
+         |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
+         |  JOIN sz za ON za.doc_id = p.id1
+         |  JOIN sz zb ON zb.doc_id = p.id2)""".stripMargin
+
+  /** `WITH …` ending in `ec(vec_id, embedding, nsq, cell)` and
+    * `cpairs(id1, id2, cosine)` — the SQL twin of [[embeddingCells]] and
+    * [[cellCosinePairs]]. */
+  private def cellPairsCtes: String =
+    s"WITH ${Similarity.ivfCtes},\n" +
+      "ec AS (\n  SELECT e.vec_id, e.embedding, e.nsq, a.cell\n" +
+      "  FROM e JOIN assign a ON a.vec_id = e.vec_id),\n" +
+      s"cpairs AS (\n  SELECT a.vec_id AS id1, b.vec_id AS id2,\n" +
+      s"    ${Similarity.dotSql("a", "b")} / sqrt(a.nsq * b.nsq) AS cosine\n" +
+      s"  ${pairsSql("ec", "vec_id", "cell")})"
 }

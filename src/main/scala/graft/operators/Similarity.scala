@@ -1158,7 +1158,7 @@ object Similarity {
 
   /** (vec_id, embedding, nsq, extra…): the embeddings with their squared
     * norm — the relation every cosine and L2 pipeline starts from. */
-  private def embeddingsNsq(s: SparkSession, d: String, extra: String*): DataFrame =
+  private[operators] def embeddingsNsq(s: SparkSession, d: String, extra: String*): DataFrame =
     Tables.embeddings(s, d).select(
       Seq(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nsq")) ++
         extra.map(col): _*)
@@ -1229,7 +1229,7 @@ object Similarity {
       .withColumn("cosine", cosine), TopK, byCosine: _*)
   }
 
-  private def dotSql(x: String, y: String) =
+  private[operators] def dotSql(x: String, y: String) =
     s"list_sum([CAST($x.embedding[i] AS DOUBLE) * CAST($y.embedding[i] AS DOUBLE) for i in range(1, len($x.embedding)+1)])"
 
   private val nsqSql =

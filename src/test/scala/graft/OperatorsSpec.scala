@@ -1,10 +1,62 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.functions.TextStats
+import OperatorsSpec._
+
+/** The interpreted array-HOF reference formulations the production paths
+  * are checked against: the engine computes each of them a faster way
+  * (scan-fused n-gram explodes, codegen min/bit-sum aggregations), and
+  * these specs assert the two agree. */
+object OperatorsSpec {
+
+  /** Word 3-gram shingles, distinct, from a token array column. Inclusive
+    * slice: tokens i..i+2 for i in 1..n-2 (Spark slice is 1-based like
+    * DuckDB's). */
+  def shingles(toks: Column): Column =
+    // guard: Spark sequence(1, n) DESCENDS when n < 1 (unlike DuckDB range,
+    // which is empty) — short docs must yield an empty shingle set.
+    when(size(toks) >= 3,
+      array_distinct(
+        transform(sequence(lit(1), size(toks) - 2),
+          i => concat_ws(" ", slice(toks, i, lit(3))))))
+      .otherwise(array().cast("array<string>"))
+
+  /** Distinct (doc_id, shingle) rows over the production occurrence path
+    * ([[Dedup.shingleOccurrences]]) — what the memoized
+    * `Dedup.shingleRowsIdx` holds, without its `sz` column. */
+  def shingleRows(docs: DataFrame): DataFrame =
+    Dedup.shingleOccurrences(docs).distinct()
+
+  /** MinHash signature: K minima of the family over a shingle array. */
+  def minhashSig(sh: Column, k: Int): Column =
+    array((0 until k).map(j =>
+      array_min(transform(sh, x => Dedup.mhash(j, Dedup.mhashH1(x), Dedup.mhashH2(x))))): _*)
+
+  /** 60-bit token hash as a zero-padded binary string (md5-derived so both
+    * engines agree bit-for-bit). */
+  private def tokenBits(t: Column): Column =
+    lpad(bin(conv(substring(md5(t), 1, 15), 16, 10).cast("long")), 60, "0")
+
+  /** SimHash: per bit position, sum +1/-1 over tokens by that token-hash bit,
+    * emit '1' where the sum is positive — returned as a 60-char bit string.
+    * `transform` hashes each token ONCE into its bit string (inside the
+    * fold lambda md5 would run per token × bit, a 60× blowup: 53 s → 2 s
+    * at sf0.1); an aggregate() fold then carries 60 counters across the
+    * precomputed bit strings. */
+  def simhash(toks: Column): Column = {
+    val folded = aggregate(
+      transform(toks, tokenBits _),
+      array_repeat(lit(0L), 60),
+      (acc, bits) =>
+        zip_with(acc, sequence(lit(1), lit(60)),
+          (a, p) => a + when(bits.substr(p, lit(1)) === "1", 1L).otherwise(-1L)))
+    concat_ws("", transform(folded, v => when(v > 0, "1").otherwise("0")))
+  }
+}
 
 /** Sanity specs for the extension operators (the oracle gate covers full
   * results; these pin structural invariants and edge cases).
@@ -16,7 +68,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("shingles: 3-grams, distinct, empty for short docs") {
     val df = Seq("w1 w2 w3 w4", "tiny doc", "a b c a b c a b c")
       .toDF("text")
-      .select(Dedup.shingles(TextStats.tokens(col("text"))).as("s"))
+      .select(shingles(TextStats.tokens(col("text"))).as("s"))
     val rows = df.collect().map(_.getSeq[String](0))
     assert(rows(0) == Seq("w1 w2 w3", "w2 w3 w4"))
     assert(rows(1) == Seq.empty)                       // <3 tokens
@@ -25,9 +77,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("shingleRows (codegen window path) equals explode of the shingle HOF") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val fast = Dedup.shingleRows(docs)
+    val fast = shingleRows(docs)
     val slow = docs.select(col("doc_id"),
-      explode(Dedup.shingles(TextStats.tokens(col("text")))).as("shingle"))
+      explode(shingles(TextStats.tokens(col("text")))).as("shingle"))
     assert(fast.except(slow).count() == 0 && slow.except(fast).count() == 0)
   }
 
@@ -41,7 +93,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fast = graft.operators.Dedup.simhashFp(spark, d)
       .select(col("doc_id"), lpad(bin(col("sh")), 60, "0").as("s60"))
     val slow = docs.select(col("doc_id"),
-      TextStats.simhash(TextStats.tokens(col("text"))).as("s60"))
+      simhash(TextStats.tokens(col("text"))).as("s60"))
     assert(fast.except(slow).count() == 0 && slow.except(fast).count() == 0)
   }
 
@@ -90,7 +142,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("minhash signature: K entries, in the linear family's value range") {
     val sig = Seq("x y z w").toDF("text")
-      .select(Dedup.minhashSig(Dedup.shingles(TextStats.tokens(col("text"))), Dedup.K).as("m"))
+      .select(minhashSig(shingles(TextStats.tokens(col("text"))), Dedup.K).as("m"))
       .head().getSeq[Long](0)
     assert(sig.size == Dedup.K && sig.forall(v => v >= 0L && v < (1L << 32)))
   }
@@ -99,7 +151,7 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "one two three four")).toDF("doc_id", "text")
     val sig = docs.select(col("doc_id"),
-      Dedup.minhashSig(Dedup.shingles(TextStats.tokens(col("text"))), Dedup.K).as("m"))
+      minhashSig(shingles(TextStats.tokens(col("text"))), Dedup.K).as("m"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sig(1L) == sig(2L))
     assert(sig(1L) != sig(3L))
@@ -107,7 +159,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("simhash: 60-bit string, equal for equal docs, differs for different") {
     val out = Seq("spark joins data", "spark joins data", "completely other words here")
-      .toDF("text").select(TextStats.simhash(TextStats.tokens(col("text"))).as("s"))
+      .toDF("text").select(simhash(TextStats.tokens(col("text"))).as("s"))
       .collect().map(_.getString(0))
     assert(out(0).length == 60 && out(0).forall(c => c == '0' || c == '1'))
     assert(out(0) == out(1) && out(0) != out(2))
@@ -281,7 +333,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fast = TextStats.queries("text_fingerprint")(spark, d)
       .select(col("doc_id"), col("simhash60"))
     val slow = graft.sources.Tables.documents(spark, d)
-      .select(col("doc_id"), TextStats.simhash(TextStats.tokens(col("text"))).as("simhash60"))
+      .select(col("doc_id"), simhash(TextStats.tokens(col("text"))).as("simhash60"))
     assert(fast.except(slow).count() == 0 && slow.except(fast).count() == 0)
   }
 

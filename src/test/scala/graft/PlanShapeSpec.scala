@@ -754,10 +754,8 @@ class PlanShapeSpec extends AnyFunSuite {
       "ioc_first_seen" -> 0, "ioc_source_reliability" -> 1,
       "ioc_confirmation_lag" -> 1, "ioc_feed_overlap" -> 1,
       "ioc_ttl_status" -> 1, "ioc_sightings" -> 0,
-      // memoized shingle/signature index consumers: index scan + own aggs
-      "dedup_lsh_precision" -> 1, "dedup_minhash_est" -> 1,
-      "dedup_shingle_df_hist" -> 2, "text_trigrams" -> 2,
-      "docs_vocab_growth" -> 2, "text_boilerplate" -> 3,
+      // memoized shingle index consumers: index scan + own aggs
+      "text_trigrams" -> 2, "docs_vocab_growth" -> 2, "text_boilerplate" -> 3,
       // aggregation/sketch family
       "agg_percentiles" -> 1, "agg_percentile_hist" -> 3,
       "agg_sketch_merge" -> 2, "agg_stats" -> 2, "grouping_sets" -> 1,
@@ -783,15 +781,25 @@ class PlanShapeSpec extends AnyFunSuite {
       // index inventories and per-dimension / per-label statistics
       "sim_ivf_cells" -> 1, "sim_ivf_balance" -> 2, "sim_sq_int8" -> 2,
       "sim_dim_variance" -> 1, "sim_centroid_shift" -> 2,
-      "embed_kmeans" -> 2, "embed_label_centroids" -> 1, "embed_norm_stats" -> 1)
+      "embed_kmeans" -> 2, "embed_label_centroids" -> 1, "embed_norm_stats" -> 1,
+      // every dedup_* query, pinned the same way (the capped-bucket, bucket-
+      // pair, within-cell cosine and scored-pair kernels are shared).
+      // Readers of the memoized pair, score and label relations plan none
+      // or only their own aggregations.
+      "dedup_minhash_lsh" -> 0, "dedup_clusters" -> 0, "dedup_minhash_est" -> 0,
+      "dedup_lsh_precision" -> 0, "dedup_cluster_stats" -> 2, "dedup_keep" -> 3,
+      "dedup_soft_weights" -> 1, "dedup_bucket_overflow" -> 2, "dedup_incremental" -> 2,
+      "dedup_simhash" -> 2, "dedup_ngram_jaccard" -> 2, "dedup_shingle_df_hist" -> 2,
+      "dedup_embedding_cosine" -> 2, "dedup_semdedup" -> 4,
+      "dedup_exact" -> 1, "dedup_levenshtein" -> 0, "dedup_substring" -> 2)
     val over = budgets.flatMap { case (q, max) =>
       val n = "Exchange hashpartitioning".r.findAllIn(plan(q)).size
       if (n > max) Some(s"$q: $n exchanges (budget $max)") else None
     }
     assert(over.isEmpty, s"exchange budgets exceeded:\n  ${over.mkString("\n  ")}")
     val unpinned = SparkEntry.queries.keys.toSeq.sorted
-      .filter(q => (q.startsWith("sim_") || q.startsWith("embed_")) && !budgets.exists(_._1 == q))
-    assert(unpinned.isEmpty, s"similarity queries without an exchange budget: $unpinned")
+      .filter(q => Seq("sim_", "embed_", "dedup_").exists(q.startsWith) && !budgets.exists(_._1 == q))
+    assert(unpinned.isEmpty, s"similarity or dedup queries without an exchange budget: $unpinned")
   }
 
   test("whole-inventory sweep: no cartesian, no partitionless Window in any plan") {

@@ -44,7 +44,7 @@ class ReformulationSpec extends AnyFunSuite {
 
   test("minhash in-array bucket pairs equal the banded self-join") {
     val fast = Dedup.queries("dedup_minhash_lsh")(spark, d)
-    val sh = Dedup.shingleRows(Tables.documents(spark, d))
+    val sh = OperatorsSpec.shingleRows(Tables.documents(spark, d))
     val sig = sh.groupBy(col("doc_id")).agg(
       min(Dedup.mhash(0, Dedup.mhashH1(col("shingle")), Dedup.mhashH2(col("shingle")))).as("m0"),
       (1 until Dedup.K).map(j =>
@@ -61,10 +61,30 @@ class ReformulationSpec extends AnyFunSuite {
     assertSameRows(fast, naive)
   }
 
+  test("bucket pairs: the index-explode kernel equals the nested transform on 0..70-member arrays") {
+    // sorted distinct ids, bucket b drawing from [b·1000, b·1000+1000) so a
+    // pair names its bucket; sizes cover the empty and singleton guards and
+    // both sides of MaxBucketSize (64)
+    val rnd = new scala.util.Random(12)
+    val sizes = Seq(0, 1, 2, 3, 63, 64, 65, 70) ++ Seq.fill(40)(rnd.nextInt(71))
+    val arrays = sizes.zipWithIndex.map { case (m, b) =>
+      rnd.shuffle((0 until 1000).toList).take(m).sorted.map(i => b * 1000L + i)
+    }
+    import spark.implicits._
+    val buckets = arrays.toDF("ms")
+    val fast = Dedup.memberPairs(buckets)
+    val nested = buckets.select(explode(flatten(transform(col("ms"), (x, i) =>
+        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
+          y => struct(x.as("x"), y.as("y")))))).as("p"))
+      .select(col("p.x").as("x"), col("p.y").as("y"))
+    assert(fast.count() == sizes.map(m => m.toLong * (m - 1) / 2).sum)
+    assertSameRows(fast, nested)
+  }
+
   test("postings-list Jaccard equals the inverted-index self-join") {
     val fast = Dedup.queries("dedup_ngram_jaccard")(spark, d)
     val dfw = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
-    val all = Dedup.shingleRows(Tables.documents(spark, d))
+    val all = OperatorsSpec.shingleRows(Tables.documents(spark, d))
     val sizes = all.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val capped = all.withColumn("df", count(lit(1)).over(dfw))
       .filter(col("df") <= Dedup.MaxShingleDf).drop("df")
@@ -109,7 +129,7 @@ class ReformulationSpec extends AnyFunSuite {
     // simhash, converted to the integer form — cross-checks the 60-aggregate
     // integer formulation AND the banding in one shot
     val fp = Tables.documents(spark, d).select(col("doc_id"),
-      conv(graft.functions.TextStats.simhash(
+      conv(OperatorsSpec.simhash(
         graft.functions.TextStats.tokens(col("text"))), 2, 10).cast("long").as("sh"))
     val a = fp.select(col("doc_id").as("id1"), col("sh").as("sh1"))
     val b = fp.select(col("doc_id").as("id2"), col("sh").as("sh2"))

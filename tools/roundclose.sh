@@ -78,6 +78,12 @@ sbt -batch "runMain graft.PlanTool table" 2>/dev/null \
 mv /tmp/roundclose_plans.md PLANS.md
 git diff --stat PLANS.md
 
+echo "== 9/10 src/main size (ROADMAP aim 2 tracks it every round)"
+# code lines exclude blank, // and scaladoc lines — the count the
+# simplicity targets are stated in (verify skill)
+echo "src/main lines: $(find src/main -name '*.scala' -exec cat {} + | wc -l)" \
+  "code lines: $(find src/main -name '*.scala' -exec cat {} + | grep -cvE '^\s*($|//|\*|/\*)')"
+
 if [ "${ROUNDCLOSE_SF1_GATE:-0}" = 1 ]; then
   echo "== 10/10 (opt-in) full oracle gate at the 10x corpus"
   sbt -batch "runMain graft.Verify target/sf1 /tmp/verify_sf1_full"
