@@ -1,5 +1,8 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -7,9 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Runs a shuffle-heavy query twice on a multi-process master
   * (`local-cluster[2,8,8192]` — two separate executor JVMs): once clean to
-  * record the expected result, once with a saboteur thread that SIGKILLs
-  * one executor JVM while the query has tasks in flight. The lost
-  * executor's shuffle map outputs disappear with it, so the re-run
+  * record the expected result, once with a saboteur ([[killExecutor]])
+  * that SIGKILLs one executor JVM while the query has tasks in flight. The
+  * lost executor's shuffle map outputs disappear with it, so the re-run
   * exercises the real recovery path — FetchFailed → DAGScheduler stage
   * resubmission → recompute on the surviving executor while the Worker
   * relaunches a replacement — and the order-independent result hash must
@@ -21,11 +24,10 @@ import org.apache.spark.sql.functions._
   * non-recomputable; in production those are persisted tables (the
   * scaladoc contract), and a lost executor re-reads them from storage.
   *
-  * The saboteur polls the status tracker until BOTH executors report
-  * active tasks, so the kill provably lands mid-shuffle, then SIGKILLs the
-  * oldest CoarseGrainedExecutorBackend process (`pkill -o`). The run
-  * aborts (exit 2) if the kill could not be confirmed — a fault test whose
-  * fault silently failed to inject must not read as a pass.
+  * The run aborts (exit 2) if the kill could not be confirmed — a fault
+  * test whose fault silently failed to inject must not read as a pass.
+  * [[FaultInjectStream]] is the streaming twin and shares [[digest]] and
+  * [[killExecutor]].
   *
   * Usage:
   *   sbt -batch package
@@ -35,17 +37,54 @@ import org.apache.spark.sql.functions._
 object FaultInject {
 
   /** Order-independent content digest + row count: decimal(38) sum of
-    * per-row xxhash64 over every column (wide enough that 10^9 longs
-    * cannot overflow — ANSI mode aborts a plain long sum) plus the xor
-    * fold, so task/partition order cannot affect either. */
-  private def digest(df: DataFrame): (String, Long, Long) = {
-    val cols = df.columns.map(col)
-    val r = df.select(xxhash64(cols: _*).as("h"))
+    * per-row xxhash64 over every column in name order (wide enough that
+    * 10^9 longs cannot overflow — ANSI mode aborts a plain long sum) plus
+    * the xor fold, so neither task/partition order nor column order can
+    * affect it. */
+  private[graft] def digest(df: DataFrame): (String, Long, Long) = {
+    val r = df.select(xxhash64(df.columns.sorted.map(col): _*).as("h"))
       .agg(sum(col("h").cast("decimal(38,0)")).as("s"),
         expr("bit_xor(h)").as("x"), count(lit(1)).as("c"))
       .collect()(0)
     (if (r.isNullAt(0)) "0" else r.getDecimal(0).toPlainString,
       if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
+  }
+
+  /** Tasks running right now, over every active stage. */
+  private[graft] def activeTasks(sc: SparkContext): Int =
+    sc.statusTracker.getActiveStageIds
+      .map(id => sc.statusTracker.getStageInfo(id).map(_.numActiveTasks).getOrElse(0)).sum
+
+  /** The saboteur: polls `ready` for up to `waitSec`, then SIGKILLs the
+    * oldest executor JVM (`pkill -o` on CoarseGrainedExecutorBackend).
+    * Confirmation is two-sided: pkill must match a process AND the driver's
+    * status tracker must register the executor loss within 60 s. The
+    * future yields None on a confirmed kill, else why the run is
+    * inconclusive; every wait in it is bounded, so it always completes. */
+  private[graft] def killExecutor(sc: SparkContext, waitSec: Int)(ready: => Boolean)
+      : Future[Option[String]] = {
+    val before = sc.statusTracker.getExecutorInfos.length // incl. driver
+    Future {
+      try {
+        val deadline = System.nanoTime() + waitSec * 1000000000L
+        var ok = ready
+        while (!ok && System.nanoTime() < deadline) { Thread.sleep(20); ok = ready }
+        if (!ok) Some(s"saboteur never saw the ready condition within ${waitSec}s")
+        else {
+          val rc = new ProcessBuilder("pkill", "-o", "-9", "-f",
+            "CoarseGrainedExecutorBackend").inheritIO().start().waitFor()
+          if (rc != 0) Some(s"pkill exit $rc (no executor process matched)")
+          else {
+            // executor death is asynchronous from the driver's view
+            val lossDeadline = System.nanoTime() + 60L * 1000000000L
+            while (sc.statusTracker.getExecutorInfos.length >= before &&
+                   System.nanoTime() < lossDeadline) Thread.sleep(100)
+            if (sc.statusTracker.getExecutorInfos.length < before) None
+            else Some("driver never observed the executor loss")
+          }
+        }
+      } catch { case e: Throwable => Some(e.toString) }
+    }(ExecutionContext.global)
   }
 
   def main(args: Array[String]): Unit = {
@@ -66,50 +105,18 @@ object FaultInject {
       val expected = digest(fn(spark, sfDir))
       println(s"[fault] $name clean run: hash=${expected._1} rows=${expected._3}")
 
-      // saboteur: wait until tasks are genuinely in flight, then SIGKILL
-      // one executor JVM. Confirmation is two-sided: pkill must match a
-      // process AND the driver must observe the executor count drop.
-      @volatile var killed = false
-      @volatile var killErr: String = null
-      val before = sc.statusTracker.getExecutorInfos.length // incl. driver
-      val saboteur = new Thread(() => {
-        try {
-          val deadline = System.nanoTime() + 120L * 1000000000L
-          var active = 0
-          while (active == 0 && System.nanoTime() < deadline) {
-            active = sc.statusTracker.getActiveStageIds
-              .map(id => sc.statusTracker.getStageInfo(id)
-                .map(_.numActiveTasks).getOrElse(0)).sum
-            if (active == 0) Thread.sleep(50)
-          }
-          if (active == 0) killErr = "no active tasks within 120s"
-          else {
-            val rc = new ProcessBuilder("pkill", "-o", "-9", "-f",
-              "CoarseGrainedExecutorBackend").inheritIO().start().waitFor()
-            if (rc != 0) killErr = s"pkill exit $rc (no executor process matched)"
-            else {
-              // executor death is asynchronous from the driver's view; wait
-              // for the tracker to register the loss so the pass is
-              // evidence-backed
-              val lossDeadline = System.nanoTime() + 60L * 1000000000L
-              while (sc.statusTracker.getExecutorInfos.length >= before &&
-                     System.nanoTime() < lossDeadline) Thread.sleep(100)
-              killed = true
-            }
-          }
-        } catch { case e: Throwable => killErr = e.toString }
-      }, s"saboteur-$name")
-      saboteur.start()
+      val before = sc.statusTracker.getExecutorInfos.length
+      val kill = killExecutor(sc, 120)(activeTasks(sc) > 0)
       val got = digest(fn(spark, sfDir))
-      saboteur.join(130000)
-      if (!killed) {
-        System.err.println(s"[fault] $name: kill NOT confirmed (${Option(killErr).getOrElse("timeout")}) — run is inconclusive")
-        failures += 1
-      } else if (got != expected) {
-        System.err.println(s"[fault] $name: MISMATCH after executor loss: got hash=${got._1} rows=${got._3}")
-        failures += 1
-      } else {
-        println(s"[fault] $name OK: executor SIGKILLed mid-query, result hash-matches clean run (hash=${got._1} rows=${got._3})")
+      Await.result(kill, Duration.Inf) match {
+        case Some(err) =>
+          System.err.println(s"[fault] $name: kill NOT confirmed ($err) — run is inconclusive")
+          failures += 1
+        case None if got != expected =>
+          System.err.println(s"[fault] $name: MISMATCH after executor loss: got hash=${got._1} rows=${got._3}")
+          failures += 1
+        case None =>
+          println(s"[fault] $name OK: executor SIGKILLed mid-query, result hash-matches clean run (hash=${got._1} rows=${got._3})")
       }
       // let the worker finish relaunching the replacement executor before
       // the next query's clean run, so each round starts from full strength

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.sinks.{RestBatchSink, Transport}
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.sinks.Transport
 import graft.streaming.TweetStream
 
 /** KV-store stand-in for fault testing: every POST payload lands as its own
@@ -36,21 +37,22 @@ final class KvFileTransport(dir: String) extends Transport {
   * top task — [[FaultInject]] covers batch queries only).
   *
   * Scenario: ReplayJsonlSource (DSv2 micro-batch, admission-controlled) →
-  * TweetPipeline extraction → foreachBatch [[RestBatchSink]] `keyed = true`
+  * [[TweetStream.start]] (extraction → keyed RestBatchSink per micro-batch)
   * into a [[KvFileTransport]], under `local-cluster[2,8,8192]` (two separate
-  * executor JVMs). The query runs twice: once clean to record the expected
-  * KV end state, once with a saboteur that waits until the query is
-  * provably MID-STREAM (≥1 micro-batch committed AND tasks actively
-  * running) and then SIGKILLs one executor JVM. The in-flight batch's tasks
-  * retry on the survivor while the Worker relaunches a replacement; the
+  * executor JVMs) — the product's one stream job, not a copy of it. The
+  * query runs twice: once clean to record the expected KV end state, once
+  * with a saboteur that waits until the query is provably MID-STREAM (≥1
+  * micro-batch committed AND tasks actively running) and then SIGKILLs one
+  * executor JVM. The in-flight batch's tasks retry on the survivor while
+  * the Worker relaunches a replacement; the
   * sink sees at-least-once delivery (partial posts from the dead executor's
   * completed tasks persist on disk, their retried twins post again), and
   * the keyed upsert must fold all of it to a KV end state byte-identical to
   * the clean run's.
   *
-  * Pass requires ALL of: two-sided kill confirmation (pkill matched AND the
-  * driver's status tracker registered the executor loss — an uninjected
-  * fault must not read as a pass, same contract as [[FaultInject]]);
+  * Pass requires ALL of: two-sided kill confirmation
+  * ([[FaultInject.killExecutor]] — an uninjected fault must not read as a
+  * pass);
   * the kill landed before the final micro-batch committed (so recovery, not
   * an after-the-fact kill, is what's being graded); the stream then ran to
   * completion; and the folded KV states digest-identical. Inconclusive or
@@ -68,26 +70,15 @@ final class KvFileTransport(dir: String) extends Transport {
   */
 object FaultInjectStream {
 
-  /** Same order-independent digest as [[FaultInject.digest]]: decimal(38)
-    * sum + xor-fold of per-row xxhash64, over the KV end state (records
-    * deduped by `_key`; `_key` is md5 of the full row, so distinct-by-key
-    * IS distinct-by-record up to md5 collision). */
-  private[graft] def kvDigest(spark: SparkSession, dir: String): (String, Long, Long) = {
-    val posts = spark.read.json(dir + "/*.json") // one JSON array per file → one row per record
-    val kv = posts.dropDuplicates("_key")
-    val cols = kv.columns.sorted.map(col)
-    val r = kv.select(xxhash64(cols: _*).as("h"))
-      .agg(sum(col("h").cast("decimal(38,0)")).as("s"),
-        expr("bit_xor(h)").as("x"), count(lit(1)).as("c"))
-      .collect()(0)
-    (if (r.isNullAt(0)) "0" else r.getDecimal(0).toPlainString,
-      if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
-  }
+  /** The KV end state of a [[KvFileTransport]] directory: every posted
+    * record folded by `_key` (md5 of the full row, so distinct-by-key IS
+    * distinct-by-record up to md5 collision), ready for
+    * [[FaultInject.digest]]. */
+  private[graft] def kvState(spark: SparkSession, dir: String): DataFrame =
+    spark.read.json(dir + "/*.json") // one JSON array per file → one row per record
+      .dropDuplicates("_key")
 
-  private def freshDir(name: String): String = {
-    val p = Files.createTempDirectory(name)
-    p.toString
-  }
+  private def freshDir(name: String): String = Files.createTempDirectory(name).toString
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(300000)
@@ -106,99 +97,45 @@ object FaultInjectStream {
     Files.createDirectories(file.getParent)
     StreamBench.corpus(file, n)
 
-    def runStream(kvDir: String): Long = {
-      val ckpt = freshDir("faultstream_ckpt")
-      val transport = new KvFileTransport(kvDir)
-      val raw = spark.readStream
-        .format("graft.streaming.ReplayJsonlSource")
-        .option("path", file.toString)
-        .option("maxPerBatch", maxPerBatch)
-        .load()
-      val q = TweetStream.iocStream(raw).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          RestBatchSink.write(batch, "https://kv.example/batch_save", transport,
-            keyed = true)
-        }
-        .start()
-      q.awaitTermination()
+    def run(kvDir: String): StreamingQuery =
+      TweetStream.start(StreamBench.replay(spark, file, maxPerBatch),
+        "https://kv.example/batch_save", new KvFileTransport(kvDir),
+        freshDir("faultstream_ckpt"))
+    def finalBatch(q: StreamingQuery): Long =
       Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-    }
 
     // ---- clean run: expected KV end state
     val cleanDir = freshDir("faultstream_kv_clean")
-    val cleanFinalBatch = runStream(cleanDir)
-    val expected = kvDigest(spark, cleanDir)
-    println(s"[fault-stream] clean run: batches=${cleanFinalBatch + 1} " +
+    val clean = run(cleanDir)
+    clean.awaitTermination()
+    val expected = FaultInject.digest(kvState(spark, cleanDir))
+    println(s"[fault-stream] clean run: batches=${finalBatch(clean) + 1} " +
       s"kvHash=${expected._1} kvRows=${expected._3}")
 
-    // ---- fault run: SIGKILL one executor mid micro-batch
-    @volatile var killed = false
-    @volatile var killErr: String = null
-    @volatile var killBatch = -2L // lastProgress.batchId observed at kill time
-    val before = sc.statusTracker.getExecutorInfos.length // incl. driver
+    // ---- fault run: SIGKILL one executor mid micro-batch, once the query
+    // is provably mid-stream: at least one batch committed (so recovery has
+    // committed state behind it) AND tasks in flight right now (so the kill
+    // lands inside a micro-batch)
     val faultDir = freshDir("faultstream_kv_fault")
-    val ckpt = freshDir("faultstream_ckpt")
-    val transport = new KvFileTransport(faultDir)
-    val raw = spark.readStream
-      .format("graft.streaming.ReplayJsonlSource")
-      .option("path", file.toString)
-      .option("maxPerBatch", maxPerBatch)
-      .load()
-    val q = TweetStream.iocStream(raw).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        RestBatchSink.write(batch, "https://kv.example/batch_save", transport,
-          keyed = true)
-      }
-      .start()
-
-    val saboteur = new Thread(() => {
-      try {
-        // wait until the query is provably mid-stream: at least one batch
-        // committed (so recovery has committed state behind it) AND tasks
-        // in flight right now (so the kill lands inside a micro-batch)
-        val deadline = System.nanoTime() + 180L * 1000000000L
-        var ready = false
-        while (!ready && System.nanoTime() < deadline) {
-          val committed = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-          val active = sc.statusTracker.getActiveStageIds
-            .map(id => sc.statusTracker.getStageInfo(id)
-              .map(_.numActiveTasks).getOrElse(0)).sum
-          if (committed >= 1 && active > 0) { ready = true; killBatch = committed }
-          else Thread.sleep(20)
-        }
-        if (!ready) killErr = "stream never mid-batch with a prior commit within 180s"
-        else {
-          val rc = new ProcessBuilder("pkill", "-o", "-9", "-f",
-            "CoarseGrainedExecutorBackend").inheritIO().start().waitFor()
-          if (rc != 0) killErr = s"pkill exit $rc (no executor process matched)"
-          else {
-            val lossDeadline = System.nanoTime() + 60L * 1000000000L
-            while (sc.statusTracker.getExecutorInfos.length >= before &&
-                   System.nanoTime() < lossDeadline) Thread.sleep(100)
-            killed = sc.statusTracker.getExecutorInfos.length < before
-            if (!killed) killErr = "driver never observed the executor loss"
-          }
-        }
-      } catch { case e: Throwable => killErr = e.toString }
-    }, "saboteur-stream")
-    saboteur.start()
+    val q = run(faultDir)
+    @volatile var killBatch = -2L // lastProgress.batchId observed at kill time
+    val kill = FaultInject.killExecutor(sc, 180) {
+      val committed = finalBatch(q)
+      val ready = committed >= 1 && FaultInject.activeTasks(sc) > 0
+      if (ready) killBatch = committed
+      ready
+    }
     q.awaitTermination()
-    saboteur.join(190000)
-    val faultFinalBatch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+    val killErr = Await.result(kill, Duration.Inf)
+    val faultFinalBatch = finalBatch(q)
 
     var fail: String = null
-    if (!killed)
-      fail = s"kill NOT confirmed (${Option(killErr).getOrElse("timeout")}) — inconclusive"
+    if (killErr.isDefined)
+      fail = s"kill NOT confirmed (${killErr.get}) — inconclusive"
     else if (killBatch >= faultFinalBatch)
       fail = s"kill landed at/after the final batch (killBatch=$killBatch, final=$faultFinalBatch) — recovery not exercised"
     else {
-      val got = kvDigest(spark, faultDir)
+      val got = FaultInject.digest(kvState(spark, faultDir))
       val posts = Files.list(Paths.get(faultDir)).count()
       val cleanPosts = Files.list(Paths.get(cleanDir)).count()
       if (got != expected)

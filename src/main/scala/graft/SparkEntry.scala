@@ -40,8 +40,8 @@ object SparkEntry {
     * ioc_unified / ioc_first_seen query the materialized table. The
     * per-feed costs stay measured by ioc_email_etl / ioc_tweet_etl.
     *
-    * Layout: clustered on (type, ioc) into `spark.sql.shuffle.partitions`
-    * partitions and DECLARED so ([[storeLayout]]) — the bucketed store.
+    * Layout: clustered on (type, ioc) into the session's shuffle partition
+    * count and DECLARED so ([[storeLayout]]) — the bucketed store.
     * The one exchange is paid once at build time, like a snapshot writer
     * bucketing its output; it also keeps the regex union from leaving the
     * checkpoint input-split-bound (a single-file input gave 1-2
@@ -87,8 +87,8 @@ object SparkEntry {
   /** The IOC store's one physical layout: hash-clustered on (type, ioc)
     * into the session's shuffle partition count, checkpointed, and
     * declared to the planner ([[ColumnBridge.hashClusteredCheckpoint]]). */
-  private def storeLayout(df: DataFrame): DataFrame = ColumnBridge.hashClusteredCheckpoint(df,
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, "type", "ioc")
+  private def storeLayout(df: DataFrame): DataFrame =
+    ColumnBridge.hashClusteredCheckpoint(df, "type", "ioc")
 
   /** Parity queries over the reference's own surface (SURVEY.md §2.1-§2.4). */
   private val parity: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
-import graft.sinks.{RestBatchSink, Transport}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sinks.Transport
 import graft.streaming.TweetStream
 
 /** Discard transport for throughput measurement: the sink still pays full
@@ -33,8 +32,8 @@ object CountingTransport {
   * through the full streaming path —
   *
   *   ReplayJsonlSource (DSv2 micro-batch, admission-controlled)
-  *     → TweetPipeline.flatten/extract (the batch-identical IOC core)
-  *     → foreachBatch RestBatchSink.write(keyed = true)
+  *     → [[TweetStream.start]]: TweetPipeline.flatten/extract (the
+  *       batch-identical IOC core) → foreachBatch RestBatchSink.write(keyed = true)
   *
   * The admission-rate knob is `maxPerBatch` (ReadLimit.maxRows on the
   * source — SPARK_GRAFT_STREAM_BATCH, default 50k): it is the ONLY
@@ -45,8 +44,9 @@ object CountingTransport {
   * count), and `rps_wall` divides by last-batch-end minus first-batch-start
   * (includes trigger scheduling gaps — what an operator actually observes).
   *
-  * Exactly-once is proven elsewhere (TweetStreamSpec, ReplaySourceSpec);
-  * this main measures only throughput.
+  * Exactly-once is proven elsewhere (TweetStreamSpec, ReplaySourceSpec,
+  * FaultInjectStream); this main measures only throughput. Per-layer
+  * attribution (source, extract, enrich, sink) is perfbench's `--trace 1`.
   *
   * Usage: sbt "runMain graft.StreamBench [nRecords]"  (default 1,000,000)
   */
@@ -88,6 +88,15 @@ object StreamBench {
     } finally w.close()
   }
 
+  /** The corpus replayed as a stream, `maxPerBatch` lines per micro-batch. */
+  private[graft] def replay(spark: SparkSession, path: java.nio.file.Path,
+                            maxPerBatch: Int): DataFrame =
+    spark.readStream
+      .format("graft.streaming.ReplayJsonlSource")
+      .option("path", path.toString)
+      .option("maxPerBatch", maxPerBatch)
+      .load()
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val maxPerBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "50000").toInt
@@ -102,38 +111,9 @@ object StreamBench {
     val warmDf = spark.read.text(file.toString).limit(1000).toDF("value")
     TweetStream.iocStream(warmDf).write.format("noop").mode("overwrite").save()
 
-    val ckpt = Files.createTempDirectory("streambench_ckpt").toString
-    val raw = spark.readStream
-      .format("graft.streaming.ReplayJsonlSource")
-      .option("path", file.toString)
-      .option("maxPerBatch", maxPerBatch)
-      .load()
-    val transport = new CountingTransport
-    // Stage-decomposition knob (SPARK_GRAFT_STREAM_MODE) for naming the
-    // bottleneck at the throughput knee (r11 verdict task 6) — the three
-    // modes differ only in how much of the path each batch executes, so
-    // pairwise deltas at the same batch size attribute the cost:
-    //   "source"  — replay only (batch.count over raw lines): the source
-    //               read + admission floor;
-    //   "extract" — replay + flatten/extract, discarded by a noop-style
-    //               count: adds the JSON-parse + regex extraction cost;
-    //   "full"    — the default: extract + RestBatchSink keyed serialization
-    //               (row→JSON, md5 _key, 1000-record chunk framing) into the
-    //               discard transport: adds the sink-serialization cost.
-    val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "full")
-    val streamed = if (mode == "source") raw else TweetStream.iocStream(raw)
     val t0 = System.nanoTime()
-    val q = streamed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (mode == "full")
-          RestBatchSink.write(batch, "https://kv.example/batch_save", transport,
-            keyed = true)
-        else batch.write.format("noop").mode("overwrite").save()
-      }
-      .start()
+    val q = TweetStream.start(replay(spark, file, maxPerBatch), "https://kv.example/batch_save",
+      new CountingTransport, Files.createTempDirectory("streambench_ckpt").toString)
     q.awaitTermination()
     val wallSec = (System.nanoTime() - t0) / 1e9
 
@@ -161,6 +141,6 @@ object StreamBench {
     // outlier batch on a bursty container swamped rps_busy over a 5-batch
     // run and made A/B deltas unreadable; the vector attributes it)
     println(
-      s"""{"metric":"stream_throughput","mode":"$mode","records":$rows,"max_per_batch":$maxPerBatch,"batches":$batches,"rps_busy":${fmt(rows / busySec)},"rps_wall":${fmt(rows / wallSec)},"batch_ms_p50":${pct(0.5)},"batch_ms_p99":${pct(0.99)},"batch_ms_all":${execMs.mkString("[", ",", "]")},"busy_sec":${fmt(busySec)},"wall_sec":${fmt(wallSec)},"sink_posts":${CountingTransport.posts.get()},"sink_bytes":${CountingTransport.bytes.get()},"window_truncated":$truncated}""")
+      s"""{"metric":"stream_throughput","records":$rows,"max_per_batch":$maxPerBatch,"batches":$batches,"rps_busy":${fmt(rows / busySec)},"rps_wall":${fmt(rows / wallSec)},"batch_ms_p50":${pct(0.5)},"batch_ms_p99":${pct(0.99)},"batch_ms_all":${execMs.mkString("[", ",", "]")},"busy_sec":${fmt(busySec)},"wall_sec":${fmt(wallSec)},"sink_posts":${CountingTransport.posts.get()},"sink_bytes":${CountingTransport.bytes.get()},"window_truncated":$truncated}""")
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -9,38 +10,42 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Custom Catalyst expressions for the vector-similarity hot path.
   *
-  * The declarative formulation (`aggregate(zip_with(a,b,*),0,+)`) is correct
-  * but Spark evaluates higher-order functions interpreted — per-element
-  * lambda dispatch dominated the similarity benchmark. [[ArrayDot]] is the
-  * same left-to-right IEEE double summation as the HOF fold (so results stay
-  * bit-identical with the DuckDB oracle's `list_sum`) compiled to a tight
-  * loop via `doGenCode` — preference order (b) of SURVEY.md §7.3: a native
-  * codegen Expression, not a UDF.
+  * The declarative formulation (`aggregate(zip_with(a,b,f),0,+)`) is
+  * correct but Spark evaluates higher-order functions interpreted —
+  * per-element lambda dispatch dominated the similarity benchmark. A
+  * [[VectorFold]] is the same left-to-right IEEE double summation of a
+  * per-element term as the HOF fold (so results stay bit-identical with
+  * the DuckDB oracle's `list_sum`) compiled to a tight loop via
+  * `doGenCode` — preference order (b) of SURVEY.md §7.3: a native codegen
+  * Expression, not a UDF.
   *
-  * Arrays must be same-length float or double vectors; evaluation uses the
-  * minimum length (embedding columns are fixed-width).
+  * Arrays must be float or double vectors; each element is widened to
+  * double before the term, and evaluation uses the minimum length
+  * (embedding columns are fixed-width).
   */
-case class ArrayDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+abstract class VectorFold extends BinaryExpression {
+
+  /** The per-element term over the widened pair, accumulated in order. */
+  protected def term(x: Double, y: Double): Double
+
+  /** [[term]] as a Java expression over two double locals. */
+  protected def termCode(x: String, y: String): String
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "array_dot"
 
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType) = dt match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
       case _ => false
     }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"array_dot requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<float|double> inputs, got " +
+        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
@@ -53,7 +58,7 @@ case class ArrayDot(left: Expression, right: Expression)
     while (i < n) {
       val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
       val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      s += x * y
+      s += term(x, y)
       i += 1
     }
     s
@@ -64,87 +69,40 @@ case class ArrayDot(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
       def get(arr: String, float: Boolean) =
         if (float) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ${get(a, elemIsFloat(left))} * ${get(b, elemIsFloat(right))};
+         |  double $x = ${get(a, elemIsFloat(left))};
+         |  double $y = ${get(b, elemIsFloat(right))};
+         |  $s += ${termCode(x, y)};
          |}
          |${ev.value} = $s;
        """.stripMargin
     })
+}
 
+/** Dot product Σaᵢbᵢ — the cosine/IVF hot path. */
+case class ArrayDot(left: Expression, right: Expression) extends VectorFold {
+  override def prettyName: String = "array_dot"
+  protected def term(x: Double, y: Double): Double = x * y
+  protected def termCode(x: String, y: String): String = s"$x * $y"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** Squared L2 distance Σ(aᵢ−bᵢ)² — the PQ-encode/ADC hot path. Identical
-  * arithmetic and order to the HOF fold it replaces
-  * (`aggregate(zip_with(a,b,(x,y)=>(x−y)²),0,+)`): widen, subtract, square,
-  * accumulate left-to-right — so DuckDB's ordered `list_sum` oracle stays
-  * bit-identical. */
-case class ArrayL2(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
+/** Squared L2 distance Σ(aᵢ−bᵢ)² — the PQ-encode/ADC hot path: widen,
+  * subtract, square, accumulate, like the HOF fold
+  * `aggregate(zip_with(a,b,(x,y)=>(x−y)²),0,+)` it replaces. */
+case class ArrayL2(left: Expression, right: Expression) extends VectorFold {
   override def prettyName: String = "array_l2"
-
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"array_l2 requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    val (lf, rf) = (elemIsFloat(left), elemIsFloat(right))
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val dd = ctx.freshName("d")
-      def get(arr: String, float: Boolean) =
-        if (float) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $dd = ${get(a, elemIsFloat(left))} - ${get(b, elemIsFloat(right))};
-         |  $s += $dd * $dd;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
+  protected def term(x: Double, y: Double): Double = { val d = x - y; d * d }
+  protected def termCode(x: String, y: String): String = s"($x - $y) * ($x - $y)"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

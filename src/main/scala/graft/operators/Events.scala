@@ -87,6 +87,23 @@ object Events {
           Relational.dsum(col("value")).as("monetary"))
         .localCheckpoint())
 
+  /** Gaps-and-islands sessionization, the one definition both session
+    * queries read: every event row plus `session_id`, the per-user running
+    * count of session starts, where a session starts at a user's first
+    * event or after a gap over [[gapMinutes]]. The lag and the running sum
+    * share one user-keyed window, so one exchange. */
+  private def sessionized(s: SparkSession, d: String): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    Tables.events(s, d)
+      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+      .withColumn("new_session",
+        (col("prev_ts").isNull ||
+          (unix_micros(col("ts")) - unix_micros(col("prev_ts")) >
+            lit(gapMinutes * 60 * 1000000L))).cast("int"))
+      .withColumn("session_id",
+        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // tumbling 1-hour windows per event type.
@@ -99,15 +116,7 @@ object Events {
 
     // sessionization with a 30-minute inactivity gap (gaps-and-islands).
     "events_sessionize" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_session",
-          (col("prev_ts").isNull ||
-            (unix_micros(col("ts")) - unix_micros(col("prev_ts")) >
-              lit(gapMinutes * 60 * 1000000L))).cast("int"))
-        .withColumn("session_id",
-          sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+      sessionized(s, d)
         .groupBy(col("user_id"), col("session_id"))
         .agg(
           min(col("ts")).as("session_start"),
@@ -180,20 +189,12 @@ object Events {
 
     // Daily bounce rate — the session-QUALITY metric on top of the
     // sessionize machinery: per day (of session start), the exact-ppm
-    // share of sessions with exactly one event. Same single user-keyed
-    // exchange as events_sessionize (the day roll-up that follows is
-    // |sessions|-sized), same 30-minute gap constant, so the two can
-    // never disagree about what a session is.
+    // share of sessions with exactly one event. The same [[sessionized]]
+    // chain as events_sessionize (the day roll-up that follows is
+    // |sessions|-sized), so the two can never disagree about what a
+    // session is.
     "events_bounce_rate" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val sess = Tables.events(s, d)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_session",
-          (col("prev_ts").isNull ||
-            (unix_micros(col("ts")) - unix_micros(col("prev_ts")) >
-              lit(gapMinutes * 60 * 1000000L))).cast("int"))
-        .withColumn("session_id",
-          sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+      val sess = sessionized(s, d)
         .groupBy(col("user_id"), col("session_id"))
         .agg(min(to_date(col("ts"))).as("day"), count(lit(1)).as("n_events"))
       sess.groupBy(col("day"))
@@ -791,6 +792,22 @@ object Events {
     })
   )
 
+  /** [[sessionized]] in DuckDB: the `marked` and `sessions` CTEs both
+    * session queries' oracles start from (no trailing comma; the caller
+    * appends its own CTEs or its SELECT). */
+  private val sessionsSql =
+    s"""WITH marked AS (
+       |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
+       |    CASE WHEN lag(ts) OVER w IS NULL
+       |           OR ts - lag(ts) OVER w > INTERVAL $gapMinutes MINUTE
+       |         THEN 1 ELSE 0 END AS new_session
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+       |sessions AS (
+       |  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id
+       |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+       |  FROM marked)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "events_stickiness" ->
       """WITH days AS (
@@ -832,24 +849,14 @@ object Events {
         |GROUP BY 1, 2
         |ORDER BY bucket, event_type""".stripMargin,
     "events_sessionize" ->
-      s"""WITH marked AS (
-         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR ts - lag(ts) OVER w > INTERVAL $gapMinutes MINUTE
-         |         THEN 1 ELSE 0 END AS new_session
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sessions AS (
-         |  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id
-         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-         |  FROM marked)
-         |SELECT user_id, session_id,
-         |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-         |  COUNT(*) AS n_events,
-         |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         |FROM sessions
-         |GROUP BY user_id, session_id
-         |ORDER BY user_id, session_id""".stripMargin,
+      (sessionsSql + """
+        |SELECT user_id, session_id,
+        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+        |FROM sessions
+        |GROUP BY user_id, session_id
+        |ORDER BY user_id, session_id""".stripMargin),
     "events_cov_value_hour" ->
       """WITH e AS (
         |  SELECT event_type,
@@ -885,27 +892,17 @@ object Events {
         |FROM b GROUP BY 1, 2
         |ORDER BY event_type, bucket""".stripMargin,
     "events_bounce_rate" ->
-      s"""WITH marked AS (
-         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR ts - lag(ts) OVER w > INTERVAL $gapMinutes MINUTE
-         |         THEN 1 ELSE 0 END AS new_session
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sessions AS (
-         |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-         |  FROM marked),
-         |sess AS (
-         |  SELECT user_id, session_id, MIN(CAST(ts AS DATE)) AS day,
-         |    COUNT(*) AS n_events
-         |  FROM sessions GROUP BY 1, 2)
-         |SELECT day, COUNT(*) AS n_sessions,
-         |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
-         |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) * 1000000 //
-         |    COUNT(*) AS BIGINT) AS bounce_ppm
-         |FROM sess GROUP BY day
-         |ORDER BY day""".stripMargin,
+      (sessionsSql + """,
+        |sess AS (
+        |  SELECT user_id, session_id, MIN(CAST(ts AS DATE)) AS day,
+        |    COUNT(*) AS n_events
+        |  FROM sessions GROUP BY 1, 2)
+        |SELECT day, COUNT(*) AS n_sessions,
+        |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounces,
+        |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) * 1000000 //
+        |    COUNT(*) AS BIGINT) AS bounce_ppm
+        |FROM sess GROUP BY day
+        |ORDER BY day""".stripMargin),
     "events_session_window" ->
       """WITH marked AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,

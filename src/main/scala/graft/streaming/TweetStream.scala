@@ -81,7 +81,11 @@ object TweetStream {
     * WITHIN an epoch collapse to one KV record under keying — the keyed
     * store's semantics; the unkeyed reference framing (one server-assigned
     * key per POST, duplicates preserved) remains available via
-    * RestBatchSink directly for the batch-parity path. */
+    * RestBatchSink directly for the batch-parity path.
+    *
+    * This is the one `writeStream` in `src/main` (SessionSpec pins it):
+    * StreamBench and FaultInjectStream drive this job, so their throughput
+    * and exactly-once-under-executor-loss results are this job's. */
   def start(raw: DataFrame, endpoint: String, transport: Transport,
             checkpointDir: String): StreamingQuery =
     iocStream(raw).writeStream

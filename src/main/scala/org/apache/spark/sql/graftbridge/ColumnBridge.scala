@@ -25,31 +25,31 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df` hash-partitioned on `keys` into `n` partitions, materialized by
-    * `localCheckpoint`, with that layout DECLARED on the checkpoint: its
-    * relation reports `HashPartitioning(keys, n)`, so every consumer
-    * clustered on a superset of `keys` (a groupBy, a window, a co-keyed
-    * join side) plans no exchange over it — a bucketed table.
+  /** `df` hash-partitioned on `keys` into the session's shuffle partition
+    * count n, materialized by `localCheckpoint`, with that layout DECLARED
+    * on the checkpoint: its relation reports `HashPartitioning(keys, n)`,
+    * so every consumer clustered on a superset of `keys` (a groupBy, a
+    * window, a co-keyed join side) plans no exchange over it — a bucketed
+    * table.
     *
     * Spark cannot see this on its own: under AQE `localCheckpoint` records
     * no output partitioning, even right after a hash repartition. The
     * repartition, the checkpoint and the declaration happen here together,
     * so a caller cannot declare a layout it did not build.
     *
-    * `n` must be the session's `spark.sql.shuffle.partitions`: it becomes
-    * the task count of every consumer that skips its exchange, and of the
-    * other side of a co-keyed join (the planner shuffles that side to `n`
-    * rather than re-shuffle this one), so it is pinned to the count those
-    * consumers would have shuffled to. The checkpoint must hold exactly
-    * `n` partitions (a repartition AQE may coalesce would break the
-    * partition id = pmod(hash(keys), n) contract). Either mismatch
-    * throws. The relation keeps its statistics and constraints, so join
-    * strategy choices over it are unchanged. */
-  def hashClusteredCheckpoint(df: DataFrame, n: Int, keys: String*): DataFrame = {
+    * n is `numShufflePartitions` (under AQE, the data-sized
+    * `initialPartitionNum`; else `spark.sql.shuffle.partitions`): it
+    * becomes the task count of every consumer that skips its exchange, and
+    * of the other side of a co-keyed join (the planner shuffles that side
+    * to n rather than re-shuffle this one), so it is the count those
+    * consumers would have shuffled to. The checkpoint must hold exactly n
+    * partitions (a repartition AQE may coalesce would break the partition
+    * id = pmod(hash(keys), n) contract), else this throws. The relation
+    * keeps its statistics and constraints, so join strategy choices over
+    * it are unchanged. */
+  def hashClusteredCheckpoint(df: DataFrame, keys: String*): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-    require(n == shufflePartitions,
-      s"declared partition count $n is not spark.sql.shuffle.partitions = $shufflePartitions")
+    val n = spark.sessionState.conf.numShufflePartitions
     val rel = df.repartition(n, keys.map(df.col): _*).localCheckpoint()
       .queryExecution.analyzed.asInstanceOf[LogicalRDD]
     val got = rel.rdd.getNumPartitions

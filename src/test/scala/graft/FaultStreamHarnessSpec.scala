@@ -18,6 +18,9 @@ class FaultStreamHarnessSpec extends AnyFunSuite {
     new KvFileTransport(dir).post("https://kv.example/batch_save",
       "[" + records.mkString(", ") + "]")
 
+  private def kvDigest(dir: String): (String, Long, Long) =
+    FaultInject.digest(FaultInjectStream.kvState(spark, dir))
+
   private def rec(k: String, ioc: String): String =
     s"""{"_key":"$k","ioc":"$ioc","type":"ip"}"""
 
@@ -34,8 +37,8 @@ class FaultStreamHarnessSpec extends AnyFunSuite {
     post(dup, records.take(30))
     post(dup, records.drop(30))
     post(dup, records)
-    assert(FaultInjectStream.kvDigest(spark, clean) ===
-      FaultInjectStream.kvDigest(spark, dup))
+    assert(kvDigest(clean) ===
+      kvDigest(dup))
   }
 
   test("a single divergent record changes the digest (the pass is not vacuous)") {
@@ -44,8 +47,8 @@ class FaultStreamHarnessSpec extends AnyFunSuite {
     val records = (1 to 20).map(i => rec(s"k$i", s"10.0.0.$i"))
     post(a, records)
     post(b, records.init :+ rec("k20", "10.0.0.99"))
-    val (da, db) = (FaultInjectStream.kvDigest(spark, a),
-      FaultInjectStream.kvDigest(spark, b))
+    val (da, db) = (kvDigest(a),
+      kvDigest(b))
     assert(da !== db)
     assert(da._3 === db._3) // same cardinality — the VALUES differ
   }
@@ -55,7 +58,7 @@ class FaultStreamHarnessSpec extends AnyFunSuite {
     val records = (1 to 10).map(i => rec(s"k$i", s"10.0.0.$i"))
     post(dir, records)
     post(dir, records.take(7)) // surplus
-    assert(FaultInjectStream.kvDigest(spark, dir)._3 === 10L)
+    assert(kvDigest(dir)._3 === 10L)
     // raw post files really do carry the surplus the fold absorbs
     val raw = spark.read.json(dir + "/*.json")
     assert(raw.count() === 17L)

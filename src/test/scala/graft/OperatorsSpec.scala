@@ -176,22 +176,25 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("array_l2 codegen expression equals the HOF fold, exact on known vectors") {
     import graft.functions.VectorExprs
+    // each codegen fold next to the HOF it replaces: (x, y) => term
+    val folds = Seq[(String, (Column, Column) => Column, (Column, Column) => Column)](
+      ("array_l2", VectorExprs.array_l2, (x, y) => {
+        val dd = x.cast("double") - y.cast("double"); dd * dd }),
+      ("array_dot", VectorExprs.array_dot, (x, y) => x.cast("double") * y.cast("double")))
+    def hof(t: (Column, Column) => Column): Column =
+      aggregate(zip_with(col("a"), col("b"), t), lit(0.0), (acc, v) => acc + v)
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(3.0f, 1.0f, 3.0f))).toDF("a", "b")
-    val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => {
-      val dd = x.cast("double") - y.cast("double"); dd * dd
-    }), lit(0.0), (acc, v) => acc + v)
-    val r = df.select(VectorExprs.array_l2(col("a"), col("b")).as("fast"), hof.as("ref")).head()
-    assert(r.getDouble(0) == 5.0 && r.getDouble(1) == 5.0)
     // corpus-wide bit-equality on real embeddings
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .limit(200).select(col("embedding").as("a"),
         reverse(col("embedding")).as("b"))
-    val diff = e.select(VectorExprs.array_l2(col("a"), col("b")).as("fast"),
-      aggregate(zip_with(col("a"), col("b"), (x, y) => {
-        val dd = x.cast("double") - y.cast("double"); dd * dd
-      }), lit(0.0), (acc, v) => acc + v).as("ref"))
-      .filter(col("fast") =!= col("ref")).count()
-    assert(diff == 0)
+    for (((name, fast, t), want) <- folds.zip(Seq(5.0, 14.0))) {
+      val r = df.select(fast(col("a"), col("b")).as("fast"), hof(t).as("ref")).head()
+      assert(r.getDouble(0) == want && r.getDouble(1) == want, name)
+      val diff = e.select(fast(col("a"), col("b")).as("fast"), hof(t).as("ref"))
+        .filter(col("fast") =!= col("ref")).count()
+      assert(diff == 0, name)
+    }
   }
 
   test("srp bucket literal-matrix fast path equals the md5-expression formulation") {
@@ -1145,51 +1148,50 @@ class OperatorsSpec extends AnyFunSuite {
     assert(merged.except(full).count() == 0 && full.except(merged).count() == 0)
   }
 
-  test("the IOC store's declared (type, ioc) layout is where every row sits") {
-    // unifiedFeed and iocSightings declare HashPartitioning((type, ioc), n)
-    // to the planner, which then drops the (type, ioc) exchange of every
-    // consumer — so each row must be in partition pmod(hash(type, ioc), n),
-    // exactly where a shuffle on that key would have put it, and that must
-    // be what the relation declares
+  /** Asserts `df` declares HashPartitioning((type, ioc), n) and that every
+    * row sits in partition pmod(hash(type, ioc), n), exactly where a
+    * shuffle on that key would have put it — the contract that lets the
+    * planner drop the (type, ioc) exchange of every consumer. */
+  private def assertDeclaredLayout(name: String, df: DataFrame, n: Int): Unit = {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.graftbridge.ColumnBridge
+    val declared = df.queryExecution.analyzed.asInstanceOf[LogicalRDD].outputPartitioning
+    val hp = declared match {
+      case h: HashPartitioning => h
+      case p => fail(s"$name declares $p, not a hash partitioning")
+    }
+    assert(hp.numPartitions == n && df.rdd.getNumPartitions == n, s"$name: $hp")
+    assert(hp.expressions.collect { case a: Attribute => a.name } == Seq("type", "ioc"),
+      s"$name: $hp")
+    val r = df.select(spark_partition_id().as("pid"),
+        pmod(hash(col("type"), col("ioc")), lit(n)).as("want"),
+        ColumnBridge.column(hp.partitionIdExpression).as("decl"))
+      .agg(count(lit(1)),
+        count(when(col("pid") =!= col("want") || col("pid") =!= col("decl"), true)),
+        countDistinct(col("pid")))
+      .head()
+    assert(r.getLong(0) > 0 && r.getLong(2) > 1, s"$name: vacuous layout check $r")
+    assert(r.getLong(1) == 0, s"$name: ${r.getLong(1)} rows outside their declared partition")
+  }
+
+  test("the IOC store's declared (type, ioc) layout is where every row sits") {
     val d = "/root/testdata/sf0.001"
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     for ((name, df) <- Seq("unified feed" -> SparkEntry.unifiedFeed(spark, d),
-                           "sighting index" -> SparkEntry.iocSightings(spark, d))) {
-      val declared = df.queryExecution.analyzed.asInstanceOf[LogicalRDD].outputPartitioning
-      val hp = declared match {
-        case h: HashPartitioning => h
-        case p => fail(s"$name declares $p, not a hash partitioning")
-      }
-      assert(hp.numPartitions == n && df.rdd.getNumPartitions == n, s"$name: $hp")
-      assert(hp.expressions.collect { case a: Attribute => a.name } == Seq("type", "ioc"),
-        s"$name: $hp")
-      val r = df.select(spark_partition_id().as("pid"),
-          pmod(hash(col("type"), col("ioc")), lit(n)).as("want"),
-          ColumnBridge.column(hp.partitionIdExpression).as("decl"))
-        .agg(count(lit(1)),
-          count(when(col("pid") =!= col("want") || col("pid") =!= col("decl"), true)),
-          countDistinct(col("pid")))
-        .head()
-      assert(r.getLong(0) > 0 && r.getLong(2) > 1, s"$name: vacuous layout check $r")
-      assert(r.getLong(1) == 0, s"$name: ${r.getLong(1)} rows outside their declared partition")
-    }
+                           "sighting index" -> SparkEntry.iocSightings(spark, d)))
+      assertDeclaredLayout(name, df, n)
   }
 
-  test("the store layout helper keeps stats and rejects a partition count other than n") {
+  test("the store layout helper keeps stats and drops a co-keyed consumer's exchange") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val df = spark.range(1000).select((col("id") % 7).cast("string").as("type"),
       col("id").cast("string").as("ioc"))
-    val e = intercept[IllegalArgumentException](
-      ColumnBridge.hashClusteredCheckpoint(df, n + 1, "type", "ioc"))
-    assert(e.getMessage.contains(s"is not spark.sql.shuffle.partitions = $n"), e.getMessage)
     // the declaration changes only the partitioning: size statistics (and
     // with them every broadcast decision) match an undeclared checkpoint
-    val declared = ColumnBridge.hashClusteredCheckpoint(df, n, "type", "ioc")
+    val declared = ColumnBridge.hashClusteredCheckpoint(df, "type", "ioc")
     val plain = df.repartition(n, col("type"), col("ioc")).localCheckpoint()
     assert(declared.queryExecution.optimizedPlan.stats.sizeInBytes ==
       plain.queryExecution.optimizedPlan.stats.sizeInBytes)
@@ -1198,4 +1200,19 @@ class OperatorsSpec extends AnyFunSuite {
       grouped.queryExecution.executedPlan.toString)
     assert(grouped.count() == 1000)
   }
+
+  test("the store layout helper follows a data-sized initialPartitionNum above shuffle.partitions") {
+    // Session sizes AQE's initialPartitionNum to the corpus (45 at the 10x
+    // corpus on 4 cores): the store must cluster into that count, the one
+    // every consumer's exchange would have shuffled to, not the core count
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val n = 3 * spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val df = spark.range(1000).select((col("id") % 7).cast("string").as("type"),
+      col("id").cast("string").as("ioc"))
+    spark.conf.set(key, n.toLong)
+    try assertDeclaredLayout("initialPartitionNum store", ColumnBridge.hashClusteredCheckpoint(df, "type", "ioc"), n)
+    finally spark.conf.unset(key)
+  }
+
 }

@@ -1,28 +1,40 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the one session posture: every main builds its session through
-  * [[Session]], and the core count that sizes its shuffles is parsed from
-  * the master string or refused. */
+  * [[Session]], every tweet stream runs through [[graft.streaming.TweetStream.start]],
+  * and the core count that sizes its shuffles is parsed from the master
+  * string or refused. */
 class SessionSpec extends AnyFunSuite {
 
-  test("src/main has exactly one SparkSession builder, in Session.scala") {
+  /** Every `src/main` line containing `token`, as (file name, line). */
+  private def callSites(token: String): Seq[(String, Int)] = {
     val files = {
       val s = Files.walk(Paths.get("src", "main"))
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
     assert(files.nonEmpty, "source scan found no Scala files under src/main")
-    val hits: Seq[(Path, Int)] = files.flatMap { f =>
+    files.flatMap { f =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains("SparkSession.builder") => f -> (i + 1)
+        case (line, i) if line.contains(token) => f.getFileName.toString -> (i + 1)
       }
     }
-    assert(hits.map(_._1.getFileName.toString) == Seq("Session.scala"),
+  }
+
+  test("src/main has exactly one SparkSession builder, in Session.scala") {
+    val hits = callSites("SparkSession.builder")
+    assert(hits.map(_._1) == Seq("Session.scala"),
       s"builder call sites: ${hits.map { case (f, l) => s"$f:$l" }.mkString(", ")}")
+  }
+
+  test("src/main has exactly one stream job, TweetStream.start") {
+    val hits = callSites(".writeStream")
+    assert(hits.map(_._1) == Seq("TweetStream.scala"),
+      s"writeStream call sites: ${hits.map { case (f, l) => s"$f:$l" }.mkString(", ")}")
   }
 
   test("core counts parse from local[N], local[*] and local-cluster[w,c,m]") {
