@@ -114,6 +114,18 @@ object OracleViews {
   def emailEtlSql(dateAdded: String): String =
     s"WITH ${emailEtlCtes(dateAdded)}\n${emailEtlSelect(dateAdded)}\nORDER BY id, type, ioc"
 
+  /** The unified-feed CTEs `e` (email ETL), `t` (tweet ETL) and
+    * `u` = e ∪ t on the 8-column schema — mirror of
+    * [[SparkEntry.unifiedFeed]], read by every `ioc_*` oracle over the
+    * store. Both feed SQLs wrap as CTEs whole (their inner WITHs nest), so
+    * their private CTE names (typed, filtered, live) never collide. No
+    * trailing comma. A def: SparkEntry's oracle map reads it while
+    * SparkEntry itself initializes. */
+  def unifiedCtes: String =
+    s"e AS (\n${emailEtlSql(SparkEntry.DateAdded)}\n),\n" +
+      s"t AS (\n$tweetEtlSql\n),\n" +
+      "u AS (SELECT * FROM e UNION ALL SELECT * FROM t)"
+
   /** Tweet-ETL oracle: mirrors TweetPipeline.extract over the tweets view. */
   val tweetEtlSql: String =
     s"WITH $tweetsCte,\n" +

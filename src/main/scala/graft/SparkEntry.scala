@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.Iocs
 import graft.pipeline.{EmailPipeline, TweetPipeline}
 import graft.sources.Tables
+import graft.operators.Relational.{dsum, sortedOnce}
+import graft.OracleViews.unifiedCtes
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -25,12 +27,6 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("ioc_email_etl")(spark, "/root/testdata/sf0.001")
-
-  private def dsum(c: Column): Column = operators.Relational.dsum(c)
-  /** See [[operators.Relational.sortedOnce]]: total order for the oracle
-    * WITHOUT the range sampler re-running a narrow regex pipeline. */
-  private def sortedOnce(df: DataFrame, keys: Column*): DataFrame =
-    operators.Relational.sortedOnce(df, keys: _*)
 
   /** The canonical unified indicator table (email ∪ tweet feeds on the
     * 8-column schema) — the reference's single persisted store that
@@ -409,27 +405,19 @@ object SparkEntry {
   private val parityOracle: Map[String, String] = Map(
     "ioc_email_etl" -> OracleViews.emailEtlSql(DateAdded),
     "ioc_tweet_etl" -> OracleViews.tweetEtlSql,
-    // both feed SQLs wrap as CTEs whole (their inner WITHs nest; the
-    // ioc_type_counts oracle proves the pattern) — their private CTE
-    // names (typed, filtered, live) never collide this way
     "ioc_unified" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n)\n" +
-        "SELECT * FROM e UNION ALL SELECT * FROM t\n" +
+      (s"WITH $unifiedCtes\n" +
+        "SELECT * FROM u\n" +
         "ORDER BY platform, id, type, ioc"),
     "ioc_sightings" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT * FROM e UNION ALL SELECT * FROM t)\n" +
+      (s"WITH $unifiedCtes\n" +
         "SELECT type, ioc, source, platform, COUNT(*) AS n_sightings,\n" +
         "  MIN(date_received) AS first_seen,\n" +
         "  MAX(date_received) AS last_seen\n" +
         "FROM u GROUP BY type, ioc, source, platform\n" +
         "ORDER BY type, ioc, source, platform"),
     "ioc_first_seen" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT * FROM e UNION ALL SELECT * FROM t)\n" +
+      (s"WITH $unifiedCtes\n" +
         "SELECT ioc, type, MIN(date_received) AS first_seen,\n" +
         "  MAX(date_received) AS last_seen, COUNT(*) AS n_sightings,\n" +
         "  COUNT(DISTINCT source) AS n_sources,\n" +
@@ -437,9 +425,7 @@ object SparkEntry {
         "FROM u GROUP BY ioc, type\n" +
         "ORDER BY ioc, type"),
     "ioc_confirmation_lag" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT * FROM e UNION ALL SELECT * FROM t),\n" +
+      (s"WITH $unifiedCtes,\n" +
         "f AS (SELECT type, ioc, source, MIN(date_received) AS fd\n" +
         "      FROM u GROUP BY 1, 2, 3),\n" +
         "r AS (SELECT type, ioc, fd,\n" +
@@ -460,10 +446,7 @@ object SparkEntry {
         "FROM j GROUP BY type\n" +
         "ORDER BY type"),
     "ioc_source_reliability" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT source, type, ioc\n" +
-        "      FROM (SELECT * FROM e UNION ALL SELECT * FROM t)),\n" +
+      (s"WITH $unifiedCtes,\n" +
         "ns AS (SELECT type, ioc, COUNT(DISTINCT source) AS n_sources\n" +
         "       FROM u GROUP BY 1, 2)\n" +
         "SELECT u.source, COUNT(*) AS n_sightings,\n" +
@@ -477,21 +460,16 @@ object SparkEntry {
         "GROUP BY u.source\n" +
         "ORDER BY u.source"),
     "ioc_daily_new" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT type, ioc, date_received AS day\n" +
-        "      FROM (SELECT * FROM e UNION ALL SELECT * FROM t)),\n" +
-        "fs AS (SELECT type, ioc, MIN(day) AS first_day FROM u GROUP BY 1, 2)\n" +
-        "SELECT u.type, u.day,\n" +
-        "  CAST(SUM(CASE WHEN u.day = fs.first_day THEN 1 ELSE 0 END) AS BIGINT) AS n_new,\n" +
-        "  CAST(SUM(CASE WHEN u.day <> fs.first_day THEN 1 ELSE 0 END) AS BIGINT) AS n_recurring\n" +
+      (s"WITH $unifiedCtes,\n" +
+        "fs AS (SELECT type, ioc, MIN(date_received) AS first_day FROM u GROUP BY 1, 2)\n" +
+        "SELECT u.type, u.date_received AS day,\n" +
+        "  CAST(SUM(CASE WHEN u.date_received = fs.first_day THEN 1 ELSE 0 END) AS BIGINT) AS n_new,\n" +
+        "  CAST(SUM(CASE WHEN u.date_received <> fs.first_day THEN 1 ELSE 0 END) AS BIGINT) AS n_recurring\n" +
         "FROM u JOIN fs ON fs.type = u.type AND fs.ioc = u.ioc\n" +
-        "GROUP BY u.type, u.day\n" +
-        "ORDER BY u.type, u.day"),
+        "GROUP BY u.type, u.date_received\n" +
+        "ORDER BY u.type, day"),
     "ioc_feed_overlap" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT * FROM e UNION ALL SELECT * FROM t),\n" +
+      (s"WITH $unifiedCtes,\n" +
         "per AS (\n" +
         "  SELECT type, ioc,\n" +
         "    MAX(CASE WHEN platform = 'H-ISAC' THEN 1 ELSE 0 END) AS in_email,\n" +
@@ -506,9 +484,7 @@ object SparkEntry {
         "FROM per GROUP BY type\n" +
         "ORDER BY type"),
     "ioc_velocity" ->
-      (s"WITH e AS (\n${OracleViews.emailEtlSql(DateAdded)}\n),\n" +
-        s"t AS (\n${OracleViews.tweetEtlSql}\n),\n" +
-        "u AS (SELECT * FROM e UNION ALL SELECT * FROM t),\n" +
+      (s"WITH $unifiedCtes,\n" +
         "agg AS (\n" +
         "  SELECT type, date_received AS day, COUNT(*) AS n_sightings,\n" +
         "    COUNT(DISTINCT ioc) AS n_distinct\n" +

@@ -114,14 +114,39 @@ object Corpus {
     * knob: scale with corpus size and the target mixture entropy. */
   val SourceCap = 15
 
-  /** k deterministic bloom positions for a shingle: the same two-md5-half
+  /** A shingle's bloom hash halves (h1, h2): the same two-md5-half
     * multiplicative family [[Dedup.mhashH1]] uses — one digest per
     * shingle, h1 + j·h2 probe spread (independence across j is irrelevant
     * here: probes of one key SHOULD differ, not be uncorrelated across
     * keys). */
-  private[operators] def bloomPos(shingle: Column, j: Int): Column =
-    (conv(substring(md5(shingle), 1, 8), 16, 10).cast("long") +
-      lit(j.toLong) * conv(substring(md5(shingle), 9, 8), 16, 10).cast("long")) % BloomBits
+  private def md5Halves(shingle: Column): Seq[Column] = Seq(
+    conv(substring(md5(shingle), 1, 8), 16, 10).cast("long").as("h1"),
+    conv(substring(md5(shingle), 9, 8), 16, 10).cast("long").as("h2"))
+
+  /** The rows of `probe` whose hash halves (h1, h2) hit all [[BloomK]]
+    * bits of the bloom bitmap of `build`'s (h1, h2) rows — the probe
+    * positions are (h1 + j·h2) mod [[BloomBits]]. The build side folds its
+    * positions into (word_idx, bit_or) rows with one aggregation, then
+    * into ONE map row (m/64 longs, KBs regardless of key count) that
+    * broadcasts; the probe is k map lookups of integer algebra per row,
+    * no join on the key. Superset semantics: hits = matches + false
+    * positives (the m/k sizing knob). Each caller brings its own hash
+    * family (`join_bloom_semi` xxhash64 halves, `text_contamination_bloom`
+    * [[md5Halves]]). */
+  private[graft] def bloomProbe(build: DataFrame, probe: DataFrame): DataFrame = {
+    val pos = (j: Int) => (col("h1") + lit(j.toLong) * col("h2")) % BloomBits
+    val bloomRow = build
+      .select(explode(array((0 until BloomK).map(pos): _*)).as("pos"))
+      .groupBy((col("pos") / 64).cast("long").as("word_idx"))
+      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))").as("bits"))
+      .agg(map_from_arrays(collect_list(col("word_idx")), collect_list(col("bits"))).as("bloom"))
+    val hit = (j: Int) => {
+      val mask = call_function("shiftleft", lit(1L), (pos(j) % 64).cast("int"))
+      coalesce(element_at(col("bloom"), (pos(j) / 64).cast("long")), lit(0L))
+        .bitwiseAND(mask) =!= 0
+    }
+    probe.crossJoin(broadcast(bloomRow)).filter((0 until BloomK).map(hit).reduce(_ && _))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -283,46 +308,26 @@ object Corpus {
     // decontamination at 100 TB: when the benchmark suite itself is huge
     // (eval + held-out + contamination blocklists can be TBs of n-grams),
     // its string set no longer broadcasts. Compress it to an m-bit bloom
-    // bitmap — built as a (word_idx, bits) relation with one bit_or
-    // aggregation over k md5-derived positions per benchmark shingle,
-    // then folded into ONE map row (m/64 longs ≈ KBs, independent of
-    // benchmark size) that broadcasts to every executor. The corpus side
-    // stays exactly like `text_contamination`: stream occurrence rows
-    // through per-row column algebra (k map probes, no join on the
-    // shingle) and aggregate once on doc_id. Superset semantics: bloom
-    // hits = exact overlaps + false positives (the FP rate is the m/k
-    // sizing knob, DEPLOYMENT.md) — candidates then re-check exactly
-    // against the benchmark shard that owns them, which is the standard
-    // two-phase shape; the bitmap is what keeps phase 1 broadcastable.
+    // bitmap that does ([[bloomProbe]]); the corpus side stays exactly
+    // like `text_contamination`: stream occurrence rows through k map
+    // probes and aggregate once on doc_id. Bloom hits = exact overlaps +
+    // false positives (the FP rate is the m/k sizing knob, DEPLOYMENT.md)
+    // — candidates then re-check exactly against the benchmark shard that
+    // owns them, which is the standard two-phase shape; the bitmap is
+    // what keeps phase 1 broadcastable.
     "text_contamination_bloom" -> ((s, d) => {
-      val occ = shingleOcc5(s, d)
-      val probes = (0 until BloomK).map(j => bloomPos(col("shingle"), j))
       // benchmark side from the source table, same rationale (and same
       // equivalence) as text_contamination above
-      val benchPos = shingleOccurrencesN(
+      val bench = shingleOccurrencesN(
           Tables.documents(s, d).filter(col("doc_id") < 10), 5)
         .select(col("shingle")).distinct()
-        .select(explode(array(probes: _*)).as("pos"))
-      val bloomRow = benchPos
-        .groupBy((col("pos") / 64).cast("long").as("word_idx"))
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))").as("bits"))
-        .agg(map_from_arrays(collect_list(col("word_idx")), collect_list(col("bits"))).as("bloom"))
       // h1/h2 computed ONCE per occurrence row (one md5), probes are pure
       // integer algebra on them; the contamination predicate filters
       // BEFORE the doc aggregation, so the exchange carries rows
       // proportional to CONTAMINATION, not to the corpus.
-      val hit = (j: Int) => {
-        val p = (col("h1") + lit(j.toLong) * col("h2")) % BloomBits
-        val word = (p / 64).cast("long")
-        val mask = call_function("shiftleft", lit(1L), (p % 64).cast("int"))
-        coalesce(element_at(col("bloom"), word), lit(0L)).bitwiseAND(mask) =!= 0
-      }
-      occ.filter(col("doc_id") >= 10)
-        .select(col("doc_id"), col("shingle"),
-          conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long").as("h1"),
-          conv(substring(md5(col("shingle")), 9, 8), 16, 10).cast("long").as("h2"))
-        .crossJoin(broadcast(bloomRow))
-        .filter((0 until BloomK).map(hit).reduce(_ && _))
+      bloomProbe(bench.select(md5Halves(col("shingle")): _*),
+          shingleOcc5(s, d).filter(col("doc_id") >= 10)
+            .select(Seq(col("doc_id"), col("shingle")) ++ md5Halves(col("shingle")): _*))
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("shingle")).as("n_bloom"))
         .orderBy(col("doc_id"))

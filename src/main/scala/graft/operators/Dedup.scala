@@ -754,7 +754,7 @@ object Dedup {
     * BEFORE the gather: the rank rides the same key exchange the
     * aggregation needs anyway, so the cap costs one in-partition sort,
     * and no collect_list row can exceed `cap`. */
-  private def capBuckets(rows: DataFrame, cap: Int, key: String*): DataFrame = {
+  private[graft] def capBuckets(rows: DataFrame, cap: Int, key: String*): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(key.map(col): _*).orderBy(col("doc_id"))
     rows.withColumn("rn", row_number().over(w)).filter(col("rn") <= cap).drop("rn")
@@ -763,11 +763,19 @@ object Dedup {
   /** Every (i < j) pair of `member` values within each `key` bucket, as
     * columns `x` and `y`: the members are gathered with ONE aggregation on
     * the key into a sorted array, and paired inside it by [[memberPairs]]
-    * — the MinHash band buckets, the SimHash chunk buckets and the
-    * n-gram posting lists all pair this way. */
-  private def bucketPairs(rows: DataFrame, member: Column, key: String*): DataFrame =
+    * — the MinHash band buckets, the SimHash and phash chunk buckets and
+    * the n-gram posting lists all pair this way. */
+  private[graft] def bucketPairs(rows: DataFrame, member: Column, key: String*): DataFrame =
     memberPairs(rows.groupBy(key.map(col): _*)
       .agg(array_sort(collect_list(member)).as("ms")))
+
+  /** Every (i < j) pair of the DISTINCT `member` values within each `key`
+    * group, as columns `x` and `y` — [[bucketPairs]] over a sorted set:
+    * the co-purchase part pairs, the campaign IOC pairs and the IOC type
+    * pairs. SQL twin: [[pairsSql]] over the distinct (key, member) rows. */
+  private[graft] def setPairs(rows: DataFrame, member: Column, key: String*): DataFrame =
+    memberPairs(rows.groupBy(key.map(col): _*)
+      .agg(sort_array(collect_set(member)).as("ms")))
 
   /** The (i < j) pairs `x` = ms[i], `y` = ms[j] of each array `ms`, as TWO
     * codegen explodes of index ranges + element_at picks (r15). The
@@ -1127,15 +1135,15 @@ object Dedup {
   /** `name`: the `cols` rows of `from` whose doc_id is among the
     * [[MaxBucketSize]] smallest of their `key` bucket — the SQL twin of
     * [[capBuckets]]. */
-  private def cappedSql(name: String, cols: String, key: String, from: String): String =
+  private[graft] def cappedSql(name: String, cols: String, key: String, from: String): String =
     s"$name AS (\n  SELECT $cols FROM (\n    SELECT $cols,\n" +
       s"      row_number() OVER (PARTITION BY $key ORDER BY doc_id) AS rn\n" +
       s"    FROM $from)\n  WHERE rn <= $MaxBucketSize)"
 
   /** `FROM rel a JOIN rel b` on every `key` column, a.id < b.id: each
     * unordered pair of rows sharing a bucket once — the SQL twin of
-    * [[bucketPairs]] and of [[blockPairs]]. */
-  private def pairsSql(rel: String, id: String, key: String*): String =
+    * [[bucketPairs]], [[setPairs]] and [[blockPairs]]. */
+  private[graft] def pairsSql(rel: String, id: String, key: String*): String =
     s"FROM $rel a JOIN $rel b ON ${key.map(k => s"a.$k = b.$k").mkString(" AND ")} AND a.$id < b.$id"
 
   /** `name(doc_id, shingle)`: each document's distinct word 3-grams — the

@@ -104,6 +104,24 @@ object Events {
         sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
+  /** Rolling `len`-day distinct actives per window-end day `wday`: reduce
+    * to distinct (user, day) FIRST (the only corpus-sized shuffle), explode
+    * each active day into the `len` window-end days it counts toward, and
+    * run ONE distinct-count agg named `actives` — never a per-day self-join,
+    * never a quadratic frame. `withDau` adds the offset-0 count `dau` from
+    * the same rows (wday = day). SQL twin: [[rollingActivesSql]]. */
+  private def rollingActives(s: SparkSession, d: String, len: Int, actives: String,
+      withDau: Boolean): DataFrame = {
+    val aggs = (if (withDau)
+      Seq(countDistinct(when(col("wday") === col("day"), col("user_id"))).as("dau"))
+    else Nil) :+ countDistinct(col("user_id")).as(actives)
+    Tables.events(s, d)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+      .withColumn("wday", explode(sequence(col("day"), date_add(col("day"), len - 1))))
+      .groupBy(col("wday"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // tumbling 1-hour windows per event type.
@@ -370,29 +388,11 @@ object Events {
 
     // Rolling 7-day distinct actives (the DAU/WAU dashboard) — the
     // sliding-window COUNT DISTINCT, which no window frame computes
-    // directly. The scale pattern: reduce to distinct (user, day) FIRST
-    // (the only corpus-sized shuffle), then explode each active-day into
-    // the 7 window-end days it contributes to and run ONE plain
-    // distinct-count per window day. The 7× fan-out happens after the
-    // distinct, costs map-side rows only, and generalizes to any window
-    // length L as one distinct + L× fan-out + one agg — never a per-day
-    // self-join, never a quadratic frame. DAU rides the same distinct
+    // directly ([[rollingActives]]; the 7× fan-out happens after the
+    // distinct and costs map-side rows only). DAU rides the same distinct
     // relation; days with spillover-only activity report dau = 0.
-    "events_wau" -> ((s, d) => {
-      val days = Tables.events(s, d)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      // DAU comes out of the SAME exploded relation (wday = day marks the
-      // offset-0 contribution) — a separate dau branch would re-scan and
-      // re-distinct the whole corpus for a number this pass already has
-      days
-        .withColumn("wday", explode(sequence(col("day"), date_add(col("day"), 6))))
-        .groupBy(col("wday"))
-        .agg(
-          countDistinct(when(col("wday") === col("day"), col("user_id"))).as("dau"),
-          countDistinct(col("user_id")).as("wau"))
-        .select(col("wday"), col("dau"), col("wau"))
-        .orderBy(col("wday"))
-    }),
+    "events_wau" -> ((s, d) =>
+      rollingActives(s, d, 7, "wau", withDau = true).orderBy(col("wday"))),
 
     // Gap-filled daily series — dashboards and forecasting models need a
     // DENSE time axis; a day with zero events must appear as an explicit
@@ -430,27 +430,13 @@ object Events {
     // the k-sizing knob priced explicitly, the agg_percentile_hist
     // discipline applied to distinct counting.
     "events_wau_sketch" -> ((s, d) => {
-      val k = 256
-      val h = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-      val bottomK = slice(array_sort(collect_set(col("h"))), 1, k)
       val daily = Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), h.as("h"))
-        .groupBy(col("day")).agg(bottomK.as("hs"))
-      val merged = daily
-        .withColumn("wday", explode(sequence(col("day"), date_add(col("day"), 6))))
-        .select(col("wday"), explode(col("hs")).as("h"))
-        .groupBy(col("wday")).agg(bottomK.as("hs"))
-        .select(col("wday"), size(col("hs")).cast("long").as("n"),
-          element_at(col("hs"), size(col("hs"))).as("hk"))
-        .select(col("wday"),
-          when(col("n") < k, col("n"))
-            .otherwise(expr("71776119061217280 div hk")).as("wau_est"))
-      val exact = Tables.events(s, d)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-        .withColumn("wday", explode(sequence(col("day"), date_add(col("day"), 6))))
-        .groupBy(col("wday")).agg(countDistinct(col("user_id")).as("wau"))
-      exact.join(merged, Seq("wday"))
+        .select(to_date(col("ts")).as("day"), Relational.kmvHash(col("user_id")).as("h"))
+        .groupBy(col("day")).agg(Relational.bottomK.as("hs"))
+      val merged = Relational.kmvEstimate(
+        daily.select(explode(sequence(col("day"), date_add(col("day"), 6))).as("wday"),
+          col("hs")), "wday", "wau_est")
+      rollingActives(s, d, 7, "wau", withDau = false).join(merged, Seq("wday"))
         .withColumn("err_ppm", expr("abs(wau_est - wau) * 1000000 div wau"))
         .orderBy(col("wday"))
     }),
@@ -459,20 +445,11 @@ object Events {
     // up from WAU: the SAME distinct-first + explode-to-window-days
     // scale pattern with L=28, and the ratio reported in EXACT ppm
     // (integer div) so both engines agree bit-for-bit with no IEEE
-    // division anywhere. The 28× fan-out costs map-side rows only,
-    // strictly after the one corpus-sized (user, day) distinct.
-    "events_stickiness" -> ((s, d) => {
-      val days = Tables.events(s, d)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      days
-        .withColumn("wday", explode(sequence(col("day"), date_add(col("day"), 27))))
-        .groupBy(col("wday"))
-        .agg(
-          countDistinct(when(col("wday") === col("day"), col("user_id"))).as("dau"),
-          countDistinct(col("user_id")).as("mau"))
+    // division anywhere.
+    "events_stickiness" -> ((s, d) =>
+      rollingActives(s, d, 28, "mau", withDau = true)
         .withColumn("stickiness_ppm", expr("dau * 1000000 DIV mau"))
-        .orderBy(col("wday"))
-    }),
+        .orderBy(col("wday"))),
 
     // Per-user lifecycle summary — the churn-analysis base table next to
     // events_rfm's quintile scores: first/last active day, distinct
@@ -792,6 +769,21 @@ object Events {
     })
   )
 
+  /** [[rollingActives]] in DuckDB: the `days` and `contrib(user_id, day,
+    * wday)` CTEs, then `name(wday, [dau,] actives)` (no trailing comma). */
+  private def rollingActivesSql(name: String, len: Int, actives: String,
+      withDau: Boolean): String =
+    "days AS (\n" +
+      "  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),\n" +
+      "contrib AS (\n" +
+      "  SELECT user_id, day, CAST(unnest(generate_series(CAST(day AS TIMESTAMP),\n" +
+      s"    CAST(day + ${len - 1} AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS wday\n" +
+      "  FROM days),\n" +
+      s"$name AS (\n  SELECT wday,\n" +
+      (if (withDau) "    COUNT(DISTINCT CASE WHEN wday = day THEN user_id END) AS dau,\n" else "") +
+      s"    COUNT(DISTINCT user_id) AS $actives\n" +
+      "  FROM contrib\n  GROUP BY wday)"
+
   /** [[sessionized]] in DuckDB: the `marked` and `sessions` CTEs both
     * session queries' oracles start from (no trailing comma; the caller
     * appends its own CTEs or its SELECT). */
@@ -810,21 +802,9 @@ object Events {
 
   val oracle: Map[String, String] = Map(
     "events_stickiness" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
-        |contrib AS (
-        |  SELECT user_id, day, CAST(unnest(generate_series(CAST(day AS TIMESTAMP),
-        |    CAST(day + 27 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS wday
-        |  FROM days),
-        |agg AS (
-        |  SELECT wday,
-        |    COUNT(DISTINCT CASE WHEN wday = day THEN user_id END) AS dau,
-        |    COUNT(DISTINCT user_id) AS mau
-        |  FROM contrib
-        |  GROUP BY wday)
-        |SELECT wday, dau, mau, dau * 1000000 // mau AS stickiness_ppm
-        |FROM agg
-        |ORDER BY wday""".stripMargin,
+      (s"WITH ${rollingActivesSql("agg", 28, "mau", withDau = true)}\n" +
+        "SELECT wday, dau, mau, dau * 1000000 // mau AS stickiness_ppm\n" +
+        "FROM agg\nORDER BY wday"),
     "events_lifecycle" ->
       """WITH pu AS (
         |  SELECT user_id, MIN(CAST(ts AS DATE)) AS first_day,
@@ -1017,48 +997,15 @@ object Events {
         |FROM m
         |ORDER BY from_type, to_type""".stripMargin,
     "events_wau" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
-        |contrib AS (
-        |  SELECT user_id, day, CAST(unnest(generate_series(CAST(day AS TIMESTAMP),
-        |    CAST(day + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS wday
-        |  FROM days)
-        |SELECT wday,
-        |  COUNT(DISTINCT CASE WHEN wday = day THEN user_id END) AS dau,
-        |  COUNT(DISTINCT user_id) AS wau
-        |FROM contrib
-        |GROUP BY wday
-        |ORDER BY wday""".stripMargin,
+      (s"WITH ${rollingActivesSql("agg", 7, "wau", withDau = true)}\n" +
+        "SELECT wday, dau, wau FROM agg\nORDER BY wday"),
     "events_wau_sketch" ->
-      """WITH du AS (
-        |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id FROM events),
-        |hc AS (
-        |  SELECT DISTINCT day,
-        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12)) AS BIGINT) AS h
-        |  FROM du),
-        |contrib AS (
-        |  SELECT CAST(unnest(generate_series(CAST(day AS TIMESTAMP),
-        |    CAST(day + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS wday, h
-        |  FROM hc),
-        |dc AS (SELECT DISTINCT wday, h FROM contrib),
-        |r AS (
-        |  SELECT wday, h, row_number() OVER (PARTITION BY wday ORDER BY h) AS rn
-        |  FROM dc),
-        |est AS (
-        |  SELECT wday,
-        |    CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-        |         ELSE 71776119061217280 // MAX(h) END AS wau_est
-        |  FROM r WHERE rn <= 256 GROUP BY wday),
-        |ex AS (
-        |  SELECT wday, COUNT(DISTINCT user_id) AS wau FROM (
-        |    SELECT CAST(unnest(generate_series(CAST(day AS TIMESTAMP),
-        |      CAST(day + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS wday, user_id
-        |    FROM du)
-        |  GROUP BY wday)
-        |SELECT ex.wday, wau, wau_est,
-        |  abs(wau_est - wau) * 1000000 // wau AS err_ppm
-        |FROM ex JOIN est ON ex.wday = est.wday
-        |ORDER BY ex.wday""".stripMargin,
+      (s"WITH ${rollingActivesSql("ex", 7, "wau", withDau = false)},\n" +
+        s"hw AS (SELECT wday, ${Relational.kmvHashSql("user_id")} AS h FROM contrib),\n" +
+        Relational.kmvSql("est", "hw", "wday", "wau_est") + "\n" +
+        "SELECT ex.wday, wau, wau_est,\n" +
+        "  abs(wau_est - wau) * 1000000 // wau AS err_ppm\n" +
+        "FROM ex JOIN est ON ex.wday = est.wday\nORDER BY ex.wday"),
     "events_gap_fill" ->
       """WITH daily AS (
         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
 
 /** Graph analytics over the co-purchase graph (parts as nodes, an edge
   * when two parts ship in ≥2 common orders — the [[Relational]]
@@ -31,22 +30,12 @@ import graft.sources.Tables
 object Graph {
 
   /** Co-purchase edge set: unordered pairs (a < b) of parts appearing in
-    * ≥2 common orders. Bounded per-order fold (sorted set + slice
-    * pairs), identical shape to basket_pairs — per-order fan-in is
-    * order-size-bounded, never corpus-sized. */
+    * ≥2 common orders — [[Relational.basketPairs]] without the counts, so
+    * per-order fan-in is order-size-bounded, never corpus-sized. */
   def edges(s: SparkSession, d: String): DataFrame =
     graft.Memo("graph_edges", s, d)(
-      Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          "flatten(transform(ps, (x, i) -> " +
-            "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
-        )).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= 2)
-        .select(col("a"), col("b"))
+      Relational.basketPairs(s, d)
+        .select(col("part_a").as("a"), col("part_b").as("b"))
         .localCheckpoint())
 
   private def edgePairs(s: SparkSession, d: String): DataFrame =
@@ -231,13 +220,9 @@ object Graph {
   // 40 GB temp cap on the gate box. Materialized once, e is 357k rows
   // and every graph oracle at 100× finishes in seconds (measured: the
   // oriented triangle count 8 s).
-  private val edgeCte: String =
-    """lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      |e AS MATERIALIZED (
-      |  SELECT a.l_partkey AS a, b.l_partkey AS b
-      |  FROM lp a JOIN lp b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)""".stripMargin
+  private def edgeCte: String =
+    s"${Relational.basketPairsCtes},\n" +
+      "e AS MATERIALIZED (SELECT part_a AS a, part_b AS b FROM bp)"
 
   val oracle: Map[String, String] = Map(
     // unrolled rounds, not a recursive closure — the closure's reach set

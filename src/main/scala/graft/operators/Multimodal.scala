@@ -298,19 +298,10 @@ object Multimodal {
         posexplode(array((0 until bands).map(b =>
           shiftright(col("ph"), b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))): _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("band"), col("chunk")).orderBy(col("doc_id"))
-      val buckets = banded
-        .withColumn("rn", row_number().over(wb)).filter(col("rn") <= Dedup.MaxBucketSize)
-        .groupBy(col("band"), col("chunk"))
-        .agg(array_sort(collect_list(struct(col("doc_id"), col("ph")))).as("ms"))
-        .filter(size(col("ms")) > 1)
-      buckets.select(explode(flatten(transform(col("ms"), (x, i) =>
-          transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-            y => struct(x("doc_id").as("id1"), x("ph").as("ph1"),
-              y("doc_id").as("id2"), y("ph").as("ph2")))))).as("p"))
-        .select(col("p.id1").as("id1"), col("p.id2").as("id2"),
-          bit_count(col("p.ph1").bitwiseXOR(col("p.ph2"))).cast("long").as("hamming"))
+      Dedup.bucketPairs(Dedup.capBuckets(banded, Dedup.MaxBucketSize, "band", "chunk"),
+          struct(col("doc_id"), col("ph")), "band", "chunk")
+        .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"),
+          bit_count(col("x.ph").bitwiseXOR(col("y.ph"))).cast("long").as("hamming"))
         .filter(col("hamming") <= Dedup.MaxHamming)
         .distinct()
         .localCheckpoint()
@@ -329,18 +320,13 @@ object Multimodal {
        |banded0 AS (
        |  SELECT doc_id, ph, b, (ph >> CAST(b * ${Dedup.SimhashBandBits} AS INTEGER)) & ${(1 << Dedup.SimhashBandBits) - 1} AS chunk
        |  FROM ph, range(0, ${Dedup.SimhashBands}) r(b)),
-       |banded AS (
-       |  SELECT doc_id, ph, b, chunk FROM (
-       |    SELECT doc_id, ph, b, chunk,
-       |      row_number() OVER (PARTITION BY b, chunk ORDER BY doc_id) AS rn
-       |    FROM banded0)
-       |  WHERE rn <= ${Dedup.MaxBucketSize}),
-       |pp_pairs AS (
-       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-       |    CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-       |  FROM banded a JOIN banded b
-       |    ON a.b = b.b AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.ph, b.ph)) <= ${Dedup.MaxHamming})""".stripMargin
+       |""".stripMargin +
+      Dedup.cappedSql("banded", "doc_id, ph, b, chunk", "b, chunk", "banded0") + ",\n" +
+      "pp_pairs AS (\n" +
+      "  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,\n" +
+      "    CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming\n" +
+      s"  ${Dedup.pairsSql("banded", "doc_id", "b", "chunk")}\n" +
+      s"  WHERE bit_count(xor(a.ph, b.ph)) <= ${Dedup.MaxHamming})"
 
   val oracle: Map[String, String] = Map(
     "binary_phash" ->

@@ -46,11 +46,52 @@ object Relational {
     * knob; the output stays (groups × buckets) rows at any corpus size. */
   val HistogramBuckets = 16L
 
-  /** revenue term: l_extendedprice * (1 - l_discount), exact decimal. */
-  private def revenue: Column =
-    sum(col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)")))
-      .cast("double")
+  /** Discounted price l_extendedprice * (1 - l_discount), exact decimal. */
+  private def discPrice: Column =
+    col("l_extendedprice").cast("decimal(12,2)") *
+      (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)"))
+
+  /** revenue term: the summed [[discPrice]] → DOUBLE. */
+  private def revenue: Column = sum(discPrice).cast("double")
+
+  /** KMV sketch size k: a group's signature is its k smallest distinct
+    * 48-bit hashes. */
+  private val SketchK = 256
+
+  /** (k − 1)·2^48, the numerator of the KMV estimate (k − 1)·2^48 div h_k. */
+  private val SketchNum = (SketchK - 1).toLong << 48
+
+  /** The 48-bit md5 hash of `c` the KMV sketches rank: integer-only, so
+    * DuckDB reproduces it bit for bit ([[kmvHashSql]]). */
+  private[graft] def kmvHash(c: Column): Column =
+    conv(substring(md5(c.cast("string")), 1, 12), 16, 10).cast("long")
+
+  /** The KMV signature of a group's `h` column: its bottom-k distinct
+    * hashes, sorted. */
+  private[graft] def bottomK: Column = slice(array_sort(collect_set(col("h"))), 1, SketchK)
+
+  /** Merge the (key, hs) partial signatures of `partials` into one
+    * (key, est) row per key: explode, re-bottom-k, then the exact count
+    * n when fewer than k distinct hashes exist, else (k − 1)·2^48 div h_k.
+    * The union of partial bottom-ks contains the global bottom-k, so the
+    * merge is lossless. Integer arithmetic only; SQL twin [[kmvSql]]. */
+  private[graft] def kmvEstimate(partials: DataFrame, key: String, est: String): DataFrame =
+    partials.select(col(key), explode(col("hs")).as("h"))
+      .groupBy(col(key)).agg(bottomK.as("hs"))
+      .select(col(key), size(col("hs")).cast("long").as("n"),
+        element_at(col("hs"), size(col("hs"))).as("hk"))
+      .select(col(key),
+        when(col("n") < SketchK, col("n")).otherwise(expr(s"$SketchNum div hk")).as(est))
+
+  /** (part_a < part_b, n_orders ≥ 2): the part pairs shipped together in at
+    * least two orders — `basket_pairs` and [[Graph.edges]]. Each order
+    * folds to its sorted distinct part set, paired by [[Dedup.setPairs]]
+    * (no self-join). SQL twin: [[basketPairsCtes]]. */
+  private[graft] def basketPairs(s: SparkSession, d: String): DataFrame =
+    Dedup.setPairs(Tables.lineitem(s, d), col("l_partkey"), "l_orderkey")
+      .groupBy(col("x").as("part_a"), col("y").as("part_b"))
+      .agg(count(lit(1)).as("n_orders"))
+      .filter(col("n_orders") >= 2)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -62,9 +103,7 @@ object Relational {
         .agg(
           dsum(col("l_quantity")).as("sum_qty"),
           dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(col("l_extendedprice").cast("decimal(12,2)") *
-              (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)")))
-            .cast("double").as("sum_disc_price"),
+          revenue.as("sum_disc_price"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))),
 
@@ -118,9 +157,8 @@ object Relational {
     // Runtime bloom-filter semi-join reduction — the pattern behind
     // Spark's own runtime row-level filtering, built explicitly so the
     // mechanics are a first-class query: fold the SMALL side's keys into
-    // an m-bit bloom bitmap (one bit_or aggregation → ONE map row, KBs
-    // regardless of key count), broadcast it, and probe the BIG side
-    // with k pure-integer positions BEFORE any join — the exchange then
+    // an m-bit bloom bitmap, broadcast it, and probe the BIG side with k
+    // integer positions BEFORE any join ([[Corpus.bloomProbe]]) — the exchange then
     // carries rows proportional to MATCHES (+ the FP rate, the m/k
     // sizing knob), not to the fact table. Survivors re-check against
     // the exact key set (semi join), so bloom false positives never
@@ -145,26 +183,12 @@ object Relational {
       // but a future int32 regen of one table would otherwise create bloom
       // false negatives the exact semi join can't recover (the bloom
       // predicate is conjoined with it)
-      val bh1 = (c: Column) => xxhash64(c.cast("long")).bitwiseAND(m31)
-      val bh2 = (c: Column) => xxhash64(c.cast("long"), lit(1)).bitwiseAND(m31)
-      val bloomRow = keys
-        .select(explode(array((0 until Corpus.BloomK).map(j =>
-          (bh1(col("o_orderkey")) + lit(j.toLong) * bh2(col("o_orderkey")))
-            % Corpus.BloomBits): _*)).as("pos"))
-        .groupBy((col("pos") / 64).cast("long").as("word_idx"))
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))").as("bits"))
-        .agg(map_from_arrays(collect_list(col("word_idx")), collect_list(col("bits"))).as("bloom"))
-      val hit = (j: Int) => {
-        val p = (col("h1") + lit(j.toLong) * col("h2")) % Corpus.BloomBits
-        val word = (p / 64).cast("long")
-        val mask = call_function("shiftleft", lit(1L), (p % 64).cast("int"))
-        coalesce(element_at(col("bloom"), word), lit(0L)).bitwiseAND(mask) =!= 0
-      }
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
-          bh1(col("l_orderkey")).as("h1"), bh2(col("l_orderkey")).as("h2"))
-        .crossJoin(broadcast(bloomRow))
-        .filter((0 until Corpus.BloomK).map(hit).reduce(_ && _))
+      val halves = (c: Column) => Seq(
+        xxhash64(c.cast("long")).bitwiseAND(m31).as("h1"),
+        xxhash64(c.cast("long"), lit(1)).bitwiseAND(m31).as("h2"))
+      Corpus.bloomProbe(keys.select(halves(col("o_orderkey")): _*),
+          Tables.lineitem(s, d).select(Seq(col("l_orderkey"), col("l_returnflag"),
+            col("l_quantity")) ++ halves(col("l_orderkey")): _*))
         // exact re-check: bloom FPs never reach the result, so the answer
         // ≡ the plain semi join (the oracle). NOTE on evaluation ORDER
         // (r14 plan audit): PushDownLeftSemiAntiJoin hoists this semi join
@@ -530,10 +554,6 @@ object Relational {
     // deployment knob: it bounds any one group-salt's set to distinct/salts,
     // raised with corpus cardinality like Similarity.MaxCentroids.
     "agg_approx_sketch" -> ((s, d) => {
-      val k = 256
-      val h = conv(substring(md5(col("l_orderkey").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-      val bottomK = slice(array_sort(collect_set(col("h"))), 1, k)
       // fanned out BEFORE the md5 hashing + partial bottom-k: on the
       // single-row-group driver testdata the whole scan-stage pipeline —
       // one md5/conv per row plus the partial collect_set — ran in ONE
@@ -542,21 +562,11 @@ object Relational {
       // multi-row-group layout, so no corpus-sized exchange at 100 TB.
       val perSalt = Tables.fanout(
           Tables.lineitem(s, d).select(col("l_returnflag"), col("l_orderkey")))
-        .select(col("l_returnflag"), h.as("h"))
+        .select(col("l_returnflag"), kmvHash(col("l_orderkey")).as("h"))
         .withColumn("salt", col("h") % 64)
         .groupBy(col("l_returnflag"), col("salt"))
         .agg(bottomK.as("hs"))
-      perSalt.select(col("l_returnflag"), explode(col("hs")).as("h"))
-        .groupBy(col("l_returnflag"))
-        .agg(bottomK.as("hs"))
-        .select(col("l_returnflag"),
-          size(col("hs")).cast("long").as("n"),
-          element_at(col("hs"), size(col("hs"))).as("hk"))
-        // (k-1)·2^48 = 255·281474976710656 = 71776119061217280
-        .select(col("l_returnflag"),
-          when(col("n") < k, col("n"))
-            .otherwise(expr("71776119061217280 div hk")).as("approx_orders"))
-        .orderBy(col("l_returnflag"))
+      kmvEstimate(perSalt, "l_returnflag", "approx_orders").orderBy(col("l_returnflag"))
     }),
 
     // Sketch MERGE proven by the oracle — the agg_incremental discipline
@@ -569,26 +579,14 @@ object Relational {
     // combine; partials are k longs per (group, segment), so the merge
     // input is KBs regardless of corpus size.
     "agg_sketch_merge" -> ((s, d) => {
-      val k = 256
-      val h = conv(substring(md5(col("l_orderkey").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-      val bottomK = slice(array_sort(collect_set(col("h"))), 1, k)
       // fanout for the same scan-starvation reason as agg_approx_sketch
       val partials = Tables.fanout(
           Tables.lineitem(s, d).select(col("l_returnflag"), col("l_orderkey")))
-        .select(col("l_returnflag"), (col("l_orderkey") % 4).as("segment"), h.as("h"))
+        .select(col("l_returnflag"), (col("l_orderkey") % 4).as("segment"),
+          kmvHash(col("l_orderkey")).as("h"))
         .groupBy(col("l_returnflag"), col("segment"))
         .agg(bottomK.as("hs"))
-      partials.select(col("l_returnflag"), explode(col("hs")).as("h"))
-        .groupBy(col("l_returnflag"))
-        .agg(bottomK.as("hs"))
-        .select(col("l_returnflag"),
-          size(col("hs")).cast("long").as("n"),
-          element_at(col("hs"), size(col("hs"))).as("hk"))
-        .select(col("l_returnflag"),
-          when(col("n") < k, col("n"))
-            .otherwise(expr("71776119061217280 div hk")).as("approx_orders"))
-        .orderBy(col("l_returnflag"))
+      kmvEstimate(partials, "l_returnflag", "approx_orders").orderBy(col("l_returnflag"))
     }),
 
     // TPC-H Q13 shape: left join + two-level aggregation (order-count
@@ -906,15 +904,13 @@ object Relational {
     // pushes to the scan, part broadcasts, and both sums come out of one
     // hash agg — a single pass over the month.
     "q14_promo" -> ((s, d) => {
-      val disc = col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)"))
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1998-09-01") && col("l_shipdate") < lit("1998-10-01"))
         .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
         .agg((lit(100.0) *
-          sum(when(col("p_type").startsWith("PROMO"), disc)
+          sum(when(col("p_type").startsWith("PROMO"), discPrice)
             .otherwise(lit(new java.math.BigDecimal("0.00")))).cast("double") /
-          sum(disc).cast("double")).as("promo_revenue"))
+          sum(discPrice).cast("double")).as("promo_revenue"))
     }),
 
     // TPC-H Q15 shape: revenue-per-supplier over a quarter, keep the
@@ -1033,8 +1029,6 @@ object Relational {
     // orderkey shuffle, with lineitem pre-pruned by the part broadcast.
     // Numerator and denominator come out of ONE hash agg as exact decimals.
     "q8_share" -> ((s, d) => {
-      val disc = col("l_extendedprice").cast("decimal(12,2)") *
-        (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)"))
       val cu = Tables.customer(s, d)
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
@@ -1052,9 +1046,9 @@ object Relational {
         .join(Tables.orders(s, d).join(broadcast(cu), col("o_custkey") === col("c_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg((sum(when(col("supp_nation") === "NATION_5", disc)
+        .agg((sum(when(col("supp_nation") === "NATION_5", discPrice)
             .otherwise(lit(new java.math.BigDecimal("0.00")))).cast("double") /
-          sum(disc).cast("double")).as("mkt_share"))
+          sum(discPrice).cast("double")).as("mkt_share"))
         .orderBy(col("o_year"))
     }),
 
@@ -1065,9 +1059,7 @@ object Relational {
     // lineitem, the orderkey fact⋈fact shuffle for the year, then a
     // (nation, year) hash agg on exact decimals.
     "q9_profit" -> ((s, d) => {
-      val amount =
-        col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(new java.math.BigDecimal("1.00")) - col("l_discount").cast("decimal(12,2)")) -
+      val amount = discPrice -
         col("p_retailprice").cast("decimal(12,2)") *
           col("l_quantity").cast("decimal(12,2)") * lit(new java.math.BigDecimal("0.10"))
       val su = Tables.supplier(s, d)
@@ -1324,17 +1316,7 @@ object Relational {
     // MaxShingleDf caps hot shingles. Support threshold ≥2 keeps the
     // result the interesting-pair set, not the pair universe.
     "basket_pairs" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          "flatten(transform(ps, (x, i) -> " +
-            "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
-        )).as("p"))
-        .groupBy(col("p.a").as("part_a"), col("p.b").as("part_b"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .orderBy(col("part_a"), col("part_b"))),
+      basketPairs(s, d).orderBy(col("part_a"), col("part_b"))),
 
     // EXACT per-group quantiles at scale — the two-pass bucket-narrowing
     // selection: `percentile()` gathers a whole group into one task and
@@ -1389,8 +1371,50 @@ object Relational {
         .orderBy(col("l_returnflag")))
   )
 
-  private val rev =
-    "CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)"
+  /** SQL twin of [[discPrice]]. */
+  private val discSql =
+    "CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))"
+
+  /** SQL twin of [[revenue]]. */
+  private val rev = s"CAST(SUM($discSql) AS DOUBLE)"
+
+  /** SQL twin of [[kmvHash]]. */
+  private[graft] def kmvHashSql(c: String): String =
+    s"CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 12)) AS BIGINT)"
+
+  /** SQL twin of [[kmvEstimate]]: `name(key, est)` over the (key, h) rows
+    * of `from`, ranking each key's distinct hashes in one window. */
+  private[graft] def kmvSql(name: String, from: String, key: String, est: String): String =
+    s"$name AS (\n  SELECT $key,\n" +
+      s"    CASE WHEN COUNT(*) < $SketchK THEN COUNT(*)\n" +
+      s"         ELSE $SketchNum // MAX(h) END AS $est\n" +
+      s"  FROM (\n    SELECT $key, h, row_number() OVER (PARTITION BY $key ORDER BY h) AS rn\n" +
+      s"    FROM (SELECT DISTINCT $key, h FROM $from))\n" +
+      s"  WHERE rn <= $SketchK GROUP BY $key)"
+
+  /** The distinct-orders KMV estimate per return flag, single pass over
+    * lineitem — the oracle of both KMV queries. */
+  private def kmvOrdersSql: String =
+    s"WITH h AS (\n  SELECT l_returnflag, ${kmvHashSql("l_orderkey")} AS h\n  FROM lineitem),\n" +
+      kmvSql("est", "h", "l_returnflag", "approx_orders") +
+      "\nSELECT l_returnflag, approx_orders FROM est\nORDER BY l_returnflag"
+
+  /** SQL twin of [[basketPairs]]: `lp` and `bp(part_a, part_b, n_orders)`. */
+  private[graft] def basketPairsCtes: String =
+    "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),\n" +
+      "bp AS (\n  SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS n_orders\n  " +
+      Dedup.pairsSql("lp", "l_partkey", "l_orderkey") + "\n  GROUP BY 1, 2 HAVING COUNT(*) >= 2)"
+
+  /** The top-3 line items per supplier by price (ties by order, line) with
+    * their rank `rn`, projected to `cols` and ordered by `order` — the
+    * oracle of the three `window_topk*` formulations. */
+  private def topkSql(cols: String, order: String): String =
+    s"SELECT $cols FROM (\n" +
+      "  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,\n" +
+      "    ROW_NUMBER() OVER (PARTITION BY l_suppkey\n" +
+      "      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn\n" +
+      "  FROM lineitem)\n" +
+      s"WHERE rn <= 3\nORDER BY $order"
 
   /** DuckDB CTE mirroring [[Tables.partsupp]] verbatim (synthesized view;
     * the testdata ships no partsupp table). */
@@ -1403,10 +1427,10 @@ object Relational {
 
   val oracle: Map[String, String] = Map(
     "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
+      s"""SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
+        |  $rev AS sum_disc_price,
         |  COUNT(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
@@ -1486,32 +1510,12 @@ object Relational {
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_totalprice > 400000)
         |ORDER BY c_custkey""".stripMargin,
-    "window_topk" ->
-      """SELECT * FROM (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        |    ROW_NUMBER() OVER (PARTITION BY l_suppkey
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem)
-        |WHERE rn <= 3
-        |ORDER BY l_suppkey, rn""".stripMargin,
+    "window_topk" -> topkSql("*", "l_suppkey, rn"),
     // the Aggregator formulation must produce the identical result set
-    "window_topk_agg" ->
-      """SELECT * FROM (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        |    ROW_NUMBER() OVER (PARTITION BY l_suppkey
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem)
-        |WHERE rn <= 3
-        |ORDER BY l_suppkey, rn""".stripMargin,
+    "window_topk_agg" -> topkSql("*", "l_suppkey, rn"),
     // the custom-exec formulation emits the rows, not the rank column
-    "window_topk_heap" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice FROM (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        |    ROW_NUMBER() OVER (PARTITION BY l_suppkey
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem)
-        |WHERE rn <= 3
-        |ORDER BY l_suppkey, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin,
+    "window_topk_heap" -> topkSql("l_suppkey, l_orderkey, l_linenumber, l_extendedprice",
+      "l_suppkey, l_extendedprice DESC, l_orderkey, l_linenumber"),
     "window_running" ->
       """SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
         |  CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER (PARTITION BY user_id
@@ -1661,38 +1665,10 @@ object Relational {
     // single-window KMV twin: the Spark side's salted two-stage bottom-k
     // yields EXACTLY the global bottom-k, so the simple formulation here
     // produces the identical h_k and estimate (integer arithmetic only)
-    "agg_approx_sketch" ->
-      """WITH h AS (
-        |  SELECT DISTINCT l_returnflag,
-        |    CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 12)) AS BIGINT) AS h
-        |  FROM lineitem),
-        |r AS (
-        |  SELECT l_returnflag, h,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
-        |  FROM h)
-        |SELECT l_returnflag,
-        |  CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-        |       ELSE 71776119061217280 // MAX(h) END AS approx_orders
-        |FROM r WHERE rn <= 256
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+    "agg_approx_sketch" -> kmvOrdersSql,
     // the single-pass formulation on purpose: hash-equality with the
     // Spark side's per-segment merge IS the mergeability proof
-    "agg_sketch_merge" ->
-      """WITH h AS (
-        |  SELECT DISTINCT l_returnflag,
-        |    CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 12)) AS BIGINT) AS h
-        |  FROM lineitem),
-        |r AS (
-        |  SELECT l_returnflag, h,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
-        |  FROM h)
-        |SELECT l_returnflag,
-        |  CASE WHEN COUNT(*) < 256 THEN COUNT(*)
-        |       ELSE 71776119061217280 // MAX(h) END AS approx_orders
-        |FROM r WHERE rn <= 256
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+    "agg_sketch_merge" -> kmvOrdersSql,
     "pivot_type_counts" ->
       (s"WITH base AS (\n${graft.OracleViews.emailEtlSql(graft.SparkEntry.DateAdded)}\n)\n" +
         """SELECT source,
@@ -1834,10 +1810,10 @@ object Relational {
         |  AND l_discount BETWEEN 0.05 AND 0.07
         |  AND l_quantity < 24""".stripMargin,
     "q14_promo" ->
-      """SELECT 100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
-        |    THEN CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))
+      s"""SELECT 100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
+        |    THEN $discSql
         |    ELSE 0.00 END) AS DOUBLE) /
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
+        |  $rev
         |  AS promo_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1998-09-01 00:00:00'
@@ -1902,11 +1878,11 @@ object Relational {
          |GROUP BY 1, 2, 3
          |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
     "q8_share" ->
-      """SELECT year(o_orderdate) AS o_year,
+      s"""SELECT year(o_orderdate) AS o_year,
         |  CAST(SUM(CASE WHEN n1.n_name = 'NATION_5'
-        |    THEN CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))
+        |    THEN $discSql
         |    ELSE 0.00 END) AS DOUBLE) /
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
+        |  $rev
         |  AS mkt_share
         |FROM lineitem
         |JOIN part ON p_partkey = l_partkey
@@ -1920,8 +1896,8 @@ object Relational {
         |GROUP BY 1
         |ORDER BY o_year""".stripMargin,
     "q9_profit" ->
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))
+      s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
+        |  CAST(SUM($discSql
         |    - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)) * 0.10) AS DOUBLE)
         |  AS sum_profit
         |FROM lineitem
@@ -1933,9 +1909,9 @@ object Relational {
         |GROUP BY 1, 2
         |ORDER BY nation, o_year DESC""".stripMargin,
     "q11_important" ->
-      """WITH pv AS (
+      s"""WITH pv AS (
         |  SELECT l_partkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1.00 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS part_value
+        |    $rev AS part_value
         |  FROM lineitem GROUP BY l_partkey),
         |t AS (
         |  SELECT CAST(SUM(CAST(part_value AS DECIMAL(12,2))) AS DOUBLE) AS total_value FROM pv)
@@ -2073,13 +2049,8 @@ object Relational {
         |FROM k JOIN r ON r.flag = k.flag AND r.rk = k.rank_k
         |ORDER BY l_returnflag, qppm""".stripMargin,
     "basket_pairs" ->
-      """WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-        |SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-        |  COUNT(*) AS n_orders
-        |FROM lp a JOIN lp b
-        |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        |ORDER BY part_a, part_b""".stripMargin,
+      (s"WITH $basketPairsCtes\n" +
+        "SELECT part_a, part_b, n_orders FROM bp\nORDER BY part_a, part_b"),
     "agg_stats" ->
       """SELECT l_returnflag, COUNT(*) AS n_rows,
         |  COUNT(DISTINCT l_orderkey) AS n_orders,

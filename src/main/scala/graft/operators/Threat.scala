@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.OracleViews.unifiedCtes
 
 /** Threat-intelligence analytics over the canonical unified indicator
   * store ([[graft.SparkEntry.unifiedFeed]]) — the downstream consumers a
@@ -47,16 +48,11 @@ object Threat {
     * per-message fold (never a self-join). Checkpointed: the distributed
     * label loop re-reads it every round. */
   private[graft] def campaignPairs(s: SparkSession, d: String): DataFrame =
-    feed(s, d)
-      .filter(substring(md5(concat(col("platform"), lit("|"), col("id"))), 1, 1) === "0")
-      // no distinct first: collect_set already dedups each message's iocs
-      .groupBy(col("platform"), col("id"))
-      .agg(sort_array(collect_set(col("ioc"))).as("xs"))
-      .select(explode(expr(
-        "flatten(transform(xs, (x, i) -> " +
-          "transform(slice(xs, i + 2, size(xs)), y -> struct(x AS a, y AS b))))"
-      )).as("p"))
-      .select(col("p.a"), col("p.b")).distinct()
+    // no distinct first: collect_set already dedups each message's iocs
+    Dedup.setPairs(feed(s, d)
+        .filter(substring(md5(concat(col("platform"), lit("|"), col("id"))), 1, 1) === "0"),
+        col("ioc"), "platform", "id")
+      .select(col("x").as("a"), col("y").as("b")).distinct()
       .localCheckpoint()
 
   /** Campaign labels: connected components over the IOC co-sighting
@@ -91,15 +87,9 @@ object Threat {
     // (distinct types ≤ 4 — bounded by the type domain, not the
     // corpus), then one tiny (type_a, type_b) agg. No self-join.
     "ioc_type_pairs" -> ((s, d) =>
-      feed(s, d)
-        .select(col("platform"), col("id"), col("type")).distinct()
-        .groupBy(col("platform"), col("id"))
-        .agg(sort_array(collect_set(col("type"))).as("ts"))
-        .select(explode(expr(
-          "flatten(transform(ts, (x, i) -> " +
-            "transform(slice(ts, i + 2, size(ts)), y -> struct(x AS a, y AS b))))"
-        )).as("p"))
-        .groupBy(col("p.a").as("type_a"), col("p.b").as("type_b"))
+      Dedup.setPairs(feed(s, d).select(col("platform"), col("id"), col("type")).distinct(),
+          col("type"), "platform", "id")
+        .groupBy(col("x").as("type_a"), col("y").as("type_b"))
         .agg(count(lit(1)).as("n_msgs"))
         .orderBy(col("type_a"), col("type_b"))),
 
@@ -199,11 +189,6 @@ object Threat {
         .orderBy(col("n_iocs")))
   )
 
-  private def unifiedCtes: String =
-    s"e AS (\n${graft.OracleViews.emailEtlSql(graft.SparkEntry.DateAdded)}\n),\n" +
-      s"t AS (\n${graft.OracleViews.tweetEtlSql}\n),\n" +
-      "u AS (SELECT * FROM e UNION ALL SELECT * FROM t)"
-
   private def allowValues: String =
     allowHosts.map(h => s"('$h')").mkString(", ")
 
@@ -217,20 +202,15 @@ object Threat {
     * helper's scaladoc). Empty prefix: no other family shares this WITH
     * chain. */
   private def campaignCtes: String =
-    """lp AS (
-      |  SELECT DISTINCT platform, id, ioc FROM u
-      |  WHERE substr(md5(platform || '|' || id), 1, 1) = '0'),
-      |pairs AS (
-      |  SELECT a.ioc AS src, b.ioc AS dst
-      |  FROM lp a JOIN lp b
-      |    ON a.platform = b.platform AND a.id = b.id AND a.ioc < b.ioc
-      |  GROUP BY 1, 2),
-      |cedges AS MATERIALIZED (
-      |  SELECT src, dst FROM pairs
-      |  UNION ALL
-      |  SELECT dst, src FROM pairs),
-      |""".stripMargin +
-      graft.operators.Dedup.ccRoundsCtes("cedges", "") + ",\n" +
+    "lp AS (\n" +
+      "  SELECT DISTINCT platform, id, ioc FROM u\n" +
+      "  WHERE substr(md5(platform || '|' || id), 1, 1) = '0'),\n" +
+      "pairs AS (\n" +
+      s"  SELECT a.ioc AS src, b.ioc AS dst\n  ${Dedup.pairsSql("lp", "ioc", "platform", "id")}\n" +
+      "  GROUP BY 1, 2),\n" +
+      "cedges AS MATERIALIZED (\n" +
+      "  SELECT src, dst FROM pairs\n  UNION ALL\n  SELECT dst, src FROM pairs),\n" +
+      Dedup.ccRoundsCtes("cedges", "") + ",\n" +
       "clabels AS (\n" +
       "  SELECT node AS ioc, lbl AS campaign_id\n" +
       "  FROM lfinal)"
@@ -264,12 +244,10 @@ object Threat {
           |ORDER BY n_iocs""".stripMargin),
     "ioc_type_pairs" ->
       (s"WITH $unifiedCtes,\n" +
-        """lp AS (SELECT DISTINCT platform, id, type FROM u)
-          |SELECT a.type AS type_a, b.type AS type_b, COUNT(*) AS n_msgs
-          |FROM lp a JOIN lp b
-          |  ON a.platform = b.platform AND a.id = b.id AND a.type < b.type
-          |GROUP BY 1, 2
-          |ORDER BY type_a, type_b""".stripMargin),
+        "lp AS (SELECT DISTINCT platform, id, type FROM u)\n" +
+        "SELECT a.type AS type_a, b.type AS type_b, COUNT(*) AS n_msgs\n" +
+        Dedup.pairsSql("lp", "type", "platform", "id") + "\n" +
+        "GROUP BY 1, 2\nORDER BY type_a, type_b"),
     "ioc_allowlist" ->
       (s"WITH $unifiedCtes,\n" +
         s"""h AS (

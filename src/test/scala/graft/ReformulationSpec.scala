@@ -71,14 +71,22 @@ class ReformulationSpec extends AnyFunSuite {
       rnd.shuffle((0 until 1000).toList).take(m).sorted.map(i => b * 1000L + i)
     }
     import spark.implicits._
-    val buckets = arrays.toDF("ms")
-    val fast = Dedup.memberPairs(buckets)
-    val nested = buckets.select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x.as("x"), y.as("y")))))).as("p"))
-      .select(col("p.x").as("x"), col("p.y").as("y"))
-    assert(fast.count() == sizes.map(m => m.toLong * (m - 1) / 2).sum)
-    assertSameRows(fast, nested)
+    def check(buckets: DataFrame): Unit = {
+      val fast = Dedup.memberPairs(buckets)
+      val nested = buckets.select(explode(flatten(transform(col("ms"), (x, i) =>
+          transform(slice(col("ms"), i + lit(2), size(col("ms"))),
+            y => struct(x.as("x"), y.as("y")))))).as("p"))
+        .select(col("p.x").as("x"), col("p.y").as("y"))
+      assert(fast.count() == sizes.map(m => m.toLong * (m - 1) / 2).sum)
+      assertSameRows(fast, nested)
+    }
+    // Long ids (the LSH buckets and co-purchase parts)
+    check(arrays.toDF("ms"))
+    // (doc_id, ph) struct members, the phash buckets' shape
+    check(arrays.map(_.map(id => (id, id * 2654435761L))).toDF("ms")
+      .select(transform(col("ms"), m => struct(m("_1").as("doc_id"), m("_2").as("ph"))).as("ms")))
+    // string members, the campaign IOCs' shape (zero-padded, so sorted)
+    check(arrays.map(_.map(id => f"ioc-$id%08d")).toDF("ms"))
   }
 
   test("postings-list Jaccard equals the inverted-index self-join") {

@@ -37,6 +37,15 @@ class SessionSpec extends AnyFunSuite {
       s"writeStream call sites: ${hits.map { case (f, l) => s"$f:$l" }.mkString(", ")}")
   }
 
+  test("src/main spells out no nested transform-over-slice pair generator") {
+    // every (i < j) pair explode goes through Dedup.memberPairs: the nested
+    // HOF form is CodegenFallback and builds each bucket's pair array in
+    // interpreted code before exploding it
+    val hits = callSites("transform(slice(")
+    assert(hits.isEmpty,
+      s"nested pair generators: ${hits.map { case (f, l) => s"$f:$l" }.mkString(", ")}")
+  }
+
   test("core counts parse from local[N], local[*] and local-cluster[w,c,m]") {
     assert(Session.cores("local[4]") == 4)
     assert(Session.cores("local[*]") == Runtime.getRuntime.availableProcessors())
