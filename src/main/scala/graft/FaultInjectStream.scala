@@ -36,7 +36,7 @@ final class KvFileTransport(dir: String) extends Transport {
 /** Executor-loss fault injection for the STREAMING path (the r11 verdict's
   * top task — [[FaultInject]] covers batch queries only).
   *
-  * Scenario: ReplayJsonlSource (DSv2 micro-batch, admission-controlled) →
+  * Scenario: [[StreamBench.replay]] (Spark's file stream source) →
   * [[TweetStream.start]] (extraction → keyed RestBatchSink per micro-batch)
   * into a [[KvFileTransport]], under `local-cluster[2,8,8192]` (two separate
   * executor JVMs) — the product's one stream job, not a copy of it. The
@@ -93,16 +93,8 @@ object FaultInjectStream {
     require(master.startsWith("local-cluster"),
       "stream fault injection needs separate executor JVMs (local-cluster master)")
 
-    // ABSOLUTE path: local-cluster executor JVMs run in per-executor work
-    // dirs, so the relative path StreamBench uses under local[*] resolves
-    // to a nonexistent file inside the worker dir (round-12 lesson — the
-    // partition readers open the file themselves, ReplayJsonlSource:127)
-    val file = Paths.get("target", s"stream_tweets_$n.jsonl").toAbsolutePath
-    Files.createDirectories(file.getParent)
-    StreamBench.corpus(file, n)
-
     def run(kvDir: String): StreamingQuery =
-      TweetStream.start(StreamBench.replay(spark, file, maxPerBatch),
+      TweetStream.start(StreamBench.replay(spark, Paths.get("target"), n, maxPerBatch),
         "https://kv.example/batch_save", new KvFileTransport(kvDir),
         freshDir("faultstream_ckpt"))
     def finalBatch(q: StreamingQuery): Long =

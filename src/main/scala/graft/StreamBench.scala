@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sinks.Transport
 import graft.streaming.TweetStream
@@ -31,15 +31,13 @@ object CountingTransport {
   * `stream_throughput` block of BENCH_sf1.json): sustained records/sec
   * through the full streaming path —
   *
-  *   ReplayJsonlSource (DSv2 micro-batch, admission-controlled)
+  *   [[replay]] (Spark's file stream source, `maxFilesPerTrigger`)
   *     → [[TweetStream.start]]: TweetPipeline.flatten/extract (the
   *       batch-identical IOC core) → foreachBatch RestBatchSink.write(keyed = true)
   *
-  * The admission-rate knob is `maxPerBatch` (ReadLimit.maxRows on the
-  * source — SPARK_GRAFT_STREAM_BATCH, default 50k): it is the ONLY
-  * backpressure control this source has, so the bench reports it next to
-  * the rate it produced. Records/sec is computed two ways and both are
-  * emitted: `rps_busy` divides by Σ triggerExecution (the engine's own
+  * The admission-rate knob is `maxPerBatch` (default 50k lines per
+  * micro-batch), reported next to the rate it produced. Records/sec is
+  * computed two ways and both are emitted: `rps_busy` divides by Σ triggerExecution (the engine's own
   * per-batch wall clock — what a capacity planner multiplies by executor
   * count), and `rps_wall` divides by last-batch-end minus first-batch-start
   * (includes trigger scheduling gaps — what an operator actually observes).
@@ -48,71 +46,93 @@ object CountingTransport {
   * FaultInjectStream); this main measures only throughput. Per-layer
   * attribution (source, extract, enrich, sink) is perfbench's `--trace 1`.
   *
-  * Usage: sbt "runMain graft.StreamBench [nRecords]"  (default 1,000,000)
+  * Usage: sbt "runMain graft.StreamBench [nRecords] [maxPerBatch]"
+  *   (defaults 1,000,000 and 50,000)
   */
 object StreamBench {
 
-  /** Deterministic raw-tweet corpus, one JSON object per line, written once
-    * and reused (~190 MB at 1M). Mix exercises every branch of the core:
-    * plain-IP c2 reports (70%), hashes (10%), defanged URLs (10%),
-    * retweets the pipeline must drop (5%), no-IOC chatter (5%); every 20th
-    * tweet carries the tracked hashtag + a pastebin link so the enrichment
-    * columns stay non-degenerate. */
-  private[graft] def corpus(path: java.nio.file.Path, n: Int): Unit = {
-    if (Files.exists(path)) {
-      var lines = 0L
-      val src = scala.io.Source.fromFile(path.toFile)
-      try lines = src.getLines().size.toLong finally src.close()
-      if (lines == n) return
-    }
-    val w = Files.newBufferedWriter(path, StandardCharsets.UTF_8)
-    try {
-      var i = 0
-      while (i < n) {
-        val k = i % 20
-        val body =
-          if (k < 14) s"c2 beacon at 10.${(i >> 16) & 255}.${(i >> 8) & 255}.${i & 255}"
-          else if (k < 16) f"dropped sample ${"%032x".format(i)}%s"
-          else if (k < 18) s"payload hxxp://evil-${i % 9973}.example/x${i % 97}"
-          else if (k == 18) "RT classic retweet, no ioc here"
-          else "quarterly threat landscape musings"
-        val rt = k == 18
-        val tags = if (k == 0) """[{"text":"infosec"}]""" else "[]"
-        val urls = if (k == 0)
-          s"""[{"expanded_url":"https://pastebin.com/raw/p${i % 4999}"}]"""
-          else "[]"
-        w.write(s"""{"created_at":"2024-02-02","id":$i,"text":"$body","retweeted":$rt,"user":{"screen_name":"u${i % 100000}"},"entities":{"hashtags":$tags,"urls":$urls}}""")
-        w.write("\n")
-        i += 1
-      }
-    } finally w.close()
+  /** Line `i` of the deterministic raw-tweet corpus. Mix exercises every
+    * branch of the core: plain-IP c2 reports (70%), hashes (10%), defanged
+    * URLs (10%), retweets the pipeline must drop (5%), no-IOC chatter (5%);
+    * every 20th tweet carries the tracked hashtag + a pastebin link so the
+    * enrichment columns stay non-degenerate. */
+  private def tweet(i: Int): String = {
+    val k = i % 20
+    val body =
+      if (k < 14) s"c2 beacon at 10.${(i >> 16) & 255}.${(i >> 8) & 255}.${i & 255}"
+      else if (k < 16) f"dropped sample ${"%032x".format(i)}%s"
+      else if (k < 18) s"payload hxxp://evil-${i % 9973}.example/x${i % 97}"
+      else if (k == 18) "RT classic retweet, no ioc here"
+      else "quarterly threat landscape musings"
+    val rt = k == 18
+    val tags = if (k == 0) """[{"text":"infosec"}]""" else "[]"
+    val urls = if (k == 0)
+      s"""[{"expanded_url":"https://pastebin.com/raw/p${i % 4999}"}]"""
+      else "[]"
+    s"""{"created_at":"2024-02-02","id":$i,"text":"$body","retweeted":$rt,"user":{"screen_name":"u${i % 100000}"},"entities":{"hashtags":$tags,"urls":$urls}}"""
   }
 
-  /** The corpus replayed as a stream, `maxPerBatch` lines per micro-batch. */
-  private[graft] def replay(spark: SparkSession, path: java.nio.file.Path,
+  /** The `n`-line corpus as a directory of jsonl files under `root`, each of
+    * ceil(maxPerBatch / cores) lines, written once per layout and reused
+    * (~190 MB at 1M). It is written under a staging name and
+    * renamed into place, so a killed write is never reused. The path is
+    * absolute: `local-cluster` executors open the files themselves, from
+    * their own work directories. */
+  private[graft] def corpus(spark: SparkSession, root: Path, n: Int,
+                            maxPerBatch: Int): String = {
+    val cores = masterCores(spark)
+    val perFile = (maxPerBatch + cores - 1) / cores
+    val dir = root.toAbsolutePath.resolve(s"stream_tweets_${n}_$perFile")
+    if (!Files.isDirectory(dir)) {
+      val staging = dir.resolveSibling(s"${dir.getFileName}.staging")
+      if (Files.exists(staging)) {
+        scala.util.Using.resource(Files.list(staging))(_.forEach(f => Files.delete(f)))
+        Files.delete(staging)
+      }
+      Files.createDirectories(staging)
+      for (first <- 0 until n by perFile) {
+        val w = Files.newBufferedWriter(
+          staging.resolve(f"part-${first / perFile}%05d.jsonl"), StandardCharsets.UTF_8)
+        try (first until math.min(n, first + perFile)).foreach { i =>
+          w.write(tweet(i)); w.write("\n")
+        } finally w.close()
+      }
+      Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
+    }
+    dir.toString
+  }
+
+  /** The corpus replayed through Spark's file stream source, the source
+    * TweetStreamSpec and perfbench's `tweet_live` read: each micro-batch
+    * admits one file per core, so it holds about `maxPerBatch` lines and
+    * runs one task per core. The task count comes from the file
+    * layout: one file per batch would be split by the 4 MB open-cost floor
+    * into fewer tasks than cores. */
+  private[graft] def replay(spark: SparkSession, root: Path, n: Int,
                             maxPerBatch: Int): DataFrame =
-    spark.readStream
-      .format("graft.streaming.ReplayJsonlSource")
-      .option("path", path.toString)
-      .option("maxPerBatch", maxPerBatch)
-      .load()
+    spark.readStream.option("maxFilesPerTrigger", masterCores(spark))
+      .text(corpus(spark, root, n, maxPerBatch))
+
+  /** The master's cores, which is defaultParallelism once every executor
+    * has registered. defaultParallelism itself is not used: under
+    * `local-cluster` it counts only the executors registered so far, so a
+    * stream started right after the session would get a smaller layout. */
+  private def masterCores(spark: SparkSession): Int =
+    Session.cores(spark.sparkContext.master)
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val maxPerBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "50000").toInt
+    val maxPerBatch = args.lift(1).map(_.toInt).getOrElse(50000)
     val spark = Session.start()
-
-    val file = Paths.get("target", s"stream_tweets_$n.jsonl")
-    Files.createDirectories(file.getParent)
-    corpus(file, n)
+    val root = Paths.get("target")
 
     // session/codegen warm-up through the SAME plan shape so batch 0's
     // one-time costs don't pollute the sustained-rate percentiles
-    val warmDf = spark.read.text(file.toString).limit(1000).toDF("value")
+    val warmDf = spark.read.text(corpus(spark, root, n, maxPerBatch)).limit(1000)
     TweetStream.iocStream(warmDf).write.format("noop").mode("overwrite").save()
 
     val t0 = System.nanoTime()
-    val q = TweetStream.start(replay(spark, file, maxPerBatch), "https://kv.example/batch_save",
+    val q = TweetStream.start(replay(spark, root, n, maxPerBatch), "https://kv.example/batch_save",
       new CountingTransport, Files.createTempDirectory("streambench_ckpt").toString)
     q.awaitTermination()
     val wallSec = (System.nanoTime() - t0) / 1e9

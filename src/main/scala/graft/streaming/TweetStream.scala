@@ -9,8 +9,9 @@ import graft.sinks.{RestBatchSink, Transport}
   * /root/reference/firehose.py's push-based listener (SURVEY.md §3.2).
   *
   * Source: any streaming DataFrame with a string `value` column of raw tweet
-  * JSON (file source / socket / MemoryStream in tests; a custom
-  * MicroBatchStream for a live feed — deferred per SURVEY.md §7.3).
+  * JSON. Spark's file stream source (`readStream.text` over a directory of
+  * jsonl files) is the one source the mains ([[graft.StreamBench.replay]]),
+  * the specs and perfbench's `tweet_live` use.
   * The transform core is EXACTLY the batch one ([[TweetPipeline.flatten]] →
   * [[TweetPipeline.extract]]): one implementation, two execution modes.
   *

@@ -1,12 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.TweetStream
 
-/** The custom DSv2 MicroBatchStream source: rate-bounded micro-batches,
-  * exactly-once row delivery, and composition with the shared tweet
-  * extraction core.
+/** The replay stream the stream mains run ([[StreamBench.replay]]: the
+  * deterministic corpus through Spark's file stream source): rate-bounded
+  * micro-batches of one file per core, exactly-once row delivery across
+  * restarts, and composition with the shared tweet extraction core.
   */
 class ReplaySourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -14,45 +17,52 @@ class ReplaySourceSpec extends AnyFunSuite {
   private def tweet(id: Long, ip: String) =
     s"""{"created_at":"2024-02-02","id":$id,"text":"c2 $ip","retweeted":false,"user":{"screen_name":"u$id"},"entities":{"hashtags":[],"urls":[]}}"""
 
-  test("replay source: bounded batches, every record exactly once, through the IOC core") {
-    val f = Files.createTempFile("tweets", ".jsonl")
-    val n = 25
-    Files.writeString(f, (1 to n).map(i => tweet(i, s"10.0.0.$i")).mkString("\n"))
+  /** The IOC core run as one batch over the corpus files: what the stream
+    * must deliver, each row exactly once. */
+  private def batchIocs(dir: String): Seq[String] =
+    sorted(TweetStream.iocStream(spark.read.text(dir)).collect().toSeq)
 
-    val raw = spark.readStream
-      .format("graft.streaming.ReplayJsonlSource")
-      .option("path", f.toString)
-      .option("maxPerBatch", 7) // 25 rows → 4 micro-batches
-      .load()
+  private def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  test("replay source: bounded batches, every record exactly once, through the IOC core") {
+    val cores = spark.sparkContext.defaultParallelism
+    val maxPerBatch = 2 * cores
+    val n = 4 * maxPerBatch // 4 micro-batches of `cores` two-line files
+    val root = Files.createTempDirectory("replay")
+    val raw = StreamBench.replay(spark, root, n, maxPerBatch)
     assert(raw.isStreaming && raw.schema.fieldNames.toSeq == Seq("value"))
 
-    val q = TweetStream.iocStream(raw)
-      .writeStream.format("memory").queryName("replay_out")
-      .outputMode("append").start()
+    val parts = ArrayBuffer[Int]()
+    val out = ArrayBuffer[Row]()
+    val q = raw.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      parts += batch.rdd.getNumPartitions
+      out ++= TweetStream.iocStream(batch).collect(); ()
+    }.start()
     q.processAllAvailable(); q.stop()
 
-    val iocs = spark.table("replay_out").select("ioc")
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(iocs == (1 to n).map(i => s"10.0.0.$i").sorted)   // all, exactly once
+    val dir = StreamBench.corpus(spark, root, n, maxPerBatch)
+    assert(out.nonEmpty && sorted(out.toSeq) == batchIocs(dir))  // all, exactly once
+    // every tweet but the retweets and the chatter carries an IOC
+    assert(out.map(_.getAs[String]("id").toLong).distinct.sorted ==
+      (0L until n).filter(_ % 20 < 18))
     assert(q.recentProgress.count(_.numInputRows > 0) >= 4)  // rate-bounded batches
-    assert(q.recentProgress.forall(_.numInputRows <= 7))
+    assert(q.recentProgress.forall(_.numInputRows <= maxPerBatch))
+    // one file per core: a batch scanned as fewer tasks than cores would
+    // leave cores idle
+    assert(parts.nonEmpty && parts.forall(_ == cores), s"partitions per batch: $parts")
   }
 
   test("restart from checkpoint resumes at the committed offset - no reprocessing (S11)") {
-    val f = Files.createTempFile("tweets_ckpt", ".jsonl")
+    val root = Files.createTempDirectory("replay_ckpt_root")
     val ckpt = Files.createTempDirectory("replay_ckpt").toString
     val out = Files.createTempDirectory("replay_sink").toString
-    Files.writeString(f, (1 to 10).map(i => tweet(i, s"10.1.0.$i")).mkString("\n"))
+    val n = 10
+    val maxPerBatch = 4
 
     def run(): Unit = {
-      val raw = spark.readStream
-        .format("graft.streaming.ReplayJsonlSource")
-        .option("path", f.toString)
-        .option("maxPerBatch", 4)
-        .load()
       // durable file sink: appends across restarts would EXPOSE
       // reprocessing as duplicate rows (a memory sink is wiped per run)
-      val q = TweetStream.iocStream(raw)
+      val q = TweetStream.iocStream(StreamBench.replay(spark, root, n, maxPerBatch))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -61,97 +71,33 @@ class ReplaySourceSpec extends AnyFunSuite {
     run()                              // pass 1: consumes all 10 records
     // pass 2: more records arrive, then the query RESTARTS from the
     // same checkpoint — it must pick up only the 5 new ones
-    Files.writeString(f,
-      "\n" + (11 to 15).map(i => tweet(i, s"10.1.0.$i")).mkString("\n"),
-      java.nio.file.StandardOpenOption.APPEND)
+    val dir = StreamBench.corpus(spark, root, n, maxPerBatch)
+    Files.writeString(java.nio.file.Paths.get(dir, "arrived.jsonl"),
+      (11 to 15).map(i => tweet(100 + i, s"10.1.0.$i")).mkString("\n"))
     run()
 
-    val iocs = spark.read.parquet(out).select("ioc")
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(iocs == (1 to 15).map(i => s"10.1.0.$i").sorted,
-      s"restart reprocessed or lost records: $iocs")
+    val iocs = sorted(spark.read.parquet(out).collect().toSeq)
+    assert(iocs == batchIocs(dir), s"restart reprocessed or lost records: $iocs")
+    assert(iocs.count(_.contains("10.1.0.")) == 5)
   }
 
   test("Trigger.AvailableNow drains the whole file in rate-bounded batches, then terminates") {
-    // Without SupportsTriggerAvailableNow, Spark's wrapper fixes the run's
-    // end target at the FIRST latestOffset(start, limit) result — one
-    // 7-row batch, silent 18-row loss, clean exit. StreamBench caught it
-    // at 1M lines; this pins the contract at spec scale.
-    val f = Files.createTempFile("tweets_an", ".jsonl")
-    val n = 25
-    Files.writeString(f, (1 to n).map(i => tweet(i, s"10.2.0.$i")).mkString("\n"))
-    val raw = spark.readStream
-      .format("graft.streaming.ReplayJsonlSource")
-      .option("path", f.toString)
-      .option("maxPerBatch", 7)
-      .load()
-    val q = TweetStream.iocStream(raw)
+    // A source that pins its AvailableNow end target at the FIRST rate-
+    // limited batch delivers one batch, silently drops the rest and exits
+    // clean; this pins the drain-everything contract at spec scale.
+    val maxPerBatch = 2 * spark.sparkContext.defaultParallelism
+    val n = 4 * maxPerBatch
+    val root = Files.createTempDirectory("replay_an")
+    val q = TweetStream.iocStream(StreamBench.replay(spark, root, n, maxPerBatch))
       .writeStream.format("memory").queryName("replay_an")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(60000), "AvailableNow query must self-terminate")
-    val iocs = spark.table("replay_an").select("ioc")
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(iocs == (1 to n).map(i => s"10.2.0.$i").sorted,
+    assert(sorted(spark.table("replay_an").collect().toSeq) ==
+      batchIocs(StreamBench.corpus(spark, root, n, maxPerBatch)),
       "AvailableNow must drain ALL lines, exactly once")
     assert(q.recentProgress.count(_.numInputRows > 0) >= 4, "still rate-bounded")
-    assert(q.recentProgress.forall(_.numInputRows <= 7))
-  }
-
-  // --- r14 seek machinery (byte index + data-sized slicing), pinned
-  // directly: the end-to-end tests above stream 25-line files, where
-  // stride/boundary arithmetic never bites.
-
-  test("ReplayIndex.build: line counts and every recorded offset is a true line start") {
-    import graft.streaming.ReplayIndex
-    val f = Files.createTempFile("replay_idx", ".jsonl")
-    // variable-width lines across several stride boundaries; multi-byte
-    // UTF-8 to prove raw-newline counting can't split a codepoint
-    val lines = (0 until 1000).map(i => s"line-$i-${"x" * (i % 37)}-é")
-    Files.writeString(f, lines.mkString("\n")) // NO trailing newline
-    val stride = 64
-    val (n, offs) = ReplayIndex.build(f.toString, stride)
-    assert(n == 1000, "final partial line must count, matching getLines()")
-    assert(offs.head == 0L)
-    assert(offs.length == 1 + (1000 - 1) / stride || offs.length == 1 + 1000 / stride)
-    val bytes = Files.readAllBytes(f)
-    offs.zipWithIndex.foreach { case (off, k) =>
-      assert(off == 0 || bytes(off.toInt - 1) == '\n',
-        s"offset $k ($off) must sit just after a newline")
-      // the offset must be the start of line k*stride exactly
-      val prefix = new String(bytes, 0, off.toInt, java.nio.charset.StandardCharsets.UTF_8)
-      assert(prefix.count(_ == '\n') == k * stride, s"offset $k points at the wrong line")
-    }
-    // trailing-newline variant counts the same lines, one more index slot
-    val g = Files.createTempFile("replay_idx_nl", ".jsonl")
-    Files.writeString(g, lines.mkString("\n") + "\n")
-    assert(ReplayIndex.build(g.toString, stride)._1 == 1000)
-  }
-
-  test("ReplayIndex.slices: exact cover, chunk floor, parallelism cap, valid seek hints") {
-    import graft.streaming.ReplayIndex
-    val stride = 64
-    // synthetic index covering 1M lines at stride 64 (as if every line were
-    // 10 bytes): offs(k) = byte start of line k*stride
-    val offs = Array.tabulate(1000000 / stride + 1)(k => k.toLong * stride * 10L)
-    // tiny batch -> one slice
-    assert(ReplayIndex.slices(0, 7, 32, offs, stride, 8192).map(s => (s.start, s.end))
-      == Seq((0L, 7L)))
-    // big batch: capped at maxParts, covers [s, e) exactly, in order
-    val big = ReplayIndex.slices(200000, 400000, 32, offs, stride, 8192)
-    assert(big.size == 25, "ceil(200k/8192) = 25 slices under a 32-part cap")
-    assert(big.head.start == 200000 && big.last.end == 400000)
-    big.sliding(2).foreach { case Seq(x, y) => assert(x.end == y.start); case _ => }
-    big.foreach { s =>
-      assert(s.skipLines >= 0 && s.skipLines < stride)
-      assert(s.byteStart == offs((s.start / stride).toInt),
-        "seek hint must be the indexed start at-or-before the slice")
-      assert((s.start - s.skipLines) % stride == 0)
-    }
-    // cap binds: 1M rows over 8 parts
-    assert(ReplayIndex.slices(0, 1000000, 8, offs, stride, 8192).size == 8)
-    // empty range
-    assert(ReplayIndex.slices(5, 5, 32, offs, stride, 8192).isEmpty)
+    assert(q.recentProgress.forall(_.numInputRows <= maxPerBatch))
   }
 }

@@ -41,8 +41,8 @@ echo "== 5/10 fault injection: batch (executor SIGKILL mid-shuffle, 10x corpus) 
 sbt -batch package
 # exclude the -tests jar: `ls | head -1` sorts it FIRST ('-' < '.'), and
 # shipping it as spark.jars gives executors a jar with no app classes —
-# every task then dies deserializing the DSv2 partition Seq with
-# "cannot assign DefaultSerializationProxy" (r13 round-close incident)
+# every task that needs an app class then dies (r13 round-close incident:
+# "cannot assign DefaultSerializationProxy" on the since-deleted DSv2 source)
 APP_JAR=$(ls target/scala-2.13/cybersecurityiocetlspark_*.jar | grep -v -- '-tests' | head -1)
 SPARK_GRAFT_JARS="$APP_JAR" SPARK_SCALA_VERSION=2.13 \
   sbt -batch "runMain graft.FaultInject target/sf1 q18_bigorders q21_waiting" 2>/dev/null \
@@ -51,8 +51,8 @@ SPARK_GRAFT_JARS="$APP_JAR" SPARK_SCALA_VERSION=2.13 \
   sbt -batch "runMain graft.FaultInjectStream" 2>/dev/null \
   | grep -E '"metric"|\[fault-stream\]' | tail -3
 
-echo "== 6/10 streaming throughput (1M-record replay -> extraction -> keyed sink)"
-sbt -batch "runMain graft.StreamBench" 2>/dev/null | grep '"metric"' | tail -1 | tee /tmp/stream_throughput.json
+echo "== 6/10 streaming throughput (1M-record replay, 50k/batch, file stream source -> extraction -> keyed sink)"
+sbt -batch "runMain graft.StreamBench 1000000 50000" 2>/dev/null | grep '"metric"' | tail -1 | tee /tmp/stream_throughput.json
 
 echo "== 7/10 leak + copy gates (regenerate LEAKCHECK.json / COPYCHECK.json) + spec-only code guard"
 python3 tools/leakcheck.py "${ROUND_NUMBER:-0}"

@@ -20,11 +20,11 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 # The reference's own surface, kept even where only specs call it: the
 # h-isac.py config and CSV sink, firehose.py's pastebin fetch, splunk2.py's
-# response parser, the Parquet layout DEPLOYMENT.md documents and the replay
-# source. What these reach is reached too.
+# response parser and the Parquet layout DEPLOYMENT.md documents. What these
+# reach is reached too.
 ALLOWED = {
     "SplunkConfig", "CsvSink", "HttpPageFetcher", "LivePastebin",
-    "SplunkResponse", "ParquetSink", "ReplayJsonlSource",
+    "SplunkResponse", "ParquetSink",
 }
 
 DECL = re.compile(
