@@ -70,17 +70,21 @@ final class KvFileTransport(dir: String) extends Transport {
   */
 object FaultInjectStream {
 
+  /** Every record posted into a [[KvFileTransport]] directory, duplicate
+    * posts included. Reads the directory with a file-name filter, not a
+    * glob path: Spark probes a read path for a streaming-sink metadata
+    * log, and on a glob that probe logs a FileNotFoundException for the
+    * literal glob. */
+  private def posted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.option("pathGlobFilter", "*.json") // skips the .tmp staging files
+      .json(dir) // one JSON array per file → one row per record
+
   /** The KV end state of a [[KvFileTransport]] directory: every posted
     * record folded by `_key` (md5 of the full row, so distinct-by-key IS
     * distinct-by-record up to md5 collision), ready for
-    * [[FaultInject.digest]]. Reads the directory with a file-name
-    * filter, not a glob path: Spark probes a read path for a
-    * streaming-sink metadata log, and on a glob that probe logs a
-    * FileNotFoundException for the literal glob. */
+    * [[FaultInject.digest]]. */
   private[graft] def kvState(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("pathGlobFilter", "*.json") // skips the .tmp staging files
-      .json(dir) // one JSON array per file → one row per record
-      .dropDuplicates("_key")
+    posted(spark, dir).dropDuplicates("_key")
 
   private def freshDir(name: String): String = Files.createTempDirectory(name).toString
 
@@ -137,19 +141,22 @@ object FaultInjectStream {
       if (got != expected)
         fail = s"KV end-state MISMATCH after executor loss: got hash=${got._1} rows=${got._3}, want hash=${expected._1} rows=${expected._3}"
       else {
-        // the at-least-once surplus this run actually produced: zero when no
+        // the at-least-once duplicates this run actually posted: zero when no
         // killed task had posted before it died, and then this run did not
-        // exercise the keyed upsert
-        val surplus = posts - cleanPosts
+        // exercise the keyed upsert. Counted in records, not post files: the
+        // file scan packs files onto the live cores when each batch is
+        // planned, so after the kill the post count also moves with the
+        // survivor's core count.
+        val dups = posted(spark, faultDir).count() - got._3
         val upsert =
-          if (surplus > 0) s"surplus of $surplus posts absorbed by keyed upsert"
-          else s"surplus $surplus, nothing to absorb; the keyed upsert is proven by " +
+          if (dups > 0) s"$dups duplicate records absorbed by keyed upsert"
+          else "no duplicate records to absorb; the keyed upsert is proven by " +
             "FaultStreamHarnessSpec \"duplicate posts (retry/replay surplus) fold to the same KV digest\""
         println(s"[fault-stream] OK: executor SIGKILLed during batch ${killBatch + 1} " +
           s"of ${faultFinalBatch + 1}; stream recovered and completed; KV end state " +
           s"byte-identical to clean run (hash=${got._1} rows=${got._3}; raw posts " +
           s"fault=$posts vs clean=$cleanPosts — $upsert)")
-        println(s"""{"metric":"fault_inject_stream","records":$n,"max_per_batch":$maxPerBatch,"batches":${faultFinalBatch + 1},"kill_batch":${killBatch + 1},"kv_rows":${got._3},"posts_fault":$posts,"posts_clean":$cleanPosts,"surplus_posts":$surplus,"master":"$master","failures":0}""")
+        println(s"""{"metric":"fault_inject_stream","records":$n,"max_per_batch":$maxPerBatch,"batches":${faultFinalBatch + 1},"kill_batch":${killBatch + 1},"kv_rows":${got._3},"posts_fault":$posts,"posts_clean":$cleanPosts,"dup_records":$dups,"master":"$master","failures":0}""")
       }
     }
     spark.stop()

@@ -5,11 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Materialized-intermediate cache, keyed by (session, dataset path, name).
   *
   * Several queries share expensive intermediates — the MinHash candidate
-  * graph (3 consumers), its component labels (2), and the synthesized
-  * partsupp view (q2, q20). A production pipeline computes each ONCE per
-  * corpus snapshot and persists it; `localCheckpoint` is the single-process
-  * stand-in for that persisted table (executor block storage, plan lineage
-  * cut). Entries are per-path, so different scale factors never alias; a
+  * graph, its component labels, and the synthesized partsupp view. A
+  * production pipeline computes each ONCE per corpus snapshot and persists
+  * it; `localCheckpoint` is the single-process stand-in for that persisted
+  * table (executor block storage, plan lineage cut). Entries are per-path, so different scale factors never alias; a
   * new session starts cold.
   *
   * Concurrency: the global lock guards only the (cheap) entry lookup; the

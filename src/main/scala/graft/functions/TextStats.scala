@@ -55,6 +55,16 @@ object TextStats {
     graft.operators.Dedup.simhashFp(s, d)
       .select(col("doc_id"), lpad(bin(col("sh")), 60, "0").as("simhash60"))
 
+  /** The per-document surprisal roll-up of the whole-bit LMs: over rows of
+    * (doc_id, bits), the row count `n`, total_bits and avg_bits per doc.
+    * SQL twin: [[bitsPerDocSql]]. */
+  private def bitsPerDoc(rows: DataFrame, n: String): DataFrame =
+    rows.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(n), sum(col("bits")).as("total_bits"))
+      .select(col("doc_id"), col(n), col("total_bits"),
+        (col("total_bits").cast("double") / col(n)).as("avg_bits"))
+      .orderBy(col("doc_id"))
+
   /** MEMOIZED term-frequency relation (doc_id, doc_len, token, tf) — the
     * unigram postings table, persisted once per corpus snapshot like the
     * shingle index ([[graft.operators.Dedup.shingleOcc]]): TF-IDF and the
@@ -358,11 +368,7 @@ object TextStats {
         .crossJoin(broadcast(total))
         .withColumn("bits",
           (length(bin(expr("total_toks div freq"))) - 1).cast("long"))
-      occ.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("total_bits"))
-        .select(col("doc_id"), col("n_tokens"), col("total_bits"),
-          (col("total_bits").cast("double") / col("n_tokens")).as("avg_bits"))
-        .orderBy(col("doc_id"))
+      bitsPerDoc(occ, "n_tokens")
     }),
 
     // Bigram-LM surprisal — the CCNet/perplexity-filter signal one rung
@@ -394,15 +400,11 @@ object TextStats {
           explode(sequence(lit(1), size(col("t")) - 1)).as("p"))
         .select(col("doc_id"), element_at(col("t"), col("p")).as("w1"),
           element_at(col("t"), col("p") + 1).as("w2"))
-      grams
+      bitsPerDoc(grams
         .withColumn("c_ctx", count(lit(1)).over(wCtx))
         .withColumn("c_big", count(lit(1)).over(wBig))
-        .withColumn("bits", (length(bin(expr("c_ctx div c_big"))) - 1).cast("long"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("total_bits"))
-        .select(col("doc_id"), col("n_bigrams"), col("total_bits"),
-          (col("total_bits").cast("double") / col("n_bigrams")).as("avg_bits"))
-        .orderBy(col("doc_id"))
+        .withColumn("bits", (length(bin(expr("c_ctx div c_big"))) - 1).cast("long")),
+        "n_bigrams")
     }),
 
     // Gopher-style repetition signals per document: duplicate word-2-gram
@@ -510,6 +512,34 @@ object TextStats {
   private val sqlToks = "string_split(lower(text), ' ')"
   private def sqlCountIn(words: Seq[String]): String =
     s"len(list_filter($sqlToks, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
+
+  /** SQL twin of [[docSimhash60]], computed from the tokens (the oracle
+    * does not read the engine's fingerprint table): `sh(doc_id, simhash60)`,
+    * bit p the sign of the p-th 60-bit md5 token-hash vote. */
+  private val simhash60Ctes =
+    """toks AS (
+      |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
+      |hashed AS (
+      |  SELECT doc_id,
+      |    lpad(bin(CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)), 60, '0') AS b
+      |  FROM toks),
+      |bits AS (
+      |  SELECT doc_id, r.p,
+      |    SUM(CASE WHEN substr(b, CAST(r.p AS INTEGER), 1) = '1' THEN 1 ELSE -1 END) AS sgn
+      |  FROM hashed, range(1, 61) r(p) GROUP BY doc_id, r.p),
+      |sh AS (
+      |  SELECT doc_id,
+      |    string_agg(CASE WHEN sgn > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS simhash60
+      |  FROM bits GROUP BY doc_id)""".stripMargin
+
+  /** SQL twin of [[bitsPerDoc]] over a `bits(doc_id, bits)` CTE. */
+  private def bitsPerDocSql(n: String): String =
+    s"""SELECT doc_id, COUNT(*) AS $n,
+       |  CAST(SUM(bits) AS BIGINT) AS total_bits,
+       |  CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS avg_bits
+       |FROM bits
+       |GROUP BY doc_id
+       |ORDER BY doc_id""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "text_stats" ->
@@ -641,40 +671,14 @@ object TextStats {
         |SELECT DISTINCT doc_id, fp FROM wins WHERE fullw IS NOT NULL
         |ORDER BY doc_id, fp""".stripMargin,
     "text_fingerprint" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
-        |hashed AS (
-        |  SELECT doc_id,
-        |    lpad(bin(CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)), 60, '0') AS b
-        |  FROM toks),
-        |bits AS (
-        |  SELECT doc_id, r.p,
-        |    SUM(CASE WHEN substr(b, CAST(r.p AS INTEGER), 1) = '1' THEN 1 ELSE -1 END) AS sgn
-        |  FROM hashed, range(1, 61) r(p) GROUP BY doc_id, r.p),
-        |sh AS (
-        |  SELECT doc_id,
-        |    string_agg(CASE WHEN sgn > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS simhash60
-        |  FROM bits GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  md5(regexp_replace(lower(d.text), '\s+', ' ', 'g')) AS md5_norm,
-        |  sh.simhash60
-        |FROM documents d JOIN sh ON d.doc_id = sh.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+      (s"WITH $simhash60Ctes\n" +
+        """SELECT d.doc_id,
+          |  md5(regexp_replace(lower(d.text), '\s+', ' ', 'g')) AS md5_norm,
+          |  sh.simhash60
+          |FROM documents d JOIN sh ON d.doc_id = sh.doc_id
+          |ORDER BY d.doc_id""".stripMargin),
     "text_simhash_bit_balance" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
-        |hashed AS (
-        |  SELECT doc_id,
-        |    lpad(bin(CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)), 60, '0') AS b
-        |  FROM toks),
-        |bits AS (
-        |  SELECT doc_id, r.p,
-        |    SUM(CASE WHEN substr(b, CAST(r.p AS INTEGER), 1) = '1' THEN 1 ELSE -1 END) AS sgn
-        |  FROM hashed, range(1, 61) r(p) GROUP BY doc_id, r.p),
-        |sh AS (
-        |  SELECT doc_id,
-        |    string_agg(CASE WHEN sgn > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS simhash60
-        |  FROM bits GROUP BY doc_id)
+      s"""WITH $simhash60Ctes
         |SELECT CAST(r.p AS BIGINT) AS bit_pos, COUNT(*) AS n_docs,
         |  CAST(SUM(CASE WHEN substr(simhash60, CAST(r.p AS INTEGER), 1) = '1'
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_ones,
@@ -686,7 +690,7 @@ object TextStats {
         |GROUP BY r.p
         |ORDER BY bit_pos""".stripMargin,
     "text_surprisal" ->
-      """WITH occ AS (
+      ("""WITH occ AS (
         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
         |tot AS (SELECT COUNT(*) AS total_toks FROM occ),
         |wf AS (
@@ -695,14 +699,9 @@ object TextStats {
         |  SELECT doc_id,
         |    CAST(length(bin(total_toks // freq)) - 1 AS BIGINT) AS bits
         |  FROM wf CROSS JOIN tot)
-        |SELECT doc_id, COUNT(*) AS n_tokens,
-        |  CAST(SUM(bits) AS BIGINT) AS total_bits,
-        |  CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS avg_bits
-        |FROM bits
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |""".stripMargin + bitsPerDocSql("n_tokens")),
     "text_bigram_lm" ->
-      """WITH occ AS (
+      ("""WITH occ AS (
         |  SELECT doc_id, unnest([t[i] || ' ' || t[i+1] for i in range(1, len(t))]) AS gram
         |  FROM (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents)),
         |w AS (
@@ -712,12 +711,7 @@ object TextStats {
         |  FROM occ),
         |bits AS (
         |  SELECT doc_id, CAST(length(bin(c_ctx // c_big)) - 1 AS BIGINT) AS bits FROM w)
-        |SELECT doc_id, COUNT(*) AS n_bigrams,
-        |  CAST(SUM(bits) AS BIGINT) AS total_bits,
-        |  CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS avg_bits
-        |FROM bits
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |""".stripMargin + bitsPerDocSql("n_bigrams")),
     "text_rake" -> {
       val stops = stopEn.map(w => s"'$w'").mkString(", ")
       s"""WITH base AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),

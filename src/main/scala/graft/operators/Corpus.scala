@@ -33,6 +33,16 @@ object Corpus {
   val ChunkSize = 256
   val ChunkStride = 192
 
+  /** Every chunk of every non-empty document, one row per chunk `start`
+    * (a 1-based char offset), with its text in `chunk` — the explode both
+    * docs_chunk queries read. SQL twin: [[chunkCtes]]. */
+  private def chunks(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("text"), length(col("text")).as("len"))
+      .filter(col("len") > 0)
+      .withColumn("start", explode(sequence(lit(1), col("len"), lit(ChunkStride))))
+      .withColumn("chunk", col("text").substr(col("start"), lit(ChunkSize)))
+
   /** Document-frequency threshold above which a 5-gram counts as
     * boilerplate (`text_boilerplate`). Scale with corpus size — at 100 TB
     * set it from the DF histogram tail, like [[graft.operators.Dedup.MaxShingleDf]]. */
@@ -585,19 +595,14 @@ object Corpus {
         .orderBy(col("doc_id"))
     }),
 
-    "docs_chunk" -> ((s, d) => {
-      val chunk = col("text").substr(col("start"), lit(ChunkSize))
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-        .filter(col("len") > 0)
-        .withColumn("start", explode(sequence(lit(1), col("len"), lit(ChunkStride))))
+    "docs_chunk" -> ((s, d) =>
+      chunks(s, d)
         .select(col("doc_id"),
           ((col("start") - 1) / ChunkStride).cast("long").as("chunk_id"),
           col("start").cast("long").as("chunk_start"),
-          length(chunk).cast("long").as("chunk_len"),
-          md5(chunk).as("chunk_hash"))
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
+          length(col("chunk")).cast("long").as("chunk_len"),
+          md5(col("chunk")).as("chunk_hash"))
+        .orderBy(col("doc_id"), col("chunk_id"))),
 
     // Chunk-granularity dedup over the RAG index — which exact chunks
     // repeat across the corpus (shared headers, licenses, templates):
@@ -605,19 +610,14 @@ object Corpus {
     // wastes index space AND floods retrieval with identical passages).
     // Only 16-byte md5 digests ever shuffle — the chunk text stays in
     // the scan; one digest-keyed agg + TakeOrderedAndProject top-100.
-    "docs_chunk_dedup" -> ((s, d) => {
-      val chunk = col("text").substr(col("start"), lit(ChunkSize))
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-        .filter(col("len") > 0)
-        .withColumn("start", explode(sequence(lit(1), col("len"), lit(ChunkStride))))
-        .select(col("doc_id"), md5(chunk).as("chunk_hash"))
+    "docs_chunk_dedup" -> ((s, d) =>
+      chunks(s, d)
+        .select(col("doc_id"), md5(col("chunk")).as("chunk_hash"))
         .groupBy(col("chunk_hash"))
         .agg(count(lit(1)).as("n_occur"), countDistinct(col("doc_id")).as("n_docs"))
         .filter(col("n_occur") > 1)
         .orderBy(col("n_occur").desc, col("chunk_hash"))
-        .limit(100)
-    }),
+        .limit(100)),
 
     // Language-balanced training interleave — the ORDER half of data
     // mixing (sample_mixture/sample_temperature decide HOW MUCH of each
@@ -660,6 +660,18 @@ object Corpus {
     * 5-grams and the candidate documents'. */
   private val bench = gramListsSql(5, " WHERE doc_id < 10")
   private val cand = gramListsSql(5, " WHERE doc_id >= 10")
+
+  /** SQL twin of [[chunks]]: `d` (the non-empty documents) and `s`, one
+    * row per chunk (doc_id, start, chunk). */
+  private val chunkCtes: String =
+    s"""d AS (
+       |  SELECT doc_id, text, LENGTH(text) AS len
+       |  FROM documents WHERE LENGTH(text) > 0),
+       |s AS (
+       |  SELECT doc_id, start, SUBSTR(text, CAST(start AS INTEGER), $ChunkSize) AS chunk
+       |  FROM (SELECT doc_id, text,
+       |          unnest(generate_series(1, len, $ChunkStride)) AS start
+       |        FROM d))""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "docs_pack" ->
@@ -923,36 +935,19 @@ object Corpus {
          |FROM p
          |ORDER BY doc_id""".stripMargin,
     "docs_chunk" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text, LENGTH(text) AS len
-         |  FROM documents WHERE LENGTH(text) > 0),
-         |s AS (
-         |  SELECT doc_id, text,
-         |    unnest(generate_series(1, len, $ChunkStride)) AS start
-         |  FROM d)
+      s"""WITH $chunkCtes
          |SELECT doc_id,
          |  CAST((start - 1) // $ChunkStride AS BIGINT) AS chunk_id,
          |  CAST(start AS BIGINT) AS chunk_start,
-         |  CAST(LENGTH(SUBSTR(text, CAST(start AS INTEGER), $ChunkSize)) AS BIGINT)
-         |    AS chunk_len,
-         |  md5(SUBSTR(text, CAST(start AS INTEGER), $ChunkSize)) AS chunk_hash
+         |  CAST(LENGTH(chunk) AS BIGINT) AS chunk_len,
+         |  md5(chunk) AS chunk_hash
          |FROM s
          |ORDER BY doc_id, chunk_id""".stripMargin,
     "docs_chunk_dedup" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text, LENGTH(text) AS len
-         |  FROM documents WHERE LENGTH(text) > 0),
-         |s AS (
-         |  SELECT doc_id, text,
-         |    unnest(generate_series(1, len, $ChunkStride)) AS start
-         |  FROM d),
-         |h AS (
-         |  SELECT doc_id,
-         |    md5(SUBSTR(text, CAST(start AS INTEGER), $ChunkSize)) AS chunk_hash
-         |  FROM s)
-         |SELECT chunk_hash, COUNT(*) AS n_occur,
+      s"""WITH $chunkCtes
+         |SELECT md5(chunk) AS chunk_hash, COUNT(*) AS n_occur,
          |  COUNT(DISTINCT doc_id) AS n_docs
-         |FROM h GROUP BY 1
+         |FROM s GROUP BY 1
          |HAVING COUNT(*) > 1
          |ORDER BY n_occur DESC, chunk_hash
          |LIMIT 100""".stripMargin,

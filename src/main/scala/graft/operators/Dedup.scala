@@ -498,10 +498,9 @@ object Dedup {
     })
   )
 
-  /** Materialized-intermediate cache — see [[graft.Memo]]. Three queries
-    * consume the MinHash candidate graph (`dedup_minhash_lsh`,
-    * `dedup_clusters`, `dedup_keep`) and two consume the component labels —
-    * a production dedup pipeline computes each ONCE per corpus snapshot and
+  /** Materialized-intermediate cache — see [[graft.Memo]]. Several queries
+    * consume the MinHash candidate graph and its component labels — a
+    * production dedup pipeline computes each ONCE per corpus snapshot and
     * persists it (at 100 TB you write the pair graph and label map to
     * storage; recomputing a 12-hash signature pass per downstream report
     * triples the most expensive scan in the pipeline). */

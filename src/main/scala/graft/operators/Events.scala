@@ -87,22 +87,29 @@ object Events {
           Relational.dsum(col("value")).as("monetary"))
         .localCheckpoint())
 
+  /** Each user's events in (ts, event_id) order: the one window the lag
+    * and every running per-user value ride. */
+  private val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
   /** Gaps-and-islands sessionization, the one definition both session
     * queries read: every event row plus `session_id`, the per-user running
     * count of session starts, where a session starts at a user's first
     * event or after a gap over [[gapMinutes]]. The lag and the running sum
     * share one user-keyed window, so one exchange. */
-  private def sessionized(s: SparkSession, d: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+  private def sessionized(s: SparkSession, d: String): DataFrame =
+    withPrevTs(s, d)
       .withColumn("new_session",
         (col("prev_ts").isNull ||
           (unix_micros(col("ts")) - unix_micros(col("prev_ts")) >
             lit(gapMinutes * 60 * 1000000L))).cast("int"))
       .withColumn("session_id",
         sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-  }
+
+  /** Every event row plus `prev_ts`, the same user's previous event time
+    * (null on the user's first event) — the gap both [[sessionized]] and
+    * events_gap_hist read. */
+  private def withPrevTs(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
 
   /** Rolling `len`-day distinct actives per window-end day `wday`: reduce
     * to distinct (user, day) FIRST (the only corpus-sized shuffle), explode
@@ -190,11 +197,8 @@ object Events {
     // (type, bucket)-keyed agg that is histogram-sized. Read it before
     // picking a 30-minute gap: the session boundary should sit in the
     // valley between the intra-session and inter-session modes.
-    "events_gap_hist" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+    "events_gap_hist" -> ((s, d) =>
+      withPrevTs(s, d)
         .filter(col("prev_ts").isNotNull)
         .withColumn("gap_s",
           expr("(unix_micros(ts) - unix_micros(prev_ts)) div 1000000"))
@@ -202,8 +206,7 @@ object Events {
         .groupBy(col("event_type"), col("bucket"))
         .agg(count(lit(1)).as("n_gaps"), min(col("gap_s")).as("min_gap_s"),
           max(col("gap_s")).as("max_gap_s"))
-        .orderBy(col("event_type"), col("bucket"))
-    }),
+        .orderBy(col("event_type"), col("bucket"))),
 
     // Daily bounce rate — the session-QUALITY metric on top of the
     // sessionize machinery: per day (of session start), the exact-ppm
@@ -372,7 +375,6 @@ object Events {
     // of the two counts carried by a from-keyed window that reuses the
     // agg's partitioning (exact small-integer ratio — bit-stable).
     "events_paths" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val wFrom = Window.partitionBy(col("from_type"))
       Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
@@ -493,7 +495,6 @@ object Events {
     // high-cardinality user key balances 1000 executors; no state ever
     // joins back.
     "events_scd2" -> ((s, d) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val seg = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
         .withColumn("chg",
@@ -800,6 +801,34 @@ object Events {
        |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
        |  FROM marked)""".stripMargin
 
+  /** SQL twin of [[funnelFoldOn]]: min-after-min over the step events;
+    * `windowed` adds the two 7-day conversion bounds. */
+  private def funnelSql(windowed: Boolean): String = {
+    val cBound = if (windowed) " AND ts <= t_view + INTERVAL 7 DAY" else ""
+    val pBound = if (windowed) " AND ts <= t_click + INTERVAL 7 DAY" else ""
+    s"""WITH ev AS (
+       |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
+       |v AS (
+       |  SELECT user_id, MIN(ts) AS t_view FROM ev
+       |  WHERE event_type = 'view' GROUP BY user_id),
+       |c AS (
+       |  SELECT ev.user_id, MIN(ts) AS t_click
+       |  FROM ev JOIN v ON v.user_id = ev.user_id
+       |  WHERE event_type = 'click' AND ts > t_view$cBound
+       |  GROUP BY ev.user_id),
+       |p AS (
+       |  SELECT ev.user_id, MIN(ts) AS t_purchase
+       |  FROM ev JOIN c ON c.user_id = ev.user_id
+       |  WHERE event_type = 'purchase' AND ts > t_click$pBound
+       |  GROUP BY ev.user_id)
+       |SELECT v.user_id, t_view, t_click, t_purchase,
+       |  CAST(1 + CASE WHEN t_click IS NOT NULL THEN 1 ELSE 0 END
+       |    + CASE WHEN t_purchase IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
+       |FROM v LEFT JOIN c ON c.user_id = v.user_id
+       |LEFT JOIN p ON p.user_id = v.user_id
+       |ORDER BY v.user_id""".stripMargin
+  }
+
   val oracle: Map[String, String] = Map(
     "events_stickiness" ->
       (s"WITH ${rollingActivesSql("agg", 28, "mau", withDau = true)}\n" +
@@ -913,52 +942,8 @@ object Events {
         |FROM expanded
         |GROUP BY 1, 2, 3
         |ORDER BY wstart, event_type""".stripMargin,
-    "events_funnel" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |v AS (
-        |  SELECT user_id, MIN(ts) AS t_view FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (
-        |  SELECT ev.user_id, MIN(ts) AS t_click
-        |  FROM ev JOIN v ON v.user_id = ev.user_id
-        |  WHERE event_type = 'click' AND ts > t_view
-        |  GROUP BY ev.user_id),
-        |p AS (
-        |  SELECT ev.user_id, MIN(ts) AS t_purchase
-        |  FROM ev JOIN c ON c.user_id = ev.user_id
-        |  WHERE event_type = 'purchase' AND ts > t_click
-        |  GROUP BY ev.user_id)
-        |SELECT v.user_id, t_view, t_click, t_purchase,
-        |  CAST(1 + CASE WHEN t_click IS NOT NULL THEN 1 ELSE 0 END
-        |    + CASE WHEN t_purchase IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM v LEFT JOIN c ON c.user_id = v.user_id
-        |LEFT JOIN p ON p.user_id = v.user_id
-        |ORDER BY v.user_id""".stripMargin,
-    "events_funnel_windowed" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |v AS (
-        |  SELECT user_id, MIN(ts) AS t_view FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (
-        |  SELECT ev.user_id, MIN(ts) AS t_click
-        |  FROM ev JOIN v ON v.user_id = ev.user_id
-        |  WHERE event_type = 'click' AND ts > t_view
-        |    AND ts <= t_view + INTERVAL 7 DAY
-        |  GROUP BY ev.user_id),
-        |p AS (
-        |  SELECT ev.user_id, MIN(ts) AS t_purchase
-        |  FROM ev JOIN c ON c.user_id = ev.user_id
-        |  WHERE event_type = 'purchase' AND ts > t_click
-        |    AND ts <= t_click + INTERVAL 7 DAY
-        |  GROUP BY ev.user_id)
-        |SELECT v.user_id, t_view, t_click, t_purchase,
-        |  CAST(1 + CASE WHEN t_click IS NOT NULL THEN 1 ELSE 0 END
-        |    + CASE WHEN t_purchase IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
-        |FROM v LEFT JOIN c ON c.user_id = v.user_id
-        |LEFT JOIN p ON p.user_id = v.user_id
-        |ORDER BY v.user_id""".stripMargin,
+    "events_funnel" -> funnelSql(windowed = false),
+    "events_funnel_windowed" -> funnelSql(windowed = true),
     "events_retention" ->
       """WITH e AS (
         |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),

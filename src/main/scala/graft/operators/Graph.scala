@@ -55,10 +55,8 @@ object Graph {
     // second agg is |distinct degrees|-sized; the first shuffles the
     // edge list once on node id.
     "graph_degree" -> ((s, d) =>
-      edges(s, d)
-        .select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-        .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
+      degrees(edges(s, d))
+        .groupBy(col("deg").as("degree")).agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("degree"))),
 
     // Connected components over the co-purchase graph — per node, its
@@ -133,52 +131,22 @@ object Graph {
     // edge-keyed agg — never a per-pair neighbor-set join. Union size is
     // pure degree arithmetic (deg(a)+deg(b)−common, ≥2 for an edge, so
     // the ppm division is total).
-    "graph_jaccard" -> ((s, d) => {
-      val e = edges(s, d)
-      val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      val withDeg = e
-        .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      val o = withDeg.select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("src"), col("b").as("dst")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val wedges = o.as("o1").join(o.as("o2"),
-          col("o1.src") === col("o2.src") && col("o1.dst") < col("o2.dst"))
-        .select(col("o1.src").as("c"), col("o1.dst").as("x"), col("o2.dst").as("y"))
-      val closing = o.select(
-        least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      val support = wedges.join(closing, Seq("x", "y"))
-        .select(explode(array(
-          struct(col("x").as("ea"), col("y").as("eb")),
-          struct(least(col("c"), col("x")).as("ea"),
-            greatest(col("c"), col("x")).as("eb")),
-          struct(least(col("c"), col("y")).as("ea"),
-            greatest(col("c"), col("y")).as("eb")))).as("t"))
-        .groupBy(col("t.ea").as("a"), col("t.eb").as("b"))
-        .agg(count(lit(1)).as("common"))
-      withDeg.join(support, Seq("a", "b"), "left")
-        .withColumn("common", coalesce(col("common"), lit(0L)))
-        .withColumn("jaccard_ppm",
-          expr("common * 1000000 div (da + db - common)"))
-        .select(col("a"), col("b"), col("da"), col("db"),
-          col("common"), col("jaccard_ppm"))
-        .orderBy(col("a"), col("b"))
-    })
+    "graph_jaccard" -> ((s, d) => edgeJaccard(edges(s, d)))
   )
 
-  /** Triangle + wedge statistics over any (a < b) long-keyed edge list —
-    * the degree-ordered orientation algorithm; equality with brute-force
-    * a<b<c enumeration is property-tested on adversarial graphs (hub
-    * stars and cliques) in PropertiesSpec, and against the DuckDB oracle
-    * on the co-purchase graph. */
-  def triangleStats(e: DataFrame): DataFrame = {
-    val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
+  /** Node degrees (node, deg) of an (a < b) edge list: both endpoints
+    * exploded, one node-keyed agg. SQL twin: [[degCte]]. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+
+  /** Degree-ordered orientation of an (a < b) edge list (scaladoc above),
+    * the one kernel both triangle consumers read: the node degrees
+    * (node, deg), the edges with both endpoint degrees (a, b, da, db), and
+    * every triangle once, at its apex c, as (x, y, c) — x < y the apex's
+    * two out-neighbors, closed by the edge x–y. SQL twin: [[orientedCtes]]. */
+  private def oriented(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val deg = degrees(e)
     val withDeg = e
       .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
@@ -194,12 +162,21 @@ object Graph {
     // on src is Σ C(outdeg, 2), not Σ C(deg, 2)
     val wedges = o.as("o1").join(o.as("o2"),
         col("o1.src") === col("o2.src") && col("o1.dst") < col("o2.dst"))
-      .select(col("o1.dst").as("x"), col("o2.dst").as("y"))
+      .select(col("o1.src").as("c"), col("o1.dst").as("x"), col("o2.dst").as("y"))
     val closing = o.select(
       least(col("src"), col("dst")).as("x"),
       greatest(col("src"), col("dst")).as("y"))
-    val tri = wedges.join(closing, Seq("x", "y"))
-      .agg(count(lit(1)).as("n_triangles"))
+    (deg, withDeg, wedges.join(closing, Seq("x", "y")))
+  }
+
+  /** Triangle + wedge statistics over any (a < b) long-keyed edge list —
+    * the degree-ordered orientation algorithm; equality with brute-force
+    * a<b<c enumeration is property-tested on adversarial graphs (hub
+    * stars and cliques) in PropertiesSpec, and against the DuckDB oracle
+    * on the co-purchase graph. */
+  def triangleStats(e: DataFrame): DataFrame = {
+    val (deg, _, triangles) = oriented(e)
+    val tri = triangles.agg(count(lit(1)).as("n_triangles"))
     val stats = deg.agg(
       count(lit(1)).as("n_nodes"),
       expr("sum(deg * (deg - 1) div 2)").as("n_wedges"))
@@ -210,6 +187,30 @@ object Graph {
         when(col("n_wedges") === 0, 0L)
           .otherwise(expr("3 * n_triangles * 1000000 div n_wedges"))
           .as("closure_ppm"))
+  }
+
+  /** Per-edge neighborhood Jaccard over any (a < b) long-keyed edge list
+    * (the graph_jaccard note above): (a, b, da, db, common, jaccard_ppm).
+    * `common` equals brute-force |N(a) ∩ N(b)| on the same adversarial
+    * graphs as [[triangleStats]] (PropertiesSpec). */
+  def edgeJaccard(e: DataFrame): DataFrame = {
+    val (_, withDeg, tri) = oriented(e)
+    val support = tri
+      .select(explode(array(
+        struct(col("x").as("ea"), col("y").as("eb")),
+        struct(least(col("c"), col("x")).as("ea"),
+          greatest(col("c"), col("x")).as("eb")),
+        struct(least(col("c"), col("y")).as("ea"),
+          greatest(col("c"), col("y")).as("eb")))).as("t"))
+      .groupBy(col("t.ea").as("a"), col("t.eb").as("b"))
+      .agg(count(lit(1)).as("common"))
+    withDeg.join(support, Seq("a", "b"), "left")
+      .withColumn("common", coalesce(col("common"), lit(0L)))
+      .withColumn("jaccard_ppm",
+        expr("common * 1000000 div (da + db - common)"))
+      .select(col("a"), col("b"), col("da"), col("db"),
+        col("common"), col("jaccard_ppm"))
+      .orderBy(col("a"), col("b"))
   }
 
   // e is MATERIALIZED for the same reason as the pagerank rounds below:
@@ -223,6 +224,32 @@ object Graph {
   private def edgeCte: String =
     s"${Relational.basketPairsCtes},\n" +
       "e AS MATERIALIZED (SELECT part_a AS a, part_b AS b FROM bp)"
+
+  private val degCte: String =
+    """deg AS (
+      |  SELECT node, COUNT(*) AS deg
+      |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
+      |  GROUP BY node)""".stripMargin
+
+  /** SQL twin of [[oriented]] over `e`: [[degCte]], the oriented edges `o`
+    * and every triangle at its apex, `tw` (c, x, y). o and tw are
+    * MATERIALIZED like e: each is read more than once. */
+  private val orientedCtes: String =
+    degCte + """,
+      |o AS MATERIALIZED (
+      |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b)
+      |              THEN e.a ELSE e.b END AS src,
+      |         CASE WHEN (da.deg, e.a) < (db.deg, e.b)
+      |              THEN e.b ELSE e.a END AS dst
+      |  FROM e
+      |  JOIN deg da ON da.node = e.a
+      |  JOIN deg db ON db.node = e.b),
+      |tw AS MATERIALIZED (
+      |  SELECT o1.src AS c, o1.dst AS x, o2.dst AS y
+      |  FROM o o1
+      |  JOIN o o2 ON o2.src = o1.src AND o1.dst < o2.dst
+      |  JOIN e ON e.a = LEAST(o1.dst, o2.dst)
+      |       AND e.b = GREATEST(o1.dst, o2.dst))""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // unrolled rounds, not a recursive closure — the closure's reach set
@@ -239,12 +266,9 @@ object Graph {
         "SELECT node, lbl AS component_id\nFROM glfinal\nORDER BY node"),
     "graph_degree" ->
       s"""WITH $edgeCte,
-         |deg AS (
-         |  SELECT node, COUNT(*) AS degree
-         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-         |  GROUP BY node)
-         |SELECT degree, COUNT(*) AS n_nodes
-         |FROM deg GROUP BY degree
+         |$degCte
+         |SELECT deg AS degree, COUNT(*) AS n_nodes
+         |FROM deg GROUP BY deg
          |ORDER BY degree""".stripMargin,
     // degree-ordered orientation, NOT the id-anchored e1⋈e2 wedge join:
     // id-anchored wedges are Σ C(id-outdeg, 2), which is deg² on a
@@ -258,25 +282,9 @@ object Graph {
     // pinned bit-exact at sf0.1 before shipping.
     "graph_triangles" ->
       s"""WITH $edgeCte,
-         |deg AS (
-         |  SELECT node, COUNT(*) AS degree
-         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-         |  GROUP BY node),
-         |o AS MATERIALIZED (
-         |  SELECT CASE WHEN (da.degree, e.a) < (db.degree, e.b)
-         |              THEN e.a ELSE e.b END AS src,
-         |         CASE WHEN (da.degree, e.a) < (db.degree, e.b)
-         |              THEN e.b ELSE e.a END AS dst
-         |  FROM e
-         |  JOIN deg da ON da.node = e.a
-         |  JOIN deg db ON db.node = e.b),
-         |tri AS (
-         |  SELECT COUNT(*) AS n_triangles
-         |  FROM o o1
-         |  JOIN o o2 ON o2.src = o1.src AND o2.dst > o1.dst
-         |  JOIN e ON e.a = LEAST(o1.dst, o2.dst)
-         |       AND e.b = GREATEST(o1.dst, o2.dst)),
-         |w AS (SELECT CAST(SUM(degree * (degree - 1) // 2) AS BIGINT) AS n_wedges FROM deg),
+         |$orientedCtes,
+         |tri AS (SELECT COUNT(*) AS n_triangles FROM tw),
+         |w AS (SELECT CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges FROM deg),
          |nn AS (SELECT COUNT(*) AS n_nodes FROM deg),
          |ne AS (SELECT COUNT(*) AS n_edges FROM e)
          |SELECT n_nodes, n_edges, n_wedges, n_triangles,
@@ -293,22 +301,7 @@ object Graph {
     // re-expansion), equivalence pinned bit-exact at sf0.1.
     "graph_jaccard" ->
       s"""WITH $edgeCte,
-         |n AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-         |deg AS (SELECT u, COUNT(*) AS deg FROM n GROUP BY 1),
-         |o AS MATERIALIZED (
-         |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b)
-         |              THEN e.a ELSE e.b END AS src,
-         |         CASE WHEN (da.deg, e.a) < (db.deg, e.b)
-         |              THEN e.b ELSE e.a END AS dst
-         |  FROM e
-         |  JOIN deg da ON da.u = e.a
-         |  JOIN deg db ON db.u = e.b),
-         |tw AS MATERIALIZED (
-         |  SELECT o1.src AS c, o1.dst AS x, o2.dst AS y
-         |  FROM o o1
-         |  JOIN o o2 ON o2.src = o1.src AND o1.dst < o2.dst
-         |  JOIN e ON e.a = LEAST(o1.dst, o2.dst)
-         |       AND e.b = GREATEST(o1.dst, o2.dst)),
+         |$orientedCtes,
          |cm AS (
          |  SELECT ea AS a, eb AS b, COUNT(*) AS common FROM (
          |    SELECT LEAST(x, y) AS ea, GREATEST(x, y) AS eb FROM tw
@@ -321,8 +314,8 @@ object Graph {
          |  CAST(COALESCE(cm.common, 0) * 1000000 //
          |    (da.deg + db.deg - COALESCE(cm.common, 0)) AS BIGINT) AS jaccard_ppm
          |FROM e
-         |JOIN deg da ON da.u = e.a
-         |JOIN deg db ON db.u = e.b
+         |JOIN deg da ON da.node = e.a
+         |JOIN deg db ON db.node = e.b
          |LEFT JOIN cm ON cm.a = e.a AND cm.b = e.b
          |ORDER BY e.a, e.b""".stripMargin,
     // adj/deg/r_i are MATERIALIZED for the same reason as the CC rounds

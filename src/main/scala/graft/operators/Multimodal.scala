@@ -43,6 +43,13 @@ object Multimodal {
     }
   }
 
+  /** Every document's UTF-8 text bytes as its media `payload`: the
+    * (doc_id, payload) stand-in corpus the decode, frame and embedding
+    * queries read. */
+  private def payloads(s: SparkSession, d: String): DataFrame =
+    graft.sources.Tables.documents(s, d)
+      .select(col("doc_id"), to_binary(col("text"), lit("utf-8")).as("payload"))
+
   private val metaSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("width", IntegerType),
@@ -137,8 +144,7 @@ object Multimodal {
     // shuffle, the 100 TB rule for running any model over a media corpus.
     "binary_embed" -> ((s, d) =>
       Relational.sortedOnce(
-        embedBatched(graft.sources.Tables.documents(s, d)
-          .select(col("doc_id"), to_binary(col("text"), lit("utf-8")).as("payload"))),
+        embedBatched(payloads(s, d)),
         col("doc_id"))),
 
     // binary-column metadata over documents-as-payloads: the SQL-expressible
@@ -210,8 +216,7 @@ object Multimodal {
     // query is a real image-metadata extractor.
     "binary_decode" -> ((s, d) =>
       Relational.sortedOnce(
-        decodeMeta(graft.sources.Tables.documents(s, d)
-          .select(col("doc_id"), to_binary(col("text"), lit("utf-8")).as("payload"))),
+        decodeMeta(payloads(s, d)),
         col("doc_id"))),
 
     // frame sampling as a first-class oracle query: one row per sampled
@@ -220,8 +225,7 @@ object Multimodal {
     // arithmetic with a bounded range join.
     "binary_frames" -> ((s, d) =>
       Relational.sortedOnce(
-        sampleFrames(graft.sources.Tables.documents(s, d)
-          .select(col("doc_id"), to_binary(col("text"), lit("utf-8")).as("payload"))),
+        sampleFrames(payloads(s, d)),
         col("doc_id"), col("frame_idx"))),
 
     // aspect-fit resize planning over decoded metadata: target box 224×224,
@@ -230,8 +234,7 @@ object Multimodal {
     // on the narrow typed columns — bytes never move.
     "binary_resize" -> ((s, d) =>
       Relational.sortedOnce(
-        decodeMeta(graft.sources.Tables.documents(s, d)
-          .select(col("doc_id"), to_binary(col("text"), lit("utf-8")).as("payload")))
+        decodeMeta(payloads(s, d))
           .withColumn("fit_w",
             greatest(lit(1L), expr("(width * 224) div greatest(width, height)")))
           .withColumn("fit_h",
@@ -328,6 +331,18 @@ object Multimodal {
       s"  ${Dedup.pairsSql("banded", "doc_id", "b", "chunk")}\n" +
       s"  WHERE bit_count(xor(a.ph, b.ph)) <= ${Dedup.MaxHamming})"
 
+  /** SQL twin of [[decodeMeta]] with [[FakeDecoder]]: per document, `cols`
+    * then the decoded header (width, height, format, n_bytes) of its UTF-8
+    * bytes. */
+  private def decodedSql(cols: String): String =
+    s"""SELECT $cols,
+       |  CAST(64 + n % 577 AS INTEGER) AS width,
+       |  CAST(64 + (n * 31) % 433 AS INTEGER) AS height,
+       |  CASE WHEN n % 3 = 0 THEN 'png' WHEN n % 3 = 1 THEN 'jpeg'
+       |       ELSE 'webp' END AS format,
+       |  CAST(n AS BIGINT) AS n_bytes
+       |FROM (SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "binary_phash" ->
       (s"WITH $phashPairCtes\n" +
@@ -354,14 +369,7 @@ object Multimodal {
         |FROM (SELECT doc_id, md5(text) AS h FROM documents)
         |ORDER BY doc_id""".stripMargin,
     "binary_manifest" ->
-      """WITH m AS (
-        |  SELECT doc_id, sha256(text) AS sha256,
-        |    CAST(64 + n % 577 AS INTEGER) AS width,
-        |    CAST(64 + (n * 31) % 433 AS INTEGER) AS height,
-        |    CASE WHEN n % 3 = 0 THEN 'png' WHEN n % 3 = 1 THEN 'jpeg'
-        |         ELSE 'webp' END AS format,
-        |    CAST(n AS BIGINT) AS n_bytes
-        |  FROM (SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents)),
+      s"""WITH m AS (${decodedSql("doc_id, sha256(text) AS sha256")}),
         |k AS (SELECT sha256, MIN(doc_id) AS keep_id FROM m GROUP BY sha256)
         |SELECT m.doc_id, m.sha256, m.width, m.height, m.format, m.n_bytes,
         |  m.doc_id = k.keep_id AS is_canonical,
@@ -385,15 +393,7 @@ object Multimodal {
         |  upper(substr(hex(encode(text)), 1, 8)) AS magic
         |FROM documents
         |ORDER BY doc_id""".stripMargin,
-    "binary_decode" ->
-      """SELECT doc_id,
-        |  CAST(64 + n % 577 AS INTEGER) AS width,
-        |  CAST(64 + (n * 31) % 433 AS INTEGER) AS height,
-        |  CASE WHEN n % 3 = 0 THEN 'png' WHEN n % 3 = 1 THEN 'jpeg'
-        |       ELSE 'webp' END AS format,
-        |  CAST(n AS BIGINT) AS n_bytes
-        |FROM (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
-        |ORDER BY doc_id""".stripMargin,
+    "binary_decode" -> (decodedSql("doc_id") + "\nORDER BY doc_id"),
     "binary_frames" ->
       s"""SELECT doc_id, CAST(r.i AS INTEGER) AS frame_idx,
          |  CAST(r.i * 40 AS BIGINT) AS frame_ts_ms,
@@ -403,11 +403,7 @@ object Multimodal {
          |WHERE r.i < 1 + n % $MaxFrames
          |ORDER BY doc_id, frame_idx""".stripMargin,
     "binary_resize" ->
-      """WITH meta AS (
-        |  SELECT doc_id,
-        |    CAST(64 + n % 577 AS INTEGER) AS width,
-        |    CAST(64 + (n * 31) % 433 AS INTEGER) AS height
-        |  FROM (SELECT doc_id, octet_length(encode(text)) AS n FROM documents))
+      s"""WITH meta AS (${decodedSql("doc_id")})
         |SELECT doc_id, width, height,
         |  greatest(1, CAST((width * 224) // greatest(width, height) AS BIGINT)) AS fit_w,
         |  greatest(1, CAST((height * 224) // greatest(width, height) AS BIGINT)) AS fit_h

@@ -93,6 +93,35 @@ object Relational {
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= 2)
 
+  /** One CDC merge pass, the kernel of both `cdc_*` queries: the customer
+    * snapshot and the events change feed melted onto one keyed axis with a
+    * source priority, and each key's winner picked by one window (change
+    * beats snapshot, later version beats earlier, event_id breaks ties).
+    * `op` is the winning row's operation: 'D' for an error event (the
+    * feed's delete record), 'U' otherwise. SQL twin: [[cdcSql]]. */
+  private def cdcWinners(s: SparkSession, d: String): DataFrame = {
+    val snap = Tables.customer(s, d).select(
+      col("c_custkey").as("key"), col("c_acctbal").as("bal"),
+      lit(0).as("src"), lit(null).cast("timestamp").as("ver"),
+      lit(null).cast("long").as("change_id"), lit("U").as("op"))
+    val chg = Tables.events(s, d).select(
+      col("user_id").as("key"), col("value").as("bal"),
+      lit(1).as("src"), col("ts").as("ver"),
+      col("event_id").cast("long").as("change_id"),
+      when(col("event_type") === "error", "D").otherwise("U").as("op"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("key"))
+      .orderBy(col("src").desc, col("ver").desc_nulls_last, col("change_id").desc_nulls_last)
+    snap.unionByName(chg)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+  }
+
+  /** The merged dimension over (kept) [[cdcWinners]] rows, key-sorted. */
+  private def cdcMerged(winners: DataFrame): DataFrame =
+    sortedOnce(winners.select(col("key"), col("bal"),
+      (col("src") === 1).as("updated"), col("ver").as("last_ver")), col("key"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // TPC-H Q1 shape: single scan, partial+final hash agg, no join.
@@ -1138,32 +1167,12 @@ object Relational {
 
     // CDC upsert: merge a change feed (events: user_id → new balance at
     // ts) into a dimension snapshot (customer) — updates AND inserts —
-    // without a join: melt both sides onto one keyed axis with a source
-    // priority, one window picks each key's winner (change beats
-    // snapshot, later version beats earlier, event_id breaks ties).
-    // ONE shuffle on the key; the intermediate is |snapshot| + |changes|.
-    // The join formulation (outer join + coalesce) shuffles both sides
-    // AND loses the multi-change-per-key case without a pre-agg; this
-    // shape absorbs any number of changes per key in the same pass.
-    "cdc_upsert" -> ((s, d) => {
-      val snap = Tables.customer(s, d).select(
-        col("c_custkey").as("key"), col("c_acctbal").as("bal"),
-        lit(0).as("src"), lit(null).cast("timestamp").as("ver"),
-        lit(null).cast("long").as("change_id"))
-      val chg = Tables.events(s, d).select(
-        col("user_id").as("key"), col("value").as("bal"),
-        lit(1).as("src"), col("ts").as("ver"),
-        col("event_id").cast("long").as("change_id"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(col("src").desc, col("ver").desc_nulls_last, col("change_id").desc_nulls_last)
-      sortedOnce(snap.unionByName(chg)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("key"), col("bal"),
-          (col("src") === 1).as("updated"), col("ver").as("last_ver")),
-        col("key"))
-    }),
+    // without a join ([[cdcWinners]]): ONE shuffle on the key; the
+    // intermediate is |snapshot| + |changes|. The join formulation (outer
+    // join + coalesce) shuffles both sides AND loses the
+    // multi-change-per-key case without a pre-agg; this shape absorbs any
+    // number of changes per key in the same pass.
+    "cdc_upsert" -> ((s, d) => cdcMerged(cdcWinners(s, d))),
 
     // CDC merge with DELETE tombstones — the other half of change-feed
     // semantics cdc_upsert leaves open: a key's LAST operation decides
@@ -1173,28 +1182,7 @@ object Relational {
     // is a post-window predicate, so deletes cost nothing extra. At
     // 100 TB deletes MUST ride the merge — a separate anti-join pass
     // over the snapshot would double the shuffle for the rare-op case.
-    "cdc_tombstone" -> ((s, d) => {
-      val snap = Tables.customer(s, d).select(
-        col("c_custkey").as("key"), col("c_acctbal").as("bal"),
-        lit(0).as("src"), lit(null).cast("timestamp").as("ver"),
-        lit(null).cast("long").as("change_id"), lit("U").as("op"))
-      val chg = Tables.events(s, d).select(
-        col("user_id").as("key"), col("value").as("bal"),
-        lit(1).as("src"), col("ts").as("ver"),
-        col("event_id").cast("long").as("change_id"),
-        when(col("event_type") === "error", "D").otherwise("U").as("op"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(col("src").desc, col("ver").desc_nulls_last,
-          col("change_id").desc_nulls_last)
-      sortedOnce(snap.unionByName(chg)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .filter(col("op") =!= "D")
-        .select(col("key"), col("bal"),
-          (col("src") === 1).as("updated"), col("ver").as("last_ver")),
-        col("key"))
-    }),
+    "cdc_tombstone" -> ((s, d) => cdcMerged(cdcWinners(s, d).filter(col("op") =!= "D"))),
 
     // data-quality validation report (the "expectations" stage of a
     // production ETL): null keys, range violations, duplicate natural
@@ -1415,6 +1403,35 @@ object Relational {
       "      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn\n" +
       "  FROM lineitem)\n" +
       s"WHERE rn <= 3\nORDER BY $order"
+
+  /** SQL twin of [[cdcWinners]] + [[cdcMerged]]: the merged dimension over
+    * the ranked rows `r` that pass `keep`. */
+  private def cdcSql(keep: String): String =
+    s"""WITH merged AS (
+       |  SELECT c_custkey AS key, c_acctbal AS bal, 0 AS src,
+       |    CAST(NULL AS TIMESTAMP) AS ver, CAST(NULL AS BIGINT) AS change_id,
+       |    'U' AS op
+       |  FROM customer
+       |  UNION ALL
+       |  SELECT user_id, value, 1, CAST(ts AS TIMESTAMP), event_id,
+       |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END
+       |  FROM events),
+       |r AS (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY key
+       |    ORDER BY src DESC, ver DESC NULLS LAST, change_id DESC NULLS LAST) AS rn
+       |  FROM merged)
+       |SELECT key, bal, src = 1 AS updated, ver AS last_ver
+       |FROM r WHERE $keep
+       |ORDER BY key""".stripMargin
+
+  /** The supplier nation (n1), order and customer nation (n2) joins onto
+    * lineitem that the q7 and q8 oracles share. */
+  private val tradeJoinsSql =
+    """JOIN supplier ON s_suppkey = l_suppkey
+      |JOIN nation n1 ON n1.n_nationkey = s_nationkey
+      |JOIN orders ON o_orderkey = l_orderkey
+      |JOIN customer ON c_custkey = o_custkey
+      |JOIN nation n2 ON n2.n_nationkey = c_nationkey""".stripMargin
 
   /** DuckDB CTE mirroring [[Tables.partsupp]] verbatim (synthesized view;
     * the testdata ships no partsupp table). */
@@ -1866,11 +1883,7 @@ object Relational {
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          |  year(l_shipdate) AS l_year, $rev AS volume
          |FROM lineitem
-         |JOIN supplier ON s_suppkey = l_suppkey
-         |JOIN nation n1 ON n1.n_nationkey = s_nationkey
-         |JOIN orders ON o_orderkey = l_orderkey
-         |JOIN customer ON c_custkey = o_custkey
-         |JOIN nation n2 ON n2.n_nationkey = c_nationkey
+         |$tradeJoinsSql
          |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
          |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
          |  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
@@ -1885,12 +1898,8 @@ object Relational {
         |  $rev
         |  AS mkt_share
         |FROM lineitem
+        |$tradeJoinsSql
         |JOIN part ON p_partkey = l_partkey
-        |JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN nation n1 ON n1.n_nationkey = s_nationkey
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |JOIN nation n2 ON n2.n_nationkey = c_nationkey
         |JOIN region ON r_regionkey = n2.n_regionkey
         |WHERE p_type = 'STANDARD' AND r_name = 'ASIA'
         |GROUP BY 1
@@ -1938,37 +1947,8 @@ object Relational {
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
         |LIMIT 20""".stripMargin,
-    "cdc_upsert" ->
-      """WITH merged AS (
-        |  SELECT c_custkey AS key, c_acctbal AS bal, 0 AS src,
-        |    CAST(NULL AS TIMESTAMP) AS ver, CAST(NULL AS BIGINT) AS change_id
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT user_id, value, 1, CAST(ts AS TIMESTAMP), event_id FROM events),
-        |r AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY key
-        |    ORDER BY src DESC, ver DESC NULLS LAST, change_id DESC NULLS LAST) AS rn
-        |  FROM merged)
-        |SELECT key, bal, src = 1 AS updated, ver AS last_ver
-        |FROM r WHERE rn = 1
-        |ORDER BY key""".stripMargin,
-    "cdc_tombstone" ->
-      """WITH merged AS (
-        |  SELECT c_custkey AS key, c_acctbal AS bal, 0 AS src,
-        |    CAST(NULL AS TIMESTAMP) AS ver, CAST(NULL AS BIGINT) AS change_id,
-        |    'U' AS op
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT user_id, value, 1, CAST(ts AS TIMESTAMP), event_id,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END
-        |  FROM events),
-        |r AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY key
-        |    ORDER BY src DESC, ver DESC NULLS LAST, change_id DESC NULLS LAST) AS rn
-        |  FROM merged)
-        |SELECT key, bal, src = 1 AS updated, ver AS last_ver
-        |FROM r WHERE rn = 1 AND op <> 'D'
-        |ORDER BY key""".stripMargin,
+    "cdc_upsert" -> cdcSql("rn = 1"),
+    "cdc_tombstone" -> cdcSql("rn = 1 AND op <> 'D'"),
     "dq_profile" ->
       """WITH w AS (
         |  SELECT COUNT(*) AS n_rows,

@@ -23,6 +23,26 @@ object Sampling {
   def hashBucket(id: Column, mod: Int): Column =
     conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long") % mod
 
+  /** Every document's language and whitespace-token count `n_toks` — the
+    * stats input and the sampled rows of both rate samplers. SQL twin:
+    * [[sizedCte]]. */
+  private def sized(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"),
+        size(split(col("text"), " ")).cast("long").as("n_toks"))
+
+  /** The rate samplers' second pass: [[sized]] `docs` kept where their md5
+    * bucket falls under their language's `threshold_ppm` (`rates` is
+    * |langs|-row, broadcast), counted per `rates` row. SQL twin:
+    * [[keptSql]]. */
+  private def keptAtRates(docs: DataFrame, rates: DataFrame): DataFrame =
+    docs
+      .join(broadcast(rates), Seq("lang"))
+      .filter(hashBucket(col("doc_id"), 1000000) < col("threshold_ppm"))
+      .groupBy(rates.columns.map(col): _*)
+      .agg(count(lit(1)).as("n_kept"), sum(col("n_toks")).as("kept_tokens"))
+      .orderBy(col("lang"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // stratified downsampling: per-language keep-rates (en 50%, es 20%,
@@ -68,24 +88,17 @@ object Sampling {
     // scan — the q22_idle pattern; at 100 TB the stats relation is a
     // persisted byproduct and both extra scans disappear).
     "sample_mixture" -> ((s, d) => {
-      val sized = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n_toks"))
+      val docs = sized(s, d)
       val sharePpm = when(col("lang") === "en", 500000L)
         .when(col("lang") === "es", 300000L)
         .otherwise(200000L)
-      val rates = sized.groupBy(col("lang"))
+      val rates = docs.groupBy(col("lang"))
         .agg(sum(col("n_toks")).as("lang_toks"))
         .withColumn("share_ppm", sharePpm)
-        .crossJoin(broadcast(sized.agg(expr("sum(n_toks) div 2").as("b"))))
+        .crossJoin(broadcast(docs.agg(expr("sum(n_toks) div 2").as("b"))))
         .select(col("lang"),
           least(lit(1000000L), expr("(b * share_ppm) div lang_toks")).as("threshold_ppm"))
-      sized
-        .join(broadcast(rates), Seq("lang"))
-        .filter(hashBucket(col("doc_id"), 1000000) < col("threshold_ppm"))
-        .groupBy(col("lang"), col("threshold_ppm"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_toks")).as("kept_tokens"))
-        .orderBy(col("lang"))
+      keptAtRates(docs, rates)
     }),
 
     // quality-proportional rejection sampling (the DCLM/FineWeb-style
@@ -148,10 +161,8 @@ object Sampling {
     // is never shuffled. Overflow note: budget·sroot·10⁶ needs
     // DECIMAL(38,0) beyond ~10¹³ tokens (DEPLOYMENT.md).
     "sample_temperature" -> ((s, d) => {
-      val sized = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n_toks"))
-      val stats = sized.groupBy(col("lang"))
+      val docs = sized(s, d)
+      val stats = docs.groupBy(col("lang"))
         .agg(sum(col("n_toks")).as("lang_toks"))
         .withColumn("sroot", floor(sqrt(col("lang_toks").cast("double"))).cast("long"))
       val tot = stats.agg(sum(col("sroot")).as("s_sum"),
@@ -162,12 +173,7 @@ object Sampling {
           least(lit(1000000L),
             expr("(budget * sroot * 1000000) div (s_sum * lang_toks)"))
             .as("threshold_ppm"))
-      sized
-        .join(broadcast(rates), Seq("lang"))
-        .filter(hashBucket(col("doc_id"), 1000000) < col("threshold_ppm"))
-        .groupBy(col("lang"), col("lang_toks"), col("weight_ppm"), col("threshold_ppm"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_toks")).as("kept_tokens"))
-        .orderBy(col("lang"))
+      keptAtRates(docs, rates)
     }),
 
     // deterministic training-order shuffle + sharding: every epoch reader
@@ -216,28 +222,43 @@ object Sampling {
     * of loader addressing; scale with the corpus (DEPLOYMENT.md). */
   val NumShards = 8
 
-  private val bucketSql =
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10"
+  /** SQL twin of [[hashBucket]] over `doc_id`. */
+  private def bucketSql(mod: Int): String =
+    s"CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % $mod"
+
+  /** SQL twin of [[sized]]. */
+  private val sizedCte =
+    """sized AS (
+      |  SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+      |  FROM documents)""".stripMargin
+
+  /** SQL twin of [[keptAtRates]] over the `sized` and `rates` CTEs; `cols`
+    * are rates' columns. */
+  private def keptSql(cols: String*): String =
+    s"""SELECT ${cols.mkString(", ")}, COUNT(*) AS n_kept,
+       |  CAST(SUM(n_toks) AS BIGINT) AS kept_tokens
+       |FROM sized JOIN rates USING (lang)
+       |WHERE ${bucketSql(1000000)} < threshold_ppm
+       |GROUP BY ${cols.mkString(", ")}
+       |ORDER BY lang""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "sample_stratified" ->
-      s"""SELECT doc_id, lang, $bucketSql AS bucket
+      s"""SELECT doc_id, lang, ${bucketSql(10)} AS bucket
          |FROM documents
-         |WHERE CASE WHEN lang = 'en' THEN $bucketSql < 5
-         |           WHEN lang = 'es' THEN $bucketSql < 2
-         |           ELSE $bucketSql < 1 END
+         |WHERE CASE WHEN lang = 'en' THEN ${bucketSql(10)} < 5
+         |           WHEN lang = 'es' THEN ${bucketSql(10)} < 2
+         |           ELSE ${bucketSql(10)} < 1 END
          |ORDER BY doc_id""".stripMargin,
     "sample_split" ->
       s"""SELECT lang,
-         |  CASE WHEN $bucketSql < 9 THEN 'train' ELSE 'test' END AS split,
+         |  CASE WHEN ${bucketSql(10)} < 9 THEN 'train' ELSE 'test' END AS split,
          |  COUNT(*) AS n_docs
          |FROM documents
          |GROUP BY 1, 2
          |ORDER BY lang, split""".stripMargin,
     "sample_mixture" ->
-      s"""WITH sized AS (
-         |  SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-         |  FROM documents),
+      s"""WITH $sizedCte,
          |ls AS (
          |  SELECT lang, CAST(SUM(n_toks) AS BIGINT) AS lang_toks,
          |    CASE lang WHEN 'en' THEN 500000 WHEN 'es' THEN 300000 ELSE 200000 END AS share_ppm
@@ -247,18 +268,12 @@ object Sampling {
          |  SELECT lang,
          |    CAST(least(1000000, (b * share_ppm) // lang_toks) AS BIGINT) AS threshold_ppm
          |  FROM ls CROSS JOIN tot)
-         |SELECT lang, threshold_ppm, COUNT(*) AS n_kept,
-         |  CAST(SUM(n_toks) AS BIGINT) AS kept_tokens
-         |FROM sized JOIN rates USING (lang)
-         |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-         |      % 1000000 < threshold_ppm
-         |GROUP BY 1, 2
-         |ORDER BY lang""".stripMargin,
+         |${keptSql("lang", "threshold_ppm")}""".stripMargin,
     "sample_quality" ->
       s"""WITH scored AS (
          |  SELECT doc_id, lang,
          |    CAST(floor(${graft.functions.TextStats.sqlQualityScore} * 1000000) AS BIGINT) AS keep_ppm,
-         |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000000 AS bucket
+         |    ${bucketSql(1000000)} AS bucket
          |  FROM documents)
          |SELECT doc_id, lang, keep_ppm, bucket
          |FROM scored
@@ -278,9 +293,7 @@ object Sampling {
          |FROM ranked
          |ORDER BY doc_id""".stripMargin,
     "sample_temperature" ->
-      s"""WITH sized AS (
-         |  SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-         |  FROM documents),
+      s"""WITH $sizedCte,
          |ls AS (
          |  SELECT lang, CAST(SUM(n_toks) AS BIGINT) AS lang_toks,
          |    CAST(floor(sqrt(CAST(SUM(n_toks) AS DOUBLE))) AS BIGINT) AS sroot
@@ -295,18 +308,10 @@ object Sampling {
          |    CAST(least(1000000, (budget * sroot * 1000000) // (s_sum * lang_toks)) AS BIGINT)
          |      AS threshold_ppm
          |  FROM ls CROSS JOIN tot)
-         |SELECT lang, lang_toks, weight_ppm, threshold_ppm, COUNT(*) AS n_kept,
-         |  CAST(SUM(n_toks) AS BIGINT) AS kept_tokens
-         |FROM sized JOIN rates USING (lang)
-         |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-         |      % 1000000 < threshold_ppm
-         |GROUP BY 1, 2, 3, 4
-         |ORDER BY lang""".stripMargin,
+         |${keptSql("lang", "lang_toks", "weight_ppm", "threshold_ppm")}""".stripMargin,
     "sample_epoch" ->
       s"""WITH sh AS (
-         |  SELECT doc_id,
-         |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % $NumShards
-         |      AS shard
+         |  SELECT doc_id, ${bucketSql(NumShards)} AS shard
          |  FROM documents),
          |ep AS (
          |  SELECT doc_id, shard, CAST(e.e AS INTEGER) AS epoch,
@@ -317,12 +322,8 @@ object Sampling {
          |FROM ep
          |ORDER BY epoch, shard, pos""".stripMargin,
     "docs_shuffle" ->
-      s"""SELECT doc_id,
-         |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % $NumShards
-         |    AS shard,
-         |  ROW_NUMBER() OVER (
-         |    PARTITION BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-         |      % $NumShards
+      s"""SELECT doc_id, ${bucketSql(NumShards)} AS shard,
+         |  ROW_NUMBER() OVER (PARTITION BY ${bucketSql(NumShards)}
          |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS pos
          |FROM documents
          |ORDER BY shard, pos""".stripMargin

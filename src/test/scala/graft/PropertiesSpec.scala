@@ -227,8 +227,8 @@ class PropertiesSpec extends AnyFunSuite {
         (math.min(a, b), math.max(a, b))
       }).pureApply(org.scalacheck.Gen.Parameters.default,
         org.scalacheck.rng.Seed(42L))
-    val e = (hub ++ clique1 ++ clique2 ++ noise).distinct
-      .toDF("a", "b")
+    val edges = (hub ++ clique1 ++ clique2 ++ noise).distinct
+    val e = edges.toDF("a", "b")
     val got = graft.operators.Graph.triangleStats(e)
       .select(col("n_triangles")).collect().head.getLong(0)
     val brute = e.as("e1")
@@ -237,6 +237,17 @@ class PropertiesSpec extends AnyFunSuite {
       .count()
     assert(got == brute && got > 0,
       s"oriented count $got != brute-force $brute")
+    // the same orientation credits each triangle to its three edges
+    // (graph_jaccard): per edge, common = |N(a) ∩ N(b)| by brute force
+    val nbrs = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val want = edges.map { case (a, b) => (a, b) -> (nbrs(a) & nbrs(b)).size.toLong }.toMap
+    val common = graft.operators.Graph.edgeJaccard(e).collect()
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("common")).toMap
+    val wrong = want.collect { case (k, n) if !common.get(k).contains(n) => k -> (common.get(k), n) }
+    assert(common.size == want.size, s"${common.size} edges scored of ${want.size}")
+    assert(wrong.isEmpty, "edge -> (edgeJaccard common, brute-force common)")
+    assert(want.values.max > 1)
   }
 
   test("property: funnel fold ≡ min-after-min reference on random event logs") {
